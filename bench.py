@@ -160,10 +160,10 @@ def main() -> None:
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
 
     def _run_once(name: str) -> float:
-        t0 = time.time()
+        t0 = time.perf_counter()
         # count() executes the full plan without driver-side materialization
         qs[name](spark, sf_dir).count()
-        wall = round(time.time() - t0, 3)
+        wall = round(time.perf_counter() - t0, 3)
         _cleanup()
         return wall
 

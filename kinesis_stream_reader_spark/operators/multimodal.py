@@ -1,8 +1,13 @@
 """Multimodal columns: image/audio/video as opaque binary columns with
-typed metadata, and Arrow-batched decode / feature-extract plumbing.
+typed metadata, and Arrow-batched decode / feature-extract kernels.
+
+Every media kernel here — fixture encoder, decoder, feature extractor —
+is a plain per-row Python function (one record in, its output rows
+out) run through ``operators.rowmap.map_rows``, one ``mapInArrow``
+pass; synthetic corpora are seeded from ``rowmap.doc_id_seed``.
 
 Extension surface (north-star mandate). The Spark-side design is real
-and tested — schema, partitioning, mapInPandas batch shape, feature
+and tested — schema, partitioning, Arrow batch shape, feature
 extraction — and the decoders are EXECUTABLE pure Python/numpy, no
 Pillow/librosa/pyav, each cross-validated against JDK ImageIO in
 pytest where the JDK has a reference codec (rounds 3-12):
@@ -31,7 +36,7 @@ The byte-level fakes in extract_features/... are retained for the
 opaque-payload operators that must work on ANY format.
 
 Scale notes: binary payloads stay opaque to the JVM (no codegen over
-blob contents); mapInPandas streams Arrow record batches so one task
+blob contents); map_rows streams Arrow record batches so one task
 never materializes more than spark.sql.execution.arrow.maxRecordsPerBatch
 rows of payload; feature rows are tiny, so the expensive stage is
 map-only with no shuffle.
@@ -39,13 +44,15 @@ map-only with no shuffle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rowmap import doc_id_seed, map_rows
+
 MEDIA_KINDS = ("image", "audio", "video")
+
+# (doc_id, payload): the output of every synthetic single-codec corpus
+MEDIA_SCHEMA = "doc_id BIGINT, data BINARY"
 
 FEATURE_SCHEMA = (
     "doc_id BIGINT, kind STRING, n_bytes BIGINT, byte_mean DOUBLE, byte_entropy_proxy BIGINT"
@@ -1600,24 +1607,12 @@ def synthetic_aiff_media(documents: DataFrame) -> DataFrame:
     exercised on real wire bytes."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 48 + d % 40
-                v = ((d * 17 + 37 * np.arange(n, dtype=np.int64)) % 65536) - 32768
-                rows.append(
-                    (d, encode_aiff(v.astype(np.int16), rate=AIFF_FIXTURE_RATES[d % 4]))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "data"])
+    def encode(d):
+        n = 48 + d % 40
+        v = ((d * 17 + 37 * np.arange(n, dtype=np.int64)) % 65536) - 32768
+        return [(d, encode_aiff(v.astype(np.int16), rate=AIFF_FIXTURE_RATES[d % 4]))]
 
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 def aiff_decode_features(media: DataFrame) -> DataFrame:
@@ -1626,20 +1621,15 @@ def aiff_decode_features(media: DataFrame) -> DataFrame:
     reordering or truncation breaks it where a plain sum would not."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                rate, samples = decode_aiff(bytes(blob))
-                s = samples.astype(np.int64)
-                w = np.arange(1, len(s) + 1, dtype=np.int64)
-                rows.append((int(doc_id), rate, len(s), int((w * s).sum())))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "sample_rate", "n_samples", "checksum"]
-            )
+    def decode(doc_id, blob):
+        rate, samples = decode_aiff(blob)
+        s = samples.astype(np.int64)
+        w = np.arange(1, len(s) + 1, dtype=np.int64)
+        return [(doc_id, rate, len(s), int((w * s).sum()))]
 
-    return media.mapInPandas(
-        batches,
+    return map_rows(
+        media.select("doc_id", "data"),
+        decode,
         "doc_id BIGINT, sample_rate INT, n_samples INT, checksum BIGINT",
     )
 
@@ -1781,22 +1771,13 @@ def extract_features(media: DataFrame) -> DataFrame:
     byte value, byte_entropy_proxy the count of distinct byte values.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["data"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": [m["kind"] for m in pdf["media_meta"]],
-                    "n_bytes": payloads.map(len),
-                    "byte_mean": payloads.map(
-                        lambda b: float(sum(b)) / len(b) if len(b) else 0.0
-                    ),
-                    "byte_entropy_proxy": payloads.map(lambda b: len(set(b))),
-                }
-            )
+    def features(doc_id, b, meta):
+        mean = float(sum(b)) / len(b) if len(b) else 0.0
+        return [(doc_id, meta["kind"], len(b), mean, len(set(b)))]
 
-    return media.mapInPandas(batches, FEATURE_SCHEMA)
+    return map_rows(
+        media.select("doc_id", "data", "media_meta"), features, FEATURE_SCHEMA
+    )
 
 
 FRAME_SCHEMA = (
@@ -1811,25 +1792,18 @@ def sample_frames_features(media: DataFrame, every_n: int = 4) -> DataFrame:
 
     The deterministic byte-stride stands in for real video frame
     extraction (``sample_frames`` above is the pyav hook); everything
-    Spark-side is the production shape — Arrow-batched mapInPandas over
+    Spark-side is the production shape — Arrow-batched map_rows over
     the binary column, map-only, no shuffle, one output row per input
     row so the stage pipelines with the scan at any scale."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sampled = pdf["data"].map(lambda b: b[::every_n])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": [m["kind"] for m in pdf["media_meta"]],
-                    "frame_stride": every_n,
-                    "n_frames": sampled.map(len),
-                    "first_byte": sampled.map(lambda s: s[0] if len(s) else None),
-                    "last_byte": sampled.map(lambda s: s[-1] if len(s) else None),
-                }
-            )
+    def frames(doc_id, b, meta):
+        s = b[::every_n]
+        first, last = (s[0], s[-1]) if len(s) else (None, None)
+        return [(doc_id, meta["kind"], every_n, len(s), first, last)]
 
-    return media.mapInPandas(batches, FRAME_SCHEMA)
+    return map_rows(
+        media.select("doc_id", "data", "media_meta"), frames, FRAME_SCHEMA
+    )
 
 
 RESIZE_SCHEMA = "doc_id BIGINT, kind STRING, n_out BIGINT, checksum BIGINT"
@@ -1843,26 +1817,14 @@ def resize_features(media: DataFrame, target: int = 128) -> DataFrame:
     tests can pin the exact byte selection. Same scale shape as the
     other media stages: Arrow-batched, map-only, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def resize(b: bytes) -> bytes:
-            if not b:
-                return b""
-            return bytes(b[(i * len(b)) // target] for i in range(target))
+    def resize(doc_id, b, meta):
+        r = bytes(b[(i * len(b)) // target] for i in range(target)) if b else b""
+        checksum = sum((i + 1) * v for i, v in enumerate(r))
+        return [(doc_id, meta["kind"], len(r), checksum)]
 
-        for pdf in it:
-            resized = pdf["data"].map(resize)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": [m["kind"] for m in pdf["media_meta"]],
-                    "n_out": resized.map(len),
-                    "checksum": resized.map(
-                        lambda r: sum((i + 1) * v for i, v in enumerate(r))
-                    ),
-                }
-            )
-
-    return media.mapInPandas(batches, RESIZE_SCHEMA)
+    return map_rows(
+        media.select("doc_id", "data", "media_meta"), resize, RESIZE_SCHEMA
+    )
 
 
 def audio_chunks(media: DataFrame, chunk_bytes: int = 256) -> DataFrame:
@@ -1920,27 +1882,12 @@ def synthetic_ppm_media(documents: DataFrame) -> DataFrame:
     h = 6 + doc_id % 3, pixel byte i = (doc_id * 7 + i) % 256."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                w, h = 8 + doc_id % 5, 6 + doc_id % 3
-                pix = (doc_id * 7 + np.arange(w * h * 3)) % 256
-                blobs.append(encode_ppm(pix.astype(np.uint8).reshape(h, w, 3)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(doc_id):
+        w, h = 8 + doc_id % 5, 6 + doc_id % 3
+        pix = (doc_id * 7 + np.arange(w * h * 3)) % 256
+        return [(doc_id, encode_ppm(pix.astype(np.uint8).reshape(h, w, 3)))]
 
-    # repartition the tiny doc_id seed: a column-pruned parquet scan
-    # often lands in ONE split, which would serialize the Arrow codec
-    # batches — and AQE would coalesce a column-repartition right back
-    # (it sizes by bytes, blind to Python-UDF cost), so the count is
-    # EXPLICIT, which AQE respects. Shuffling longs costs nothing next
-    # to the codec work.
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 def synthetic_png_media(documents: DataFrame) -> DataFrame:
@@ -1950,32 +1897,16 @@ def synthetic_png_media(documents: DataFrame) -> DataFrame:
     filter inversions, not just the trivial one."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                w, h = 8 + doc_id % 5, 6 + doc_id % 3
-                pix = (doc_id * 7 + np.arange(w * h * 3)) % 256
-                blobs.append(
-                    encode_png(
-                        pix.astype(np.uint8).reshape(h, w, 3),
-                        filter_for_row=lambda y, d=doc_id: (d + y) % 5,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(doc_id):
+        w, h = 8 + doc_id % 5, 6 + doc_id % 3
+        pix = (doc_id * 7 + np.arange(w * h * 3)) % 256
+        blob = encode_png(
+            pix.astype(np.uint8).reshape(h, w, 3),
+            filter_for_row=lambda y: (doc_id + y) % 5,
+        )
+        return [(doc_id, blob)]
 
-    # repartition the tiny doc_id seed: a column-pruned parquet scan
-    # often lands in ONE split, which would serialize the Arrow codec
-    # batches — and AQE would coalesce a column-repartition right back
-    # (it sizes by bytes, blind to Python-UDF cost), so the count is
-    # EXPLICIT, which AQE respects. Shuffling longs costs nothing next
-    # to the codec work.
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 def synthetic_wav_media(documents: DataFrame, rate: int = 8000) -> DataFrame:
@@ -1983,27 +1914,12 @@ def synthetic_wav_media(documents: DataFrame, rate: int = 8000) -> DataFrame:
     samples, sample i = ((doc_id * 13 + i * 31) % 65536) - 32768."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                n = 64 + doc_id % 50
-                s = ((doc_id * 13 + np.arange(n) * 31) % 65536) - 32768
-                blobs.append(encode_wav(s.astype("<i2"), rate))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(doc_id):
+        n = 64 + doc_id % 50
+        s = ((doc_id * 13 + np.arange(n) * 31) % 65536) - 32768
+        return [(doc_id, encode_wav(s.astype("<i2"), rate))]
 
-    # repartition the tiny doc_id seed: a column-pruned parquet scan
-    # often lands in ONE split, which would serialize the Arrow codec
-    # batches — and AQE would coalesce a column-repartition right back
-    # (it sizes by bytes, blind to Python-UDF cost), so the count is
-    # EXPLICIT, which AQE respects. Shuffling longs costs nothing next
-    # to the codec work.
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 def image_decode_features(media: DataFrame) -> DataFrame:
@@ -2012,25 +1928,12 @@ def image_decode_features(media: DataFrame) -> DataFrame:
     map-only, no shuffle — the same plumbing extract_features uses,
     with an actual codec inside."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                arr = decode_image(bytes(blob))
-                rows.append(
-                    (
-                        doc_id,
-                        arr.shape[1],
-                        arr.shape[0],
-                        arr.shape[2],
-                        round(float(arr.mean()), 4),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "channels", "byte_mean"]
-            )
+    def decode(doc_id, blob):
+        arr = decode_image(blob)
+        h, w, c = arr.shape
+        return [(doc_id, w, h, c, round(float(arr.mean()), 4))]
 
-    return media.mapInPandas(batches, IMAGE_DECODE_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), decode, IMAGE_DECODE_SCHEMA)
 
 
 def image_resize_decoded(media: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame:
@@ -2039,21 +1942,17 @@ def image_resize_decoded(media: DataFrame, out_w: int = 4, out_h: int = 4) -> Da
     resized array so the exact byte selection is pinned."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                arr = decode_ppm(bytes(blob))
-                h, w = arr.shape[0], arr.shape[1]
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                resized = arr[ys][:, xs]  # (out_h, out_w, 3)
-                flat = resized.astype(np.int64).ravel()
-                checksum = int(((np.arange(len(flat)) + 1) * flat).sum())
-                rows.append((doc_id, out_w, out_h, checksum))
-            yield pd.DataFrame(rows, columns=["doc_id", "out_w", "out_h", "checksum"])
+    def resize(doc_id, blob):
+        arr = decode_ppm(blob)
+        h, w = arr.shape[0], arr.shape[1]
+        ys = (np.arange(out_h) * h) // out_h
+        xs = (np.arange(out_w) * w) // out_w
+        resized = arr[ys][:, xs]  # (out_h, out_w, 3)
+        flat = resized.astype(np.int64).ravel()
+        checksum = int(((np.arange(len(flat)) + 1) * flat).sum())
+        return [(doc_id, out_w, out_h, checksum)]
 
-    return media.mapInPandas(batches, IMAGE_RESIZE_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), resize, IMAGE_RESIZE_SCHEMA)
 
 
 def audio_decode_features(media: DataFrame, target_rate: int = 16_000) -> DataFrame:
@@ -2061,23 +1960,12 @@ def audio_decode_features(media: DataFrame, target_rate: int = 16_000) -> DataFr
     count, resampled length at `target_rate`, and the exact int sum of
     decoded samples (pins every decoded value, not just the count)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                rate, samples = decode_wav(bytes(blob))
-                _, resampled = resample_audio(bytes(blob), target_rate)
-                rows.append(
-                    (doc_id, rate, len(samples), len(resampled), int(samples.sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "n_resampled", "sample_sum",
-                ],
-            )
+    def decode(doc_id, blob):
+        rate, samples = decode_wav(blob)
+        _, resampled = resample_audio(blob, target_rate)
+        return [(doc_id, rate, len(samples), len(resampled), int(samples.sum()))]
 
-    return media.mapInPandas(batches, AUDIO_DECODE_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), decode, AUDIO_DECODE_SCHEMA)
 
 
 # --- REAL video pipeline (YUV4MPEG2 / y4m payloads) -------------------------
@@ -2548,40 +2436,27 @@ def synthetic_flac_media(documents: DataFrame) -> DataFrame:
     decode path of the codec is on the wire somewhere in the corpus.
     Lossless => decoded samples equal the formulas exactly."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        modes = ["independent", "left_side", "right_side", "mid_side"]
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 64 + 32 * (d % 3)
-                left = [((d * 13 + j * 31) % 65536) - 32768 for j in range(n)]
-                right = [((d * 7 + j * 17) % 65536) - 32768 for j in range(n)]
+    modes = ["independent", "left_side", "right_side", "mid_side"]
 
-                def plan(f, c, s, d=d):
-                    sel = (d + f + c) % 7
-                    if sel == 0:
-                        return ("lpc", [3, -1], 1, 4)
-                    if sel == 3:
-                        return ("verbatim",)
-                    return ("fixed", (f + c) % 5)
+    def encode(d):
+        n = 64 + 32 * (d % 3)
+        left = [((d * 13 + j * 31) % 65536) - 32768 for j in range(n)]
+        right = [((d * 7 + j * 17) % 65536) - 32768 for j in range(n)]
 
-                blobs.append(
-                    encode_flac(
-                        [left, right],
-                        block_size=32,
-                        stereo_mode=modes[d % 4],
-                        plan=plan,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+        def plan(f, c, s):
+            sel = (d + f + c) % 7
+            if sel == 0:
+                return ("lpc", [3, -1], 1, 4)
+            if sel == 3:
+                return ("verbatim",)
+            return ("fixed", (f + c) % 5)
 
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+        blob = encode_flac(
+            [left, right], block_size=32, stereo_mode=modes[d % 4], plan=plan
+        )
+        return [(d, blob)]
+
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 def flac_decode_features(media: DataFrame) -> DataFrame:
@@ -2589,32 +2464,14 @@ def flac_decode_features(media: DataFrame) -> DataFrame:
     per-doc integer features; only scalars shuffle — the same 100 TB
     shape as every codec leg."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                rate, chans = decode_flac(bytes(blob))
-                left, right = chans
-                rows.append(
-                    (
-                        int(doc_id),
-                        rate,
-                        len(left),
-                        sum(abs(v) for v in left),
-                        sum(abs(v) for v in right),
-                        left[0],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples",
-                    "sum_abs_l", "sum_abs_r", "first_l",
-                ],
-            )
+    def decode(doc_id, blob):
+        rate, (left, right) = decode_flac(blob)
+        sum_l, sum_r = sum(abs(v) for v in left), sum(abs(v) for v in right)
+        return [(doc_id, rate, len(left), sum_l, sum_r, left[0])]
 
-    return media.mapInPandas(
-        batches,
+    return map_rows(
+        media.select("doc_id", "data"),
+        decode,
         "doc_id BIGINT, sample_rate BIGINT, n_samples BIGINT, "
         "sum_abs_l BIGINT, sum_abs_r BIGINT, first_l BIGINT",
     )
@@ -2663,37 +2520,18 @@ def synthetic_y4m_media(documents: DataFrame) -> DataFrame:
     = (doc_id*11 + f*17 + j*5) % 256 (over the full C420 payload)."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                w = 4 + 2 * (doc_id % 3)
-                h = 4 + 2 * (doc_id % 2)
-                n = 3 + doc_id % 4
-                fb = w * h * 3 // 2
-                frames = [
-                    bytes(
-                        ((doc_id * 11 + f * 17 + np.arange(fb) * 5) % 256).astype(
-                            np.uint8
-                        )
-                    )
-                    for f in range(n)
-                ]
-                blobs.append(encode_y4m(int(w), int(h), frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(doc_id):
+        w = 4 + 2 * (doc_id % 3)
+        h = 4 + 2 * (doc_id % 2)
+        n = 3 + doc_id % 4
+        fb = w * h * 3 // 2
+        frames = [
+            bytes(((doc_id * 11 + f * 17 + np.arange(fb) * 5) % 256).astype(np.uint8))
+            for f in range(n)
+        ]
+        return [(doc_id, encode_y4m(w, h, frames))]
 
-    # repartition the tiny doc_id seed: a column-pruned parquet scan
-    # often lands in ONE split, which would serialize the Arrow codec
-    # batches — and AQE would coalesce a column-repartition right back
-    # (it sizes by bytes, blind to Python-UDF cost), so the count is
-    # EXPLICIT, which AQE respects. Shuffling longs costs nothing next
-    # to the codec work.
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 def video_decode_features(media: DataFrame) -> DataFrame:
@@ -2703,29 +2541,19 @@ def video_decode_features(media: DataFrame) -> DataFrame:
     Arrow-batched, map-only — the shuffle never carries pixels."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                w, h, frames = decode_y4m(bytes(blob))
-                luma = 0
-                sampled = 0
-                for f, fr in enumerate(frames):
-                    y = np.frombuffer(fr[: w * h], dtype=np.uint8)
-                    s = int(y.astype(np.int64).sum())
-                    luma += s
-                    if f % 2 == 0:
-                        sampled += s
-                rows.append((doc_id, w, h, len(frames), luma, sampled))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_frames",
-                    "luma_sum", "sampled_luma_sum",
-                ],
-            )
+    def decode(doc_id, blob):
+        w, h, frames = decode_y4m(blob)
+        luma = 0
+        sampled = 0
+        for f, fr in enumerate(frames):
+            y = np.frombuffer(fr[: w * h], dtype=np.uint8)
+            s = int(y.astype(np.int64).sum())
+            luma += s
+            if f % 2 == 0:
+                sampled += s
+        return [(doc_id, w, h, len(frames), luma, sampled)]
 
-    return media.mapInPandas(batches, VIDEO_DECODE_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), decode, VIDEO_DECODE_SCHEMA)
 
 
 PHASH_SCHEMA = "doc_id BIGINT, phash BIGINT"
@@ -2742,27 +2570,23 @@ def image_phash(media: DataFrame, grid: int = 8) -> DataFrame:
     counterpart of simhash for text."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                arr = decode_image(bytes(blob)).astype(np.int64)
-                h, w = arr.shape[0], arr.shape[1]
-                gray = arr.sum(axis=2) // 3
-                ys = (np.arange(grid) * h) // grid
-                xs = (np.arange(grid) * w) // grid
-                cells = gray[ys][:, xs].ravel()
-                total = int(cells.sum())
-                n = grid * grid
-                phash = 0
-                # sign-safe 63-bit hash: bit 63 would overflow BIGINT
-                for p, c in enumerate(cells[:63]):
-                    if int(c) * n > total:
-                        phash |= 1 << p
-                rows.append((doc_id, phash))
-            yield pd.DataFrame(rows, columns=["doc_id", "phash"])
+    def phash(doc_id, blob):
+        arr = decode_image(blob).astype(np.int64)
+        h, w = arr.shape[0], arr.shape[1]
+        gray = arr.sum(axis=2) // 3
+        ys = (np.arange(grid) * h) // grid
+        xs = (np.arange(grid) * w) // grid
+        cells = gray[ys][:, xs].ravel()
+        total = int(cells.sum())
+        n = grid * grid
+        bits = 0
+        # sign-safe 63-bit hash: bit 63 would overflow BIGINT
+        for p, c in enumerate(cells[:63]):
+            if int(c) * n > total:
+                bits |= 1 << p
+        return [(doc_id, bits)]
 
-    return media.mapInPandas(batches, PHASH_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), phash, PHASH_SCHEMA)
 
 
 SCENE_CUT_SCHEMA = "doc_id BIGINT, frame_idx INT, sad BIGINT, is_cut BOOLEAN"
@@ -2781,24 +2605,19 @@ def video_scene_cuts(media: DataFrame, threshold_per_px: int = 32) -> DataFrame:
     longs, never pixels — same envelope as video_decode_features."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                w, h, frames = decode_y4m(bytes(blob))
-                thresh = threshold_per_px * w * h
-                prev = None
-                for f, fr in enumerate(frames):
-                    y = np.frombuffer(fr[: w * h], dtype=np.uint8).astype(np.int64)
-                    if prev is not None:
-                        sad = int(np.abs(y - prev).sum())
-                        rows.append((doc_id, f, sad, sad > thresh))
-                    prev = y
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "sad", "is_cut"]
-            )
+    def cuts(doc_id, blob):
+        w, h, frames = decode_y4m(blob)
+        thresh = threshold_per_px * w * h
+        rows, prev = [], None
+        for f, fr in enumerate(frames):
+            y = np.frombuffer(fr[: w * h], dtype=np.uint8).astype(np.int64)
+            if prev is not None:
+                sad = int(np.abs(y - prev).sum())
+                rows.append((doc_id, f, sad, sad > thresh))
+            prev = y
+        return rows
 
-    return media.mapInPandas(batches, SCENE_CUT_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), cuts, SCENE_CUT_SCHEMA)
 
 
 VAD_SCHEMA = "doc_id BIGINT, frame_idx INT, energy BIGINT, is_active BOOLEAN"
@@ -2819,21 +2638,17 @@ def audio_vad_frames(
     of video_scene_cuts."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                _, samples = decode_wav(bytes(blob))
-                n_frames = len(samples) // frame_samples
-                s = samples[: n_frames * frame_samples].astype(np.int64)
-                energies = (s * s).reshape(n_frames, frame_samples).sum(axis=1)
-                for f, e in enumerate(energies):
-                    rows.append((doc_id, f, int(e), int(e) > energy_threshold))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "energy", "is_active"]
-            )
+    def frames(doc_id, blob):
+        _, samples = decode_wav(blob)
+        n_frames = len(samples) // frame_samples
+        s = samples[: n_frames * frame_samples].astype(np.int64)
+        energies = (s * s).reshape(n_frames, frame_samples).sum(axis=1)
+        return [
+            (doc_id, f, int(e), int(e) > energy_threshold)
+            for f, e in enumerate(energies)
+        ]
 
-    return media.mapInPandas(batches, VAD_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), frames, VAD_SCHEMA)
 
 
 AUDIO_FP_SCHEMA = "doc_id BIGINT, n_frames INT, fingerprint BIGINT"
@@ -2862,23 +2677,19 @@ def audio_fingerprint(media: DataFrame, frame: int = 8) -> DataFrame:
     blobs (the multimodal_dedup / phash contract)."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                _, samples = decode_wav(bytes(blob))
-                nf = len(samples) // frame
-                v = samples[: nf * frame].astype(np.int64).reshape(nf, frame)
-                e = (v * v).sum(axis=1)
-                bits = (e[1:] > e[:-1]).astype(np.int64)
-                # xor-fold into 63 bits: shift counts stay < 63 however
-                # long the clip (shift >= 64 is UB in C / wraps in numpy)
-                terms = bits << (np.arange(nf - 1, dtype=np.int64) % 63)
-                fp = int(np.bitwise_xor.reduce(terms)) if nf > 1 else 0
-                rows.append((doc_id, nf, fp))
-            yield pd.DataFrame(rows, columns=["doc_id", "n_frames", "fingerprint"])
+    def fingerprint(doc_id, blob):
+        _, samples = decode_wav(blob)
+        nf = len(samples) // frame
+        v = samples[: nf * frame].astype(np.int64).reshape(nf, frame)
+        e = (v * v).sum(axis=1)
+        bits = (e[1:] > e[:-1]).astype(np.int64)
+        # xor-fold into 63 bits: shift counts stay < 63 however
+        # long the clip (shift >= 64 is UB in C / wraps in numpy)
+        terms = bits << (np.arange(nf - 1, dtype=np.int64) % 63)
+        fp = int(np.bitwise_xor.reduce(terms)) if nf > 1 else 0
+        return [(doc_id, nf, fp)]
 
-    return media.mapInPandas(batches, AUDIO_FP_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), fingerprint, AUDIO_FP_SCHEMA)
 
 
 FRAME_STATS_SCHEMA = "doc_id BIGINT, frame_idx INT, luma_sum BIGINT, is_cut BOOLEAN"
@@ -2893,23 +2704,18 @@ def video_frame_stats(media: DataFrame, threshold_per_px: int = 32) -> DataFrame
     luma, flag), never pixels."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                w, h, frames = decode_y4m(bytes(blob))
-                thresh = threshold_per_px * w * h
-                prev = None
-                for f, fr in enumerate(frames):
-                    y = np.frombuffer(fr[: w * h], dtype=np.uint8).astype(np.int64)
-                    cut = prev is not None and int(np.abs(y - prev).sum()) > thresh
-                    rows.append((doc_id, f, int(y.sum()), bool(cut)))
-                    prev = y
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "luma_sum", "is_cut"]
-            )
+    def stats(doc_id, blob):
+        w, h, frames = decode_y4m(blob)
+        thresh = threshold_per_px * w * h
+        rows, prev = [], None
+        for f, fr in enumerate(frames):
+            y = np.frombuffer(fr[: w * h], dtype=np.uint8).astype(np.int64)
+            cut = prev is not None and int(np.abs(y - prev).sum()) > thresh
+            rows.append((doc_id, f, int(y.sum()), bool(cut)))
+            prev = y
+        return rows
 
-    return media.mapInPandas(batches, FRAME_STATS_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), stats, FRAME_STATS_SCHEMA)
 
 
 def synthetic_bmp_media(documents: DataFrame) -> DataFrame:
@@ -2920,27 +2726,12 @@ def synthetic_bmp_media(documents: DataFrame) -> DataFrame:
     payload."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                w, h = 8 + doc_id % 5, 6 + doc_id % 3
-                pix = (doc_id * 7 + np.arange(w * h * 3)) % 256
-                blobs.append(encode_bmp(pix.astype(np.uint8).reshape(h, w, 3)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(doc_id):
+        w, h = 8 + doc_id % 5, 6 + doc_id % 3
+        pix = (doc_id * 7 + np.arange(w * h * 3)) % 256
+        return [(doc_id, encode_bmp(pix.astype(np.uint8).reshape(h, w, 3)))]
 
-    # repartition the tiny doc_id seed: a column-pruned parquet scan
-    # often lands in ONE split, which would serialize the Arrow codec
-    # batches — and AQE would coalesce a column-repartition right back
-    # (it sizes by bytes, blind to Python-UDF cost), so the count is
-    # EXPLICIT, which AQE respects. Shuffling longs costs nothing next
-    # to the codec work.
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 HIST_OTSU_SCHEMA = (
@@ -2967,52 +2758,29 @@ def image_histogram_otsu(media: DataFrame, bins: int = 16) -> DataFrame:
     never pixels (the multimodal house contract)."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                arr = decode_image(bytes(blob)).astype(np.int64)
-                luma = (
-                    arr[:, :, 0] * 299 + arr[:, :, 1] * 587 + arr[:, :, 2] * 114
-                ) // 1000
-                bw = 256 // bins
-                hist = np.bincount((luma // bw).ravel(), minlength=bins)
-                n = int(hist.sum())
-                st = int((np.arange(bins) * hist).sum())
-                best_t, best_score = 0, -1.0
-                w0 = s0 = 0
-                for t in range(bins - 1):
-                    w0 += int(hist[t])
-                    s0 += t * int(hist[t])
-                    if w0 == 0 or w0 == n:
-                        continue
-                    num = (s0 * n - st * w0) ** 2
-                    score = float(num) / float(w0 * (n - w0))
-                    if score > best_score:
-                        best_score, best_t = score, t
-                rows.append(
-                    (
-                        int(doc_id),
-                        n,
-                        int(luma.sum()),
-                        best_t,
-                        int(hist[: best_t + 1].sum()),
-                        int(hist[best_t + 1 :].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_px",
-                    "luma_sum",
-                    "otsu_bin",
-                    "n_below",
-                    "n_above",
-                ],
-            )
+    def otsu(doc_id, blob):
+        arr = decode_image(blob).astype(np.int64)
+        luma = (arr[:, :, 0] * 299 + arr[:, :, 1] * 587 + arr[:, :, 2] * 114) // 1000
+        bw = 256 // bins
+        hist = np.bincount((luma // bw).ravel(), minlength=bins)
+        n = int(hist.sum())
+        st = int((np.arange(bins) * hist).sum())
+        best_t, best_score = 0, -1.0
+        w0 = s0 = 0
+        for t in range(bins - 1):
+            w0 += int(hist[t])
+            s0 += t * int(hist[t])
+            if w0 == 0 or w0 == n:
+                continue
+            num = (s0 * n - st * w0) ** 2
+            score = float(num) / float(w0 * (n - w0))
+            if score > best_score:
+                best_score, best_t = score, t
+        n_below = int(hist[: best_t + 1].sum())
+        n_above = int(hist[best_t + 1 :].sum())
+        return [(doc_id, n, int(luma.sum()), best_t, n_below, n_above)]
 
-    return media.mapInPandas(batches, HIST_OTSU_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), otsu, HIST_OTSU_SCHEMA)
 
 
 AUDIO_PITCH_SCHEMA = "doc_id BIGINT, n_samples INT, pitch_lag INT, r_max BIGINT"
@@ -3031,25 +2799,19 @@ def audio_pitch(media: DataFrame, min_lag: int = 2, max_lag: int = 16) -> DataFr
     map-side Arrow-batched, the shuffle carries (doc_id, 3 scalars)."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                _, samples = decode_wav(bytes(blob))
-                s = samples.astype(np.int64)
-                best_lag, best_r = min_lag, None
-                for lag in range(min_lag, max_lag + 1):
-                    if lag >= len(s):
-                        break
-                    r = int((s[:-lag] * s[lag:]).sum())
-                    if best_r is None or r > best_r:
-                        best_r, best_lag = r, lag
-                rows.append((int(doc_id), len(s), best_lag, int(best_r or 0)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "pitch_lag", "r_max"]
-            )
+    def pitch(doc_id, blob):
+        _, samples = decode_wav(blob)
+        s = samples.astype(np.int64)
+        best_lag, best_r = min_lag, None
+        for lag in range(min_lag, max_lag + 1):
+            if lag >= len(s):
+                break
+            r = int((s[:-lag] * s[lag:]).sum())
+            if best_r is None or r > best_r:
+                best_r, best_lag = r, lag
+        return [(doc_id, len(s), best_lag, int(best_r or 0))]
 
-    return media.mapInPandas(batches, AUDIO_PITCH_SCHEMA)
+    return map_rows(media.select("doc_id", "data"), pitch, AUDIO_PITCH_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -4094,61 +3856,38 @@ def synthetic_progressive_jpeg_media(documents: DataFrame) -> DataFrame:
 
 def _synthetic_jpeg_common(documents: DataFrame, progressive: bool) -> DataFrame:
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if progressive:
-            qt_y = [8, 1, 16, 16, 16, 16, 16, 16, 16, 1] + [16] * 54
-        else:
-            qt_y = [8, 1] + [16] * 62
-        qt_c = [8] + [16] * 63
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (2 + d % 3), 8 * (2 + d % 2)
-                nb = (w // 8) * (h // 8)
-                comp_blocks = [[], [], []]
-                for b in range(nb):
-                    zy = [0] * 64
-                    zy[0] = (d * 7 + 13 * b) % 120 - 60
-                    if (d + b) % 3 == 0:
-                        zy[1] = 1
-                    elif progressive and (d + b) % 3 == 1:
-                        zy[9] = 2
-                    zcb = [0] * 64
-                    zcb[0] = (d * 5 + 11 * b) % 40 - 20
-                    zcr = [0] * 64
-                    zcr[0] = (d * 3 + 17 * b) % 40 - 20
-                    comp_blocks[0].append(zy)
-                    comp_blocks[1].append(zcb)
-                    comp_blocks[2].append(zcr)
-                if progressive:
-                    blobs.append(
-                        encode_jpeg_progressive(
-                            w, h, comp_blocks, [qt_y, qt_c],
-                            restart_interval=2 if d % 2 == 0 else 0,
-                        )
-                    )
-                else:
-                    blobs.append(
-                        encode_jpeg_blocks(
-                            w, h, comp_blocks, [qt_y, qt_c],
-                            restart_interval=2 if d % 2 == 0 else 0,
-                        )
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    if progressive:
+        qt_y = [8, 1, 16, 16, 16, 16, 16, 16, 16, 1] + [16] * 54
+    else:
+        qt_y = [8, 1] + [16] * 62
+    qt_c = [8] + [16] * 63
+    encoder = encode_jpeg_progressive if progressive else encode_jpeg_blocks
 
-    # repartition the tiny doc_id seed: a column-pruned parquet scan
-    # often lands in ONE split, which would serialize the Arrow codec
-    # batches — and AQE would coalesce a column-repartition right back
-    # (it sizes by bytes, blind to Python-UDF cost), so the count is
-    # EXPLICIT, which AQE respects. Shuffling longs costs nothing next
-    # to the codec work.
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    def encode(d):
+        w, h = 8 * (2 + d % 3), 8 * (2 + d % 2)
+        nb = (w // 8) * (h // 8)
+        comp_blocks = [[], [], []]
+        for b in range(nb):
+            zy = [0] * 64
+            zy[0] = (d * 7 + 13 * b) % 120 - 60
+            if (d + b) % 3 == 0:
+                zy[1] = 1
+            elif progressive and (d + b) % 3 == 1:
+                zy[9] = 2
+            zcb = [0] * 64
+            zcb[0] = (d * 5 + 11 * b) % 40 - 20
+            zcr = [0] * 64
+            zcr[0] = (d * 3 + 17 * b) % 40 - 20
+            comp_blocks[0].append(zy)
+            comp_blocks[1].append(zcb)
+            comp_blocks[2].append(zcr)
+        blob = encoder(
+            w, h, comp_blocks, [qt_y, qt_c],
+            restart_interval=2 if d % 2 == 0 else 0,
+        )
+        return [(d, blob)]
+
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 def _gif_palette() -> bytes:
@@ -4402,21 +4141,12 @@ def synthetic_gif_media(documents: DataFrame) -> DataFrame:
     b = (idx*7) % 256."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                w, h = 8 + doc_id % 5, 6 + doc_id % 3
-                idx = (doc_id * 7 + np.arange(w * h)) % 256
-                blobs.append(encode_gif(idx.astype(np.int64), int(w), int(h)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(doc_id):
+        w, h = 8 + doc_id % 5, 6 + doc_id % 3
+        idx = (doc_id * 7 + np.arange(w * h)) % 256
+        return [(doc_id, encode_gif(idx.astype(np.int64), w, h))]
 
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -4491,21 +4221,13 @@ def synthetic_g711_media(documents: DataFrame) -> DataFrame:
     256 over n = 128 + 64*(doc_id%2) samples; even doc_ids are mu-law,
     odd are A-law."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 128 + 64 * (d % 2)
-                payload = bytes(((d * 11 + j * 7) % 256) for j in range(n))
-                rows.append((d, "ulaw" if d % 2 == 0 else "alaw", payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "law", "data"])
+    def encode(d):
+        n = 128 + 64 * (d % 2)
+        payload = bytes(((d * 11 + j * 7) % 256) for j in range(n))
+        return [(d, "ulaw" if d % 2 == 0 else "alaw", payload)]
 
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, law STRING, data BINARY"
+    return map_rows(
+        doc_id_seed(documents), encode, "doc_id BIGINT, law STRING, data BINARY"
     )
 
 
@@ -4513,20 +4235,13 @@ def g711_decode_features(media: DataFrame) -> DataFrame:
     """Expand G.711 payloads executor-side; per-doc integer features
     (n, sum of |pcm|, first sample) shuffle — scalars only."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, law, blob in zip(pdf["doc_id"], pdf["law"], pdf["data"]):
-                pcm = g711_decode(bytes(blob), law)
-                rows.append(
-                    (int(doc_id), law, len(pcm), int(abs(pcm).sum()), int(pcm[0]))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "law", "n_samples", "sum_abs", "first_pcm"]
-            )
+    def decode(doc_id, law, blob):
+        pcm = g711_decode(blob, law)
+        return [(doc_id, law, len(pcm), int(abs(pcm).sum()), int(pcm[0]))]
 
-    return media.mapInPandas(
-        batches,
+    return map_rows(
+        media.select("doc_id", "law", "data"),
+        decode,
         "doc_id BIGINT, law STRING, n_samples BIGINT, "
         "sum_abs BIGINT, first_pcm BIGINT",
     )
@@ -4610,23 +4325,15 @@ def synthetic_adpcm_media(documents: DataFrame) -> DataFrame:
     j*5) % 16, packed two per byte (low nibble first, the IMA/WAV
     layout), initial predictor 0 and initial step index doc_id % 89."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nibs = [((d * 3 + j * 5) % 16) for j in range(64)]
-                payload = bytes(
-                    nibs[i] | (nibs[i + 1] << 4) for i in range(0, 64, 2)
-                )
-                rows.append((d, d % 89, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "init_index", "data"])
+    def encode(d):
+        nibs = [((d * 3 + j * 5) % 16) for j in range(64)]
+        payload = bytes(nibs[i] | (nibs[i + 1] << 4) for i in range(0, 64, 2))
+        return [(d, d % 89, payload)]
 
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, init_index BIGINT, data BINARY"
+    return map_rows(
+        doc_id_seed(documents),
+        encode,
+        "doc_id BIGINT, init_index BIGINT, data BINARY",
     )
 
 
@@ -4634,31 +4341,17 @@ def adpcm_decode_features(media: DataFrame) -> DataFrame:
     """Unpack nibbles (low-first), run the stateful expansion, emit
     per-doc integer features. Map-only; scalars shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, idx0, blob in zip(
-                pdf["doc_id"], pdf["init_index"], pdf["data"]
-            ):
-                nibs = []
-                for b in bytes(blob):
-                    nibs.append(b & 0x0F)
-                    nibs.append(b >> 4)
-                pcm = ima_adpcm_decode(nibs, predictor=0, index=int(idx0))
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(pcm),
-                        sum(abs(v) for v in pcm),
-                        pcm[-1],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "sum_abs", "last_pcm"]
-            )
+    def decode(doc_id, idx0, blob):
+        nibs = []
+        for b in blob:
+            nibs.append(b & 0x0F)
+            nibs.append(b >> 4)
+        pcm = ima_adpcm_decode(nibs, predictor=0, index=idx0)
+        return [(doc_id, len(pcm), sum(abs(v) for v in pcm), pcm[-1])]
 
-    return media.mapInPandas(
-        batches,
+    return map_rows(
+        media.select("doc_id", "init_index", "data"),
+        decode,
         "doc_id BIGINT, n_samples BIGINT, sum_abs BIGINT, last_pcm BIGINT",
     )
 
@@ -4672,27 +4365,15 @@ def synthetic_gif_interlaced_media(documents: DataFrame) -> DataFrame:
     actually overrides the global table, not just parses)."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                idx = (d * 7 + np.arange(w * h)) % 256
-                blobs.append(
-                    encode_gif_interlaced(
-                        idx.astype(np.int64), int(w), int(h),
-                        lct_rotate=16 if d % 2 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        idx = (d * 7 + np.arange(w * h)) % 256
+        blob = encode_gif_interlaced(
+            idx.astype(np.int64), w, h, lct_rotate=16 if d % 2 == 0 else None
+        )
+        return [(d, blob)]
 
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    return map_rows(doc_id_seed(documents), encode, MEDIA_SCHEMA)
 
 
 def image_decode_checksum(media: DataFrame) -> DataFrame:
@@ -4702,23 +4383,17 @@ def image_decode_checksum(media: DataFrame) -> DataFrame:
     mis-ordering changes. Map-only Arrow batches, scalar shuffle."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                arr = decode_image(bytes(blob)).astype(np.int64)
-                hgt, wdt, _ = arr.shape
-                weights = np.arange(1, hgt * wdt + 1, dtype=np.int64)
-                mix = arr[:, :, 0] + 2 * arr[:, :, 1] + 3 * arr[:, :, 2]
-                rows.append(
-                    (int(doc_id), wdt, hgt, int((weights * mix.reshape(-1)).sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "checksum"]
-            )
+    def checksum(doc_id, blob):
+        arr = decode_image(blob).astype(np.int64)
+        hgt, wdt, _ = arr.shape
+        weights = np.arange(1, hgt * wdt + 1, dtype=np.int64)
+        mix = arr[:, :, 0] + 2 * arr[:, :, 1] + 3 * arr[:, :, 2]
+        return [(doc_id, wdt, hgt, int((weights * mix.reshape(-1)).sum()))]
 
-    return media.mapInPandas(
-        batches, "doc_id BIGINT, width INT, height INT, checksum BIGINT"
+    return map_rows(
+        media.select("doc_id", "data"),
+        checksum,
+        "doc_id BIGINT, width INT, height INT, checksum BIGINT",
     )
 
 
@@ -4743,29 +4418,18 @@ def audio_hadamard_bands(media: DataFrame) -> DataFrame:
         dtype=np.int64,
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                _rate, samples = decode_wav(bytes(blob))
-                s = np.asarray(samples[:64], dtype=np.int64)
-                c = H.T @ s
-                rows.append(
-                    (
-                        doc_id,
-                        int(c[0]),
-                        int(np.abs(c[1:8]).sum()),
-                        int(np.abs(c[8:32]).sum()),
-                        int(np.abs(c[32:64]).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "dc", "band_low", "band_mid", "band_high"],
-            )
+    def bands(doc_id, blob):
+        _rate, samples = decode_wav(blob)
+        s = np.asarray(samples[:64], dtype=np.int64)
+        c = H.T @ s
+        low, mid, high = (
+            int(np.abs(c[a:b]).sum()) for a, b in ((1, 8), (8, 32), (32, 64))
+        )
+        return [(doc_id, int(c[0]), low, mid, high)]
 
-    return media.mapInPandas(
-        batches,
+    return map_rows(
+        media.select("doc_id", "data"),
+        bands,
         "doc_id BIGINT, dc BIGINT, band_low BIGINT, band_mid BIGINT, band_high BIGINT",
     )
 
@@ -5497,35 +5161,15 @@ def synthetic_msadpcm_media(documents: DataFrame) -> DataFrame:
     header samples (doc_id*37) % 1024 - 512 and (doc_id*53) % 1024
     - 512."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                codes = [((d * 3 + 5 * j) % 16) for j in range(64)]
-                payload = bytes(
-                    (codes[i] << 4) | codes[i + 1] for i in range(0, 64, 2)
-                )
-                rows.append(
-                    (
-                        d,
-                        d % 7,
-                        16 + d % 100,
-                        (d * 37) % 1024 - 512,
-                        (d * 53) % 1024 - 512,
-                        payload,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pred_idx", "delta0", "s1", "s2", "data"],
-            )
+    def encode(d):
+        codes = [((d * 3 + 5 * j) % 16) for j in range(64)]
+        payload = bytes((codes[i] << 4) | codes[i + 1] for i in range(0, 64, 2))
+        s1, s2 = (d * 37) % 1024 - 512, (d * 53) % 1024 - 512
+        return [(d, d % 7, 16 + d % 100, s1, s2, payload)]
 
-    n_parts = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return documents.select("doc_id").repartition(n_parts).mapInPandas(
-        batches,
+    return map_rows(
+        doc_id_seed(documents),
+        encode,
         "doc_id BIGINT, pred_idx BIGINT, delta0 BIGINT, s1 BIGINT, "
         "s2 BIGINT, data BINARY",
     )
@@ -5535,34 +5179,17 @@ def msadpcm_decode_features(media: DataFrame) -> DataFrame:
     """Unpack codes (high nibble first), run the block expansion, emit
     per-doc integer features. Map-only; scalars shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, pi, d0, s1, s2, blob in zip(
-                pdf["doc_id"], pdf["pred_idx"], pdf["delta0"],
-                pdf["s1"], pdf["s2"], pdf["data"],
-            ):
-                codes = []
-                for b in bytes(blob):
-                    codes.append(b >> 4)
-                    codes.append(b & 0x0F)
-                pcm = ms_adpcm_decode(
-                    codes, int(pi), int(d0), int(s1), int(s2)
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(pcm),
-                        sum(abs(v) for v in pcm),
-                        pcm[-1],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "sum_abs", "last_pcm"]
-            )
+    def decode(doc_id, pi, d0, s1, s2, blob):
+        codes = []
+        for b in blob:
+            codes.append(b >> 4)
+            codes.append(b & 0x0F)
+        pcm = ms_adpcm_decode(codes, pi, d0, s1, s2)
+        return [(doc_id, len(pcm), sum(abs(v) for v in pcm), pcm[-1])]
 
-    return media.mapInPandas(
-        batches,
+    return map_rows(
+        media.select("doc_id", "pred_idx", "delta0", "s1", "s2", "data"),
+        decode,
         "doc_id BIGINT, n_samples BIGINT, sum_abs BIGINT, last_pcm BIGINT",
     )
 

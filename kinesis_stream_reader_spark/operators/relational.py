@@ -2868,18 +2868,32 @@ def bloom_semi_filter(
     )
 
 
-def _check_driver_graph_bounds(nodes_a: int, nodes_b: int, cap: int, kernel: str):
+# default vertex cap of the O(n^2) driver graph kernels
+_N2_VERTEX_CAP = 4096
+
+
+def _check_driver_graph_bounds(
+    nodes_a: int, nodes_b: int, cap: int, kernel: str, exponent: int = 2
+):
     """The dense driver-side graph kernels allocate O(n^2)-O(n^3)
     arrays keyed to the nodes_a + nodes_b residue bound; a caller
     passing large diagnostic parameters must fail loudly instead of
     OOM-ing the driver (the distributed forms were retired in round
-    13). Env-overridable for hosts with more driver memory."""
-    env_cap = int(os.environ.get("SPARK_GRAFT_DRIVER_GRAPH_MAX_VERTICES", "0")) or cap
-    if nodes_a + nodes_b > env_cap:
+    13). Env-overridable for hosts with more driver memory:
+    SPARK_GRAFT_DRIVER_GRAPH_MAX_VERTICES replaces the n^2 cap
+    (_N2_VERTEX_CAP), and an O(n^exponent) kernel's ``cap`` scales by
+    (override / _N2_VERTEX_CAP) ** (2 / exponent), so every kernel's
+    largest dense array grows by the same factor."""
+    var = "SPARK_GRAFT_DRIVER_GRAPH_MAX_VERTICES"
+    raw = os.environ.get(var, "").strip()
+    if raw:
+        if not raw.isdigit() or int(raw) == 0:
+            raise ValueError(f"{var} must be a positive integer, got {raw!r}")
+        cap = int(cap * (int(raw) / _N2_VERTEX_CAP) ** (2 / exponent))
+    if nodes_a + nodes_b > cap:
         raise ValueError(
             f"{kernel}: nodes_a + nodes_b = {nodes_a + nodes_b} exceeds the "
-            f"dense driver-kernel vertex cap {env_cap} (set "
-            "SPARK_GRAFT_DRIVER_GRAPH_MAX_VERTICES to raise it)"
+            f"dense driver-kernel vertex cap {cap} (set {var} to raise it)"
         )
 
 
@@ -2917,7 +2931,7 @@ def triangle_count(events: DataFrame, nodes_a: int = 200, nodes_b: int = 199) ->
     from . import tiny_df
 
     # the wedge tensor is n^3 bool — cap tighter than the n^2 kernels
-    _check_driver_graph_bounds(nodes_a, nodes_b, 512, "triangle_count")
+    _check_driver_graph_bounds(nodes_a, nodes_b, 512, "triangle_count", exponent=3)
     spark = events.sparkSession
     edge_rows = (
         events.select(
@@ -3131,7 +3145,7 @@ def _bounded_projection_graph(
     import numpy as np
 
     _check_driver_graph_bounds(
-        nodes_a, nodes_b, 4096, "_bounded_projection_graph"
+        nodes_a, nodes_b, _N2_VERTEX_CAP, "_bounded_projection_graph"
     )
     edge_rows = (
         events.select(

@@ -1223,10 +1223,10 @@ def pca_power_top_component(embeddings: DataFrame, rounds: int = 4) -> DataFrame
             acc_f += float(z) * float(z)
         nrm = int(math.floor(math.sqrt(acc_f)))
         if nrm == 0:
-            # all-zero u (e.g. every embedding quantizes to zero): the
-            # distributed plan's `DIV 0` yielded NULLs (non-ANSI), not a
-            # crash — settle on the zero vector instead of dividing
-            v = [0] * len(u)
+            # all-zero u (e.g. every embedding quantizes to zero): `DIV 0`
+            # is NULL (non-ANSI Spark, DuckDB), and NULL propagates through
+            # every later round — the oracle's answer is all-NULL loadings
+            v = [None] * len(u)
             break
         # Spark's bigint DIV truncates toward zero (Python // floors)
         v = [
@@ -1236,7 +1236,7 @@ def pca_power_top_component(embeddings: DataFrame, rounds: int = 4) -> DataFrame
     return (
         _tiny_df(
             spark,
-            [(d, int(vm)) for d, vm in enumerate(v)],
+            list(enumerate(v)),
             "d INT, v_milli BIGINT",
         )
         .select("d", "v_milli", (F.col("v_milli") / F.lit(1000)).alias("loading"))

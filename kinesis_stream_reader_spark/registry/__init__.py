@@ -173,15 +173,14 @@ _PRIORITY = [
     "source_python_reshard", "ann_ivfpq_batch", "unigram_lm_encode",
     "multimodal_tiff16_decode", "streaming_shard_lag_census",
     "streaming_reshard_drain", "ann_ivf_filtered", "merkle_snapshot_diff",
-    "multimodal_tiff16_rgb_decode", "tokenizer_compare_report",
+    "multimodal_tiff16_rgb_decode",
     "dedup_url_canonicalize", "wordpiece_encode", "pq_code_health",
     # ROUND-9 ROTATION: new round-9 queries lead (never driver-checked),
     # then the round-9-touched legs (rank-based seeding, imbalance
     # definition), then the r8 rotation.
-    "ann_ivfpq_refine", "pq_code_health",
+    "ann_ivfpq_refine",
     "multimodal_png_gray_lowdepth_decode", "streaming_cusum_monitor",
-    "dedup_url_canonicalize", "multimodal_tiff_ccitt_decode",
-    "wordpiece_encode", "consistent_hash_resharding",
+    "multimodal_tiff_ccitt_decode", "consistent_hash_resharding",
     "betweenness_centrality", "multimodal_motion_estimate",
     "delong_auc_ci", "sink_xml_roundtrip",
     "multimodal_png_gray_alpha_decode",
@@ -210,11 +209,11 @@ _PRIORITY = [
     # ROUND-6 ROTATION: new round-6 queries lead (never driver-checked),
     # then the round-6-touched eval kernels, then the r5 rotation.
     "multimodal_qoi_decode", "fim_transform",
-    "multimodal_aiff_decode", "ece_report",
+    "ece_report",
     "multimodal_jpeg_progressive_decode", "multimodal_flac_decode",
     "streaming_sprt_monitor", "streaming_obf_monitor",
     "multimodal_gif_interlaced_decode",
-    "multimodal_g711_decode", "multimodal_adpcm_decode",
+    "multimodal_adpcm_decode",
     "multimodal_png_palette_decode", "multimodal_tiff_decode",
     "unimax_allocation", "embedding_morton_shards",
     "coreset_sensitivity_select", "hubness_report",
@@ -222,18 +221,16 @@ _PRIORITY = [
     "bleu_pairs_report", "markov_attribution_removal", "best_of_n_selection",
     "cem_att_estimate", "sprt_sequential_test", "embedding_random_projection",
     "feature_hashing_vectors", "er_sorted_neighborhood", "psm_att_matched",
-    "cluster_purity_report", "graph_modularity_report", "wer_pairs_report",
-    "stratified_kfold_assign", "rouge_l_pairs_report", "chrf_pairs_report",
+    "cluster_purity_report", "graph_modularity_report", "stratified_kfold_assign",
     "cohens_kappa_report", "multimodal_gif_decode",
     "ridge_regression_closed_form", "streaming_drift_monitor",
     "markov_next_event_eval", "brier_decomposition",
     "dtw_timeseries_similarity", "harmonic_centrality",
     "matrix_profile_daily", "pelt_changepoints",
-    "markov_attribution_removal", "multimodal_audio_hadamard",
+    "multimodal_audio_hadamard",
     "ecod_outlier_scores", "lof_outlier_scores", "mcnemar_raters_test",
     "gains_lift_deciles", "model_ks_separation",
-    "evt_pot_tail_report", "best_of_n_selection",
-    "group_sequential_obf",
+    "evt_pot_tail_report", "group_sequential_obf",
     "good_turing_unseen_mass", "capture_recapture_estimate",
     "heaps_law_fit",
     "multimodal_jpeg_decode", "multimodal_jpeg_phash_dedup",
@@ -255,7 +252,7 @@ _PRIORITY = [
     "market_share", "waiting_suppliers", "feature_quantile_bins_exact",
     "log_parse_roundtrip", "streaming_windowed_distinct",
     "sql_recursive_reachability", "source_python_stream",
-    "sink_python_datasource", "multimodal_phash_dedup", "expectations_check",
+    "sink_python_datasource", "expectations_check",
     "varint_delta_report", "cusum_changepoint", "assoc_rules",
     "kmv_intersection", "bootstrap_ci", "incremental_join_merge",
     "temporal_reachability", "training_matrix_pit",
@@ -333,7 +330,7 @@ _PRIORITY = [
     "zipf_fit_report", "ttr_hapax_report", "term_burstiness",
     "paragraph_dedup_scrub", "multimodal_bmp_decode",
     "multimodal_image_histogram", "multimodal_audio_pitch",
-    "holt_winters_seasonal", "bleu_pairs_report", "experiment_readout",
+    "holt_winters_seasonal", "experiment_readout",
     "multimodal_keyframe_select", "dbscan_grid_clusters",
     "decay_weighted_activity", "skipgram_negative_table", "model_eval_auc",
     "multimodal_png_decode", "gopher_repetition_rules", "c4_quality_filters",
@@ -342,7 +339,7 @@ _PRIORITY = [
     "dedup_substring_scrub", "streaming_near_dedup", "doremi_reweight_step",
     "matryoshka_recall", "lang_id_confusion", "kcenter_init",
     "multimodal_audio_vad", "source_token_kl", "timeseries_topk_similar",
-    "kmeans_converged", "bpe_train_merges", "window_session_dynamic",
+    "bpe_train_merges", "window_session_dynamic",
     "nested_orders_roundtrip", "quantile_normalize", "knn_graph",
     "ngram_novelty_curve", "theil_sen_trend", "quantiles_merged_histograms",
     "split_semantic_leakage", "randomized_response_audit",
@@ -372,7 +369,7 @@ _PRIORITY = [
     "streaming_resume_exactly_once", "streaming_dedup",
     "streaming_asof_enrich", "streaming_upsert_compact",
     "streaming_records_pipeline", "ann_bruteforce", "ann_lsh", "ann_ivf",
-    "ann_pq", "feature_quantile_bins", "pagerank_step", "pagerank_converged",
+    "ann_pq", "feature_quantile_bins", "pagerank_step",
     "heavy_hitters_cms", "bloom_semi_filter", "graph_triangles",
     "graph_label_propagation", "ann_ivf_incremental", "join_asof_tolerance",
     "shipping_priority", "text_quality", "filter_contact_id",

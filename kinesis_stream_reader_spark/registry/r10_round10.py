@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from ..scratch import scratch
 from ._shared import load_table, register
 from ..operators import tiny_df
+from ..operators.rowmap import doc_id_seed, map_rows
 
 
 # ---------------------------------------------------------------------------
@@ -464,32 +465,19 @@ def multimodal_tiff16_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                v = (
-                    d * 48271 + 977 * np.arange(w * h, dtype=np.int64)
-                ) % 65536
-                blobs.append(
-                    multimodal.encode_tiff_gray16(
-                        v.reshape(h, w).astype(np.uint16),
-                        compression=(1, 5, 8, 32773)[d % 4],
-                        big_endian=bool(d % 2),
-                        rows_per_strip=3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        v = (d * 48271 + 977 * np.arange(w * h, dtype=np.int64)) % 65536
+        blob = multimodal.encode_tiff_gray16(
+            v.reshape(h, w).astype(np.uint16),
+            compression=(1, 5, 8, 32773)[d % 4],
+            big_endian=bool(d % 2),
+            rows_per_strip=3,
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -1029,38 +1017,27 @@ def multimodal_tiff16_rgb_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                i = np.arange(w * h, dtype=np.int64)
-                px = np.stack(
-                    [
-                        (d * 48271 + 977 * i) % 65536,
-                        (d * 16807 + 991 * i) % 65536,
-                        (d * 69621 + 983 * i) % 65536,
-                    ],
-                    axis=1,
-                ).reshape(h, w, 3)
-                blobs.append(
-                    multimodal.encode_tiff_rgb16(
-                        px.astype(np.uint16),
-                        compression=(1, 5, 8, 32773)[d % 4],
-                        big_endian=bool(d % 2),
-                        rows_per_strip=3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        i = np.arange(w * h, dtype=np.int64)
+        px = np.stack(
+            [
+                (d * 48271 + 977 * i) % 65536,
+                (d * 16807 + 991 * i) % 65536,
+                (d * 69621 + 983 * i) % 65536,
+            ],
+            axis=1,
+        ).reshape(h, w, 3)
+        blob = multimodal.encode_tiff_rgb16(
+            px.astype(np.uint16),
+            compression=(1, 5, 8, 32773)[d % 4],
+            big_endian=bool(d % 2),
+            rows_per_strip=3,
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -1290,39 +1267,25 @@ def multimodal_jpeg12_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
+    q = [8, 1] + [16] * 62
 
-        q = [8, 1] + [16] * 62
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (2 + d % 3), 8 * (2 + d % 2)
-                nb = (w // 8) * (h // 8)
-                blocks = []
-                for b in range(nb):
-                    zz = [0] * 64
-                    zz[0] = (d * 19 + 29 * b) % 3800 - 1900
-                    if (d + b) % 3 == 0:
-                        zz[1] = 1
-                    blocks.append(zz)
-                blobs.append(
-                    multimodal.encode_jpeg12_gray(
-                        w,
-                        h,
-                        blocks,
-                        q,
-                        restart_interval=2 if d % 2 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 * (2 + d % 3), 8 * (2 + d % 2)
+        nb = (w // 8) * (h // 8)
+        blocks = []
+        for b in range(nb):
+            zz = [0] * 64
+            zz[0] = (d * 19 + 29 * b) % 3800 - 1900
+            if (d + b) % 3 == 0:
+                zz[1] = 1
+            blocks.append(zz)
+        blob = multimodal.encode_jpeg12_gray(
+            w, h, blocks, q, restart_interval=2 if d % 2 == 0 else 0
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -1363,33 +1326,20 @@ def multimodal_jpeg_lossless_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                P = (8, 12, 16)[d % 3]
-                v = (
-                    d * 37 + 101 * np.arange(w * h, dtype=np.int64)
-                ) % (1 << P)
-                blobs.append(
-                    multimodal.encode_jpeg_lossless_gray(
-                        v.reshape(h, w),
-                        P,
-                        predictor=d % 7 + 1,
-                        restart_interval=5 if d % 2 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        P = (8, 12, 16)[d % 3]
+        v = (d * 37 + 101 * np.arange(w * h, dtype=np.int64)) % (1 << P)
+        blob = multimodal.encode_jpeg_lossless_gray(
+            v.reshape(h, w),
+            P,
+            predictor=d % 7 + 1,
+            restart_interval=5 if d % 2 == 0 else 0,
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -1428,37 +1378,26 @@ def multimodal_jpeg_lossless_rgb_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                P = 8 if d % 2 == 0 else 16
-                i = np.arange(w * h, dtype=np.int64)
-                px = np.stack(
-                    [
-                        (d * 37 + 101 * i) % (1 << P),
-                        (d * 41 + 103 * i) % (1 << P),
-                        (d * 43 + 107 * i) % (1 << P),
-                    ],
-                    axis=1,
-                ).reshape(h, w, 3)
-                blobs.append(
-                    multimodal.encode_jpeg_lossless_rgb(
-                        px,
-                        P,
-                        predictor=d % 7 + 1,
-                        restart_interval=5 if d % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        P = 8 if d % 2 == 0 else 16
+        i = np.arange(w * h, dtype=np.int64)
+        px = np.stack(
+            [
+                (d * 37 + 101 * i) % (1 << P),
+                (d * 41 + 103 * i) % (1 << P),
+                (d * 43 + 107 * i) % (1 << P),
+            ],
+            axis=1,
+        ).reshape(h, w, 3)
+        blob = multimodal.encode_jpeg_lossless_rgb(
+            px,
+            P,
+            predictor=d % 7 + 1,
+            restart_interval=5 if d % 3 == 0 else 0,
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")

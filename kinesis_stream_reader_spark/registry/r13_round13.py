@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..scratch import scratch
+from ..operators.rowmap import doc_id_seed, map_rows
 from ._shared import ORACLES, load_table, register
 
 
@@ -405,42 +406,29 @@ def _register_partial_lossless():
             ((0, 2), (1,)),
         )
 
-        def batches(it):
-            import pandas as pd
-
-            for pdf in it:
-                blobs = []
-                for doc_id in pdf["doc_id"]:
-                    d = int(doc_id)
-                    w, h = 8 + d % 5, 6 + d % 3
-                    P = 8 if d % 2 == 0 else 16
-                    i = np.arange(w * h, dtype=np.int64)
-                    px = np.stack(
-                        [
-                            (d * 37 + 101 * i) % (1 << P),
-                            (d * 41 + 103 * i) % (1 << P),
-                            (d * 43 + 107 * i) % (1 << P),
-                        ],
-                        axis=1,
-                    ).reshape(h, w, 3)
-                    blobs.append(
-                        multimodal.encode_jpeg_lossless_rgb_partial(
-                            px,
-                            P,
-                            predictor=d % 7 + 1,
-                            restart_interval=5 if d % 3 == 0 else 0,
-                            scan_groups=groupings[d % 5],
-                        )
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+        def encode(d):
+            w, h = 8 + d % 5, 6 + d % 3
+            P = 8 if d % 2 == 0 else 16
+            i = np.arange(w * h, dtype=np.int64)
+            px = np.stack(
+                [
+                    (d * 37 + 101 * i) % (1 << P),
+                    (d * 41 + 103 * i) % (1 << P),
+                    (d * 43 + 107 * i) % (1 << P),
+                ],
+                axis=1,
+            ).reshape(h, w, 3)
+            blob = multimodal.encode_jpeg_lossless_rgb_partial(
+                px,
+                P,
+                predictor=d % 7 + 1,
+                restart_interval=5 if d % 3 == 0 else 0,
+                scan_groups=groupings[d % 5],
+            )
+            return [(d, blob)]
 
         docs = load_table(spark, sf_dir, "documents")
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-            batches, "doc_id BIGINT, data BINARY"
-        )
+        media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
         return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
     return multimodal_jpeg_lossless_partial_decode_query

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
 from ..operators import tiny_df
+from ..operators.rowmap import doc_id_seed, map_rows
 from ._shared import _FLAT_COLS, _nested_events  # noqa: F401
 
 
@@ -251,29 +252,18 @@ def multimodal_tiff_decode_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                pix = (d * 7 + np.arange(w * h * 3)) % 256
-                blobs.append(
-                    multimodal.encode_tiff(
-                        pix.astype(np.uint8).reshape(h, w, 3),
-                        big_endian=bool(d % 2),
-                        rows_per_strip=1 + d % 4,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        pix = (d * 7 + np.arange(w * h * 3)) % 256
+        blob = multimodal.encode_tiff(
+            pix.astype(np.uint8).reshape(h, w, 3),
+            big_endian=bool(d % 2),
+            rows_per_strip=1 + d % 4,
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -728,39 +718,27 @@ def multimodal_png_palette_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        pal256 = np.array(
-            [(i, (i * 3) % 256, (i * 7) % 256) for i in range(256)],
-            dtype=np.uint8,
-        )
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                if d % 2 == 0:
-                    idx = ((d * 7 + np.arange(w * h)) % 256).reshape(h, w)
-                    blobs.append(
-                        multimodal.encode_png_indexed(
-                            idx, pal256, depth=8, filter_for_row=lambda y: y
-                        )
-                    )
-                else:
-                    idx = ((d * 7 + np.arange(w * h)) % 16).reshape(h, w)
-                    blobs.append(
-                        multimodal.encode_png_indexed(
-                            idx, pal256[:16], depth=4, filter_for_row=lambda y: y
-                        )
-                    )
-            import pandas as pd
+    pal256 = np.array(
+        [(i, (i * 3) % 256, (i * 7) % 256) for i in range(256)],
+        dtype=np.uint8,
+    )
 
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        if d % 2 == 0:
+            idx = ((d * 7 + np.arange(w * h)) % 256).reshape(h, w)
+            blob = multimodal.encode_png_indexed(
+                idx, pal256, depth=8, filter_for_row=lambda y: y
+            )
+        else:
+            idx = ((d * 7 + np.arange(w * h)) % 16).reshape(h, w)
+            blob = multimodal.encode_png_indexed(
+                idx, pal256[:16], depth=4, filter_for_row=lambda y: y
+            )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -1152,34 +1130,20 @@ def multimodal_qoi_decode_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                p = np.arange(w * h, dtype=np.int64)
-                base = (d * 7 + 11 * (p // 3)) % 256
-                px = np.stack([base, (base + 1) % 256, (base + 2) % 256], 1)
-                ramp = (d * 3 + p) % 256
-                first = p < w
-                px[first] = np.stack([ramp, ramp, ramp], 1)[first]
-                mark = (~first) & (p % 17 == 16)
-                px[mark] = (10, 20, 30)
-                blobs.append(
-                    multimodal.encode_qoi(
-                        px.astype(np.uint8).reshape(h, w, 3)
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        p = np.arange(w * h, dtype=np.int64)
+        base = (d * 7 + 11 * (p // 3)) % 256
+        px = np.stack([base, (base + 1) % 256, (base + 2) % 256], 1)
+        ramp = (d * 3 + p) % 256
+        first = p < w
+        px[first] = np.stack([ramp, ramp, ramp], 1)[first]
+        mark = (~first) & (p % 17 == 16)
+        px[mark] = (10, 20, 30)
+        return [(d, multimodal.encode_qoi(px.astype(np.uint8).reshape(h, w, 3)))]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.rowmap import doc_id_seed, map_rows
 from ._shared import load_table, register
 
 # ---------------------------------------------------------------------------
@@ -302,34 +303,23 @@ def multimodal_tiff_lzw_decode_query(spark: SparkSession, sf_dir: str) -> DataFr
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 5 == 0:
-                    w, h, rps = 120, 112, 112  # one strip: all width bumps
-                else:
-                    w, h, rps = 8 + d % 5, 6 + d % 3, 1 + d % 4
-                i = np.arange(w * h * 3, dtype=np.int64)
-                pix = (d * 7 + 3 * i + (i * i) % 31) % 256
-                blobs.append(
-                    multimodal.encode_tiff(
-                        pix.astype(np.uint8).reshape(h, w, 3),
-                        big_endian=bool((d // 2) % 2),
-                        rows_per_strip=rps,
-                        compression=5 if d % 2 == 0 else 32773,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        if d % 5 == 0:
+            w, h, rps = 120, 112, 112  # one strip: all width bumps
+        else:
+            w, h, rps = 8 + d % 5, 6 + d % 3, 1 + d % 4
+        i = np.arange(w * h * 3, dtype=np.int64)
+        pix = (d * 7 + 3 * i + (i * i) % 31) % 256
+        blob = multimodal.encode_tiff(
+            pix.astype(np.uint8).reshape(h, w, 3),
+            big_endian=bool((d // 2) % 2),
+            rows_per_strip=rps,
+            compression=5 if d % 2 == 0 else 32773,
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -381,50 +371,32 @@ def multimodal_png_interlaced_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
+    pal256 = np.array(
+        [(i, (i * 3) % 256, (i * 7) % 256) for i in range(256)],
+        dtype=np.uint8,
+    )
 
-        pal256 = np.array(
-            [(i, (i * 3) % 256, (i * 7) % 256) for i in range(256)],
-            dtype=np.uint8,
-        )
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 12 + d % 7, 10 + d % 5
-                if d % 3 == 0:
-                    pix = ((d * 7 + np.arange(w * h * 3)) % 256).astype(np.uint8)
-                    blobs.append(
-                        multimodal.encode_png(
-                            pix.reshape(h, w, 3),
-                            filter_for_row=lambda y: y,
-                            interlace=True,
-                        )
-                    )
-                elif d % 3 == 1:
-                    idx = ((d * 7 + np.arange(w * h)) % 256).reshape(h, w)
-                    blobs.append(
-                        multimodal.encode_png_indexed(
-                            idx, pal256, depth=8,
-                            filter_for_row=lambda y: y, interlace=True,
-                        )
-                    )
-                else:
-                    idx = ((d * 7 + np.arange(w * h)) % 16).reshape(h, w)
-                    blobs.append(
-                        multimodal.encode_png_indexed(
-                            idx, pal256[:16], depth=4,
-                            filter_for_row=lambda y: y, interlace=True,
-                        )
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 12 + d % 7, 10 + d % 5
+        if d % 3 == 0:
+            pix = ((d * 7 + np.arange(w * h * 3)) % 256).astype(np.uint8)
+            blob = multimodal.encode_png(
+                pix.reshape(h, w, 3), filter_for_row=lambda y: y, interlace=True
+            )
+        elif d % 3 == 1:
+            idx = ((d * 7 + np.arange(w * h)) % 256).reshape(h, w)
+            blob = multimodal.encode_png_indexed(
+                idx, pal256, depth=8, filter_for_row=lambda y: y, interlace=True
+            )
+        else:
+            idx = ((d * 7 + np.arange(w * h)) % 16).reshape(h, w)
+            blob = multimodal.encode_png_indexed(
+                idx, pal256[:16], depth=4, filter_for_row=lambda y: y, interlace=True
+            )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -569,40 +541,26 @@ def multimodal_tiff_tiled_decode_query(spark: SparkSession, sf_dir: str) -> Data
 
     COMPS = (1, 5, 32773)
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 18 + d % 9, 14 + d % 7
-                pix = ((d * 7 + np.arange(w * h * 3)) % 256).astype(np.uint8)
-                arr = pix.reshape(h, w, 3)
-                kw = dict(
-                    big_endian=bool((d // 4) % 2), compression=COMPS[d % 3]
-                )
-                mode = d % 4
-                if mode == 0:
-                    blob = multimodal.encode_tiff(
-                        arr, rows_per_strip=1 + d % 4, planar=True, **kw
-                    )
-                elif mode == 1:
-                    blob = multimodal.encode_tiff(arr, tile=(16, 16), **kw)
-                elif mode == 2:
-                    blob = multimodal.encode_tiff(
-                        arr, tile=(16, 16), planar=True, **kw
-                    )
-                else:
-                    blob = multimodal.encode_tiff(arr, rows_per_strip=1 + d % 4, **kw)
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 18 + d % 9, 14 + d % 7
+        pix = ((d * 7 + np.arange(w * h * 3)) % 256).astype(np.uint8)
+        arr = pix.reshape(h, w, 3)
+        kw = dict(big_endian=bool((d // 4) % 2), compression=COMPS[d % 3])
+        mode = d % 4
+        if mode == 0:
+            blob = multimodal.encode_tiff(
+                arr, rows_per_strip=1 + d % 4, planar=True, **kw
+            )
+        elif mode == 1:
+            blob = multimodal.encode_tiff(arr, tile=(16, 16), **kw)
+        elif mode == 2:
+            blob = multimodal.encode_tiff(arr, tile=(16, 16), planar=True, **kw)
+        else:
+            blob = multimodal.encode_tiff(arr, rows_per_strip=1 + d % 4, **kw)
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -737,40 +695,23 @@ def multimodal_png_colortype_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 9 + d % 6, 7 + d % 4
-                il = (d % 4) >= 2
-                if d % 2 == 0:
-                    v = ((d * 7 + np.arange(w * h)) % 256).astype(np.uint8)
-                    blobs.append(
-                        multimodal.encode_png_gray(
-                            v.reshape(h, w),
-                            filter_for_row=lambda y: y,
-                            interlace=il,
-                        )
-                    )
-                else:
-                    v = ((d * 7 + np.arange(w * h * 4)) % 256).astype(np.uint8)
-                    blobs.append(
-                        multimodal.encode_png_rgba(
-                            v.reshape(h, w, 4),
-                            filter_for_row=lambda y: y,
-                            interlace=il,
-                        )
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 9 + d % 6, 7 + d % 4
+        il = (d % 4) >= 2
+        if d % 2 == 0:
+            v = ((d * 7 + np.arange(w * h)) % 256).astype(np.uint8)
+            blob = multimodal.encode_png_gray(
+                v.reshape(h, w), filter_for_row=lambda y: y, interlace=il
+            )
+        else:
+            v = ((d * 7 + np.arange(w * h * 4)) % 256).astype(np.uint8)
+            blob = multimodal.encode_png_rgba(
+                v.reshape(h, w, 4), filter_for_row=lambda y: y, interlace=il
+            )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -818,56 +759,26 @@ def multimodal_wav_stereo_decode_query(
 
     RATES = (8000, 16000, 44100)
 
-    def media_batches(it):
-        import pandas as pd
+    def encode(d):
+        n = 40 + d % 30
+        j = np.arange(n, dtype=np.int64)
+        left = ((d * 13 + 5 * j) % 65536) - 32768
+        right = ((d * 29 + 7 * j) % 65536) - 32768
+        frames = np.stack([left, right], axis=1).astype(np.int16)
+        return [(d, multimodal.encode_wav_multichannel(frames, rate=RATES[d % 3]))]
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 40 + d % 30
-                j = np.arange(n, dtype=np.int64)
-                left = ((d * 13 + 5 * j) % 65536) - 32768
-                right = ((d * 29 + 7 * j) % 65536) - 32768
-                frames = np.stack([left, right], axis=1).astype(np.int16)
-                rows.append(
-                    (d, multimodal.encode_wav_multichannel(frames, rate=RATES[d % 3]))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "data"])
-
-    def decode_batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["data"]):
-                rate, frames = multimodal.decode_wav_multichannel(bytes(blob))
-                f = frames.astype(np.int64)
-                wgt = np.arange(1, f.shape[0] + 1, dtype=np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        rate,
-                        f.shape[0],
-                        int((wgt * f[:, 0]).sum()),
-                        int((wgt * f[:, 1]).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_frames",
-                    "left_checksum", "right_checksum",
-                ],
-            )
+    def decode(doc_id, blob):
+        rate, frames = multimodal.decode_wav_multichannel(blob)
+        f = frames.astype(np.int64)
+        wgt = np.arange(1, f.shape[0] + 1, dtype=np.int64)
+        left, right = int((wgt * f[:, 0]).sum()), int((wgt * f[:, 1]).sum())
+        return [(doc_id, rate, f.shape[0], left, right)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        media_batches, "doc_id BIGINT, data BINARY"
-    )
-    return media.mapInPandas(
-        decode_batches,
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
+    return map_rows(
+        media,
+        decode,
         "doc_id BIGINT, sample_rate INT, n_frames BIGINT, "
         "left_checksum BIGINT, right_checksum BIGINT",
     ).orderBy("doc_id")
@@ -907,27 +818,16 @@ def multimodal_png16_decode_query(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                s = ((d * 4099 + 257 * np.arange(w * h * 3, dtype=np.int64)) % 65536)
-                blobs.append(
-                    multimodal.encode_png16(
-                        s.astype(np.uint16).reshape(h, w, 3),
-                        filter_for_row=lambda y: y,
-                        interlace=bool(d % 2),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        s = (d * 4099 + 257 * np.arange(w * h * 3, dtype=np.int64)) % 65536
+        blob = multimodal.encode_png16(
+            s.astype(np.uint16).reshape(h, w, 3),
+            filter_for_row=lambda y: y,
+            interlace=bool(d % 2),
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")

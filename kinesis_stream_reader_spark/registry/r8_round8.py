@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.rowmap import doc_id_seed, map_rows
 from ._shared import load_table, register
 
 # Fixture sizing: 16 trained lists (~sqrt(500)/1.4) keeps the oracle's
@@ -535,29 +536,18 @@ def multimodal_png16_gray_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                s = (d * 5003 + 257 * np.arange(w * h, dtype=np.int64)) % 65536
-                blobs.append(
-                    multimodal.encode_png16_gray(
-                        s.astype(np.uint16).reshape(h, w),
-                        filter_for_row=lambda y: y,
-                        interlace=bool(d % 2),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        s = (d * 5003 + 257 * np.arange(w * h, dtype=np.int64)) % 65536
+        blob = multimodal.encode_png16_gray(
+            s.astype(np.uint16).reshape(h, w),
+            filter_for_row=lambda y: y,
+            interlace=bool(d % 2),
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -698,37 +688,26 @@ def multimodal_tiff_deflate_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 4 == 0:
-                    w, h = 96, 80
-                else:
-                    w, h = 8 + d % 6, 5 + d % 4
-                i = np.arange(w * h * 3, dtype=np.int64)
-                s = (d * 13 + 7 * i + (i * i) % 23) % 256
-                arr = s.astype(np.uint8).reshape(h, w, 3)
-                blobs.append(
-                    multimodal.encode_tiff(
-                        arr,
-                        big_endian=bool(d % 2),
-                        compression=8,
-                        rows_per_strip=(h if d % 4 == 0 else 4),
-                        planar=(d % 3 == 0),
-                        tile=((16, 16) if d % 7 == 3 else None),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        if d % 4 == 0:
+            w, h = 96, 80
+        else:
+            w, h = 8 + d % 6, 5 + d % 4
+        i = np.arange(w * h * 3, dtype=np.int64)
+        s = (d * 13 + 7 * i + (i * i) % 23) % 256
+        arr = s.astype(np.uint8).reshape(h, w, 3)
+        blob = multimodal.encode_tiff(
+            arr,
+            big_endian=bool(d % 2),
+            compression=8,
+            rows_per_strip=(h if d % 4 == 0 else 4),
+            planar=(d % 3 == 0),
+            tile=((16, 16) if d % 7 == 3 else None),
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -762,29 +741,18 @@ def multimodal_png16_rgba_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 7 + d % 5, 5 + d % 4
-                s = (d * 6151 + 257 * np.arange(w * h * 4, dtype=np.int64)) % 65536
-                blobs.append(
-                    multimodal.encode_png16_rgba(
-                        s.astype(np.uint16).reshape(h, w, 4),
-                        filter_for_row=lambda y: y,
-                        interlace=bool(d % 2),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 7 + d % 5, 5 + d % 4
+        s = (d * 6151 + 257 * np.arange(w * h * 4, dtype=np.int64)) % 65536
+        blob = multimodal.encode_png16_rgba(
+            s.astype(np.uint16).reshape(h, w, 4),
+            filter_for_row=lambda y: y,
+            interlace=bool(d % 2),
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ._shared import load_table, register
 from ..operators import tiny_df
+from ..operators.rowmap import doc_id_seed, map_rows
 from .r8_round8 import _IVFPQ_ADC_CTES, _MAX_ITER, _N_LISTS, _TRAINED_TL_CTE
 
 
@@ -167,33 +168,20 @@ def multimodal_png_gray_lowdepth_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                depth = (1, 2, 4)[d % 3]
-                s = (
-                    d * 5003 + 257 * np.arange(w * h, dtype=np.int64)
-                ) % (1 << depth)
-                blobs.append(
-                    multimodal.encode_png_gray_lowdepth(
-                        s.reshape(h, w),
-                        depth,
-                        filter_for_row=lambda y: y,
-                        interlace=bool(d % 2),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        depth = (1, 2, 4)[d % 3]
+        s = (d * 5003 + 257 * np.arange(w * h, dtype=np.int64)) % (1 << depth)
+        blob = multimodal.encode_png_gray_lowdepth(
+            s.reshape(h, w),
+            depth,
+            filter_for_row=lambda y: y,
+            interlace=bool(d % 2),
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -458,33 +446,22 @@ def multimodal_tiff_ccitt_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + d % 9, 6 + d % 4
-                t = 20 + 25 * (d % 4)
-                v = (
-                    (d * 31 + 7 * np.arange(w * h, dtype=np.int64)) % 97 < t
-                ).astype(np.int64)
-                blobs.append(
-                    multimodal.encode_tiff_bilevel(
-                        v.reshape(h, w),
-                        compression=(1, 2, 3, 4)[d % 4],
-                        big_endian=bool(d % 2),
-                        rows_per_strip=3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 16 + d % 9, 6 + d % 4
+        t = 20 + 25 * (d % 4)
+        v = ((d * 31 + 7 * np.arange(w * h, dtype=np.int64)) % 97 < t).astype(
+            np.int64
+        )
+        blob = multimodal.encode_tiff_bilevel(
+            v.reshape(h, w),
+            compression=(1, 2, 3, 4)[d % 4],
+            big_endian=bool(d % 2),
+            rows_per_strip=3,
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -966,48 +943,32 @@ def multimodal_motion_estimate_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mx, my = d % 5 - 2, d % 3 - 1
-                yy, xx = np.mgrid[0:16, 0:16]
-                p1 = (d * 7 + 13 * yy + 29 * xx) % 251
-                p2 = (
-                    d * 7 + 13 * ((yy - my) % 16) + 29 * ((xx - mx) % 16)
-                ) % 251 + np.where((xx + yy + d) % 7 == 0, 3, 0)
-                f1 = multimodal.decode_bmp(
-                    multimodal.encode_bmp(
-                        np.repeat(p1[:, :, None], 3, 2).astype(np.uint8)
-                    )
-                )[:, :, 0]
-                f2 = multimodal.decode_bmp(
-                    multimodal.encode_bmp(
-                        np.repeat(p2[:, :, None], 3, 2).astype(np.uint8)
-                    )
-                )[:, :, 0]
-                for bx, by, dx, dy, sad in multimodal.block_motion_search(
-                    f1, f2, block=8, radius=2
-                ):
-                    rows.append((d, bx, by, dx, dy, sad))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "bx", "by", "dx", "dy", "sad"]
+    def motion(d):
+        mx, my = d % 5 - 2, d % 3 - 1
+        yy, xx = np.mgrid[0:16, 0:16]
+        p1 = (d * 7 + 13 * yy + 29 * xx) % 251
+        p2 = (
+            d * 7 + 13 * ((yy - my) % 16) + 29 * ((xx - mx) % 16)
+        ) % 251 + np.where((xx + yy + d) % 7 == 0, 3, 0)
+        f1 = multimodal.decode_bmp(
+            multimodal.encode_bmp(np.repeat(p1[:, :, None], 3, 2).astype(np.uint8))
+        )[:, :, 0]
+        f2 = multimodal.decode_bmp(
+            multimodal.encode_bmp(np.repeat(p2[:, :, None], 3, 2).astype(np.uint8))
+        )[:, :, 0]
+        return [
+            (d, bx, by, dx, dy, sad)
+            for bx, by, dx, dy, sad in multimodal.block_motion_search(
+                f1, f2, block=8, radius=2
             )
+        ]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (
-        docs.select("doc_id")
-        .repartition(n_parts)
-        .mapInPandas(
-            batches,
-            "doc_id BIGINT, bx INT, by INT, dx INT, dy INT, sad BIGINT",
-        )
-        .orderBy("doc_id", "by", "bx")
-    )
+    return map_rows(
+        doc_id_seed(docs),
+        motion,
+        "doc_id BIGINT, bx INT, by INT, dx INT, dy INT, sad BIGINT",
+    ).orderBy("doc_id", "by", "bx")
 
 
 # ---------------------------------------------------------------------------
@@ -1164,42 +1125,27 @@ def multimodal_png_gray_alpha_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                depth = 16 if d % 3 == 0 else 8
-                n = w * h
-                g = (d * 5003 + 257 * np.arange(n, dtype=np.int64)) % (
-                    1 << depth
-                )
-                al = (d * 31 + 7 * np.arange(n, dtype=np.int64)) % (
-                    1 << depth
-                )
-                ga = np.stack([g, al], axis=1).reshape(h, w, 2)
-                enc = (
-                    multimodal.encode_png16_gray_alpha
-                    if depth == 16
-                    else multimodal.encode_png_gray_alpha
-                )
-                blobs.append(
-                    enc(
-                        ga.astype(np.uint16 if depth == 16 else np.uint8),
-                        filter_for_row=lambda y: y,
-                        interlace=bool(d % 2),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        depth = 16 if d % 3 == 0 else 8
+        n = w * h
+        g = (d * 5003 + 257 * np.arange(n, dtype=np.int64)) % (1 << depth)
+        al = (d * 31 + 7 * np.arange(n, dtype=np.int64)) % (1 << depth)
+        ga = np.stack([g, al], axis=1).reshape(h, w, 2)
+        enc = (
+            multimodal.encode_png16_gray_alpha
+            if depth == 16
+            else multimodal.encode_png_gray_alpha
+        )
+        blob = enc(
+            ga.astype(np.uint16 if depth == 16 else np.uint8),
+            filter_for_row=lambda y: y,
+            interlace=bool(d % 2),
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -1234,32 +1180,19 @@ def multimodal_tiff_gray_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                v = (
-                    d * 5003 + 257 * np.arange(w * h, dtype=np.int64)
-                ) % 256
-                blobs.append(
-                    multimodal.encode_tiff_gray(
-                        v.reshape(h, w).astype(np.uint8),
-                        compression=(1, 5, 8, 32773)[d % 4],
-                        big_endian=bool(d % 2),
-                        rows_per_strip=3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": blobs})
+    def encode(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        v = (d * 5003 + 257 * np.arange(w * h, dtype=np.int64)) % 256
+        blob = multimodal.encode_tiff_gray(
+            v.reshape(h, w).astype(np.uint8),
+            compression=(1, 5, 8, 32773)[d % 4],
+            big_endian=bool(d % 2),
+            rows_per_strip=3,
+        )
+        return [(d, blob)]
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    media = docs.select("doc_id").repartition(n_parts).mapInPandas(
-        batches, "doc_id BIGINT, data BINARY"
-    )
+    media = map_rows(doc_id_seed(docs), encode, multimodal.MEDIA_SCHEMA)
     return multimodal.image_decode_checksum(media).orderBy("doc_id")
 
 
@@ -1540,51 +1473,31 @@ def multimodal_gif_animated_decode_query(
 
     from ..operators import multimodal
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 3
-                frames = []
-                for f in range(3):
-                    left, top = (d + f) % 4, f % 3
-                    fw, fh = w - 4, h - 3
-                    idx = (
-                        d * 7 + 11 * f + np.arange(fw * fh, dtype=np.int64)
-                    ) % 256
-                    frames.append(
-                        (left, top, fw, fh, idx, 1 if f % 2 == 0 else 2)
-                    )
-                outs = multimodal.decode_gif_animated(
-                    multimodal.encode_gif_animated(frames, w, h)
-                )
-                for t, arr in enumerate(outs):
-                    a = arr.astype(np.int64)
-                    mix = a[:, :, 0] + 2 * a[:, :, 1] + 3 * a[:, :, 2]
-                    wts = np.arange(1, w * h + 1, dtype=np.int64)
-                    rows.append(
-                        (d, t, w, h, int((wts * mix.reshape(-1)).sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame", "width", "height", "checksum"],
-            )
+    def frames_of(d):
+        w, h = 8 + d % 5, 6 + d % 3
+        frames = []
+        for f in range(3):
+            left, top = (d + f) % 4, f % 3
+            fw, fh = w - 4, h - 3
+            idx = (d * 7 + 11 * f + np.arange(fw * fh, dtype=np.int64)) % 256
+            frames.append((left, top, fw, fh, idx, 1 if f % 2 == 0 else 2))
+        outs = multimodal.decode_gif_animated(
+            multimodal.encode_gif_animated(frames, w, h)
+        )
+        rows = []
+        for t, arr in enumerate(outs):
+            a = arr.astype(np.int64)
+            mix = a[:, :, 0] + 2 * a[:, :, 1] + 3 * a[:, :, 2]
+            wts = np.arange(1, w * h + 1, dtype=np.int64)
+            rows.append((d, t, w, h, int((wts * mix.reshape(-1)).sum())))
+        return rows
 
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (
-        docs.select("doc_id")
-        .repartition(n_parts)
-        .mapInPandas(
-            batches,
-            "doc_id BIGINT, frame INT, width INT, height INT, "
-            "checksum BIGINT",
-        )
-        .orderBy("doc_id", "frame")
-    )
+    return map_rows(
+        doc_id_seed(docs),
+        frames_of,
+        "doc_id BIGINT, frame INT, width INT, height INT, checksum BIGINT",
+    ).orderBy("doc_id", "frame")
 
 
 # ---------------------------------------------------------------------------

@@ -125,9 +125,13 @@ def _local_dir_for(master: str) -> str | None:
     """spark.local.dir (shuffle spill!) only defaults to tmpfs under a
     LOCAL master — on a cluster node the same default would silently
     put 100 TB-scale spill in RAM. An explicit SPARK_GRAFT_LOCAL_DIR
-    override is honored for any master (the operator said so)."""
-    if os.environ.get("SPARK_GRAFT_LOCAL_DIR") not in (None, "", "-"):
-        return FAST_TMP
+    override is honored for any master (the operator said so), read at
+    call time like the decision itself; ``-`` disables the redirect."""
+    override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    if override == "-":
+        return None
+    if override:
+        return override
     if FAST_TMP and master.startswith("local"):
         return FAST_TMP
     return None

@@ -25,7 +25,7 @@ sample = [
     "streaming_upsert_compact",# foreachBatch + checkpoint dirs
     "dedup_minhash_lsh",       # window + xxhash pipeline
     "streaming_sessionize_native",  # session_window append-mode drain
-    "multimodal_image_decode", # mapInPandas codec path
+    "multimodal_image_decode", # mapInArrow codec path
     "ann_pq",                  # explode/slice HOFs + packed argmin
 ]
 for name in sample:

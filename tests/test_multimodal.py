@@ -19,6 +19,28 @@ def test_media_schema(spark, sf_dir):
     )
 
 
+def test_map_rows_fans_out_per_row(spark):
+    """map_rows hands each kernel call one row as plain Python values and
+    keeps every tuple it returns: 1->N, 1->0 (empty payload) and a NaN
+    result, which reads back as null as it did through pandas."""
+    from kinesis_stream_reader_spark.operators.rowmap import map_rows
+
+    df = spark.createDataFrame(
+        [(1, b"ab"), (2, b""), (3, b"xyz")], "k BIGINT, blob BINARY"
+    )
+
+    def explode(k, blob):
+        assert isinstance(k, int) and isinstance(blob, bytes)
+        return [(k, i, blob[i : i + 1], float("nan")) for i in range(len(blob))]
+
+    out = map_rows(df, explode, "k BIGINT, i INT, byte BINARY, x DOUBLE")
+    rows = sorted((r.k, r.i, bytes(r.byte), r.x) for r in out.collect())
+    assert rows == [
+        (1, 0, b"a", None), (1, 1, b"b", None),
+        (3, 0, b"x", None), (3, 1, b"y", None), (3, 2, b"z", None),
+    ]
+
+
 def test_extract_features_deterministic(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     media = multimodal.documents_as_media(docs)

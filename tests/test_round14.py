@@ -90,6 +90,53 @@ def test_driver_graph_bounds_env_override(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_GRAPH_MAX_VERTICES", "20000")
     _check_driver_graph_bounds(5000, 5000, 4096, "raised_cap")
+    # the override is the n^2 cap; the n^3 cap grows so the wedge tensor
+    # grows by the same factor, (20000/4096)^2: 512 * 4.88^(2/3) = 1473.6
+    _check_driver_graph_bounds(1000, 473, 512, "triangle_count", exponent=3)
+    with pytest.raises(ValueError, match="vertex cap 1473"):
+        _check_driver_graph_bounds(1000, 474, 512, "triangle_count", exponent=3)
+    with pytest.raises(ValueError, match="vertex cap"):
+        _check_driver_graph_bounds(5000, 5000, 512, "triangle_count", exponent=3)
+    # a malformed override fails loudly, naming the variable
+    for value in ("lots", "1e4", "-5", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GRAPH_MAX_VERTICES", value)
+        with pytest.raises(ValueError, match="MAX_VERTICES must be a positive"):
+            _check_driver_graph_bounds(200, 199, 512, "triangle_count", exponent=3)
+
+
+# ---------------------------------------------------------------------------
+# PCA zero-norm branch: on an all-zero embedding corpus the first
+# round's normalizer is 0; the engine must return the oracle's rows
+# (`DIV 0` is NULL, so every loading is NULL), not a crash or zeros.
+# ---------------------------------------------------------------------------
+
+def test_pca_zero_norm_matches_oracle(spark, tmp_path):
+    duckdb = pytest.importorskip("duckdb")
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+
+    n = 6
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array([[0.0] * 64] * n, pa.list_(pa.float32())),
+                "label": pa.array([i % 2 for i in range(n)], pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    query = entrymod.queries()["pca_power_iteration"]
+    got = [tuple(r) for r in query(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'"
+    )
+    want = con.sql(entrymod.oracle_sql()["pca_power_iteration"]).fetchall()
+    assert len(got) == 64
+    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -112,9 +159,12 @@ def test_local_dir_explicit_override_any_master(monkeypatch):
     from kinesis_stream_reader_spark import session
 
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/somewhere/fast")
-    # explicit operator override is honored for any master; FAST_TMP was
-    # resolved at import time, so the function returns the module value
-    assert session._local_dir_for("spark://node:7077") == session.FAST_TMP
+    # explicit operator override is honored for any master, and the
+    # value returned is the live override, not the import-time default
+    assert session._local_dir_for("spark://node:7077") == "/somewhere/fast"
+    assert session._local_dir_for("local[4]") == "/somewhere/fast"
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "-")
+    assert session._local_dir_for("local[4]") is None
 
 
 # ---------------------------------------------------------------------------

@@ -50,7 +50,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception:
@@ -58,7 +58,7 @@ def main() -> int:
             traceback.print_exc()
             failures += 1
             continue
-        elapsed = time.time() - t0
+        elapsed = time.perf_counter() - t0
         if name not in oracles:
             print(f"ok?  {name}: rows-only check, {len(spark_pdf)} rows ({elapsed:.1f}s)")
             continue

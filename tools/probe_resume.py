@@ -23,9 +23,9 @@ def main() -> None:
     spark = get_spark("probe_resume")
     fn = entrymod.queries()["streaming_resume_exactly_once"]
     for i in range(reps):
-        t0 = time.time()
+        t0 = time.perf_counter()
         n = fn(spark, sf_dir).count()
-        print(f"rep{i}: {time.time() - t0:.2f}s rows={n}", flush=True)
+        print(f"rep{i}: {time.perf_counter() - t0:.2f}s rows={n}", flush=True)
     spark.stop()
 
 

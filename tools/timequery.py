@@ -63,9 +63,9 @@ def main() -> None:
     for name in args:
         walls = []
         for _ in range(n):
-            t0 = time.time()
+            t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
-            walls.append(round(time.time() - t0, 3))
+            walls.append(round(time.perf_counter() - t0, 3))
             cleanup()
         out[name] = walls
     with open("/tmp/timequery_out.json", "w") as fh:
