@@ -22,7 +22,6 @@ Scale notes are per-operator. General stance for the 100 TB target:
 from __future__ import annotations
 
 import math
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -2868,122 +2867,6 @@ def bloom_semi_filter(
     )
 
 
-# default vertex cap of the O(n^2) driver graph kernels
-_N2_VERTEX_CAP = 4096
-
-
-def _check_driver_graph_bounds(
-    nodes_a: int, nodes_b: int, cap: int, kernel: str, exponent: int = 2
-):
-    """The dense driver-side graph kernels allocate O(n^2)-O(n^3)
-    arrays keyed to the nodes_a + nodes_b residue bound; a caller
-    passing large diagnostic parameters must fail loudly instead of
-    OOM-ing the driver (the distributed forms were retired in round
-    13). Env-overridable for hosts with more driver memory:
-    SPARK_GRAFT_DRIVER_GRAPH_MAX_VERTICES replaces the n^2 cap
-    (_N2_VERTEX_CAP), and an O(n^exponent) kernel's ``cap`` scales by
-    (override / _N2_VERTEX_CAP) ** (2 / exponent), so every kernel's
-    largest dense array grows by the same factor."""
-    var = "SPARK_GRAFT_DRIVER_GRAPH_MAX_VERTICES"
-    raw = os.environ.get(var, "").strip()
-    if raw:
-        if not raw.isdigit() or int(raw) == 0:
-            raise ValueError(f"{var} must be a positive integer, got {raw!r}")
-        cap = int(cap * (int(raw) / _N2_VERTEX_CAP) ** (2 / exponent))
-    if nodes_a + nodes_b > cap:
-        raise ValueError(
-            f"{kernel}: nodes_a + nodes_b = {nodes_a + nodes_b} exceeds the "
-            f"dense driver-kernel vertex cap {cap} (set {var} to raise it)"
-        )
-
-
-def triangle_count(events: DataFrame, nodes_a: int = 200, nodes_b: int = 199) -> DataFrame:
-    """Distributed triangle counting with degree-ordered edge
-    orientation — the classic bound that makes the wedge self-join
-    survive power-law graphs: orienting every undirected edge from its
-    lower-(degree, id) endpoint to the higher one caps out-degree at
-    O(sqrt(m)) regardless of how skewed raw degrees are, so the
-    per-node wedge fan-out (the quadratic step in naive triangle
-    counting) is bounded even when one hub touches 10% of a 100 TB
-    graph. Wedges then semi-join against the oriented edge set; every
-    triangle is counted exactly once (its orientation is a DAG).
-
-    Graph derivation follows the pagerank_step convention: a
-    deterministic interaction graph projected from events into a
-    bounded node space, de-duplicated once up front so all downstream
-    joins carry edges, never event rows.
-
-    Output: per-vertex triangle participation for the top-10 vertices
-    (deterministic tie-break) plus the global count as a row with
-    vertex = -1.
-
-    Optimization round 13: the modular projection bounds the vertex
-    set BY CONSTRUCTION (nodes_a + nodes_b possible residues), so the
-    only corpus-sized work is the distributed edge distinct; the
-    orientation, wedge enumeration, and closing check run driver-side
-    as dense boolean numpy passes over the collected bounded edge list
-    (the betweenness_centrality treatment). Pure integer counting —
-    identical per-vertex credits, identical (count DESC, vertex)
-    tie-break; the brute-force reference pytest and both oracle sweeps
-    pin it."""
-    import numpy as np
-
-    from . import tiny_df
-
-    # the wedge tensor is n^3 bool — cap tighter than the n^2 kernels
-    _check_driver_graph_bounds(nodes_a, nodes_b, 512, "triangle_count", exponent=3)
-    spark = events.sparkSession
-    edge_rows = (
-        events.select(
-            (F.col("user_id") % nodes_a).alias("p"),
-            (F.col("event_id") % nodes_b).alias("q"),
-        )
-        .filter(F.col("p") != F.col("q"))
-        .select(F.least("p", "q").alias("u"), F.greatest("p", "q").alias("v"))
-        .distinct()
-        .collect()
-    )
-    schema = "vertex BIGINT, n_triangles BIGINT"
-    if not edge_rows:
-        return tiny_df(spark, [(-1, 0)], schema)
-    vids = sorted(
-        {int(r["u"]) for r in edge_rows} | {int(r["v"]) for r in edge_rows}
-    )
-    idx = {v: i for i, v in enumerate(vids)}
-    n = len(vids)
-    A = np.zeros((n, n), bool)
-    for r in edge_rows:
-        i, j = idx[int(r["u"])], idx[int(r["v"])]
-        A[i, j] = True
-        A[j, i] = True
-    deg = A.sum(axis=1)
-    # orient a -> b iff (deg(a), a) < (deg(b), b); vids are sorted, so
-    # index order IS id order and the tie-break compares indices
-    lt = (deg[:, None] < deg[None, :]) | (
-        (deg[:, None] == deg[None, :])
-        & (np.arange(n)[:, None] < np.arange(n)[None, :])
-    )
-    Ao = A & lt
-    # wedges (a; b1 < b2 by id) closed by ANY edge between b1 and b2
-    upper = np.triu(np.ones((n, n), bool), 1)
-    tri = Ao[:, :, None] & Ao[:, None, :] & (A & upper)[None, :, :]
-    cnt = (
-        tri.sum(axis=(1, 2))  # as wedge center a
-        + tri.sum(axis=(0, 2))  # as b1
-        + tri.sum(axis=(0, 1))  # as b2
-    ).astype(np.int64)
-    total = int(tri.sum())
-    # per-vertex rows exist only for triangle participants (the plan's
-    # groupBy over tris); top-10 by (count DESC, vertex)
-    pv = sorted(
-        ((int(cnt[i]), int(vids[i])) for i in range(n) if cnt[i] > 0),
-        key=lambda t: (-t[0], t[1]),
-    )[:10]
-    rows = [(v, c) for c, v in pv] + [(-1, total)]
-    rows.sort(key=lambda t: (-t[1], t[0]))
-    return tiny_df(spark, rows, schema)
-
-
 def gap_fill_interpolate(events: DataFrame) -> DataFrame:
     """Linear-interpolation gap filling — the companion to
     gap_fill_locf: the same hourly rollup + per-user densified grid,
@@ -3089,104 +2972,6 @@ def pareto_frontier(part: DataFrame) -> DataFrame:
         )
         .orderBy("p_size", "p_partkey")
     )
-
-
-def label_propagation(
-    events: DataFrame, rounds: int = 3, nodes_a: int = 200, nodes_b: int = 199
-) -> DataFrame:
-    """Community detection by synchronous label propagation (LPA) over
-    the same derived interaction graph as triangle_count: every vertex
-    starts labeled with its own id, and each round adopts the most
-    frequent label among its neighbors, ties broken by the SMALLEST
-    label — the deterministic variant (classic LPA's random tie-break
-    is irreproducible across engines and runs). A fixed `rounds`
-    budget keeps the plan statically unrollable; the driver-loop
-    kernels (connected components, pagerank_converged) show the
-    to-convergence form.
-
-    Completes the graph family: pagerank (centrality), connected
-    components (reachability), triangles (local density), LPA
-    (community structure).
-
-    Optimization round 13: the modular projection bounds the vertex
-    set BY CONSTRUCTION, so the only corpus-sized work is the
-    distributed edge distinct; the vote rounds run driver-side as
-    dense numpy passes over the collected bounded edge list (the
-    betweenness_centrality treatment). Identical values: votes are
-    exact integer counts via a boolean adjacency x one-hot-label GEMM,
-    and numpy argmax's first-maximum pick IS the smallest-label
-    tie-break because label values are vertex ids and the id axis is
-    sorted ascending. At 100 TB the label relation is |V| rows against
-    |E| edges, same asymptotics as GraphX/Pregel LPA — on an UNBOUNDED
-    graph use the distributed form (pagerank_converged's shape)."""
-    from . import tiny_df
-
-    spark = events.sparkSession
-    vids, A = _bounded_projection_graph(events, nodes_a, nodes_b)
-    if not vids:
-        return tiny_df(spark, [], "vertex BIGINT, label BIGINT")
-    lab = _lpa_labels(A, rounds)
-    return tiny_df(
-        spark,
-        [(int(vids[i]), int(vids[lab[i]])) for i in range(len(vids))],
-        "vertex BIGINT, label BIGINT",
-    )
-
-
-def _bounded_projection_graph(
-    events: DataFrame, nodes_a: int = 200, nodes_b: int = 199
-):
-    """Collected adjacency of the modular interaction projection — the
-    shared bounded census behind triangle_count / label_propagation /
-    graph_modularity_report. The distributed work is ONE edge distinct
-    over the corpus; the vertex set is bounded by construction
-    (<= nodes_a + nodes_b residues). Returns (sorted vertex ids,
-    int64 symmetric adjacency), or ([], None) for an edgeless graph."""
-    import numpy as np
-
-    _check_driver_graph_bounds(
-        nodes_a, nodes_b, _N2_VERTEX_CAP, "_bounded_projection_graph"
-    )
-    edge_rows = (
-        events.select(
-            (F.col("user_id") % nodes_a).alias("p"),
-            (F.col("event_id") % nodes_b).alias("q"),
-        )
-        .filter(F.col("p") != F.col("q"))
-        .select(F.least("p", "q").alias("u"), F.greatest("p", "q").alias("v"))
-        .distinct()
-        .collect()
-    )
-    if not edge_rows:
-        return [], None
-    vids = sorted(
-        {int(r["u"]) for r in edge_rows} | {int(r["v"]) for r in edge_rows}
-    )
-    idx = {v: i for i, v in enumerate(vids)}
-    n = len(vids)
-    A = np.zeros((n, n), np.int64)
-    for r in edge_rows:
-        i, j = idx[int(r["u"])], idx[int(r["v"])]
-        A[i, j] = 1
-        A[j, i] = 1
-    return vids, A
-
-
-def _lpa_labels(A, rounds: int):
-    """Deterministic synchronous LPA rounds over a dense adjacency:
-    votes are exact integer counts via an adjacency x one-hot-label
-    GEMM, and numpy argmax's first-maximum pick IS the smallest-label
-    tie-break because label values are vertex ids on a sorted axis."""
-    import numpy as np
-
-    n = A.shape[0]
-    lab = np.arange(n)
-    for _ in range(rounds):
-        onehot = np.zeros((n, n), np.int64)
-        onehot[np.arange(n), lab] = 1
-        votes = A @ onehot
-        lab = votes.argmax(axis=1)
-    return lab
 
 
 def anomaly_mad(events: DataFrame, cutoff: int = 3) -> DataFrame:
@@ -5298,133 +5083,6 @@ def shapley_attribution(events: DataFrame) -> DataFrame:
         )
         .orderBy("channel")
     )
-
-
-def hyperball_neighborhood(
-    events: DataFrame, rounds: int = 3, m: int = 16
-) -> DataFrame:
-    """HyperBall / ANF neighborhood-function estimation (Palmer et al.
-    2002; Boldi & Vigna 2013 — public methods): per node, an
-    HLL-sketched estimate of |ball(v, rounds)| on the modular event
-    graph (same edge derivation as graph_triangles), with the exact
-    ball size alongside so the report shows the estimator's error.
-
-    The scale story is the whole point: an exact ball needs per-node
-    reach sets that go quadratic on dense graphs, while the HyperBall
-    state is a FIXED m-registers-per-node relation whose round update
-    is one join + max-aggregate — at 100 TB you keep the sketch and
-    drop the exact twin (it is here as the accuracy oracle; on this
-    bounded projection it rides a packed-bitmap BFS, see below).
-
-    Determinism: register index and rho come from md5 of the node id
-    (j = H1 % m; rho = position of the lowest set bit of H2); register
-    maxes are integer; Z = sum of 2^-rho is EXACT in IEEE (<=16 terms,
-    exponent span 31 bits < 53); the estimator branch (raw vs
-    small-range ln correction) evaluates the same fixed expressions,
-    quantized 1e-4.
-
-    Optimization round 13: the modular projection bounds the vertex
-    set BY CONSTRUCTION (ids are X % 200 residues), so the only
-    corpus-sized work is the distributed edge distinct; the radius-3
-    ball BFS and the register algebra run driver-side over the
-    collected bounded edge list (the betweenness_centrality treatment
-    — the bitmap-join round loop still paid per-round checkpoint and
-    join scheduling on a <=200-row state). Values are bit-identical:
-    md5 register derivation replays hashlib-exactly, the dyadic zpart
-    sum is order-free exact, and the estimator replays the same
-    Python-built literals and IEEE ops (quantized 1e-4) the column
-    expressions evaluated."""
-    import hashlib
-    import math
-
-    import numpy as np
-
-    from . import tiny_df
-
-    spark = events.sparkSession
-    edge_rows = (
-        events.select(
-            (F.col("user_id") % 200).alias("p"),
-            (F.col("event_id") % 199).alias("q"),
-        )
-        .filter(F.col("p") != F.col("q"))
-        .select(F.least("p", "q").alias("u"), F.greatest("p", "q").alias("v"))
-        .distinct()
-        .collect()
-    )
-    schema = "node BIGINT, exact_ball BIGINT, est_ball DOUBLE, rel_err DOUBLE"
-    if not edge_rows:
-        return tiny_df(spark, [], schema)
-    vids = sorted(
-        {int(r["u"]) for r in edge_rows} | {int(r["v"]) for r in edge_rows}
-    )
-    idx = {v: i for i, v in enumerate(vids)}
-    n = len(vids)
-    # bool adjacency: matmul of bool matrices accumulates with OR, so a
-    # node adjacent to >=128 frontier members cannot wrap (int8 would)
-    A = np.zeros((n, n), bool)
-    for r in edge_rows:
-        i, j = idx[int(r["u"])], idx[int(r["v"])]
-        A[i, j] = True
-        A[j, i] = True
-    # radius-`rounds` balls via dense BFS (ball = settled set)
-    ball = np.eye(n, dtype=bool)
-    frontier = ball.copy()
-    for _ in range(rounds):
-        new = (frontier @ A) & ~ball
-        if not new.any():
-            break
-        ball |= new
-        frontier = new
-    exact_ball = ball.sum(axis=1).astype(np.int64)
-    # per-node HLL register (j, rho) from md5("hb:<id>") — hex slices
-    # [0:15] / [16:31], exactly substring(md5, 1, 15) / (17, 15)
-    reg: list = [None] * n
-    for i, v in enumerate(vids):
-        hx = hashlib.md5(f"hb:{v}".encode()).hexdigest()
-        bits = int(hx[16:31], 16)
-        rho = None
-        for k in range(1, 32):
-            if (bits >> (k - 1)) & 1:
-                rho = k
-                break
-        if rho is not None:
-            reg[i] = (int(hx[0:15], 16) % m, rho)
-    mf = float(m)
-    rows = []
-    for i in range(n):
-        regs: dict = {}
-        for w in np.flatnonzero(ball[i]):
-            rw = reg[int(w)]
-            if rw is not None:
-                jj, rho = rw
-                if rho > regs.get(jj, 0):
-                    regs[jj] = rho
-        if not regs:
-            # a node whose ball holds no hashed member never reaches
-            # the z relation — same inner-join drop as the plan form
-            continue
-        cnt = len(regs)
-        # dyadic terms: exact in IEEE regardless of summation order
-        zpart = 0.0
-        for rho in regs.values():
-            zpart += 1.0 / float(1 << rho)
-        est_raw = (0.673 * mf * mf) / (zpart + float(m - cnt))
-        vz = float(m - cnt)
-        if est_raw <= 2.5 * mf and vz > 0:
-            est = mf * math.log(mf / vz)
-        else:
-            est = est_raw
-        eb = float(exact_ball[i])
-        rows.append(
-            (
-                int(vids[i]),
-                int(exact_ball[i]),
-                math.floor(est * 1e4 + 0.5) / 1e4,
-                math.floor((est - eb) / eb * 1e4 + 0.5) / 1e4,
-            )
-        )
-    return tiny_df(spark, rows, schema).orderBy("node")
 
 
 def seasonal_anomaly_flags(orders: DataFrame, cutoff: float = 3.0) -> DataFrame:

@@ -12,14 +12,13 @@ partition/Z-order key so probes prune files, not just rows.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .dedup import _as_double, cosine
+from ..session import env_int
 
 # 16 fixed Gaussian hyperplanes for sign-LSH, generated from a seeded
 # RNG so every executor derives identical planes with no broadcast state.
@@ -604,14 +603,13 @@ def _tiny_df(spark, rows, schema: str) -> DataFrame:
     return tiny_df(spark, rows, schema)
 
 
-# Above this many input partitions the Lloyd census reduction stays in
-# Spark (distributed partial agg) instead of collecting per-partition
-# partials to the driver: the driver-side volume is
-# partitions * k * (dim + 1) rows, so this bound keeps it at a few MB
-# regardless of corpus width. Overridable for cluster deployments.
-_LLOYD_DRIVER_REDUCE_MAX_PARTS = int(
-    os.environ.get("SPARK_GRAFT_LLOYD_DRIVER_REDUCE_MAX_PARTS", "256")
-)
+def _lloyd_driver_reduce_max_parts() -> int:
+    """Above this many input partitions the Lloyd census reduction
+    stays in Spark (distributed partial agg) instead of collecting
+    per-partition partials to the driver: the driver-side volume is
+    partitions * k * (dim + 1) rows, so this bound keeps it at a few MB
+    regardless of corpus width. Overridable for cluster deployments."""
+    return env_int("SPARK_GRAFT_LLOYD_DRIVER_REDUCE_MAX_PARTS", 256)
 
 
 def _lloyd_centroids(
@@ -674,7 +672,7 @@ def _lloyd_centroids(
     # the same rows the old plan shuffled to a single AQE-coalesced
     # reducer before collecting. A wide training input (a 100 TB corpus
     # trained WITHOUT sampling) keeps the distributed partial-agg path:
-    # above _LLOYD_DRIVER_REDUCE_MAX_PARTS partitions the census
+    # above _lloyd_driver_reduce_max_parts() partitions the census
     # aggregates in Spark exactly as before. Sums are exact int64 in
     # both paths (addition reorders freely), so results are
     # bit-identical.
@@ -688,7 +686,7 @@ def _lloyd_centroids(
             _lloyd_census_batches(cmat, cids, k),
             "cluster_id LONG, pos0 INT, s LONG, n LONG",
         )
-        if n_parts <= _LLOYD_DRIVER_REDUCE_MAX_PARTS:
+        if n_parts <= _lloyd_driver_reduce_max_parts():
             agg: dict = {}
             for r in part.collect():
                 key = (r["cluster_id"], r["pos0"])
@@ -1205,7 +1203,7 @@ def pca_power_top_component(embeddings: DataFrame, rounds: int = 4) -> DataFrame
     for _ in range(rounds):
         varr = np.asarray(v, np.int64)
         part = vecs.mapInPandas(_pca_partial_batches(varr), "d INT, u LONG")
-        if n_parts <= _LLOYD_DRIVER_REDUCE_MAX_PARTS:
+        if n_parts <= _lloyd_driver_reduce_max_parts():
             rows = part.collect()
         else:
             rows = part.groupBy("d").agg(F.sum("u").alias("u")).collect()

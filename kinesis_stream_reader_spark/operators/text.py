@@ -11,13 +11,13 @@ pruning (only `text` + keys are read from parquet).
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import tiny_df
+from ..session import env_int
 
 # Word-boundary-ish regex for a BPE-style pre-tokenizer: word pieces,
 # numbers, or single non-space symbols (public GPT-2 pre-tokenizer
@@ -954,7 +954,7 @@ def _bpe_driver_vocab_max() -> int:
     is pure fixed overhead: the same merges fall out of a plain Python
     loop over the collected rows. Production corpora with vocabularies
     above the cutoff keep the distributed incremental path."""
-    return int(os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB_MAX", "65536"))
+    return env_int("SPARK_GRAFT_BPE_DRIVER_VOCAB_MAX", 65536, minimum=0)
 
 
 def _bpe_merge_greedy(syms: list, a: str, b: str) -> list:
@@ -2644,9 +2644,7 @@ def keyword_textrank(documents: DataFrame, top_n: int = 20) -> DataFrame:
     # base + floor(0.85 * double(inflow) + 0.5) damping op, and the
     # same (rank_u DESC, word) top-n. The distributed loop below stays
     # the route for vocabularies above the cutoff.
-    cutoff = int(
-        os.environ.get("SPARK_GRAFT_TEXTRANK_DRIVER_EDGES_MAX", "262144")
-    )
+    cutoff = env_int("SPARK_GRAFT_TEXTRANK_DRIVER_EDGES_MAX", 262144, minimum=0)
     if cutoff > 0:
         head = wedges.take(cutoff + 1)
         if len(head) <= cutoff:

@@ -1206,9 +1206,9 @@ SELECT vertex, n_triangles FROM (
 """,
 )
 def graph_triangles_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import relational
+    from ..operators import graph
 
-    return relational.triangle_count(load_events(spark, sf_dir))
+    return graph.triangle_count(load_events(spark, sf_dir))
 
 
 @register(
@@ -1417,9 +1417,9 @@ SELECT vertex, label FROM l3 ORDER BY vertex
 """,
 )
 def graph_label_propagation_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import relational
+    from ..operators import graph
 
-    return relational.label_propagation(load_events(spark, sf_dir))
+    return graph.label_propagation(load_events(spark, sf_dir))
 
 
 @register(

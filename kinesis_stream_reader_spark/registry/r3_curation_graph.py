@@ -1554,51 +1554,9 @@ ORDER BY jaccard DESC, u, v LIMIT 20
 """,
 )
 def link_prediction_jaccard_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link prediction by neighbor-set Jaccard (the common-neighbors
-    family, Liben-Nowell & Kleinberg 2003): score every NON-adjacent
-    node pair at distance 2 on the interaction graph and rank — the
-    recommendation/completion primitive next to item_item_recs (which
-    scores co-purchases, not graph structure).
+    from ..operators import graph
 
-    Plan: candidate pairs come from ONE self-join on the adjacency list
-    keyed by the shared neighbor — the wedge join graph_triangles
-    already pays, bounded by sum-of-degrees-squared, never all pairs;
-    the existing-edge exclusion is a broadcast anti-join and Jaccard is
-    a census-side projection. Top-20 is a TakeOrdered."""
-    # Optimization round 13 (the betweenness_centrality treatment): the
-    # %200/%199 projection bounds the vertex set by construction, so
-    # the wedge self-join, anti-join, and degree census ran on
-    # few-hundred-row relations; common-neighbor counts are one exact
-    # int64 A@A GEMM over the collected bounded adjacency, and the
-    # quantized Jaccard replays long/long -> double division op-for-op.
-    import math
-
-    from ..operators import relational, tiny_df
-
-    ev = load_events(spark, sf_dir)
-    schema = "u BIGINT, v BIGINT, n_common BIGINT, jaccard DOUBLE"
-    vids, A = relational._bounded_projection_graph(ev)
-    if not vids:
-        return tiny_df(spark, [], schema)
-    C = A @ A
-    deg = A.sum(axis=1)
-    n = len(vids)
-    rows = []
-    for i in range(n):
-        for j in range(i + 1, n):
-            nc = int(C[i, j])
-            if nc > 0 and not A[i, j]:
-                jac = nc / (int(deg[i]) + int(deg[j]) - nc)
-                rows.append(
-                    (
-                        int(vids[i]),
-                        int(vids[j]),
-                        nc,
-                        math.floor(jac * 1e4 + 0.5) / 1e4,
-                    )
-                )
-    rows.sort(key=lambda t: (-t[3], t[0], t[1]))
-    return tiny_df(spark, rows[:20], schema)
+    return graph.link_prediction_jaccard(load_events(spark, sf_dir))
 
 
 @register(

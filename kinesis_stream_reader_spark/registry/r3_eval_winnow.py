@@ -1947,9 +1947,9 @@ FROM est ORDER BY node
 """,
 )
 def hyperball_neighborhood_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import relational
+    from ..operators import graph
 
-    return relational.hyperball_neighborhood(load_events(spark, sf_dir))
+    return graph.hyperball_neighborhood(load_events(spark, sf_dir))
 
 
 @register(

@@ -499,71 +499,9 @@ ORDER BY aa_u DESC, u, v LIMIT 20
 """,
 )
 def link_prediction_adamic_adar_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adamic-Adar link prediction (Adamic & Adar 2003 — public
-    method): score non-adjacent distance-2 pairs by sum over common
-    neighbors of 1/ln(degree) — rare shared neighbors count more than
-    hubs, the refinement that beats raw common-neighbor counts and
-    Jaccard on social graphs (Liben-Nowell & Kleinberg 2003's
-    benchmark result).
+    from ..operators import graph
 
-    Determinism: each wedge's weight 1/LN(deg) is ONE fixed IEEE
-    expression on the shared neighbor's exact integer degree,
-    quantized to nano-units BEFORE the per-pair sum — so pair scores
-    are exact bigints and ranking ties break on (u, v).
-
-    Plan shape: identical wedge join to link_prediction_jaccard (the
-    graph_triangles bound: fan-out sum-of-degrees-squared, never all
-    pairs) with the degree lookup joined on the shared neighbor;
-    existing-edge exclusion is a broadcast anti-join; top-20 is a
-    TakeOrdered. At 100 TB the hub cap is the same degree-ordered
-    orientation triangles use."""
-    # Optimization round 13 (the link_prediction_jaccard treatment):
-    # the bounded projection collects once; per-neighbor nano-unit
-    # weights floor(1e9 / ln(deg) + 0.5) are exact ints (every wedge
-    # center has deg >= 2), pair scores are one exact int64
-    # A @ diag(w) @ A GEMM, and the (aa_u DESC, u, v) rank runs on the
-    # exact bigints — identical rows.
-    import math
-
-    import numpy as np
-
-    from ..operators import relational, tiny_df
-
-    ev = load_events(spark, sf_dir)
-    schema = "u BIGINT, v BIGINT, n_common BIGINT, adamic_adar DOUBLE"
-    vids, A = relational._bounded_projection_graph(ev)
-    if not vids:
-        return tiny_df(spark, [], schema)
-    deg = A.sum(axis=1)
-    w = np.array(
-        [
-            int(math.floor(1e9 / math.log(float(d)) + 0.5)) if d >= 2 else 0
-            for d in deg
-        ],
-        np.int64,
-    )
-    C = A @ A
-    AA = (A * w[None, :]) @ A  # aa_u[i, j] = sum over shared nbrs of w
-    n = len(vids)
-    rows = []
-    for i in range(n):
-        for j in range(i + 1, n):
-            nc = int(C[i, j])
-            if nc > 0 and not A[i, j]:
-                aau = int(AA[i, j])
-                rows.append(
-                    (
-                        int(vids[i]),
-                        int(vids[j]),
-                        nc,
-                        math.floor(aau / 1e9 * 1e4 + 0.5) / 1e4,
-                        aau,
-                    )
-                )
-    rows.sort(key=lambda t: (-t[4], t[0], t[1]))
-    return tiny_df(
-        spark, [r[:4] for r in rows[:20]], schema
-    )
+    return graph.link_prediction_adamic_adar(load_events(spark, sf_dir))
 
 
 @register(

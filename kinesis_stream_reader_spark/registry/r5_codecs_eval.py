@@ -1628,52 +1628,9 @@ FROM numer, m
 """,
 )
 def graph_modularity_report_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity (Newman & Girvan 2004 — public measure) of the
-    label-propagation partition: Q = sum_c (e_c/m - (d_c/2m)^2), the
-    quality score a community-detection pass reports next to its
-    labels (is this partition better than random?). Composes
-    graph_label_propagation's deterministic 3-round LPA with exact
-    integer algebra: the numerator sum_c (4*m*e_c - d_c^2) is pure
-    bigint, so the only float is the final division.
+    from ..operators import graph
 
-    Plan shape / 100 TB (optimization round 13): the only corpus-sized
-    work is the shared bounded-projection edge distinct
-    (relational._bounded_projection_graph); LPA rounds and the exact
-    bigint census algebra (m, per-vertex degrees, per-community degree
-    sums and intra-community edge counts) run driver-side over the
-    collected <= 399-vertex graph — the betweenness_centrality
-    treatment; the one float op replays the plan's
-    floor(num / ((4.0 * m) * m) * 1e6 + 0.5) / 1e6 sequence. On an
-    UNBOUNDED graph keep the distributed form (vertex-keyed LPA
-    shuffles + two label joins on the edge list), linear in |E|."""
-    import math
-
-    from ..operators import relational, tiny_df
-
-    events = load_events(spark, sf_dir)
-    schema = "n_communities BIGINT, n_edges BIGINT, modularity DOUBLE"
-    vids, A = relational._bounded_projection_graph(events)
-    if not vids:
-        # edgeless graph: the plan form's empty aggregates yield
-        # (0, 0, NULL)
-        return tiny_df(spark, [(0, 0, None)], schema)
-    lab = relational._lpa_labels(A, rounds=3)
-    n = len(vids)
-    deg = A.sum(axis=1)
-    m = int(A.sum()) // 2
-    d_c: dict = {}
-    e_c: dict = {}
-    for i in range(n):
-        d_c[int(lab[i])] = d_c.get(int(lab[i]), 0) + int(deg[i])
-    for i in range(n):
-        for j in range(i + 1, n):
-            if A[i, j] and lab[i] == lab[j]:
-                e_c[int(lab[i])] = e_c.get(int(lab[i]), 0) + 1
-    num = sum(4 * m * e_c.get(c, 0) - d * d for c, d in d_c.items())
-    modularity = (
-        math.floor(float(num) / ((4.0 * m) * m) * 1e6 + 0.5) / 1e6
-    )
-    return tiny_df(spark, [(len(d_c), m, modularity)], schema)
+    return graph.modularity_report(load_events(spark, sf_dir))
 
 
 @register(
@@ -2830,83 +2787,9 @@ FROM h6 GROUP BY s ORDER BY s
 """,
 )
 def harmonic_centrality_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Harmonic centrality (Boldi & Vigna 2014 formulation — public
-    measure): H(v) = sum over reachable u != v of 1/d(v,u), computed
-    EXACTLY by six multi-source min-plus rounds over the dense-id
-    interaction projection — the exact companion the HyperBall sketch
-    (hyperball_neighborhood) approximates at scale, completing the
-    centrality family next to pagerank (eigen), degree, and k-core.
+    from ..operators import graph
 
-    Determinism: distances are exact integer min-plus; each 1/d term
-    quantizes to an exact nano-unit integer before summation.
-
-    Plan shape / 100 TB: the projection saturates at 200 vertices BY
-    CONSTRUCTION (modular residues), so the only corpus-sized work is
-    the distributed edge distinct; the six BFS rounds run driver-side
-    as dense boolean numpy passes over the collected bounded edge list
-    (optimization round 13 — the betweenness_centrality treatment: the
-    per-round join + anti-join + checkpoint plan paid flat scheduling
-    taxes on |V|^2-bounded relations; this query is in EAGER_QUERIES).
-    Arithmetic is bit-identical: per-distance nano-unit terms
-    floor(1e9 / d + 0.5) are exact integers, the per-source sum is an
-    exact int, and the final quantization replays Spark's
-    floor(double(hq) / 1e9 * 1e6 + 0.5) / 1e6 op for op. All-pairs
-    exact BFS is inherently |V|^2 (the documented diagnostic knob);
-    HyperBall IS the engine's linear-at-scale path for this measure."""
-    import math
-
-    import numpy as np
-
-    from ..operators import tiny_df
-
-    events = load_events(spark, sf_dir)
-    edge_rows = (
-        events.select(
-            (F.col("user_id") % 100).alias("u"),
-            (100 + F.col("event_id") % 100).alias("v"),
-        )
-        .distinct()
-        .collect()
-    )
-    if not edge_rows:
-        return tiny_df(
-            spark, [], "node BIGINT, n_reached BIGINT, harmonic DOUBLE"
-        )
-    vids = sorted(
-        {int(r["u"]) for r in edge_rows} | {int(r["v"]) for r in edge_rows}
-    )
-    idx = {v: i for i, v in enumerate(vids)}
-    n = len(vids)
-    # bool adjacency: matmul of bool matrices accumulates with OR, so a
-    # node adjacent to >=128 frontier members cannot wrap (int8 would)
-    A = np.zeros((n, n), bool)
-    for r in edge_rows:
-        i, j = idx[int(r["u"])], idx[int(r["v"])]
-        A[i, j] = True
-        A[j, i] = True
-    settled = np.eye(n, dtype=bool)
-    frontier = settled.copy()
-    hq = np.zeros(n, np.int64)  # per-source nano-unit harmonic sum
-    for k in range(1, 7):
-        new = (frontier @ A) & ~settled
-        if not new.any():
-            break  # saturated — later rounds add zero rows (as before)
-        term = int(math.floor(1e9 / k + 0.5))
-        hq += new.sum(axis=1).astype(np.int64) * term
-        settled |= new
-        frontier = new
-    n_reached = settled.sum(axis=1).astype(np.int64) - 1
-    rows = [
-        (
-            int(vids[i]),
-            int(n_reached[i]),
-            math.floor(float(hq[i]) / 1e9 * 1e6 + 0.5) / 1e6,
-        )
-        for i in range(n)
-    ]
-    return tiny_df(
-        spark, rows, "node BIGINT, n_reached BIGINT, harmonic DOUBLE"
-    ).orderBy("node")
+    return graph.harmonic_centrality(load_events(spark, sf_dir))
 
 
 @register(

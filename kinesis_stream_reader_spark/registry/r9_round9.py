@@ -10,8 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._shared import load_table, register
+from ._shared import load_events, load_table, register
 from ..operators import tiny_df
+from ..operators.graph import BFS_DEPTH, BRANDES_UNIT
 from ..operators.rowmap import doc_id_seed, map_rows
 from .r8_round8 import _IVFPQ_ADC_CTES, _MAX_ITER, _N_LISTS, _TRAINED_TL_CTE
 
@@ -719,8 +720,6 @@ def consistent_hash_resharding_query(
 # the accumulation bit-identically. Undirected double-counting kept raw
 # (documented), diameter bound 6 (the harmonic_centrality convention).
 # ---------------------------------------------------------------------------
-_BW_K = 6
-_BW_UNIT = 1_000_000  # micro-units keep sigma * (unit + delta) in int64
 
 
 def _bw_oracle() -> str:
@@ -735,7 +734,7 @@ WITH e AS (
 ), l0 AS (
   SELECT vx AS s, vx AS node, CAST(1 AS BIGINT) AS sig FROM verts
 )"""]
-    for k in range(1, _BW_K + 1):
+    for k in range(1, BFS_DEPTH + 1):
         settled = " UNION ALL ".join(
             f"SELECT s, node FROM l{i}" for i in range(k)
         )
@@ -749,14 +748,14 @@ WITH e AS (
   ANTI JOIN ({settled}) x USING (s, node)
 )""")
     parts.append(f"""
-, d{_BW_K} AS (
-  SELECT s, node, sig, CAST(0 AS BIGINT) AS delta FROM l{_BW_K}
+, d{BFS_DEPTH} AS (
+  SELECT s, node, sig, CAST(0 AS BIGINT) AS delta FROM l{BFS_DEPTH}
 )""")
-    for k in range(_BW_K - 1, -1, -1):
+    for k in range(BFS_DEPTH - 1, -1, -1):
         parts.append(f"""
 , d{k} AS (
   SELECT u.s, u.node, u.sig,
-         COALESCE(SUM((u.sig * ({_BW_UNIT} + w.delta)) // w.sig), 0)
+         COALESCE(SUM((u.sig * ({BRANDES_UNIT} + w.delta)) // w.sig), 0)
            AS delta
   FROM l{k} u
   LEFT JOIN und e ON e.src = u.node
@@ -764,7 +763,7 @@ WITH e AS (
   GROUP BY u.s, u.node, u.sig
 )""")
     alld = " UNION ALL ".join(
-        f"SELECT s, node, delta FROM d{i}" for i in range(_BW_K + 1)
+        f"SELECT s, node, delta FROM d{i}" for i in range(BFS_DEPTH + 1)
     )
     parts.append(f"""
 SELECT v.vx::BIGINT AS node,
@@ -780,101 +779,9 @@ GROUP BY v.vx ORDER BY node
 def betweenness_centrality_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Exact Brandes betweenness over the 200-vertex interaction
-    projection: frontier BFS layers carry shortest-path counts, the
-    backward pass accumulates dependencies per source with each
-    sigma_v * (unit + delta_w) / sigma_w term floored to exact integer
-    micro-units.
+    from ..operators import graph
 
-    Plan shape / 100 TB: the projection saturates at 200 vertices BY
-    CONSTRUCTION (both endpoints are modular residues), so the edge
-    census — the only corpus-sized work — is one distributed distinct
-    and the collected edge list is bounded at |V|^2 rows regardless of
-    corpus size. The Brandes rounds themselves run driver-side as
-    dense int64 numpy passes over that bounded projection
-    (optimization round 13, guide §1.2: the per-round frontier-join +
-    anti-join + checkpoint plan paid ~9 flat scheduling/conversion
-    taxes on relations of at most a few thousand rows; the
-    bradley_terry/pelt census-algebra house pattern applies — this
-    query is in EAGER_QUERIES). Arithmetic is bit-identical: sigma
-    GEMMs and the per-term sig_u * (UNIT + delta_w) // sig_w floor
-    division are exact int64 on NONNEGATIVE operands, so numpy //
-    equals Spark's DIV. All-pairs exact betweenness is inherently
-    |V| x BFS — the documented diagnostic knob; at corpus scale you
-    run it on the community-sampled projection, not the raw graph."""
-    import numpy as np
-
-    from ..operators import tiny_df
-    from ..sources.tables import load_table as _lt
-
-    events = _lt(spark, sf_dir, "events")
-    edge_rows = (
-        events.select(
-            (F.col("user_id") % 100).alias("u"),
-            (100 + F.col("event_id") % 100).alias("v"),
-        )
-        .distinct()
-        .collect()
-    )
-    if not edge_rows:
-        return tiny_df(spark, [], "node BIGINT, bc_micro BIGINT")
-    # dense-id the (bounded) vertex set; und = symmetrized adjacency
-    vids = sorted({int(r["u"]) for r in edge_rows} | {int(r["v"]) for r in edge_rows})
-    idx = {v: i for i, v in enumerate(vids)}
-    n = len(vids)
-    A = np.zeros((n, n), np.int64)
-    for r in edge_rows:
-        i, j = idx[int(r["u"])], idx[int(r["v"])]
-        A[i, j] = 1
-        A[j, i] = 1
-    # forward: level-synchronized multi-source BFS carrying sigma.
-    # sig_layers[k][s, node] = shortest-path count for nodes first
-    # reached at depth k from source s (0 elsewhere).
-    sig0 = np.eye(n, dtype=np.int64)
-    settled = np.eye(n, dtype=bool)
-    sig_layers = [sig0]
-    for _ in range(1, _BW_K + 1):
-        cand = sig_layers[-1] @ A  # exact int64 GEMM
-        new = (cand > 0) & ~settled
-        if not new.any():
-            # early exit on a saturated graph — result-identical: an
-            # empty layer adds zero rows everywhere and the terminal
-            # layer's delta COALESCEs to 0 either way
-            break
-        sig_layers.append(np.where(new, cand, 0))
-        settled |= new
-    # backward: dependency accumulation. delta[k][s, u] sums, over
-    # edges u->dst with dst in layer k+1 of source s, the exact
-    # integer term sig_k[s,u] * (UNIT + delta_{k+1}[s,dst]) // sig_{k+1}[s,dst]
-    last = len(sig_layers) - 1
-    delta_next = np.zeros((n, n), np.int64)  # deltas[last] = 0
-    bc = np.zeros(n, np.int64)  # running sum over k of per-node delta
-    for k in range(last - 1, -1, -1):
-        sig_next = sig_layers[k + 1]
-        mask_next = sig_next > 0
-        num = _BW_UNIT + delta_next  # (s, dst)
-        # term tensor over (s, u, dst): multiply BEFORE the floor
-        # division, exactly as the SQL expression does per row
-        sig_k = sig_layers[k]
-        term = sig_k[:, :, None] * num[:, None, :]
-        div = np.where(mask_next, sig_next, 1)[:, None, :]
-        contrib = np.where(
-            mask_next[:, None, :] & (A[None, :, :] > 0),
-            term // div,
-            0,
-        )
-        delta_k = np.where(sig_k > 0, contrib.sum(axis=2), 0)
-        # aggregate: every (s, node) pair with node != s contributes
-        mask_k = sig_k > 0
-        offdiag = mask_k.copy()
-        np.fill_diagonal(offdiag, False)
-        bc += np.where(offdiag, delta_k, 0).sum(axis=0)
-        delta_next = delta_k
-    return tiny_df(
-        spark,
-        [(int(vids[i]), int(bc[i])) for i in range(n)],
-        "node BIGINT, bc_micro BIGINT",
-    ).orderBy("node")
+    return graph.betweenness_centrality(load_events(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

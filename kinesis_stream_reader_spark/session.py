@@ -153,8 +153,22 @@ ROCKSDB_PROVIDER = (
 )
 
 
+def env_int(var: str, default, minimum: int = 1):
+    """Integer setting ``var`` from the environment, validated where it
+    is read: unset or blank gives ``default``; anything else must be a
+    decimal integer >= ``minimum`` (1, or 0 where 0 disables a fast
+    path), else a ValueError names the variable."""
+    raw = os.environ.get(var, "").strip()
+    if not raw:
+        return default
+    if not raw.isdecimal() or int(raw) < minimum:
+        kind = "positive" if minimum > 0 else "non-negative"
+        raise ValueError(f"{var} must be a {kind} integer, got {raw!r}")
+    return int(raw)
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return env_int("SPARK_GRAFT_CPUS", 32)
 
 
 def get_spark(app_name: str = "kinesis_stream_reader_spark", cpus: int | None = None) -> SparkSession:

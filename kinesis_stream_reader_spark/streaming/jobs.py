@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators.events import to_nested
 from ..operators.filters import filter_records
-from ..session import ensure_confs
+from ..session import ensure_confs, env_int
 
 
 _STREAM_DIRS: dict[str, str] = {}
@@ -318,7 +318,7 @@ def run_available_now(
     stream_parts = (
         str(state_partitions)
         if state_partitions is not None
-        else os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
+        else str(env_int("SPARK_GRAFT_STREAM_PARTITIONS", 8))
     )
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # autodetect: aggregations run complete-mode on the memory sink.

@@ -33,3 +33,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def empty_dir(spark, sf_dir, tmp_path_factory):
+    """Every fixture table with 0 rows and its full schema."""
+    from kinesis_stream_reader_spark.sources.tables import TABLES
+
+    out = str(tmp_path_factory.mktemp("ksr_empty"))
+    for t in TABLES:
+        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+        df.limit(0).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(out, f"{t}.parquet")
+        )
+    return out

@@ -6,11 +6,7 @@ empty; they must never raise."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
-
-from kinesis_stream_reader_spark.sources.tables import TABLES
 
 import __spark_entry__ as entrymod
 
@@ -87,17 +83,6 @@ SUBSET = [
     "multimodal_gif_animated_decode", "streaming_merkle_digest",
     "quantization_recall_report",
 ]
-
-
-@pytest.fixture(scope="module")
-def empty_dir(spark, sf_dir, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("ksr_empty"))
-    for t in TABLES:
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        df.limit(0).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"{t}.parquet")
-        )
-    return out
 
 
 @pytest.mark.parametrize("name", SUBSET)

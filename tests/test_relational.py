@@ -7,7 +7,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from kinesis_stream_reader_spark.operators import relational
+from kinesis_stream_reader_spark.operators import graph, relational
 from kinesis_stream_reader_spark.sources.tables import load_events, load_table
 
 
@@ -865,7 +865,7 @@ def test_triangle_count_matches_bruteforce(spark, sf_dir):
     """Oriented wedge-join count equals a brute-force triple check on
     the same derived edge set."""
     events = load_events(spark, sf_dir)
-    out = {r.vertex: r.n_triangles for r in relational.triangle_count(events).collect()}
+    out = {r.vertex: r.n_triangles for r in graph.triangle_count(events).collect()}
     edges = {
         (min(r.p, r.q), max(r.p, r.q))
         for r in events.select(
@@ -939,7 +939,7 @@ def test_label_propagation_matches_python_rounds(spark, sf_dir):
     """Three synchronous LPA rounds with min-label tie-break equal a
     driver-side reference implementation on the same edge set."""
     events = load_events(spark, sf_dir)
-    got = {r.vertex: r.label for r in relational.label_propagation(events).collect()}
+    got = {r.vertex: r.label for r in graph.label_propagation(events).collect()}
     edges = {
         (min(r.p, r.q), max(r.p, r.q))
         for r in events.select(

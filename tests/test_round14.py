@@ -74,7 +74,7 @@ def test_hyperball_smallrange_estimator_golden():
 # ---------------------------------------------------------------------------
 
 def test_driver_graph_bounds_guard():
-    from kinesis_stream_reader_spark.operators.relational import (
+    from kinesis_stream_reader_spark.operators.graph import (
         _check_driver_graph_bounds,
     )
 
@@ -84,7 +84,7 @@ def test_driver_graph_bounds_guard():
 
 
 def test_driver_graph_bounds_env_override(monkeypatch):
-    from kinesis_stream_reader_spark.operators.relational import (
+    from kinesis_stream_reader_spark.operators.graph import (
         _check_driver_graph_bounds,
     )
 
@@ -175,7 +175,7 @@ def test_local_dir_explicit_override_any_master(monkeypatch):
 # ---------------------------------------------------------------------------
 
 def test_hyperball_dense_frontier_no_int8_overflow(spark):
-    from kinesis_stream_reader_spark.operators import relational
+    from kinesis_stream_reader_spark.operators import graph
 
     # projection edges are (user_id % 200, event_id % 199); build
     # leaves 1..150 each linked to hubs 0 and 151
@@ -186,7 +186,7 @@ def test_hyperball_dense_frontier_no_int8_overflow(spark):
     events = spark.createDataFrame(rows, "user_id BIGINT, event_id BIGINT")
     out = {
         int(r["node"]): int(r["exact_ball"])
-        for r in relational.hyperball_neighborhood(events, rounds=3).collect()
+        for r in graph.hyperball_neighborhood(events, rounds=3).collect()
     }
     # every node reaches all 152 within radius 3 (hub-leaf-hub paths);
     # int8 accumulation dropped node 151 from hub 0's ball (and vice
