@@ -15,9 +15,10 @@ preserved exactly:
   nothing (NaN semantics);
 - filters compose conjunctively, applied only when their param is
   present (objectFilter/index.js:5-68);
-- the time window is a lookback bound pushed into the scan
-  (app/server/index.js:28-34,58) — here a Column predicate Catalyst
-  pushes to the parquet scan / Kinesis startingPosition.
+- the time window is a lookback bound (app/server/index.js:28-34,58)
+  — here a Column predicate; Catalyst pushes it to the parquet scan /
+  Kinesis startingPosition only when its anchor is a literal (see
+  time_range_predicate).
 
 All filters are pure Column expressions: no UDFs, no shuffles; Catalyst
 merges the conjunction into a single Filter node and pushes eligible
@@ -148,10 +149,13 @@ def time_range_predicate(now: Column, duration: object | None = None) -> Column:
 
     ``now`` is a Column so batch queries can anchor on a deterministic
     bound (e.g. max(event_time)) while a live deployment passes
-    F.current_timestamp(). Catalyst folds the interval and pushes the
-    bound into the parquet scan (row-group min/max skipping) — the same
-    pushdown the reference gets from Kinesis AT_TIMESTAMP
-    (kinesisReader/index.js:77-81).
+    F.current_timestamp(). Only a literal anchor (a constant, or
+    current_timestamp(), which the optimizer replaces by one) lets
+    Catalyst fold the interval and push the bound into the parquet scan
+    (row-group min/max skipping) — the same pushdown the reference gets
+    from Kinesis AT_TIMESTAMP (kinesisReader/index.js:77-81). A column
+    anchor, such as the joined ``_now`` of with_data_relative_window, is
+    compared row by row above the scan.
     """
     minutes = clamp_duration(duration)
     return F.col("event_time") >= now - F.expr(f"INTERVAL {minutes} MINUTES")
@@ -162,7 +166,12 @@ def with_data_relative_window(df: DataFrame, duration: object | None = None) -> 
 
     The anchor is computed as a 1-row aggregate broadcast-joined onto the
     stream — fully declarative, no driver-side collect, safe at any
-    scale (the broadcast side is one row).
+    scale (the broadcast side is one row). The bound is a joined column,
+    not a literal, so it is NOT pushed into the parquet scan: every run
+    reads the events twice, once for the max and once for the window,
+    with no row-group skipping. A caller that can hold the anchor as a
+    literal passes it to ``time_range_predicate`` instead (see
+    http_server.spark_records_fn).
     """
     anchor = df.agg(F.max("event_time").alias("_now"))
     return (

@@ -5,28 +5,43 @@ Reference lifecycle (app/server/index.js:43-73):
 
 Here the whole thing is one lazy logical plan: validation happens up
 front in Python (api.py), everything else is column algebra that
-Catalyst optimizes (time bound pushed into the scan, conjunctive filters
-merged, unused columns pruned). Nothing materializes until the sink.
+Catalyst optimizes (conjunctive filters merged, unused columns pruned,
+and the time bound pushed into the scan when its anchor is a literal;
+the data-relative anchor of with_data_relative_window is a joined
+column and is not pushed). Nothing materializes until the sink.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..api import QueryParamValidator, ValidationResult
 from ..operators.events import to_nested
-from ..operators.filters import filter_records, with_data_relative_window
+from ..operators.filters import (
+    filter_records,
+    time_range_predicate,
+    with_data_relative_window,
+)
 from ..sources.tables import load_events
 
 
 def records_plan(
-    events_nested: DataFrame, query: Mapping[str, object]
+    events_nested: DataFrame, query: Mapping[str, object], now: Column | None = None
 ) -> DataFrame:
-    """scan -> time window -> conjunctive filters (index.js:57-61)."""
-    windowed = with_data_relative_window(events_nested, query.get("duration"))
+    """scan -> time window -> conjunctive filters (index.js:57-61).
+
+    ``now`` anchors the window. None anchors it at the data's
+    max(event_time) inside the plan (with_data_relative_window). A
+    literal anchor, e.g. F.timestamp_micros(F.lit(us)), is pushed into
+    the parquet scan; a live deployment passes F.current_timestamp()."""
+    duration = query.get("duration")
+    if now is None:
+        windowed = with_data_relative_window(events_nested, duration)
+    else:
+        windowed = events_nested.filter(time_range_predicate(now, duration))
     return filter_records(windowed, query)
 
 

@@ -57,6 +57,14 @@ def _encode_batch(recs: pd.Series) -> pd.Series:
     )
 
 
+def raw_cache_dir(sf_dir: str, group_size: int) -> str:
+    """Where kpl_raw_records materializes the packed wire records."""
+    return scratch(
+        f"ksr_raw_cache/{sf_dir.strip('/').replace('/', '_')}_g{group_size}"
+        f"_{source_fingerprint(sf_dir)}"
+    )
+
+
 def kpl_raw_records(
     spark: SparkSession, sf_dir: str, group_size: int = 50, cache: bool = True
 ) -> DataFrame:
@@ -71,12 +79,13 @@ def kpl_raw_records(
     The cache key includes the source parquet's identity (mtime+size
     via source_fingerprint), so a regenerated events table can never be
     compared against stale packed wire records — the cache simply
-    misses and repacks."""
-    cache_dir = scratch(
-        f"ksr_raw_cache/{sf_dir.strip('/').replace('/', '_')}_g{group_size}"
-        f"_{source_fingerprint(sf_dir)}"
-    )
-    if cache and os.path.isdir(cache_dir):
+    misses and repacks.
+
+    Only a cache with the `_SUCCESS` marker Spark's committer writes last
+    is reused: a pack that failed mid-write leaves a directory without
+    it, which is repacked (overwritten) rather than read."""
+    cache_dir = raw_cache_dir(sf_dir, group_size)
+    if cache and os.path.isfile(os.path.join(cache_dir, "_SUCCESS")):
         return spark.read.parquet(cache_dir)
 
     events = load_events(spark, sf_dir).select(

@@ -7,14 +7,19 @@
 3. GET /records (no streamname) -> 400 with {badRequest: true,
    missingRequiredParams: [...], invalidParams: [...]};
 plus: invalid param -> 400, runtime failure -> 400 error envelope
-(index.js:65-72), and the real pipeline over live HTTP.
+(index.js:65-72), the real pipeline over live HTTP, the Spark work one
+request runs, freshness across an appended part file, and the access
+log line.
 """
 
 from __future__ import annotations
 
 import json
+import logging
+import time
 import urllib.error
 import urllib.request
+from datetime import timedelta
 
 import pytest
 
@@ -136,8 +141,9 @@ def test_default_ceiling_bounds_unbounded_producer():
 
 
 def test_spark_records_fn_limit(spark, sf_dir):
-    """The Spark producer honors the per-request limit end-to-end and
-    streams (toLocalIterator) instead of collect()ing the window."""
+    """The Spark producer honors the per-request limit end-to-end: the
+    plan's `.limit()` under collect() is a CollectLimit take, so no more
+    than the limit of rows reaches the driver."""
     fn = spark_records_fn(spark, sf_dir)
     rows = fn({"streamname": "events", "duration": "960", "limit": "5"})
     assert len(rows) == 5
@@ -178,3 +184,107 @@ def test_live_http_spark_pipeline(spark, sf_dir):
         assert len(body) > 0
     finally:
         server.shutdown()
+
+
+def _executed_plan(spark, job_id: int) -> str:
+    """Physical plan description of the SQL execution that ran `job_id`."""
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in range(executions.size() - 1, -1, -1):
+        execution = executions.apply(i)
+        if execution.jobs().contains(job_id):
+            return execution.physicalPlanDescription()
+    raise AssertionError(f"no SQL execution ran job {job_id}")
+
+
+def test_spark_records_fn_runs_one_job_with_pushed_window(spark, sf_dir):
+    """Once the per-version state is built, a request runs one Spark job,
+    and its literal window bound is pushed into the parquet scan."""
+    sc = spark.sparkContext
+    fn = spark_records_fn(spark, sf_dir)
+    query = {"streamname": "events", "duration": "960"}
+    fn(query)  # warm: builds the nested plan and the anchor
+    group = "records_one_request"
+    sc.setJobGroup(group, group)
+    try:
+        assert fn(query)
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    scans = [
+        line for line in _executed_plan(spark, jobs[0]).splitlines()
+        if "PushedFilters" in line
+    ]
+    assert scans and all("GreaterThanOrEqual(ts," in line for line in scans)
+
+
+def test_spark_records_fn_follows_appended_part(spark, sf_dir, tmp_path):
+    """A part file appended to events.parquet moves the window anchor:
+    the next response holds the newest events and drops the rows that
+    fell out of the 960-minute window."""
+    from pyspark.sql import functions as F
+
+    from kinesis_stream_reader_spark.sources.tables import load_events
+
+    events = load_events(spark, sf_dir)
+    path = str(tmp_path / "events.parquet")
+    events.coalesce(1).write.parquet(path)
+    fn = spark_records_fn(spark, str(tmp_path))
+    query = {"streamname": "events", "duration": "960"}
+    before = {r["event_id"] for r in fn(query)}
+
+    first_new_id = events.agg(F.max("event_id")).first()[0] + 1
+    later = events.withColumn("event_id", F.col("event_id") + first_new_id)
+    later = later.withColumn("ts", F.col("ts") + F.expr("INTERVAL 12 HOURS"))
+    later.coalesce(1).write.mode("append").parquet(path)
+    after = {r["event_id"] for r in fn(query)}
+
+    rows = load_events(spark, str(tmp_path)).select("event_id", "ts").collect()
+    newest = max(rows, key=lambda r: r["ts"])
+    cutoff = newest["ts"] - timedelta(minutes=960)
+    assert after == {r["event_id"] for r in rows if r["ts"] >= cutoff}
+    assert newest["event_id"] >= first_new_id and newest["event_id"] in after
+    assert before - after  # rows now outside the window are gone
+
+
+def test_spark_records_fn_empty_events(spark, empty_dir):
+    """An empty events table has a NULL anchor, so the window predicate
+    is NULL and every request returns no rows."""
+    fn = spark_records_fn(spark, empty_dir)
+    query = {"streamname": "events", "duration": "960"}
+    assert fn(query) == []
+    for param, value in (
+        ("contactId", "1"),
+        ("agentId", "10"),
+        ("serverName", "Server-click"),
+        ("tenantId", "1"),
+        ("agentShiftId", "1"),
+    ):
+        assert fn({**query, param: value}) == []
+
+
+def test_access_log_line_per_request(stub_app, caplog):
+    """One JSON access line per request: path, status, rows, ms."""
+    logger = "kinesis_stream_reader_spark.http_server"
+    caplog.set_level(logging.INFO, logger=logger)
+    server = serve(stub_app)
+    port = server.server_address[1]
+    try:
+        assert _get(port, "/records?streamname=s")[0] == 200
+        assert _get(port, "/records")[0] == 400
+        # the handler thread logs after writing the response
+        deadline = time.monotonic() + 5
+        while len(caplog.records) < 2 and time.monotonic() < deadline:
+            time.sleep(0.01)
+    finally:
+        server.shutdown()
+    lines = sorted(
+        (json.loads(r.getMessage()) for r in caplog.records if r.name == logger),
+        key=lambda line: line["status"],
+    )
+    assert [(x["path"], x["status"], x["rows"]) for x in lines] == [
+        ("/records", 200, len(TEST_DATA)),
+        ("/records", 400, 0),
+    ]
+    assert all(set(x) == {"path", "status", "rows", "ms"} and x["ms"] >= 0 for x in lines)

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import base64
 import json
+import os
+import shutil
 
 from pyspark.sql import Row
 
@@ -76,3 +78,18 @@ def test_payload_order_preserved():
     payloads = [json.dumps({"i": i}).encode() for i in range(20)]
     decoded = kpl_decode(kpl_encode(payloads))
     assert [json.loads(base64.b64decode(d))["i"] for d in decoded] == list(range(20))
+
+
+def test_raw_cache_without_success_marker_repacks(spark, sf_dir):
+    """A cache directory a failed pack left behind (no `_SUCCESS`) is
+    repacked, not read: reading it fails with UNABLE_TO_INFER_SCHEMA."""
+    from kinesis_stream_reader_spark.sources.raw import kpl_raw_records, raw_cache_dir
+
+    group_size = 37  # a cache key no other test shares
+    cache_dir = raw_cache_dir(sf_dir, group_size)
+    shutil.rmtree(cache_dir, ignore_errors=True)
+    os.makedirs(cache_dir)
+    got = kpl_raw_records(spark, sf_dir, group_size).orderBy("agg_id").collect()
+    want = kpl_raw_records(spark, sf_dir, group_size, cache=False).orderBy("agg_id").collect()
+    assert got and got == want
+    assert os.path.isfile(os.path.join(cache_dir, "_SUCCESS"))
