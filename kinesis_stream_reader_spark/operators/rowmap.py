@@ -1,19 +1,22 @@
-"""Row-map adapter: run a plain per-row Python kernel over a DataFrame
-in one ``mapInArrow`` pass.
+"""Arrow map adapters: run a plain Python kernel over a DataFrame in
+one ``mapInArrow`` pass.
 
-A media kernel decodes, explodes or parses ONE record and returns its
-output rows. Everything around it — reading the Arrow columns, gathering
-the output tuples, building typed RecordBatches — lives here once
-instead of in a hand-written batch closure per kernel. Payloads stay
-opaque to the JVM (no codegen over blob contents) and one task never
-holds more than ``spark.sql.execution.arrow.maxRecordsPerBatch`` input
-rows of payload at a time.
+``map_rows``: a media kernel decodes, explodes or parses ONE record and
+returns its output rows. ``map_batches``: a numpy kernel scores a whole
+Arrow batch of vectors at once (GEMMs, argmins, census partials).
+Everything around the kernel — reading the Arrow columns, building
+typed RecordBatches from the Arrow schema derived once from the DDL —
+lives here once instead of in a hand-written closure per kernel, with
+no pandas round trip. Payloads stay opaque to the JVM (no codegen over
+blob contents) and one task never holds more than
+``spark.sql.execution.arrow.maxRecordsPerBatch`` input rows at a time.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
@@ -51,6 +54,78 @@ def map_rows(
             )
 
     return df.mapInArrow(batches, schema)
+
+
+def map_batches(
+    df: DataFrame,
+    kernel: Callable[[Iterator[dict]], Iterable[dict]],
+    schema: str,
+) -> DataFrame:
+    """Run the numpy ``kernel`` over every partition of ``df``; the
+    result has DDL ``schema``.
+
+    ``kernel`` receives an iterator of ``{column: ndarray}`` dicts, one
+    per non-empty Arrow batch of the partition: scalar columns arrive
+    1-D, array columns 2-D ``(rows, width)``. It yields dicts of output
+    columns in any number, per batch or once after draining the
+    iterator (a per-task census); a 2-D value becomes an ARRAY column.
+    A null vector, a null element or unequal widths in an array column
+    raise ``ValueError`` naming the column.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+
+    def to_record_batch(out: dict):
+        cols = []
+        for field in arrow_schema:
+            col = np.asarray(out[field.name])
+            if col.ndim == 2:
+                offsets = np.arange(len(col) + 1) * col.shape[1]
+                cols.append(
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets, pa.int32()),
+                        pa.array(col.ravel(), field.type.value_type),
+                    )
+                )
+            else:
+                cols.append(pa.array(col, field.type))
+        return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    def batches(it):
+        inputs = (_batch_columns(b) for b in it if b.num_rows)
+        for out in kernel(inputs):
+            yield to_record_batch(out)
+
+    return df.mapInArrow(batches, schema)
+
+
+def _batch_columns(batch) -> dict:
+    """One Arrow batch as ``{column: ndarray}``; list columns 2-D."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cols = {}
+    for name, col in zip(batch.schema.names, batch.columns):
+        if not pa.types.is_list(col.type):
+            cols[name] = col.to_numpy(zero_copy_only=False)
+            continue
+        if col.null_count:
+            raise ValueError(f"column {name!r}: null vector")
+        values = col.flatten()
+        if values.null_count:
+            raise ValueError(f"column {name!r}: null vector element")
+        widths = pc.list_value_length(col).to_numpy()
+        if (widths != widths[0]).any():
+            raise ValueError(
+                f"column {name!r}: unequal vector widths "
+                f"{int(widths.min())}..{int(widths.max())}"
+            )
+        cols[name] = values.to_numpy(zero_copy_only=False).reshape(
+            len(col), int(widths[0])
+        )
+    return cols
 
 
 def doc_id_seed(documents: DataFrame) -> DataFrame:

@@ -8,16 +8,29 @@ broadcasts, each partition scores its rows, TakeOrdered merges k rows).
 The LSH form is the 100 TB shape: bucket once (a cheap narrow column),
 then probe only matching buckets — at scale the bucket column is the
 partition/Z-order key so probes prune files, not just rows.
+
+Per-batch vector kernels (LSH bucketing, the Lloyd census, PCA
+partials, every trained-IVF / IVF-PQ scoring pass) are numpy functions
+run through ``rowmap.map_batches``: one ``mapInArrow`` pass, a
+``{column: ndarray}`` dict per Arrow batch with ``xq`` (the
+milli-quantized ``array<long>`` vector) as a 2-D int64 matrix, output
+columns picked by the declared schema. Their IVF-PQ arithmetic —
+coarse assignment, probe ranking, PQ encoding, ADC lookup tables — is
+``ivfpq.assign`` / ``probe`` / ``pq_encode`` / ``adc_lut``: exact
+int64, ties to the lowest id, bit-identical to the SQL oracles.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import ivfpq
 from .dedup import _as_double, cosine
+from .rowmap import map_batches
 from ..session import env_int
 
 # 16 fixed Gaussian hyperplanes for sign-LSH, generated from a seeded
@@ -78,26 +91,23 @@ def lsh_buckets_vectorized(embeddings: DataFrame, planes: int = LSH_PLANES, dim:
     Same engineering decision as dedup.embedding_near_dup_pairs: dense
     vector math goes through numpy/BLAS, not per-element column folds
     (measured ~4x at sf0.1, growing with dim x planes)."""
-    import numpy as np
-
-    def batches(it):
+    def kernel(batches):
         w = lsh_planes(planes, dim)
         powers = (1 << np.arange(planes)).astype(np.int64)
-        for pdf in it:
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            bits = (mat @ w) > 0
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": [row.tolist() for row in mat],
-                    "bucket": (bits @ powers).astype(np.int64),
-                }
-            )
+        for b in batches:
+            mat = b["embedding"].astype(np.float64)
+            yield {
+                "vec_id": b["vec_id"],
+                "embedding": mat,
+                "bucket": (((mat @ w) > 0) @ powers).astype(np.int64),
+            }
 
     # the vector rides along: this is the index-BUILD pass (one map-only
     # stage, persisted in a real deployment), so probes need no join
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        batches, "vec_id BIGINT, embedding ARRAY<DOUBLE>, bucket BIGINT"
+    return map_batches(
+        embeddings.select("vec_id", "embedding"),
+        kernel,
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, bucket BIGINT",
     )
 
 
@@ -614,34 +624,32 @@ def _lloyd_driver_reduce_max_parts() -> int:
 
 def _lloyd_centroids(
     embeddings: DataFrame, k: int, max_iter: int
-) -> tuple[list, list]:
+) -> tuple[np.ndarray, np.ndarray, list, DataFrame]:
     """The Lloyd loop shared by kmeans_converged (which emits the
-    per-dim centroid report) and trained_lists (which re-assigns the
-    corpus against the converged centroids to key an IVF index).
+    per-dim centroid report) and every trained-IVF query (which
+    re-assigns against the converged centroids).
 
     Round-8 shape: per iteration ONE map-side Arrow pass scores every
     vector against the driver-held (m x dim) integer centroid table
-    with an int64 numpy GEMM (exact: |D2 * k + cid| << 2^63) and emits
-    only per-batch census partials — (cluster, dim) coordinate sums,
-    counts, and the within-cluster d2 total — so the shuffle per round
-    is batches x (m x dim + m) rows and the driver collects m x dim
-    ints. The original column-expression loop ran the scoring
-    zip_with/aggregate INTERPRETED per element (N x m x dim lambda
-    steps — 41M/iter at the 40k amp probe, where it was 3x slower
-    than the quadratic twin it feeds); the GEMM pass is the same
-    exact-integer arithmetic at C speed. Values are bit-identical:
-    packed argmin MIN(d2 * k + cid), exact-bigint total as the stop
-    signal, floor(sum/n + 0.5) re-quantization (int64 -> float64 is
-    exact below 2^53, so the one IEEE division matches the SQL
-    oracle's).
+    with an int64 numpy GEMM (ivfpq.assign) and emits only census
+    partials — (cluster, dim) coordinate sums, counts, and the
+    within-cluster d2 total — so the driver collects m x dim ints. The
+    original column-expression loop ran the scoring zip_with/aggregate
+    INTERPRETED per element (N x m x dim lambda steps — 41M/iter at the
+    40k amp probe, where it was 3x slower than the quadratic twin it
+    feeds); the GEMM pass is the same exact-integer arithmetic at C
+    speed. Values are bit-identical: the ivfpq.assign argmin,
+    exact-bigint total as the stop signal, floor(sum/n + 0.5)
+    re-quantization (int64 -> float64 is exact below 2^53, so the one
+    IEEE division matches the SQL oracle's).
 
-    Returns (cents, per_dim_rows, vecs) at the last executed iteration:
-    cents = [(cid, np.ndarray int64 (dim,))], per_dim_rows =
-    [(cluster_id, pos0, n, cm)], vecs = the localCheckpointed
-    (vec_id, xq) quantized corpus — callers assigning against the
-    converged centroids reuse it instead of re-scanning the table."""
-    import numpy as np
-
+    Returns (cids, cmat, per_dim_rows, vecs) at the last executed
+    iteration: cids = the surviving cluster ids (int64, ascending),
+    cmat = their (len(cids), dim) int64 centroid table (both empty for
+    an empty corpus), per_dim_rows = [(cluster_id, pos0, n, cm)], vecs
+    = the localCheckpointed (vec_id, xq) quantized corpus — callers
+    assigning against the converged centroids reuse it instead of
+    re-scanning the table."""
     vecs = embeddings.select(
         "vec_id", _quantized_vec(F.col("embedding")).alias("xq")
     ).localCheckpoint(eager=False)
@@ -655,10 +663,11 @@ def _lloyd_centroids(
         vecs.orderBy("vec_id").limit(k).collect(),
         key=lambda r: r["vec_id"],
     )
-    seeds = [
-        (i, np.asarray(r["xq"], np.int64)) for i, r in enumerate(seed_rows)
-    ]
-    cents = seeds
+    dim = len(seed_rows[0]["xq"]) if seed_rows else 0
+    cids = np.arange(len(seed_rows), dtype=np.int64)
+    cmat = np.array([r["xq"] for r in seed_rows], np.int64).reshape(
+        len(seed_rows), dim
+    )
     prev_total = None
     per_dim_rows: list = []
     # Round-13 optimization (guide §2.4: remove shuffles outright): the
@@ -678,12 +687,11 @@ def _lloyd_centroids(
     # bit-identical.
     n_parts = vecs.rdd.getNumPartitions()
     for _ in range(max_iter):
-        if not cents:  # empty corpus (or every cluster emptied): done
+        if not len(cids):  # empty corpus: done
             break
-        cids = np.array([c[0] for c in cents], np.int64)
-        cmat = np.stack([c[1] for c in cents])
-        part = vecs.mapInPandas(
-            _lloyd_census_batches(cmat, cids, k),
+        part = map_batches(
+            vecs,
+            _lloyd_census_kernel(cmat, cids, k),
             "cluster_id LONG, pos0 INT, s LONG, n LONG",
         )
         if n_parts <= _lloyd_driver_reduce_max_parts():
@@ -717,56 +725,36 @@ def _lloyd_centroids(
             for r in rows
             if r["pos0"] >= 0
         )
-        # per_dim_rows is (cluster, pos0)-sorted, so one groupby pass
-        # rebuilds all centroids in O(k * dim)
-        import itertools
-
-        cents = [
-            (cid, np.array([pr[3] for pr in grp], np.int64))
-            for cid, grp in itertools.groupby(per_dim_rows, key=lambda pr: pr[0])
-        ]
+        # per_dim_rows is (cluster, pos0)-sorted and carries every dim
+        # of every surviving cluster, so the table is one reshape
+        cids = np.unique([pr[0] for pr in per_dim_rows]).astype(np.int64)
+        cmat = np.array([pr[3] for pr in per_dim_rows], np.int64).reshape(
+            len(cids), dim
+        )
         if total == prev_total:
             break
         prev_total = total
-    return cents, per_dim_rows, vecs
+    return cids, cmat, per_dim_rows, vecs
 
 
-def _lloyd_census_batches(cmat, cids, k: int):
-    """Arrow-batch kernel for one Lloyd round: int64 GEMM argmin
-    against the broadcast centroid table, then a per-batch census —
-    for each cluster present in the batch, one row per dim
-    (cluster_id, pos0, coordinate sum, member count) plus one
-    (cluster_id, -1, d2 sum, member count) row carrying the
-    within-cluster total. All arithmetic exact int64."""
-    import numpy as np
+def _lloyd_census_kernel(cmat, cids, k: int):
+    """map_batches kernel for one Lloyd round: ivfpq.assign against the
+    broadcast centroid table, then a census accumulated across EVERY
+    batch of the partition and emitted once per task (round 13) — for
+    each cluster present, one row per dim (cluster_id, pos0, coordinate
+    sum, member count) plus one (cluster_id, -1, d2 sum, member count)
+    row carrying the within-cluster total. All arithmetic exact int64."""
 
-    def batches(it):
-        import pandas as pd
-
-        # Round-13: accumulate the census across EVERY batch in the
-        # partition and emit it once — the Python worker returns
-        # k * (dim + 1) rows per TASK instead of per batch, and the
-        # driver (or the wide-input groupBy) reduces strictly fewer
-        # rows. Exact int64 accumulation, identical values.
+    def kernel(batches):
         acc_sums = acc_d2s = acc_cnts = None
-        dim = None
-        for pdf in it:
-            if pdf.empty:
-                continue
-            v = np.array(pdf["xq"].tolist(), np.int64)
+        for b in batches:
+            v = b["xq"]
             if acc_sums is None:
                 dim = v.shape[1]
                 acc_sums = np.zeros((k, dim), np.int64)
                 acc_d2s = np.zeros(k, np.int64)
                 acc_cnts = np.zeros(k, np.int64)
-            d2 = (
-                (v * v).sum(1)[:, None]
-                - 2 * (v @ cmat.T)
-                + (cmat * cmat).sum(1)[None, :]
-            )
-            packed = (d2 * k + cids[None, :]).min(1)
-            cl = packed % k
-            d2min = packed // k
+            cl, d2min = ivfpq.assign(v, cmat, cids, k)
             order = np.argsort(cl, kind="stable")
             present, starts = np.unique(cl[order], return_index=True)
             acc_sums[present] += np.add.reduceat(v[order], starts, axis=0)
@@ -776,60 +764,38 @@ def _lloyd_census_batches(cmat, cids, k: int):
             return
         present = np.flatnonzero(acc_cnts)
         nc = len(present)
-        yield pd.DataFrame(
-            {
-                "cluster_id": np.concatenate(
-                    [np.repeat(present, dim), present]
-                ),
-                "pos0": np.concatenate(
-                    [np.tile(np.arange(dim, dtype=np.int32), nc),
-                     np.full(nc, -1, np.int32)]
-                ),
-                "s": np.concatenate(
-                    [acc_sums[present].reshape(-1), acc_d2s[present]]
-                ),
-                "n": np.concatenate(
-                    [np.repeat(acc_cnts[present], dim), acc_cnts[present]]
-                ),
-            }
-        )
+        yield {
+            "cluster_id": np.concatenate([np.repeat(present, dim), present]),
+            "pos0": np.concatenate(
+                [np.tile(np.arange(dim, dtype=np.int32), nc),
+                 np.full(nc, -1, np.int32)]
+            ),
+            "s": np.concatenate(
+                [acc_sums[present].reshape(-1), acc_d2s[present]]
+            ),
+            "n": np.concatenate(
+                [np.repeat(acc_cnts[present], dim), acc_cnts[present]]
+            ),
+        }
 
-    return batches
+    return kernel
 
 
-def _ivf_assign_batches(
-    cmat, cids, n_lists: int, keep_xq: bool = False, passthrough=()
-):
-    """Arrow-batch kernel: packed-argmin list assignment against the
-    broadcast integer centroid table — ONE definition of the
-    (d2 * n_lists + cid) argmin shared by trained_lists (batch index
-    build), the streaming ADD path (streaming_ivf_assign), and the
-    refine-store landing (keep_xq=True carries the quantized vector
-    through so vectors/ partitions by the SAME assignment the codes
-    use). Input batches carry (vec_id, xq array<long>)."""
-    import numpy as np
+def _ivf_assign_kernel(cmat, cids, n_lists: int):
+    """map_batches kernel: ivfpq.assign list assignment of (vec_id, xq)
+    batches against the broadcast centroid table, shared by
+    trained_lists (batch index build), the streaming ADD path
+    (streaming_ivf_assign) and the refine-store landing. Every input
+    column passes through, so the output schema alone decides what is
+    kept (the refine store keeps xq and label, so vectors/ partitions
+    by the SAME assignment the codes use)."""
 
-    def batches(it):
-        import pandas as pd
+    def kernel(batches):
+        for b in batches:
+            lst, _ = ivfpq.assign(b["xq"], cmat, cids, n_lists)
+            yield {**b, "list_id": lst}
 
-        for pdf in it:
-            if pdf.empty:
-                continue
-            v = np.array(pdf["xq"].tolist(), np.int64)
-            d2 = (
-                (v * v).sum(1)[:, None]
-                - 2 * (v @ cmat.T)
-                + (cmat * cmat).sum(1)[None, :]
-            )
-            packed = (d2 * n_lists + cids[None, :]).min(1)
-            out = {"vec_id": pdf["vec_id"], "list_id": packed % n_lists}
-            if keep_xq:
-                out["xq"] = pdf["xq"]
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return batches
+    return kernel
 
 
 def kmeans_converged(
@@ -840,24 +806,21 @@ def kmeans_converged(
     fully oracle-checkable INCLUDING the data-dependent stop:
 
     Vectors are quantized half-up to integer millis once, so squared
-    L2 distances are exact bigints, the argmin is the packed
-    MIN(d2*k + cid) (deterministic ties -> lowest cid), per-(cluster,
-    dim) coordinate sums are exact bigints, and the re-quantized
-    centroid is one deterministic float op (floor(sum/n + 0.5)).
+    L2 distances are exact bigints, the argmin is ivfpq.assign (ties
+    -> lowest cid), per-(cluster, dim) coordinate sums are exact
+    bigints, and the re-quantized centroid is one deterministic float
+    op (floor(sum/n + 0.5)).
     Total within-cluster d2 is therefore an exact bigint that is
     non-increasing round over round; the loop stops when it stops
     changing (or at max_iter). Every iteration is bit-identical across
     engines — float summation order never exists.
 
-    Plan per round (round 8): ONE map-side Arrow GEMM pass against the
-    driver-held centroid table emitting per-batch census partials, a
-    (cluster x dim)-row partial agg, and an m x dim driver collect —
-    the big side never shuffles (see _lloyd_centroids). The emitted
-    report is built from the collected census (driver-census algebra,
-    the bradley_terry/pelt house pattern — this query is in
-    EAGER_QUERIES)."""
+    Plan per round: see _lloyd_centroids — the big side never
+    shuffles. The emitted report is built from the collected census
+    (driver-census algebra, the bradley_terry/pelt house pattern — this
+    query is in EAGER_QUERIES)."""
     spark = embeddings.sparkSession
-    _, per_dim, _ = _lloyd_centroids(embeddings, k, max_iter)
+    _, _, per_dim, _ = _lloyd_centroids(embeddings, k, max_iter)
     # emit the converged centroids per (cluster, dim) with member counts
     rows = [
         (int(cid), int(pos0) + 1, cm / 1000, int(n))
@@ -876,10 +839,9 @@ def trained_lists(
     nearest centroid's inverted list), replacing the fixture `label`
     column as the IVF partitioning key. Returns (vec_id, list_id).
 
-    Assignment is a fresh argmin of exact-integer squared L2 against
-    the CONVERGED centroids (one broadcast of n_lists integer-milli
-    vectors, packed MIN(d2 * n_lists + cid) for deterministic ties) —
-    at convergence this equals the loop's final assignment, and when
+    Assignment is a fresh ivfpq.assign against the CONVERGED
+    centroids (one broadcast of n_lists integer-milli vectors) — at
+    convergence this equals the loop's final assignment, and when
     the max_iter cap fires first it is still the well-defined
     "quantizer assigns" semantics both engines replay bit-identically.
 
@@ -887,26 +849,21 @@ def trained_lists(
     (~sqrt(500)/1.4) keeps the oracle's recursive-CTE mirror bounded.
     Plan shape / 100 TB: training is the per-round map-side GEMM +
     census-partial shuffle of _lloyd_centroids (at real scale it runs
-    on a corpus sample); assignment is ONE map-side Arrow GEMM pass
-    against the driver-held converged centroids — the big side never
+    on a corpus sample); assignment is ONE map_batches pass against
+    the driver-held converged centroids — the big side never
     shuffles; the result is the list key later stages partition by."""
-    import numpy as np
-
-    cents, _, vecs = _lloyd_centroids(embeddings, n_lists, max_iter)
-    if not cents:  # empty corpus: empty assignment, same schema
+    cids, cmat, _, vecs = _lloyd_centroids(embeddings, n_lists, max_iter)
+    if not len(cids):  # empty corpus: empty assignment, same schema
         return vecs.select(
             "vec_id", F.lit(0).cast("long").alias("list_id")
         )
-    cids = np.array([c[0] for c in cents], np.int64)
-    cmat = np.stack([c[1] for c in cents])
     # reuse the loop's localCheckpointed quantized corpus — the final
     # assignment pass must not re-scan and re-quantize the table
-    return (
-        vecs.mapInPandas(
-            _ivf_assign_batches(cmat, cids, n_lists), "vec_id LONG, list_id LONG"
-        )
-        .localCheckpoint(eager=False)
-    )
+    return map_batches(
+        vecs,
+        _ivf_assign_kernel(cmat, cids, n_lists),
+        "vec_id LONG, list_id LONG",
+    ).localCheckpoint(eager=False)
 
 
 def rag_retrieval(
@@ -1189,8 +1146,6 @@ def pca_power_top_component(embeddings: DataFrame, rounds: int = 4) -> DataFrame
     iteration like kmeans_converged)."""
     import math
 
-    import numpy as np
-
     spark = embeddings.sparkSession
     # quantized corpus scanned once; every round's GEMM pass rides the
     # lazy checkpoint instead of re-embedding the parquet scan
@@ -1202,7 +1157,7 @@ def pca_power_top_component(embeddings: DataFrame, rounds: int = 4) -> DataFrame
     v: list = [1000] * dim
     for _ in range(rounds):
         varr = np.asarray(v, np.int64)
-        part = vecs.mapInPandas(_pca_partial_batches(varr), "d INT, u LONG")
+        part = map_batches(vecs, _pca_partial_kernel(varr), "d INT, u LONG")
         if n_parts <= _lloyd_driver_reduce_max_parts():
             rows = part.collect()
         else:
@@ -1242,32 +1197,24 @@ def pca_power_top_component(embeddings: DataFrame, rounds: int = 4) -> DataFrame
     )
 
 
-def _pca_partial_batches(varr):
-    """Arrow-batch kernel for one power-iteration round: exact-int64
+def _pca_partial_kernel(varr):
+    """map_batches kernel for one power-iteration round: exact-int64
     GEMMs s = X@v then u_partial = X.T@s, accumulated across every
     batch in the partition and emitted once per task as (d, u) rows
-    (the _lloyd_census_batches convention). Magnitude bound: |s| <=
+    (the _lloyd_census_kernel convention). Magnitude bound: |s| <=
     dim * |x| * |v| ~ 1e9 and |u| <= N * |x| * |s| ~ 1e17 at the 100x
     amp probe — far inside int64, so numpy addition reorder is exact."""
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
+    def kernel(batches):
         acc = None
-        for pdf in it:
-            if pdf.empty:
-                continue
-            X = np.stack([np.asarray(x, np.int64) for x in pdf["xq"]])
-            s = X @ varr
-            u = X.T @ s
+        for b in batches:
+            X = b["xq"]
+            u = X.T @ (X @ varr)
             acc = u if acc is None else acc + u
         if acc is not None:
-            yield pd.DataFrame(
-                {"d": np.arange(len(acc), dtype=np.int32), "u": acc}
-            )
+            yield {"d": np.arange(len(acc), dtype=np.int32), "u": acc}
 
-    return batches
+    return kernel
 
 
 def ann_ivfpq(
@@ -1397,30 +1344,21 @@ def ann_ivfpq_trained(
     seed convention — oracle-replayable; production would k-means each
     subspace).
 
-    All arithmetic is exact int64 on milli-quantized vectors: the
-    probe ranking, the residuals, the code argmin (packed
-    MIN(d2 * n_codes + j)), and the ADC sums are bit-identical across
-    engines.
-
     Plan shape / 100 TB: training + every constant (centroids,
     codebooks, per-list LUTs — n_lists x m x n_codes ints) is
-    driver-held and broadcast into ONE map-side Arrow pass that
+    driver-held and broadcast into ONE map_batches pass that
     assigns, filters to probed lists, encodes, and ADC-scores each
     partition's vectors; only (vec_id, adc) scalars leave the scan.
     At scale list_id is the code store's partition key, so the probe
     filter is file-level pruning and re-encoding is never needed at
     query time. TakeOrdered merges k rows."""
-    import numpy as np
-
-    cents, _, vecs = _lloyd_centroids(embeddings, n_lists, max_iter)
-    if not cents:  # empty corpus: empty result, same schema
+    cids, cmat, _, vecs = _lloyd_centroids(embeddings, n_lists, max_iter)
+    if not len(cids):  # empty corpus: empty result, same schema
         return vecs.select(
             F.lit(1).cast("int").alias("rank"),
             "vec_id",
             F.lit(0).cast("long").alias("adc_d2"),
         )
-    cids = np.array([c[0] for c in cents], np.int64)
-    cmat = np.stack([c[1] for c in cents])
     if cmat.shape[1] % m != 0:
         # FAISS errors on unequal subspaces too; a silent dim truncation
         # would score on a prefix of the vector and diverge from the
@@ -1429,7 +1367,6 @@ def ann_ivfpq_trained(
             f"embedding dim {cmat.shape[1]} is not divisible by m={m}; "
             "PQ requires equal-width subspaces"
         )
-    sub = cmat.shape[1] // m
 
     # Codebook seeds: the n_codes SMALLEST vec_ids (TakeOrdered — no
     # contiguous-id assumption), degrading gracefully to a smaller
@@ -1443,62 +1380,34 @@ def ann_ivfpq_trained(
             f"query_vec_id {query_vec_id} is not present in the corpus"
         )
     q = np.asarray(qrows[0]["xq"], np.int64)
-    # probe: nprobe nearest lists to the QUERY by exact-int L2, ties
-    # to the lowest cid (the packed-min convention)
-    qd2 = ((q[None, :] - cmat) ** 2).sum(1)
-    probe_order = np.lexsort((cids, qd2))[:nprobe]
-    probed = cids[probe_order]
     # per-probed-list ADC LUTs from the query's per-list residual
-    luts = {}
-    for pi in probe_order:
-        rq = q - cmat[pi]
-        lut = np.zeros((m, n_codes), np.int64)
-        for s in range(m):
-            sl = slice(s * sub, (s + 1) * sub)
-            lut[s] = ((rq[sl][None, :] - cb[:, sl]) ** 2).sum(1)
-        luts[int(cids[pi])] = lut
-    probed_set = set(int(x) for x in probed)
+    probe_order = ivfpq.probe(q, cmat, cids, nprobe)
+    probed = cids[probe_order]
+    luts = {
+        int(cids[pi]): ivfpq.adc_lut(q - cmat[pi], cb, m) for pi in probe_order
+    }
+    span = np.arange(m)[None, :]
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
-                continue
-            v = np.array(pdf["xq"].tolist(), np.int64)
-            ids = pdf["vec_id"].to_numpy()
-            d2 = (
-                (v * v).sum(1)[:, None]
-                - 2 * (v @ cmat.T)
-                + (cmat * cmat).sum(1)[None, :]
-            )
-            packed = (d2 * n_lists + cids[None, :]).min(1)
-            lst = (packed % n_lists).astype(np.int64)
+    def kernel(batches):
+        for b in batches:
+            v, ids = b["xq"], b["vec_id"]
+            lst, _ = ivfpq.assign(v, cmat, cids, n_lists)
             mask = np.isin(lst, probed) & (ids != query_vec_id)
             if not mask.any():
                 continue
             v, ids, lst = v[mask], ids[mask], lst[mask]
-            li = np.searchsorted(cids, lst)  # cids sorted by construction
-            r = v - cmat[li]
+            # cids are sorted by construction
+            codes, _ = ivfpq.pq_encode(
+                v - cmat[np.searchsorted(cids, lst)], cb, m
+            )
             adc = np.zeros(len(ids), np.int64)
-            for s in range(m):
-                sl = slice(s * sub, (s + 1) * sub)
-                dist = (
-                    (r[:, sl] * r[:, sl]).sum(1)[:, None]
-                    - 2 * (r[:, sl] @ cb[:, sl].T)
-                    + (cb[:, sl] * cb[:, sl]).sum(1)[None, :]
-                )
-                code = (
-                    (dist * n_codes + np.arange(n_codes)[None, :]).min(1)
-                    % n_codes
-                )
-                for lid, lut in luts.items():
-                    sel = lst == lid
-                    adc[sel] += lut[s][code[sel]]
-            yield pd.DataFrame({"vec_id": ids, "adc_d2": adc})
+            for lid, lut in luts.items():
+                sel = lst == lid
+                adc[sel] = lut[span, codes[sel]].sum(1)
+            yield {"vec_id": ids, "adc_d2": adc}
 
     topk = (
-        vecs.mapInPandas(batches, "vec_id LONG, adc_d2 LONG")
+        map_batches(vecs, kernel, "vec_id LONG, adc_d2 LONG")
         .orderBy("adc_d2", "vec_id")
         .limit(k)
     )
@@ -2293,24 +2202,13 @@ def _pq_seed_codebook(vecs, cmat, cids, n_lists: int, n_codes: int):
     twins: residuals (v - centroid[list(v)]) of the n_codes SMALLEST
     vec_ids, code j = j-th smallest (the oracle's rank - 1 convention).
     Returns (cb (n_codes_eff, dim) int64, n_codes_eff)."""
-    import numpy as np
-
     head_rows = sorted(
         vecs.orderBy("vec_id").limit(n_codes).collect(),
         key=lambda r: r["vec_id"],
     )
-    n_codes = min(n_codes, len(head_rows))
-
-    def assign_one(v):
-        d2 = ((v[None, :] - cmat) ** 2).sum(1)
-        j = int((d2 * n_lists + cids).min() % n_lists)
-        return int(np.flatnonzero(cids == j)[0])
-
-    seeds_np = [np.asarray(r["xq"], np.int64) for r in head_rows]
-    cb = np.stack(
-        [seeds_np[j] - cmat[assign_one(seeds_np[j])] for j in range(n_codes)]
-    )
-    return cb, n_codes
+    seeds = np.array([r["xq"] for r in head_rows], np.int64)
+    lst, _ = ivfpq.assign(seeds, cmat, cids, n_lists)
+    return seeds - cmat[np.searchsorted(cids, lst)], len(head_rows)
 
 
 def ann_ivfpq_refine(
@@ -2405,80 +2303,53 @@ def pq_code_health(
     vectors; shares/means are integer divisions of exact counts.
 
     Plan shape / 100 TB: training constants are driver-held; ONE
-    map-side Arrow pass assigns, encodes, and emits per-batch census
+    map_batches pass assigns, encodes, and emits per-batch census
     partials (m x n_codes rows per batch — corpus-size independent);
     one m x n_codes-key hash-agg merges them. Row count = m x n_codes."""
-    import numpy as np
-
-    cents, _, vecs = _lloyd_centroids(embeddings, n_lists, max_iter)
+    cids, cmat, _, vecs = _lloyd_centroids(embeddings, n_lists, max_iter)
     spark = embeddings.sparkSession
     schema = (
         "s INT, code INT, n_vectors LONG, share_milli LONG, "
         "dist_sum LONG, dist_mean_milli LONG, sub_empty_codes LONG"
     )
-    if not cents:  # empty corpus: empty report, same schema
+    if not len(cids):  # empty corpus: empty report, same schema
         return _empty_df(spark, schema)
-    cids = np.array([c[0] for c in cents], np.int64)
-    cmat = np.stack([c[1] for c in cents])
     if cmat.shape[1] % m != 0:
         raise ValueError(
             f"embedding dim {cmat.shape[1]} is not divisible by m={m}; "
             "PQ requires equal-width subspaces"
         )
-    sub = cmat.shape[1] // m
     cb, n_codes = _pq_seed_codebook(vecs, cmat, cids, n_lists, n_codes)
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
-                continue
-            v = np.array(pdf["xq"].tolist(), np.int64)
-            d2 = (
-                (v * v).sum(1)[:, None]
-                - 2 * (v @ cmat.T)
-                + (cmat * cmat).sum(1)[None, :]
+    def kernel(batches):
+        for b in batches:
+            v = b["xq"]
+            lst, _ = ivfpq.assign(v, cmat, cids, n_lists)
+            codes, dmin = ivfpq.pq_encode(
+                v - cmat[np.searchsorted(cids, lst)], cb, m
             )
-            li = np.searchsorted(
-                cids, (d2 * n_lists + cids[None, :]).min(1) % n_lists
-            )
-            r = v - cmat[li]
-            ss, codes, ns, dsums = [], [], [], []
+            ss, present_codes, ns, dsums = [], [], [], []
             for s in range(m):
-                sl = slice(s * sub, (s + 1) * sub)
-                dist = (
-                    (r[:, sl] * r[:, sl]).sum(1)[:, None]
-                    - 2 * (r[:, sl] @ cb[:, sl].T)
-                    + (cb[:, sl] * cb[:, sl]).sum(1)[None, :]
-                )
-                packed = (
-                    dist * n_codes + np.arange(n_codes)[None, :]
-                ).min(1)
-                code = packed % n_codes
-                # int64 from here on: bincount(weights=...) sums in
+                # int64 accumulation: bincount(weights=...) sums in
                 # float64, whose exactness dies past 2^53 per-cell —
                 # np.add.at on an int64 accumulator keeps the census
                 # exact at any batch size.
-                dmin = (packed // n_codes).astype(np.int64)
-                present, inv = np.unique(code, return_inverse=True)
+                present, inv = np.unique(codes[:, s], return_inverse=True)
                 acc = np.zeros(len(present), np.int64)
-                np.add.at(acc, inv, dmin)
+                np.add.at(acc, inv, dmin[:, s])
                 ss.append(np.full(len(present), s, np.int64))
-                codes.append(present)
+                present_codes.append(present)
                 ns.append(np.bincount(inv))
                 dsums.append(acc)
-            yield pd.DataFrame(
-                {
-                    "s": np.concatenate(ss),
-                    "code": np.concatenate(codes),
-                    "n": np.concatenate(ns),
-                    "dsum": np.concatenate(dsums),
-                }
-            )
+            yield {
+                "s": np.concatenate(ss),
+                "code": np.concatenate(present_codes),
+                "n": np.concatenate(ns),
+                "dsum": np.concatenate(dsums),
+            }
 
     census = (
-        vecs.mapInPandas(batches, "s LONG, code LONG, n LONG, dsum LONG")
+        map_batches(vecs, kernel, "s LONG, code LONG, n LONG, dsum LONG")
         .groupBy("s", "code")
         .agg(F.sum("n").alias("n"), F.sum("dsum").alias("dsum"))
     )
@@ -2530,8 +2401,6 @@ def range_search(embeddings, query_vec_id: int = 0, r2_milli: int = 1_600_000):
     scan (result size = the ball's population, not the corpus). At
     scale you prune lists first with the trained IVF quantizer and run
     the same pass over probed lists only."""
-    import numpy as np
-
     vecs = embeddings.select(
         "vec_id", _quantized_vec(F.col("embedding")).alias("xq")
     )
@@ -2542,23 +2411,16 @@ def range_search(embeddings, query_vec_id: int = 0, r2_milli: int = 1_600_000):
         ).limit(0)
     q = np.asarray(qrows[0]["xq"], np.int64)
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
-                continue
-            v = np.array(pdf["xq"].tolist(), np.int64)
-            ids = pdf["vec_id"].to_numpy()
-            d2 = ((v - q[None, :]) ** 2).sum(1)
+    def kernel(batches):
+        for b in batches:
+            ids = b["vec_id"]
+            d2 = ((b["xq"] - q[None, :]) ** 2).sum(1)
             mask = (d2 <= r2_milli) & (ids != query_vec_id)
-            if not mask.any():
-                continue
-            yield pd.DataFrame({"vec_id": ids[mask], "d2": d2[mask]})
+            if mask.any():
+                yield {"vec_id": ids[mask], "d2": d2[mask]}
 
-    return (
-        vecs.mapInPandas(batches, "vec_id LONG, d2 LONG")
-        .orderBy("d2", "vec_id")
+    return map_batches(vecs, kernel, "vec_id LONG, d2 LONG").orderBy(
+        "d2", "vec_id"
     )
 
 
@@ -2596,24 +2458,19 @@ def ann_ivfpq_batch(
     final per-query rank window shuffles O(batches * nprobe * k) rows
     keyed by query_id, never the corpus. Batch size scales the LUT
     broadcast linearly and the scan not at all."""
-    import numpy as np
-
-    cents, _, vecs = _lloyd_centroids(embeddings, n_lists, max_iter)
-    if not cents:  # empty corpus: empty result, same schema
+    cids, cmat, _, vecs = _lloyd_centroids(embeddings, n_lists, max_iter)
+    if not len(cids):  # empty corpus: empty result, same schema
         return vecs.select(
             F.col("vec_id").alias("query_id"),
             F.lit(1).cast("int").alias("rank"),
             "vec_id",
             F.lit(0).cast("long").alias("adc_d2"),
         )
-    cids = np.array([c[0] for c in cents], np.int64)
-    cmat = np.stack([c[1] for c in cents])
     if cmat.shape[1] % m != 0:
         raise ValueError(
             f"embedding dim {cmat.shape[1]} is not divisible by m={m}; "
             "PQ requires equal-width subspaces"
         )
-    sub = cmat.shape[1] // m
     cb, n_codes = _pq_seed_codebook(vecs, cmat, cids, n_lists, n_codes)
 
     qrows = sorted(
@@ -2627,52 +2484,25 @@ def ann_ivfpq_batch(
     # ONE driver-held structure for the whole batch
     lut_by_list: dict[int, list] = {}
     for qi in range(len(qids)):
-        qd2 = ((qmat[qi][None, :] - cmat) ** 2).sum(1)
-        for pi in np.lexsort((cids, qd2))[:nprobe]:
-            rq = qmat[qi] - cmat[pi]
-            lut = np.zeros((m, n_codes), np.int64)
-            for s in range(m):
-                sl = slice(s * sub, (s + 1) * sub)
-                lut[s] = ((rq[sl][None, :] - cb[:, sl]) ** 2).sum(1)
+        for pi in ivfpq.probe(qmat[qi], cmat, cids, nprobe):
+            lut = ivfpq.adc_lut(qmat[qi] - cmat[pi], cb, m)
             lut_by_list.setdefault(int(cids[pi]), []).append((qi, lut))
     probed_all = np.array(sorted(lut_by_list), np.int64)
+    span = np.arange(m)[None, :]
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
-                continue
-            v = np.array(pdf["xq"].tolist(), np.int64)
-            ids = pdf["vec_id"].to_numpy()
-            d2 = (
-                (v * v).sum(1)[:, None]
-                - 2 * (v @ cmat.T)
-                + (cmat * cmat).sum(1)[None, :]
-            )
-            packed = (d2 * n_lists + cids[None, :]).min(1)
-            lst = (packed % n_lists).astype(np.int64)
+    def kernel(batches):
+        for b in batches:
+            v, ids = b["xq"], b["vec_id"]
+            lst, _ = ivfpq.assign(v, cmat, cids, n_lists)
             mask = np.isin(lst, probed_all)
             if not mask.any():
                 continue
             v, ids, lst = v[mask], ids[mask], lst[mask]
-            li = np.searchsorted(cids, lst)
-            r = v - cmat[li]
             # PQ-encode ONCE per vector — shared by every query
-            codes = np.zeros((len(ids), m), np.int64)
-            for s in range(m):
-                sl = slice(s * sub, (s + 1) * sub)
-                dist = (
-                    (r[:, sl] * r[:, sl]).sum(1)[:, None]
-                    - 2 * (r[:, sl] @ cb[:, sl].T)
-                    + (cb[:, sl] * cb[:, sl]).sum(1)[None, :]
-                )
-                codes[:, s] = (
-                    (dist * n_codes + np.arange(n_codes)[None, :]).min(1)
-                    % n_codes
-                )
+            codes, _ = ivfpq.pq_encode(
+                v - cmat[np.searchsorted(cids, lst)], cb, m
+            )
             out_q, out_id, out_adc = [], [], []
-            span = np.arange(m)[None, :]
             for lid, qluts in lut_by_list.items():
                 sel = lst == lid
                 if not sel.any():
@@ -2683,7 +2513,7 @@ def ann_ivfpq_batch(
                     keep = ids_sel != qids[qi]
                     if not keep.any():
                         continue
-                    adc = lut[span % m, c_sel[keep]].sum(1)
+                    adc = lut[span, c_sel[keep]].sum(1)
                     # exact per-cell partial top-k by (adc, vec_id):
                     # lexsort (not argpartition) so equal-adc rows keep
                     # the vec_id tie-break the global rank uses
@@ -2691,19 +2521,14 @@ def ann_ivfpq_batch(
                     out_q.append(np.full(len(top), qids[qi], np.int64))
                     out_id.append(ids_sel[keep][top])
                     out_adc.append(adc[top])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
+            if out_q:
+                yield {
                     "query_id": np.concatenate(out_q),
                     "vec_id": np.concatenate(out_id),
                     "adc_d2": np.concatenate(out_adc),
                 }
-            )
 
-    out = vecs.mapInPandas(
-        batches, "query_id LONG, vec_id LONG, adc_d2 LONG"
-    )
+    out = map_batches(vecs, kernel, "query_id LONG, vec_id LONG, adc_d2 LONG")
     w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
     return (
         out.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -2744,66 +2569,46 @@ def ann_ivf_filtered(
     per-batch partial top-k by (d2, vec_id) bounds the final
     TakeOrdered to k rows per batch. Centroids are the only
     broadcast."""
-    import numpy as np
-
-    cents, _, _ = _lloyd_centroids(embeddings, n_lists, max_iter)
+    cids, cmat, _, _ = _lloyd_centroids(embeddings, n_lists, max_iter)
     vq = embeddings.select(
         "vec_id",
         F.col("label").cast("long").alias("label"),
         _quantized_vec(F.col("embedding")).alias("xq"),
     )
-    if not cents:
+    if not len(cids):
         return vq.select(
             F.lit(1).cast("int").alias("rank"),
             "vec_id",
             "label",
             F.lit(0).cast("long").alias("d2"),
         ).limit(0)
-    cids = np.array([c[0] for c in cents], np.int64)
-    cmat = np.stack([c[1] for c in cents])
     qrows = vq.filter(F.col("vec_id") == query_vec_id).take(1)
     if not qrows:
         raise ValueError(
             f"query_vec_id {query_vec_id} is not present in the corpus"
         )
     q = np.asarray(qrows[0]["xq"], np.int64)
-    qd2 = ((q[None, :] - cmat) ** 2).sum(1)
-    probed = cids[np.lexsort((cids, qd2))[:nprobe]]
+    probed = cids[ivfpq.probe(q, cmat, cids, nprobe)]
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
-                continue
+    def kernel(batches):
+        for b in batches:
             # predicate FIRST: scan-side selectivity, nothing scored
             # that the filter would discard
-            pdf = pdf[(pdf["label"] == label) & (pdf["vec_id"] != query_vec_id)]
-            if pdf.empty:
+            keep = (b["label"] == label) & (b["vec_id"] != query_vec_id)
+            v, ids, labs = b["xq"][keep], b["vec_id"][keep], b["label"][keep]
+            if not len(ids):
                 continue
-            v = np.array(pdf["xq"].tolist(), np.int64)
-            ids = pdf["vec_id"].to_numpy()
-            labs = pdf["label"].to_numpy()
-            cd2 = (
-                (v * v).sum(1)[:, None]
-                - 2 * (v @ cmat.T)
-                + (cmat * cmat).sum(1)[None, :]
-            )
-            lst = ((cd2 * n_lists + cids[None, :]).min(1) % n_lists).astype(
-                np.int64
-            )
+            lst, _ = ivfpq.assign(v, cmat, cids, n_lists)
             mask = np.isin(lst, probed)
             if not mask.any():
                 continue
             v, ids, labs = v[mask], ids[mask], labs[mask]
             d2 = ((v - q[None, :]) ** 2).sum(1)
             top = np.lexsort((ids, d2))[:k]
-            yield pd.DataFrame(
-                {"vec_id": ids[top], "label": labs[top], "d2": d2[top]}
-            )
+            yield {"vec_id": ids[top], "label": labs[top], "d2": d2[top]}
 
     topk = (
-        vq.mapInPandas(batches, "vec_id LONG, label LONG, d2 LONG")
+        map_batches(vq, kernel, "vec_id LONG, label LONG, d2 LONG")
         .orderBy("d2", "vec_id")
         .limit(k)
     )
@@ -2816,56 +2621,26 @@ def ann_ivf_filtered(
     )
 
 
-def _ivfpq_encoder(cmat, cids, cb, m: int, n_codes: int, n_lists: int):
-    """Shared assign+encode Arrow kernel over (vec_id, xq) batches:
-    nearest-centroid list assignment (packed int64 argmin, exact) and
-    per-subspace PQ code argmin against the frozen codebook. Used by
-    ivfpq_build_index (initial encode) and ivfpq_index_add (delta
-    encode) so an upserted index is bit-identical to a from-scratch
-    encode with the same trained constants."""
-    import numpy as np
+def _ivfpq_encode(vecs: DataFrame, cmat, cids, cb, m: int, n_lists: int):
+    """(vec_id, list_id, codes) of the (vec_id, xq) relation ``vecs``:
+    ivfpq.assign then ivfpq.pq_encode of the residual against the
+    frozen codebook, in one map_batches pass. Used by ivfpq_build_index
+    (initial encode) and ivfpq_index_add (delta encode) so an upserted
+    index is bit-identical to a from-scratch encode with the same
+    trained constants."""
 
-    sub = cmat.shape[1] // m
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
-                continue
-            v = np.array(pdf["xq"].tolist(), np.int64)
-            ids = pdf["vec_id"].to_numpy()
-            d2 = (
-                (v * v).sum(1)[:, None]
-                - 2 * (v @ cmat.T)
-                + (cmat * cmat).sum(1)[None, :]
+    def kernel(batches):
+        for b in batches:
+            v = b["xq"]
+            lst, _ = ivfpq.assign(v, cmat, cids, n_lists)
+            codes, _ = ivfpq.pq_encode(
+                v - cmat[np.searchsorted(cids, lst)], cb, m
             )
-            lst = ((d2 * n_lists + cids[None, :]).min(1) % n_lists).astype(
-                np.int64
-            )
-            li = np.searchsorted(cids, lst)
-            r = v - cmat[li]
-            codes = np.zeros((len(ids), m), np.int64)
-            for s in range(m):
-                sl = slice(s * sub, (s + 1) * sub)
-                dist = (
-                    (r[:, sl] * r[:, sl]).sum(1)[:, None]
-                    - 2 * (r[:, sl] @ cb[:, sl].T)
-                    + (cb[:, sl] * cb[:, sl]).sum(1)[None, :]
-                )
-                codes[:, s] = (
-                    (dist * n_codes + np.arange(n_codes)[None, :]).min(1)
-                    % n_codes
-                )
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "list_id": lst,
-                    "codes": list(codes),
-                }
-            )
+            yield {"vec_id": b["vec_id"], "list_id": lst, "codes": codes}
 
-    return encode
+    return map_batches(
+        vecs, kernel, "vec_id LONG, list_id LONG, codes ARRAY<LONG>"
+    )
 
 
 def _model_root(manifest: "dict | None") -> str:
@@ -2948,10 +2723,8 @@ def ivfpq_build_index(
     _META but no codes; the corpus arrives later through
     ivfpq_index_add (e.g. a streaming ingest filling the index
     micro-batch by micro-batch)."""
-    import numpy as np
-
     spark = embeddings.sparkSession
-    cents, _, train_vecs = _lloyd_centroids(
+    cids, cmat, _, train_vecs = _lloyd_centroids(
         train_on if train_on is not None else embeddings, n_lists, max_iter
     )
     if train_on is not None:
@@ -2962,10 +2735,8 @@ def ivfpq_build_index(
         )
     else:
         vecs = train_vecs
-    if not cents:
+    if not len(cids):
         raise ValueError("cannot build an IVF-PQ index over an empty corpus")
-    cids = np.array([c[0] for c in cents], np.int64)
-    cmat = np.stack([c[1] for c in cents])
     if cmat.shape[1] % m != 0:
         raise ValueError(
             f"embedding dim {cmat.shape[1]} is not divisible by m={m}; "
@@ -2997,10 +2768,7 @@ def ivfpq_build_index(
 
     if encode:
         (
-            vecs.mapInPandas(
-                _ivfpq_encoder(cmat, cids, cb, m, n_codes, n_lists),
-                "vec_id LONG, list_id LONG, codes ARRAY<LONG>",
-            )
+            _ivfpq_encode(vecs, cmat, cids, cb, m, n_lists)
             # key-repartition before the partitioned write: without it
             # every one of the N encode tasks opens a file in every
             # list_id directory (N x n_lists small files); with it each
@@ -3061,14 +2829,9 @@ def ivfpq_store_vectors(embeddings: DataFrame, index_dir: str) -> None:
         int(meta["n_lists"]) if meta is not None else int(cids.max()) + 1
     )
     manifest = _load_manifest(spark, index_dir)
-    vecs, schema, passthrough = _vector_store_projection(embeddings)
+    vecs, schema = _vector_store_projection(embeddings)
     (
-        vecs.mapInPandas(
-            _ivf_assign_batches(
-                cmat, cids, n_lists, keep_xq=True, passthrough=passthrough
-            ),
-            schema,
-        )
+        map_batches(vecs, _ivf_assign_kernel(cmat, cids, n_lists), schema)
         .repartition(n_lists, "list_id")
         .write.mode("overwrite")
         .partitionBy("list_id")
@@ -3101,7 +2864,7 @@ def _vector_store_projection(embeddings: DataFrame):
     schema = "vec_id LONG, list_id LONG, xq ARRAY<LONG>" + "".join(
         f", {c} LONG" for c in passthrough
     )
-    return vecs, schema, passthrough
+    return vecs, schema
 
 
 def ivfpq_serve_refine_persisted(
@@ -3255,8 +3018,6 @@ def ivf_serve_filtered_persisted(
     returns when the filter is selective). Row-identical to
     ann_ivf_filtered under the same training (asserted in pytest;
     shared oracle)."""
-    import numpy as np
-
     spark = embeddings.sparkSession
     cids, cmat, _, _ = _load_index_constants(spark, index_dir)
     qrows = (
@@ -3269,8 +3030,7 @@ def ivf_serve_filtered_persisted(
             f"query_vec_id {query_vec_id} is not present in the corpus"
         )
     q = np.asarray(qrows[0]["xq"], np.int64)
-    qd2 = ((q[None, :] - cmat) ** 2).sum(1)
-    probed = [int(x) for x in cids[np.lexsort((cids, qd2))[:nprobe]]]
+    probed = [int(x) for x in cids[ivfpq.probe(q, cmat, cids, nprobe)]]
     qlit = F.array(*[F.lit(int(x)).cast("long") for x in q])
     # membership semi-join against the LIVE codes (tombstones hidden,
     # compacted-away rows gone): vectors/ is append-only and never
@@ -3390,16 +3150,12 @@ def ivfpq_index_add(
         if _fs_exists(spark, marker):
             return
     if constants is not None:
-        cids, cmat, cb, n_codes, m, n_lists = constants
+        cids, cmat, cb, _, m, n_lists = constants
     else:
-        cids, cmat, cb, n_codes = _load_index_constants(spark, index_dir)
+        cids, cmat, cb, _ = _load_index_constants(spark, index_dir)
         m = _index_m(spark, index_dir)
         meta = _index_meta(spark, index_dir)
-        # the packed-argmin modulus must be the TRAINED n_lists, not
-        # len(cids): Lloyd can empty a cluster, leaving the surviving
-        # dense cids with a max >= len(cids) — a len(cids) modulus
-        # would then both mis-decode the argmin and alias distinct
-        # centroids' packed keys (wrong list, wrong residual).
+        # the TRAINED n_lists, never len(cids) (see ivfpq.assign)
         n_lists = (
             int(meta["n_lists"]) if meta is not None
             else int(cids.max()) + 1
@@ -3407,10 +3163,9 @@ def ivfpq_index_add(
     qdf = new_embeddings.select(
         "vec_id", _quantized_vec(F.col("embedding")).alias("xq")
     )
-    encoded = qdf.mapInPandas(
-        _ivfpq_encoder(cmat, cids, cb, m, n_codes, n_lists),
-        "vec_id LONG, list_id LONG, codes ARRAY<LONG>",
-    ).repartition(n_lists, "list_id")
+    encoded = _ivfpq_encode(qdf, cmat, cids, cb, m, n_lists).repartition(
+        n_lists, "list_id"
+    )
     # one file per touched list per append, not one per task per
     # list (the build-path small-files rationale). Appends must land
     # in each list's LIVE root (appending a compacted list's rows into
@@ -3430,15 +3185,9 @@ def ivfpq_index_add(
         # the manifest's vec_roots exactly like the codes (round 13 —
         # compaction rewrites vector partitions now, so the live root
         # of a compacted list is its vectors_c generation).
-        vdf, vschema, passthrough = _vector_store_projection(
-            new_embeddings
-        )
-        assigned = vdf.mapInPandas(
-            _ivf_assign_batches(
-                cmat, cids, n_lists, keep_xq=True,
-                passthrough=passthrough,
-            ),
-            vschema,
+        vdf, vschema = _vector_store_projection(new_embeddings)
+        assigned = map_batches(
+            vdf, _ivf_assign_kernel(cmat, cids, n_lists), vschema
         ).repartition(n_lists, "list_id")
         new_vec_roots = _routed_append(
             spark, index_dir, assigned, manifest, "vec_roots",
@@ -4190,8 +3939,6 @@ def ivfpq_index_churn_recall(
     top-k partials (global top-k is a subset of their union), so the
     shuffle carries n_batches * n_queries * k scalar rows, never the
     corpus."""
-    import numpy as np
-
     spark = embeddings.sparkSession
     served = ivfpq_serve_persisted_batch(
         embeddings, index_dir, n_queries=n_queries, k=k, nprobe=nprobe
@@ -4208,14 +3955,9 @@ def ivfpq_index_churn_recall(
     qids = np.array([int(r["vec_id"]) for r in qrows], np.int64)
     qmat = np.stack([np.asarray(r["xq"], np.int64) for r in qrows])
 
-    def truth_partials(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            x = np.stack(
-                [np.asarray(v, np.int64) for v in pdf["xq"]]
-            )
-            ids = pdf["vec_id"].to_numpy()
+    def truth_partials(batches):
+        for b in batches:
+            x, ids = b["xq"], b["vec_id"]
             out_q, out_v, out_d = [], [], []
             for j in range(len(qids)):
                 d2 = ((x - qmat[j][None, :]) ** 2).sum(1)
@@ -4225,12 +3967,15 @@ def ivfpq_index_churn_recall(
                 if not take:
                     continue
                 part = np.argpartition(cd2, take - 1)[:take]
-                out_q.extend([int(qids[j])] * take)
-                out_v.extend(int(v) for v in cids_[part])
-                out_d.extend(int(v) for v in cd2[part])
-            yield pd.DataFrame(
-                {"query_id": out_q, "vec_id": out_v, "d2": out_d}
-            )
+                out_q.append(np.full(take, qids[j], np.int64))
+                out_v.append(cids_[part])
+                out_d.append(cd2[part])
+            if out_q:
+                yield {
+                    "query_id": np.concatenate(out_q),
+                    "vec_id": np.concatenate(out_v),
+                    "d2": np.concatenate(out_d),
+                }
 
     live = embeddings.join(
         _codes_sans_tombstones(spark, index_dir).select("vec_id"),
@@ -4239,7 +3984,9 @@ def ivfpq_index_churn_recall(
     ).select("vec_id", _quantized_vec(F.col("embedding")).alias("xq"))
     w = Window.partitionBy("query_id").orderBy("d2", "vec_id")
     truth = (
-        live.mapInPandas(truth_partials, "query_id LONG, vec_id LONG, d2 LONG")
+        map_batches(
+            live, truth_partials, "query_id LONG, vec_id LONG, d2 LONG"
+        )
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("query_id", "vec_id")
@@ -4377,11 +4124,9 @@ def ivfpq_serve_persisted(
     only (vec_id, partial sums). Result rows are bit-identical to
     ann_ivfpq_trained — asserted in pytest and shared with its SQL
     oracle."""
-    import numpy as np
-
     spark = embeddings.sparkSession
     cids, cmat, cb, n_codes = _load_index_constants(spark, index_dir)
-    m = None
+    m = _index_m(spark, index_dir)
     qrows = (
         embeddings.filter(F.col("vec_id") == query_vec_id)
         .select(_quantized_vec(F.col("embedding")).alias("xq"))
@@ -4392,28 +4137,16 @@ def ivfpq_serve_persisted(
             f"query_vec_id {query_vec_id} is not present in the corpus"
         )
     q = np.asarray(qrows[0]["xq"], np.int64)
-    qd2 = ((q[None, :] - cmat) ** 2).sum(1)
-    probe_order = np.lexsort((cids, qd2))[:nprobe]
+    probe_order = ivfpq.probe(q, cmat, cids, nprobe)
 
     # LUT relation: one row per (list_id, s, code_id) with the exact
     # int64 partial distance — the broadcast side of the serve join
     lut_rows = []
     for pi in probe_order:
-        rq = q - cmat[pi]
-        dim = len(rq)
-        # m from the codebook row width (codebook stores full-dim
-        # residuals; subspace width = dim // m is fixed at build time
-        # by the same seed convention, so recover m from metadata-free
-        # algebra: the build used equal widths, carried here via the
-        # codes array length)
-        if m is None:
-            m = _index_m(spark, index_dir)
-        sub = dim // m
+        lut = ivfpq.adc_lut(q - cmat[pi], cb, m)
         for s in range(m):
-            sl = slice(s * sub, (s + 1) * sub)
-            d = ((rq[sl][None, :] - cb[:, sl]) ** 2).sum(1)
             for j in range(n_codes):
-                lut_rows.append((int(cids[pi]), s, j, int(d[j])))
+                lut_rows.append((int(cids[pi]), s, j, int(lut[s, j])))
     lut = _tiny_df(
         spark, lut_rows, "list_id LONG, s INT, code_id LONG, d LONG"
     )
@@ -4499,27 +4232,17 @@ def _ivfpq_batch_lut(qrows, cids, cmat, cb, n_codes: int, m: int, nprobe: int):
     per-(list, subspace, code) ADC partials. Returns (lut_rows,
     probed_union) — the broadcast side of the serve join. Shared by
     the batch serve and the streaming per-micro-batch serve."""
-    import numpy as np
-
     lut_rows = []
     probed_union: set[int] = set()
     for qr in qrows:
         qid = int(qr["vec_id"])
         q = np.asarray(qr["xq"], np.int64)
-        qd2 = ((q[None, :] - cmat) ** 2).sum(1)
-        probe_order = np.lexsort((cids, qd2))[:nprobe]
-        dim = len(q)
-        sub = dim // m
-        for pi in probe_order:
+        for pi in ivfpq.probe(q, cmat, cids, nprobe):
             probed_union.add(int(cids[pi]))
-            rq = q - cmat[pi]
+            lut = ivfpq.adc_lut(q - cmat[pi], cb, m)
             for s in range(m):
-                sl = slice(s * sub, (s + 1) * sub)
-                d = ((rq[sl][None, :] - cb[:, sl]) ** 2).sum(1)
                 for j in range(n_codes):
-                    lut_rows.append(
-                        (qid, int(cids[pi]), s, j, int(d[j]))
-                    )
+                    lut_rows.append((qid, int(cids[pi]), s, j, int(lut[s, j])))
     return lut_rows, probed_union
 
 

@@ -286,24 +286,38 @@ def deagg_passthrough_quirk_query(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _pyds_shard_dir(sf_dir: str) -> str:
+    """Scratch directory of the recorded-wire shard files for
+    ``sf_dir``, keyed by the source fingerprint."""
+    from ..sources.raw import source_fingerprint
+
+    return scratch(
+        f"ksr_pyds/{sf_dir.strip('/').replace('/', '_')}"
+        f"_{source_fingerprint(sf_dir)}"
+    )
+
+
 def _ensure_pyds_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Recorded-wire shard files for the Python DataSource, fingerprinted
     like ksr_raw_cache: a regenerated events table can never be read
     against stale shard files. Registers the DataSource as a side
     effect. Shared by the batch reader, the wire writer, and the
-    streaming reader queries."""
+    streaming reader queries. The directory is reused only when its
+    completion marker is present: a dump that failed part-way is
+    cleared and rebuilt, never read as complete."""
+    import shutil
+
     import pandas as _pd
 
     from ..sources.python_source import KinesisBackfillDataSource, write_shard_file
-    from ..sources.raw import kpl_raw_records, source_fingerprint
+    from ..sources.raw import kpl_raw_records
 
     spark.dataSource.register(KinesisBackfillDataSource)
-    shard_dir = scratch(
-        f"ksr_pyds/{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_fingerprint(sf_dir)}"
-    )
-    if not os.path.isdir(shard_dir):
-        os.makedirs(shard_dir, exist_ok=True)
+    shard_dir = _pyds_shard_dir(sf_dir)
+    marker = f"{shard_dir}/_COMPLETE"
+    if not os.path.exists(marker):
+        shutil.rmtree(shard_dir, ignore_errors=True)
+        os.makedirs(shard_dir)
         raw = kpl_raw_records(spark, sf_dir).withColumn(
             "shard", (F.col("agg_id") % 4).cast("int")
         )
@@ -320,6 +334,7 @@ def _ensure_pyds_fixture(spark: SparkSession, sf_dir: str) -> str:
             return _pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
 
         raw.groupBy("shard").applyInPandas(dump, "shard INT, n INT").count()
+        open(marker, "w").close()
     return shard_dir
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.rowmap import doc_id_seed, map_rows
+from ..operators.rowmap import doc_id_seed, map_batches, map_rows
 from ._shared import load_table, register
 
 # Fixture sizing: 16 trained lists (~sqrt(500)/1.4) keeps the oracle's
@@ -603,36 +603,31 @@ def streaming_ivf_assign_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment monitors to see each list's growth between retrains
     (composing with ivf_list_health's imbalance read-off).
 
-    Plan shape / 100 TB: assignment is a stateless mapInPandas on the
+    Plan shape / 100 TB: assignment is a stateless map_batches pass on the
     stream (no state store); the only stateful op is the n_lists-row
     census aggregate. State bound: n_lists rows, corpus-independent.
     Oracle: streaming assignment of the whole fixture equals the batch
     assignment, so the census is the trained-lists CTE grouped."""
-    import numpy as np
-
-    from ..operators import similarity
-    from ..operators.similarity import _ivf_assign_batches, _quantized_vec
+    from ..operators.similarity import (
+        _ivf_assign_kernel,
+        _lloyd_centroids,
+        _quantized_vec,
+    )
     from ..streaming import jobs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents, _, _ = similarity._lloyd_centroids(emb, _N_LISTS, _MAX_ITER)
-    if cents:
-        cids = np.array([c[0] for c in cents], np.int64)
-        cmat = np.stack([c[1] for c in cents])
-    else:  # empty corpus: no batches reach the kernel; placeholder table
-        cids = np.zeros(1, np.int64)
-        cmat = np.zeros((1, 1), np.int64)
+    # an empty corpus trains an empty table; no batch reaches the kernel
+    cids, cmat, _, _ = _lloyd_centroids(emb, _N_LISTS, _MAX_ITER)
 
     stream = jobs._table_stream_dir(sf_dir, "embeddings")
     static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    vec_stream = (
+    vec_stream = map_batches(
         spark.readStream.schema(static.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stream)
-        .select("vec_id", _quantized_vec(F.col("embedding")).alias("xq"))
-        .mapInPandas(
-            _ivf_assign_batches(cmat, cids, _N_LISTS), "vec_id LONG, list_id LONG"
-        )
+        .select("vec_id", _quantized_vec(F.col("embedding")).alias("xq")),
+        _ivf_assign_kernel(cmat, cids, _N_LISTS),
+        "vec_id LONG, list_id LONG",
     )
     census = vec_stream.groupBy("list_id").agg(
         F.count("*").alias("n_ingested"),

@@ -17,6 +17,7 @@ from kinesis_stream_reader_spark.operators.ingest import (
     kpl_encode,
 )
 from kinesis_stream_reader_spark.schema import KPL_MAGIC
+from kinesis_stream_reader_spark.sources.tables import load_table
 
 
 def test_kpl_roundtrip():
@@ -93,3 +94,20 @@ def test_raw_cache_without_success_marker_repacks(spark, sf_dir):
     want = kpl_raw_records(spark, sf_dir, group_size, cache=False).orderBy("agg_id").collect()
     assert got and got == want
     assert os.path.isfile(os.path.join(cache_dir, "_SUCCESS"))
+
+
+def test_pyds_fixture_without_marker_rebuilds(spark, sf_dir):
+    """A shard directory a failed dump left behind (no completion marker)
+    is cleared and rebuilt, not read as complete: the Python DataSource
+    backfill returns every event."""
+    from kinesis_stream_reader_spark.registry import r1_parity_ext
+
+    shard_dir = r1_parity_ext._pyds_shard_dir(sf_dir)
+    shutil.rmtree(shard_dir, ignore_errors=True)
+    os.makedirs(shard_dir)
+    got = r1_parity_ext.source_python_backfill_query(spark, sf_dir)
+    want = load_table(spark, sf_dir, "events")
+    assert sorted(r.event_id for r in got.collect()) == sorted(
+        r.event_id for r in want.select("event_id").collect()
+    )
+    assert os.path.isfile(os.path.join(shard_dir, "_COMPLETE"))

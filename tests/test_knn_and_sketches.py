@@ -484,9 +484,7 @@ def test_ann_ivfpq_trained_numpy_replay(spark, sf_dir):
         (r.rank, r.vec_id, r.adc_d2)
         for r in similarity.ann_ivfpq_trained(emb).collect()
     ]
-    cents, _, _ = similarity._lloyd_centroids(emb, 16, 5)
-    cids = np.array([c[0] for c in cents], np.int64)
-    cmat = np.stack([c[1] for c in cents])
+    cids, cmat, _, _ = similarity._lloyd_centroids(emb, 16, 5)
     ids, mat = _quantized_matrix(spark, sf_dir)
     d2 = ((mat[:, None, :] - cmat[None, :, :]) ** 2).sum(2)
     lst = cids[np.argmin(d2 * 16 + cids[None, :], axis=1)]

@@ -41,6 +41,90 @@ def test_map_rows_fans_out_per_row(spark):
     ]
 
 
+@pytest.mark.parametrize(
+    "rows, message",
+    [
+        ([(1, [1, 2]), (2, None)], "null vector"),
+        ([(1, [1, 2]), (2, [3, None])], "null vector element"),
+        ([(1, [1, 2]), (2, [3, 4, 5])], "unequal vector widths"),
+    ],
+)
+def test_map_batches_rejects_malformed_vectors(spark, rows, message):
+    """A null vector, a null element or ragged widths fail loudly with
+    the column named, not with an opaque numpy error."""
+    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+
+    def identity(batches):  # nested: pickled by value for the workers
+        yield from batches
+
+    df = spark.createDataFrame(rows, "id BIGINT, v ARRAY<BIGINT>").coalesce(1)
+    out = map_batches(df, identity, "id BIGINT, v ARRAY<BIGINT>")
+    with pytest.raises(Exception, match=f"ValueError: column 'v': {message}"):
+        out.collect()
+
+
+def test_map_batches_empty_input_keeps_schema(spark):
+    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+
+    def identity(batches):
+        yield from batches
+
+    df = spark.createDataFrame([], "id BIGINT, v ARRAY<BIGINT>")
+    out = map_batches(df, identity, "id BIGINT, v ARRAY<BIGINT>")
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<id:bigint,v:array<bigint>>"
+
+
+def test_map_batches_long_arrays_round_trip(spark):
+    """Array columns arrive 2-D and a 2-D output is an exact ARRAY<LONG>,
+    int64 extremes included."""
+    import numpy as np
+
+    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+
+    big = 2**63 - 1
+    rows = [(i, [i, -big - 1, big, i * 10**15]) for i in range(50)]
+    df = spark.createDataFrame(rows, "id BIGINT, v ARRAY<BIGINT>").repartition(3)
+
+    def kernel(batches):
+        for b in batches:
+            assert b["v"].shape == (len(b["id"]), 4)
+            assert b["v"].dtype == np.int64 and b["id"].ndim == 1
+            yield {"id": b["id"], "v": b["v"]}
+
+    out = map_batches(df, kernel, "id BIGINT, v ARRAY<BIGINT>")
+    assert sorted((r.id, r.v) for r in out.collect()) == rows
+
+
+def test_map_batches_once_per_partition(spark):
+    """A kernel that drains its batches and yields once emits one row set
+    per partition (the per-task census shape)."""
+    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        df = spark.range(0, 100, numPartitions=4).selectExpr(
+            "id", "array(id, 2 * id) AS v"
+        )
+
+        def census(batches):
+            n = total = n_batches = 0
+            for b in batches:
+                n += len(b["id"])
+                total += int(b["v"].sum())
+                n_batches += 1
+            yield {"n": [n], "total": [total], "n_batches": [n_batches]}
+
+        out = map_batches(df, census, "n BIGINT, total BIGINT, n_batches INT")
+        rows = out.collect()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert len(rows) == 4
+    assert sum(r.n for r in rows) == 100
+    assert sum(r.total for r in rows) == 3 * sum(range(100))
+    assert all(r.n_batches == 4 for r in rows)  # 25 rows in batches of 7
+
+
 def test_extract_features_deterministic(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     media = multimodal.documents_as_media(docs)
