@@ -54,13 +54,6 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
     )
 
 
-def hashed_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct n-gram shingles as xxhash64 longs: set operations over
-    longs are far cheaper than over strings (the Jaccard counts are
-    identical barring a ~1e-16 in-document collision probability)."""
-    return F.transform(word_ngrams(col, n), lambda g: F.xxhash64(g))
-
-
 def gram_postings(
     documents: DataFrame, n: int = 3, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:

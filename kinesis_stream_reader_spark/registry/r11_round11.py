@@ -341,12 +341,8 @@ GROUP BY piece ORDER BY piece
             census, max_piece=6, min_count=50, vocab_cap=65536
         )
 
-        stream_dir = jobs._table_stream_dir(sf_dir, "documents")
-        static = spark.read.parquet(f"{sf_dir}/documents.parquet")
         piece_stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
+            jobs.stream_table(spark, sf_dir, "documents")
             .select(F.explode(text.tokens(F.col("text"))).alias("word"))
             .filter(F.col("word") != "")
             .select("word", F.lit(1).cast("long").alias("n"))
@@ -445,8 +441,6 @@ FROM adc ORDER BY adc_d2, vec_id LIMIT 10
         micro-batch per source file, each encode+append map-side with
         frozen constants), then serve query 0 — equal to
         ann_ivfpq_trained row for row."""
-        import tempfile
-
         from ..operators import similarity
         from ..sources.raw import source_fingerprint
         from ..streaming import jobs
@@ -468,28 +462,17 @@ FROM adc ORDER BY adc_d2, vec_id LIMIT 10
                 spark, d
             )
             consts = (cids, cmat, cb, n_codes, 4, _N_LISTS)
-            stream_dir = jobs._table_stream_dir(sf_dir, "embeddings")
-            static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            stream = (
-                spark.readStream.schema(static.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stream_dir)
-            )
-            with tempfile.TemporaryDirectory() as ck:
-                q = (
-                    stream.writeStream.foreachBatch(
-                        # batch_id guard: a foreachBatch replay (at-
-                        # least-once) of an already-landed micro-batch
-                        # is a no-op instead of a double-append
-                        lambda bdf, bid: similarity.ivfpq_index_add(
-                            bdf, d, constants=consts, batch_id=bid
-                        )
+            stream = jobs.stream_table(spark, sf_dir, "embeddings")
+            jobs.drain(
+                stream.writeStream.foreachBatch(
+                    # batch_id guard: a foreachBatch replay (at-least-
+                    # once) of an already-landed micro-batch is a no-op
+                    # instead of a double-append
+                    lambda bdf, bid: similarity.ivfpq_index_add(
+                        bdf, d, constants=consts, batch_id=bid
                     )
-                    .option("checkpointLocation", ck)
-                    .trigger(availableNow=True)
-                    .start()
                 )
-                q.awaitTermination()
+            )
             with open(built, "w") as fh:
                 fh.write("ok\n")
         return similarity.ivfpq_serve_persisted(
@@ -541,8 +524,6 @@ WHERE rank <= 10 ORDER BY query_id, rank
         per batch, LUT-build for just that batch's queries and one
         partition-pruned serve plan; the drained union equals the
         batch serve row for row."""
-        import tempfile
-
         from ..operators import similarity
         from ..operators.similarity import (
             _index_m,
@@ -583,21 +564,8 @@ WHERE rank <= 10 ORDER BY query_id, rank
                 .collect()
             )
 
-        stream_dir = jobs._table_stream_dir(sf_dir, "embeddings")
-        static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-        )
-        with tempfile.TemporaryDirectory() as ck:
-            q = (
-                stream.writeStream.foreachBatch(serve_batch)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        stream = jobs.stream_table(spark, sf_dir, "embeddings")
+        jobs.drain(stream.writeStream.foreachBatch(serve_batch))
         return tiny_df(
             spark,
             sorted(results),

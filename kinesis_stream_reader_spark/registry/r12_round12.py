@@ -144,8 +144,6 @@ def _register_streaming_index_delete():
         vec_id % 25 = 3 tombstones from a STREAM (foreachBatch ->
         ivfpq_index_delete); serve query 0 — equal to
         ann_index_upsert_serve row for row."""
-        import tempfile
-
         from ..operators import similarity
         from ..sources.raw import source_fingerprint
         from ..streaming import jobs
@@ -164,28 +162,16 @@ def _register_streaming_index_delete():
                 max_iter=_MAX_ITER,
             )
             similarity.ivfpq_index_add(delta, d)
-            stream_dir = jobs._table_stream_dir(sf_dir, "embeddings")
-            static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            stream = (
-                spark.readStream.schema(static.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stream_dir)
-            )
-            with tempfile.TemporaryDirectory() as ck:
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: similarity.ivfpq_index_delete(
-                            spark,
-                            d,
-                            bdf.filter(F.col("vec_id") % 25 == 3)
-                            .select("vec_id"),
-                        )
+            stream = jobs.stream_table(spark, sf_dir, "embeddings")
+            jobs.drain(
+                stream.writeStream.foreachBatch(
+                    lambda bdf, bid: similarity.ivfpq_index_delete(
+                        spark,
+                        d,
+                        bdf.filter(F.col("vec_id") % 25 == 3).select("vec_id"),
                     )
-                    .option("checkpointLocation", ck)
-                    .trigger(availableNow=True)
-                    .start()
                 )
-                q.awaitTermination()
+            )
             with open(built, "w") as fh:
                 fh.write("ok\n")
         return similarity.ivfpq_serve_persisted(
@@ -290,8 +276,6 @@ def _register_streaming_minhash_dedup():
         bucket keys to the accumulated index and record collisions;
         after the drain, verify candidates with exact Jaccard and walk
         components — equal to dedup_minhash_canonical row for row."""
-        import tempfile
-
         from ..operators import dedup
         from ..sources.raw import source_fingerprint
         from ..streaming import jobs
@@ -306,9 +290,6 @@ def _register_streaming_minhash_dedup():
         done = os.path.join(d, "_DRAINED")
         bschema = "doc_id LONG, band INT, bucket LONG"
         if not os.path.exists(done):
-            stream_dir = jobs._table_stream_dir(sf_dir, "documents")
-            static = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
             def ingest(bdf, bid):
                 # cache: the signature pass (shingles + 32 hashes) is
                 # the dominant per-batch cost, and bk feeds BOTH the
@@ -335,19 +316,8 @@ def _register_streaming_minhash_dedup():
                 )
                 bk.unpersist()
 
-            stream = (
-                spark.readStream.schema(static.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stream_dir)
-            )
-            with tempfile.TemporaryDirectory() as ck:
-                q = (
-                    stream.writeStream.foreachBatch(ingest)
-                    .option("checkpointLocation", ck)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+            stream = jobs.stream_table(spark, sf_dir, "documents")
+            jobs.drain(stream.writeStream.foreachBatch(ingest))
             with open(done, "w") as fh:
                 fh.write("ok\n")
         cand = (

@@ -333,12 +333,8 @@ GROUP BY piece ORDER BY piece
         merges = _bytelevel_merges_cached(spark, sf_dir, 6)
         table = text._bytes_to_unicode()
 
-        stream_dir = jobs._table_stream_dir(sf_dir, "documents")
-        static = spark.read.parquet(f"{sf_dir}/documents.parquet")
         piece_stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
+            jobs.stream_table(spark, sf_dir, "documents")
             .select(
                 F.explode(
                     F.regexp_extract_all(

@@ -1357,7 +1357,7 @@ def streaming_attribution_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = jobs.stream_events(spark, sf_dir)
     return jobs.run_available_now(
-        jobs.attribution_join(stream), "streaming_attribution"
+        jobs.attribution_join(stream, "inner"), "streaming_attribution"
     )
 
 

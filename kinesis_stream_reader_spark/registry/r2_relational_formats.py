@@ -2238,7 +2238,7 @@ def streaming_attribution_outer_query(spark: SparkSession, sf_dir: str) -> DataF
 
     stream = jobs.stream_events(spark, sf_dir)
     return jobs.run_available_now(
-        jobs.attribution_join_outer(stream), "streaming_attribution_outer"
+        jobs.attribution_join(stream, "left_outer"), "streaming_attribution_outer"
     )
 
 
@@ -2262,7 +2262,7 @@ def streaming_attribution_semi_query(spark: SparkSession, sf_dir: str) -> DataFr
 
     stream = jobs.stream_events(spark, sf_dir)
     return jobs.run_available_now(
-        jobs.attribution_join_semi(stream), "streaming_attribution_semi"
+        jobs.attribution_join(stream, "left_semi"), "streaming_attribution_semi"
     )
 
 

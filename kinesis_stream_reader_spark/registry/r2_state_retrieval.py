@@ -720,8 +720,7 @@ def streaming_asof_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = jobs.stream_events(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     out_dir = tempfile.mkdtemp(prefix="ksr_out_streaming_asof_enrich_")
-    with tempfile.TemporaryDirectory() as checkpoint:
-        jobs.asof_enrich_stream(stream, orders, out_dir, checkpoint)
+    jobs.asof_enrich_stream(stream, orders, out_dir)
     return spark.read.schema(
         "event_id BIGINT, user_id BIGINT, asof_orderkey BIGINT"
     ).parquet(out_dir)
@@ -1046,7 +1045,7 @@ def streaming_attribution_full_query(spark: SparkSession, sf_dir: str) -> DataFr
 
     stream = jobs.stream_events(spark, sf_dir)
     return jobs.run_available_now(
-        jobs.attribution_join_full(stream), "streaming_attribution_full"
+        jobs.attribution_join(stream, "full_outer"), "streaming_attribution_full"
     )
 
 
@@ -1637,7 +1636,7 @@ def streaming_attribution_right_query(spark: SparkSession, sf_dir: str) -> DataF
 
     stream = jobs.stream_events(spark, sf_dir)
     return jobs.run_available_now(
-        jobs.attribution_join_right(stream), "streaming_attribution_right"
+        jobs.attribution_join(stream, "right_outer"), "streaming_attribution_right"
     )
 
 
@@ -1671,10 +1670,12 @@ def streaming_resume_exactly_once_query(
     Structured Streaming's checkpoint protocol (WAL of file batches +
     versioned state store), demonstrated end-to-end rather than
     asserted."""
+    import shutil
     import tempfile
 
+    from ..session import ensure_confs
     from ..sources.tables import normalize_timestamps
-    from ..streaming.jobs import ensure_confs
+    from ..streaming import jobs
 
     ensure_confs(spark)
     static = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -1688,27 +1689,24 @@ def streaming_resume_exactly_once_query(
             .option("maxFilesPerTrigger", 2)
             .parquet(stream_dir)
         ).select("event_id", "user_id", "event_type", "value")
-        q = (
-            stream.dropDuplicates(["event_id"])
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        writer = stream.dropDuplicates(["event_id"]).writeStream.format("parquet")
+        jobs.drain(writer.outputMode("append").option("path", out_dir), ckpt_dir)
 
-    # phase 1: the first 3/4 of events, 4 files
-    static.filter(F.col("event_id") % 4 != 0).repartition(4).write.mode(
-        "append"
-    ).parquet(stream_dir)
-    drain()
-    # phase 2: the remaining quarter PLUS replays of phase-1 events
-    static.filter(
-        (F.col("event_id") % 4 == 0) | (F.col("event_id") % 3 == 0)
-    ).repartition(3).write.mode("append").parquet(stream_dir)
-    drain()
+    try:
+        # phase 1: the first 3/4 of events, 4 files
+        static.filter(F.col("event_id") % 4 != 0).repartition(4).write.mode(
+            "append"
+        ).parquet(stream_dir)
+        drain()
+        # phase 2: the remaining quarter PLUS replays of phase-1 events
+        static.filter(
+            (F.col("event_id") % 4 == 0) | (F.col("event_id") % 3 == 0)
+        ).repartition(3).write.mode("append").parquet(stream_dir)
+        drain()
+    finally:
+        # only the sink survives: the returned DataFrame reads out_dir
+        shutil.rmtree(stream_dir, ignore_errors=True)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return spark.read.schema(
         "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE"
     ).parquet(out_dir)

@@ -897,8 +897,6 @@ def streaming_obs_metrics_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the run-level rollup is the additive combine across batches.
     The noop sink isolates the cost: this is what a production job's
     metrics exporter sees, independent of the sink."""
-    import tempfile
-
     from ..streaming import jobs
 
     stream = jobs.stream_events(spark, sf_dir)
@@ -916,14 +914,9 @@ def streaming_obs_metrics_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", None)
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
     try:
-        q = (
-            observed.writeStream.format("noop")
-            .queryName("streaming_obs_metrics")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ksr_obs_ck_"))
-            .trigger(availableNow=True)
-            .start()
+        q = jobs.drain(
+            observed.writeStream.format("noop").queryName("streaming_obs_metrics")
         )
-        q.awaitTermination()
         n_events = value_cents = n_purchases = 0
         max_event_id = None
         for p in q.recentProgress:

@@ -472,7 +472,7 @@ def streaming_near_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_band_keys
     from ..streaming import jobs
 
-    stream = jobs.stream_documents(spark, sf_dir)
+    stream = jobs.stream_table(spark, sf_dir, "documents")
     banded = minhash_band_keys(stream)
     winners = banded.groupBy("band", "bucket").agg(
         F.min("doc_id").alias("first_doc")

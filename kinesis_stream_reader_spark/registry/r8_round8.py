@@ -619,13 +619,10 @@ def streaming_ivf_assign_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an empty corpus trains an empty table; no batch reaches the kernel
     cids, cmat, _, _ = _lloyd_centroids(emb, _N_LISTS, _MAX_ITER)
 
-    stream = jobs._table_stream_dir(sf_dir, "embeddings")
-    static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     vec_stream = map_batches(
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream)
-        .select("vec_id", _quantized_vec(F.col("embedding")).alias("xq")),
+        jobs.stream_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _quantized_vec(F.col("embedding")).alias("xq")
+        ),
         _ivf_assign_kernel(cmat, cids, _N_LISTS),
         "vec_id LONG, list_id LONG",
     )

@@ -8,10 +8,31 @@ batch and streaming share the same transform functions and differ only
 in the trigger.
 
 For tests/fixtures the source is a file stream over the driver's
-parquet; the production source is the Kinesis connector
-(sources/kinesis.py). Transforms reused verbatim from operators/ —
-Structured Streaming's unified API means to_nested / filter_records /
-deagg_explode apply unchanged to a streaming DataFrame.
+parquet (``stream_table``); the production source is the Kinesis
+connector (sources/kinesis.py). Transforms reused verbatim from
+operators/ — Structured Streaming's unified API means to_nested /
+filter_records / deagg_explode apply unchanged to a streaming
+DataFrame.
+
+This module is the only one that knows how a table is opened as a file
+stream (``stream_table``), how the click -> purchase attribution join
+is built (``attribution_join(events, how)``) and how a stream is
+drained (``drain``).
+
+Drain contract (``drain``):
+
+- one drain starts exactly ONE StreamingQuery, with
+  ``Trigger.AvailableNow``, waits for it to terminate and returns the
+  terminated query, so callers can still read ``recentProgress``;
+- without a ``checkpoint`` the query runs on a temp checkpoint that is
+  removed once it terminates, whether it succeeded or failed; a given
+  checkpoint belongs to the caller (restarts and state-store reads need
+  it afterwards);
+- with ``partitions``, ``spark.sql.shuffle.partitions`` — the state-store
+  count of every stateful operator — is set for the query and the
+  previous value restored once it terminates;
+- a failing micro-batch surfaces as ``StreamingQueryException`` after
+  the same cleanup.
 """
 
 from __future__ import annotations
@@ -22,13 +43,16 @@ from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..operators.events import to_nested
 from ..operators.filters import filter_records
 from ..session import ensure_confs, env_int
+from ..sources.tables import normalize_timestamps
 
 
 _STREAM_DIRS: dict[str, str] = {}
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def _table_stream_dir(sf_dir: str, table: str) -> str:
@@ -51,37 +75,52 @@ def _table_stream_dir(sf_dir: str, table: str) -> str:
     return _STREAM_DIRS[key]
 
 
-def _events_stream_dir(sf_dir: str) -> str:
-    return _table_stream_dir(sf_dir, "events")
-
-
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream source over the documents fixture — the corpus-
-    as-a-stream seam for streaming dedup/quality operators (a crawl
-    pipeline's ingest is exactly this: documents arriving in batches)."""
+def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-stream source over a fixture table, one file per trigger,
+    with the static table's schema — the swap-the-source seam: a
+    production deployment replaces it with the Kinesis reader
+    (sources/kinesis.py) under the same downstream plan."""
     ensure_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    static = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     return (
         spark.readStream.schema(static.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_table_stream_dir(sf_dir, "documents"))
+        .parquet(_table_stream_dir(sf_dir, table))
     )
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream source over the events fixture (swap-the-source seam:
-    the production deployment replaces this with the Kinesis reader,
-    sources/kinesis.py — same downstream plan)."""
-    ensure_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    df = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_events_stream_dir(sf_dir))
-    )
-    from ..sources.tables import normalize_timestamps
+    """The events fixture as a stream, timestamps normalized."""
+    return normalize_timestamps(stream_table(spark, sf_dir, "events"))
 
-    return normalize_timestamps(df)
+
+def drain(
+    writer: DataStreamWriter,
+    checkpoint: str | None = None,
+    partitions: int | None = None,
+) -> StreamingQuery:
+    """Run `writer` to caught-up under the module's drain contract."""
+    spark = writer._spark
+    prev_parts = spark.conf.get(_SHUFFLE_PARTITIONS)
+    if partitions is not None:
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(partitions))
+    temp = None if checkpoint else tempfile.TemporaryDirectory(prefix="ksr_drain_ck_")
+    try:
+        q = (
+            writer.option("checkpointLocation", checkpoint or temp.name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+        return q
+    finally:
+        if partitions is not None:
+            spark.conf.set(_SHUFFLE_PARTITIONS, prev_parts)
+        if temp is not None:
+            temp.cleanup()
 
 
 def records_stream(events: DataFrame, query: Mapping[str, object]) -> DataFrame:
@@ -117,42 +156,6 @@ def windowed_counts(
     )
 
 
-def attribution_join_semi(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """LEFT SEMI stream-stream join: emit each click AT MOST ONCE as
-    soon as any qualifying purchase arrives — the 'did this click
-    convert?' gate without purchase payload fan-out (a click matching
-    5 purchases emits one row, not five). Completes the stream-stream
-    join matrix alongside inner/left-outer/full-outer: same
-    watermark-bounded state on both sides, but the semi form keeps no
-    emitted-row payload from the right stream."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {window}")),
-        "left_semi",
-    ).select("click_id", F.col("c_user").alias("user_id"))
-
-
 def windowed_distinct_users(
     events: DataFrame, watermark: str = "2 hours"
 ) -> DataFrame:
@@ -179,9 +182,7 @@ def windowed_distinct_users(
     )
 
 
-def asof_enrich_stream(
-    events: DataFrame, orders, out_dir: str, checkpoint: str
-) -> None:
+def asof_enrich_stream(events: DataFrame, orders, out_dir: str) -> None:
     """Streaming point-in-time enrichment via foreachBatch: each
     micro-batch runs the BATCH as-of join (join_asof_latest_order)
     against the static orders table and appends.
@@ -198,13 +199,7 @@ def asof_enrich_stream(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         join_asof_latest_order(batch_df, orders).write.mode("append").parquet(out_dir)
 
-    (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(events.writeStream.foreachBatch(handle))
 
 
 def sessionize_native(
@@ -246,16 +241,34 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 
 
 def attribution_join(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
+    events: DataFrame,
+    how: str = "inner",
+    window: str = "1 hour",
+    watermark: str = "2 hours",
 ) -> DataFrame:
-    """Stream-stream inner join with event-time bounds: attribute each
-    purchase to every click by the same user in the preceding hour.
+    """Watermarked stream-stream join attributing each purchase to every
+    click by the same user in the preceding `window`; `how` picks the
+    Spark join type, and batch semantics are identical (the oracle is a
+    plain self-join).
 
-    The time-range join condition lets Spark bound BOTH state stores via
-    the watermarks (clicks older than the window + watermark are
-    evicted) — the canonical watermarked stream-stream join. Batch
-    semantics are identical (the oracle is a plain self-join), which is
-    exactly the unification guarantee being tested."""
+    The time-range condition lets Spark bound BOTH state stores via the
+    watermarks (clicks older than window + watermark are evicted). The
+    join types add only emission rules on top of the same state:
+
+    - ``inner``: matched (click, purchase) pairs as they arrive;
+    - ``left_outer``: also every unmatched click, NULL purchase, once
+      the watermark proves no qualifying purchase can still come
+      (wm > click_ts + window) — unmatched clicks ARE the conversion
+      signal;
+    - ``right_outer``: also every organic purchase, NULL click, once the
+      watermark passes the purchase time (the youngest click that could
+      match is strictly older than the purchase);
+    - ``full_outer``: both of the above;
+    - ``left_semi``: each converting click AT MOST ONCE, without the
+      purchase payload (a click matching 5 purchases emits one row).
+
+    Output: click_id, purchase_id (not for ``left_semi``) and user_id,
+    taken from the purchase when the click side is NULL."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -265,21 +278,28 @@ def attribution_join(
         )
         .withWatermark("click_ts", watermark)
     )
+    ids = ["click_id"] if how == "left_semi" else ["click_id", "purchase_id"]
     purchases = (
         events.filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
+            *([] if how == "left_semi" else [F.col("event_id").alias("purchase_id")]),
             F.col("ts").alias("purchase_ts"),
         )
         .withWatermark("purchase_ts", watermark)
+    )
+    user = (
+        F.coalesce("c_user", "p_user")
+        if how in ("right_outer", "full_outer")
+        else F.col("c_user")
     )
     return clicks.join(
         purchases,
         (F.col("c_user") == F.col("p_user"))
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {window}")),
-    ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
+        how,
+    ).select(*ids, user.alias("user_id"))
 
 
 def run_available_now(
@@ -288,9 +308,10 @@ def run_available_now(
     state_partitions: int | None = None,
     mode: str | None = None,
 ) -> DataFrame:
-    """Execute a streaming plan with Trigger.AvailableNow and return the
-    materialized result — the drain-until-caught-up semantics of the
-    reference's fetch loop (kinesisReader/index.js:39-44) as a one-liner.
+    """Drain a streaming plan (see the module's drain contract) and
+    return the materialized result — the drain-until-caught-up semantics
+    of the reference's fetch loop (kinesisReader/index.js:39-44) as a
+    one-liner.
 
     Sink choice is a scale decision: append-mode streams (filters,
     dedup, joins, custom stateful) land in a distributed parquet sink
@@ -315,12 +336,8 @@ def run_available_now(
     commit, so they want cluster-width parallelism — callers pass an
     explicit `state_partitions` to override the volume-sized default."""
     spark = stream_df.sparkSession
-    stream_parts = (
-        str(state_partitions)
-        if state_partitions is not None
-        else str(env_int("SPARK_GRAFT_STREAM_PARTITIONS", 8))
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is None:
+        state_partitions = env_int("SPARK_GRAFT_STREAM_PARTITIONS", 8)
     # autodetect: aggregations run complete-mode on the memory sink.
     # `mode="append"` overrides for watermark-evicted aggregations
     # (session/tumbling windows) where append is the production shape
@@ -329,36 +346,16 @@ def run_available_now(
         complete = stream_df.isStreaming and _has_aggregation(stream_df)
     else:
         complete = mode == "complete"
-    spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
-    try:
-        if complete:
-            with tempfile.TemporaryDirectory() as checkpoint:
-                q = (
-                    stream_df.writeStream.format("memory")
-                    .queryName(query_name)
-                    .outputMode("complete")
-                    .option("checkpointLocation", checkpoint)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            return spark.table(query_name)
-        out_dir = tempfile.mkdtemp(prefix=f"ksr_out_{query_name}_")
-        with tempfile.TemporaryDirectory() as checkpoint:
-            q = (
-                stream_df.writeStream.format("parquet")
-                .outputMode("append")
-                .option("path", out_dir)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        # explicit schema: an empty result writes no part files, and the
-        # stream's schema is authoritative either way
-        return spark.read.schema(stream_df.schema).parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    if complete:
+        writer = stream_df.writeStream.format("memory").queryName(query_name)
+        drain(writer.outputMode("complete"), partitions=state_partitions)
+        return spark.table(query_name)
+    out_dir = tempfile.mkdtemp(prefix=f"ksr_out_{query_name}_")
+    writer = stream_df.writeStream.format("parquet").outputMode("append")
+    drain(writer.option("path", out_dir), partitions=state_partitions)
+    # explicit schema: an empty result writes no part files, and the
+    # stream's schema is authoritative either way
+    return spark.read.schema(stream_df.schema).parquet(out_dir)
 
 
 def _has_aggregation(df: DataFrame) -> bool:
@@ -459,136 +456,8 @@ def upsert_compact_available_now(events_stream: DataFrame) -> DataFrame:
             os.rename(live, old)
         os.rename(staged, live)
 
-    with tempfile.TemporaryDirectory() as checkpoint:
-        q = (
-            events_stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(events_stream.writeStream.foreachBatch(merge_batch))
     return spark.read.schema(schema).parquet(live).drop("latest_ts")
-
-
-def attribution_join_outer(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """LEFT OUTER watermarked stream-stream join: every click emits —
-    matched rows as they arrive, unmatched clicks with NULL purchase
-    once the watermark proves no qualifying purchase can still come
-    (wm > click_ts + window). The null-emission-on-expiry behavior is
-    the part inner joins never exercise, and it's exactly what
-    conversion-rate jobs need (unmatched clicks ARE the signal).
-
-    State bounds are identical to the inner form; the only addition is
-    the expiry scan that releases unmatched click state as the
-    watermark advances."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {window}")),
-        "left_outer",
-    ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-
-
-def attribution_join_full(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """FULL OUTER watermarked stream-stream join — completes the join
-    matrix (inner / left / full): unmatched clicks emit with NULL
-    purchase once the watermark proves no qualifying purchase can
-    arrive, and unmatched purchases emit with NULL click once the
-    watermark passes the purchase time (the youngest click that could
-    match is strictly older than the purchase). Both state stores stay
-    watermark-bounded exactly as in the inner form."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {window}")),
-        "full_outer",
-    ).select(
-        "click_id", "purchase_id", F.coalesce("c_user", "p_user").alias("user_id")
-    )
-
-
-def attribution_join_right(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """RIGHT OUTER watermarked stream-stream join — the mirror of the
-    left-outer form, completing the join-type matrix (inner,
-    left-outer, full-outer, semi, right-outer): every purchase emits,
-    matched rows on arrival, organic purchases (no qualifying click)
-    null-padded once the watermark passes the purchase time — the
-    youngest possibly-attributing click would already be in state.
-
-    Organic-conversion measurement is the use case the left form
-    can't express without swapping stream roles; state bounds are
-    symmetric to attribution_join_outer."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {window}")),
-        "right_outer",
-    ).select(
-        "click_id", "purchase_id", F.coalesce("c_user", "p_user").alias("user_id")
-    )
 
 
 def state_store_snapshot(events: DataFrame) -> DataFrame:
@@ -617,21 +486,10 @@ def state_store_snapshot(events: DataFrame) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_events"), F.sum("cents").alias("total_cents"))
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # the checkpoint outlives the drain: the state reader below reads it
     checkpoint = tempfile.mkdtemp(prefix="ksr_state_inspect_")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("ksr_state_inspect_sink")
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    writer = agg.writeStream.format("memory").queryName("ksr_state_inspect_sink")
+    drain(writer.outputMode("complete"), checkpoint, partitions=8)
     state = spark.read.format("statestore").load(checkpoint)
     # the state schema names the UNRESOLVED agg buffer fields (count,
     # sum), not the sink aliases — the buffer is the physical contract

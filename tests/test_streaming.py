@@ -288,47 +288,83 @@ def test_kinesis_builder_gates_cleanly(spark):
         kinesis_stream(spark, "events", "us-west-2", datetime(2024, 1, 1))
 
 
-def test_full_outer_attribution_covers_both_sides(spark, sf_dir):
-    """Full outer = inner matches + null-padded clicks + null-padded
-    purchases; the matched subset must equal the inner join exactly."""
-    from kinesis_stream_reader_spark.streaming import jobs
-
-    stream = jobs.stream_events(spark, sf_dir)
-    full = jobs.run_available_now(
-        jobs.attribution_join_full(stream), "t_full_outer"
-    ).collect()
-    stream2 = jobs.stream_events(spark, sf_dir)
-    inner = jobs.run_available_now(
-        jobs.attribution_join(stream2), "t_full_inner"
-    ).collect()
-    matched = {(r.click_id, r.purchase_id) for r in full if r.purchase_id is not None and r.click_id is not None}
-    assert matched == {(r.click_id, r.purchase_id) for r in inner}
-    assert any(r.click_id is None for r in full)  # expired purchases emitted
-    assert any(r.purchase_id is None for r in full)  # expired clicks emitted
-
-
-def test_streaming_attribution_right_mirrors_left(spark, sf_dir):
-    """Right-outer matched set equals the inner join; null-click rows
-    are purchases with no qualifying click before the terminal
-    watermark."""
-    from kinesis_stream_reader_spark.streaming import jobs
-
-    stream = jobs.stream_events(spark, sf_dir)
-    out = jobs.run_available_now(
-        jobs.attribution_join_right(stream), "t_attr_right"
-    ).collect()
-    matched = {(r.click_id, r.purchase_id) for r in out if r.click_id is not None}
-    stream2 = jobs.stream_events(spark, sf_dir)
-    inner = {
-        (r.click_id, r.purchase_id)
+@pytest.fixture(scope="module")
+def inner_attribution(spark, sf_dir):
+    """(click_id, purchase_id, user_id) rows of one inner drain."""
+    return {
+        tuple(r)
         for r in jobs.run_available_now(
-            jobs.attribution_join(stream2), "t_attr_inner_rt"
+            jobs.attribution_join(jobs.stream_events(spark, sf_dir)), "t_attr_inner"
         ).collect()
     }
-    assert matched == inner
-    organic = [r for r in out if r.click_id is None]
-    assert organic, "fixture must contain organic purchases"
-    assert all(r.purchase_id is not None for r in organic)
+
+
+@pytest.mark.parametrize("how", ["left_outer", "right_outer", "full_outer", "left_semi"])
+def test_attribution_join_types_against_inner(spark, sf_dir, inner_attribution, how):
+    """Every join type emits the inner join's matches plus only its own
+    null-padded side: unmatched clicks (NULL purchase) for left/full,
+    organic purchases (NULL click, user taken from the purchase) for
+    right/full, and for semi exactly the inner join's click set."""
+    out = jobs.run_available_now(
+        jobs.attribution_join(jobs.stream_events(spark, sf_dir), how), f"t_attr_{how}"
+    ).collect()
+    assert inner_attribution
+    if how == "left_semi":
+        assert len(out) == len({r.click_id for r in out})
+        assert {(r.click_id, r.user_id) for r in out} == {
+            (c, u) for c, _, u in inner_attribution
+        }
+        return
+    matched = {
+        tuple(r) for r in out if r.click_id is not None and r.purchase_id is not None
+    }
+    assert matched == inner_attribution
+    null_purchase = [r for r in out if r.purchase_id is None]
+    null_click = [r for r in out if r.click_id is None]
+    assert bool(null_purchase) == (how in ("left_outer", "full_outer"))
+    assert bool(null_click) == (how in ("right_outer", "full_outer"))
+    assert all(r.user_id is not None for r in out)
+    assert all(r.purchase_id is not None for r in null_click)
+
+
+def test_drain_propagates_batch_failure(spark, sf_dir, tmp_path, monkeypatch):
+    """A failing foreachBatch surfaces as StreamingQueryException, and
+    the drain still stops its query and removes its temp checkpoint."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    stream = jobs.stream_events(spark, sf_dir)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("planted batch failure")
+
+    with pytest.raises(StreamingQueryException, match="planted batch failure"):
+        jobs.drain(stream.writeStream.foreachBatch(fail))
+    assert spark.streams.active == []
+    assert list(tmp_path.iterdir()) == []
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_obs_metrics", "streaming_resume_exactly_once"]
+)
+def test_streaming_queries_leave_no_temp_dirs(spark, sf_dir, tmp_path, monkeypatch, name):
+    """Checkpoints and staged sources are removed after the query; only
+    a sink the returned DataFrame reads may survive."""
+    import tempfile
+
+    from kinesis_stream_reader_spark.registry import QUERIES
+
+    jobs.stream_events(spark, sf_dir)  # the shared symlink dir predates the call
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = QUERIES[name](spark, sf_dir)
+    left = sorted(p.name for p in tmp_path.iterdir())
+    if name == "streaming_resume_exactly_once":
+        assert len(left) == 1 and left[0].startswith("ksr_resume_out_"), left
+        assert out.count() > 0
+    else:
+        assert left == []
 
 
 def test_streaming_resume_exactly_once_no_dupes(spark, sf_dir):
