@@ -16,7 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import tiny_df
+from . import seqdp, tiny_df
+from .rowmap import map_rows
 from ..session import env_int
 
 # Word-boundary-ish regex for a BPE-style pre-tokenizer: word pieces,
@@ -874,6 +875,11 @@ def model_eval_auc(documents: DataFrame) -> DataFrame:
     )
 
 
+# The BPE trainers' word relation: each distinct word, its corpus
+# frequency and its current symbol sequence.
+_SYMS_DDL = "w STRING, freq LONG, syms ARRAY<STRING>"
+
+
 def _pair_census_rows(df: DataFrame) -> list:
     """Freq-weighted adjacent-pair census of a (w, freq, syms) word
     relation, collected: [(a, b, c)] rows. One map-side explode +
@@ -913,36 +919,6 @@ def _has_adjacent_pair(a: str, b: str):
     ).otherwise(F.lit(False))
 
 
-def _merge_apply_batches(a: str, b: str):
-    """Arrow kernel: apply ONE merge greedily left-to-right over
-    non-overlapping occurrences — the reference BPE application
-    ('aaaa' under (a,a) becomes [aa][aa], not [aa]a[a])."""
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
-                continue
-            out = []
-            for syms in pdf["syms"]:
-                syms = list(syms)
-                res, i, n = [], 0, len(syms)
-                while i < n:
-                    if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                        res.append(a + b)
-                        i += 2
-                    else:
-                        res.append(syms[i])
-                        i += 1
-                out.append(res)
-            yield pd.DataFrame(
-                {"w": pdf["w"], "freq": pdf["freq"], "syms": out}
-            )
-
-    return batches
-
-
 def _bpe_driver_vocab_max() -> int:
     """Vocabulary cutoff for the driver-side training fast path (read
     per call so deployments/tests can re-tune without re-import). BPE
@@ -958,8 +934,11 @@ def _bpe_driver_vocab_max() -> int:
 
 
 def _bpe_merge_greedy(syms: list, a: str, b: str) -> list:
-    """Driver twin of _merge_apply_batches' inner walk: apply ONE merge
-    greedily left-to-right over non-overlapping occurrences."""
+    """Apply ONE merge greedily left-to-right over non-overlapping
+    occurrences — the reference BPE application ('aaaa' under (a,a)
+    becomes [aa][aa], not [aa]a[a]). The only copy of the walk: the
+    driver trainer, the distributed trainer's Arrow rewrite and the
+    byte-level encoder all call it."""
     res, i, n = [], 0, len(syms)
     while i < n:
         if i + 1 < n and syms[i] == a and syms[i + 1] == b:
@@ -1067,9 +1046,7 @@ def _bpe_train_incremental(
         if len(head) <= cutoff:
             merges, words = _bpe_train_driver(head, rounds)
             final = tiny_df(
-                df.sparkSession,
-                [tuple(rec) for rec in words],
-                "w STRING, freq LONG, syms ARRAY<STRING>",
+                df.sparkSession, [tuple(rec) for rec in words], _SYMS_DDL
             )
             return merges, final
     # LAZY localCheckpoint (guide §1.2): the first consumer of each
@@ -1093,9 +1070,14 @@ def _bpe_train_incremental(
         merges.append((a, b, cnt))
         pred = _has_adjacent_pair(a, b)
         affected = df.filter(pred)
-        rewritten = affected.mapInPandas(
-            _merge_apply_batches(a, b),
-            "w STRING, freq LONG, syms ARRAY<STRING>",
+        rewritten = map_rows(
+            affected,
+            # a, b bound as defaults: this round's merge, not the loop's
+            # latest when the lazy plan runs
+            lambda w, freq, syms, a=a, b=b: [
+                (w, freq, _bpe_merge_greedy(syms, a, b))
+            ],
+            _SYMS_DDL,
         )
         # Round-13 optimization (guide §1.2/§2.4): the before/after
         # censuses of the affected words collapse into ONE signed
@@ -1265,23 +1247,10 @@ def _bytelevel_seed(words: DataFrame) -> DataFrame:
     of the word. Arrow pass over the distinct-word census only (never
     the corpus)."""
     table = _bytes_to_unicode()
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
-                continue
-            syms = [
-                [table[byte] for byte in str(w).encode("utf-8")]
-                for w in pdf["w"]
-            ]
-            yield pd.DataFrame(
-                {"w": pdf["w"], "freq": pdf["freq"], "syms": syms}
-            )
-
-    return words.mapInPandas(
-        batches, "w STRING, freq LONG, syms ARRAY<STRING>"
+    return map_rows(
+        words,
+        lambda w, freq: [(w, freq, [table[b] for b in w.encode("utf-8")])],
+        _SYMS_DDL,
     )
 
 
@@ -1299,65 +1268,46 @@ def bytelevel_bpe_train(words: DataFrame, rounds: int = 6) -> list:
     return [(a, b) for a, b, _c in merges]
 
 
-def _bytelevel_encode_batches(table: dict, merges: list):
-    """Arrow kernel: encode each distinct word by applying the FROZEN
-    broadcast merges in rank order, each greedily left-to-right over
+def _bytelevel_encode_word(w: str, table: dict, merges: list) -> tuple[str, int]:
+    """Encode ONE word: map its UTF-8 bytes through ``table``, then apply
+    the FROZEN merges in rank order, each greedily left-to-right over
     non-overlapping occurrences — the reference BPE apply (Sennrich
     apply_bpe; GPT-2's lowest-rank-bigram loop is an optimization of
-    exactly this order)."""
+    exactly this order). Returns (space-joined pieces, piece count)."""
+    syms = [table[b] for b in w.encode("utf-8")]
+    for a, b in merges:
+        syms = _bpe_merge_greedy(syms, a, b)
+    return " ".join(syms), len(syms)
 
-    def _encode_one(w: str) -> tuple[str, int]:
-        syms = [table[b] for b in w.encode("utf-8")]
-        for a, b in merges:
-            i = 0
-            out = []
-            while i < len(syms):
-                if (
-                    i + 1 < len(syms)
-                    and syms[i] == a
-                    and syms[i + 1] == b
-                ):
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return " ".join(syms), len(syms)
 
-    def batches(it):
-        import pandas as pd
+def bytelevel_encode_words(
+    words: DataFrame, table: dict, merges: list
+) -> DataFrame:
+    """Byte-level encode of a (w, freq) relation in one Arrow pass:
+    (w, freq, pieces, n_pieces), one row per input row. Shared by the
+    batch encode (a distinct-word census) and the streaming encode (one
+    row per occurrence).
 
-        # Per-TASK memo (guide §4.5): the batch caller feeds a
-        # distinct-word census (each word once — memo is a no-op), but
-        # the STREAMING caller feeds one row per occurrence; encoding
-        # each distinct word once per task and mapping occurrences
-        # through the memo is bit-identical (the merge walk is a pure
-        # function of the word) and turns the per-row cost into a dict
-        # lookup. Bounded by the task's distinct-word count — the same
-        # vocabulary bound the batch census carries.
-        memo: dict = {}
-        for pdf in it:
-            if pdf.empty:
-                continue
-            pieces_col, np_col = [], []
-            for w in pdf["w"]:
-                w = str(w)
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = _encode_one(w)
-                pieces_col.append(got[0])
-                np_col.append(got[1])
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "freq": pdf["freq"],
-                    "pieces": pieces_col,
-                    "n_pieces": np_col,
-                }
-            )
+    The memo lives in the kernel's closure, so every task unpickles its
+    own empty copy: encoding each distinct word once per task and
+    mapping occurrences through the memo is bit-identical (the merge
+    walk is a pure function of the word) and turns the streaming
+    per-occurrence cost into a dict lookup. Bounded by the task's
+    distinct-word count — the same vocabulary bound the batch census
+    carries — and gone with the task."""
+    memo: dict = {}
 
-    return batches
+    def encode(w, freq):
+        got = memo.get(w)
+        if got is None:
+            got = memo[w] = _bytelevel_encode_word(w, table, merges)
+        return [(w, freq, *got)]
+
+    return map_rows(
+        words.select("w", "freq"),
+        encode,
+        "w STRING, freq LONG, pieces STRING, n_pieces INT",
+    )
 
 
 def bytelevel_bpe_encode(
@@ -1383,12 +1333,8 @@ def bytelevel_bpe_encode(
     words = bytelevel_bpe_pretokens(documents)
     if merges is None:
         merges = bytelevel_bpe_train(words, rounds)
-    table = _bytes_to_unicode()
     return (
-        words.mapInPandas(
-            _bytelevel_encode_batches(table, merges),
-            "w STRING, freq LONG, pieces STRING, n_pieces INT",
-        )
+        bytelevel_encode_words(words, _bytes_to_unicode(), merges)
         .select(
             F.col("w").alias("word"),
             F.col("freq").cast("long").alias("n_occurrences"),
@@ -1433,31 +1379,16 @@ def bytelevel_bpe_roundtrip(
         merges = bytelevel_bpe_train(words, rounds)
     table = _bytes_to_unicode()
     inv = {ch: b for b, ch in table.items()}
-    enc = _bytelevel_encode_batches(table, merges)
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in enc(it):
-            if pdf.empty:
-                continue
-            decoded = [
-                _bytelevel_decode_word(p, inv) for p in pdf["pieces"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "n_pieces": pdf["n_pieces"],
-                    "decoded": decoded,
-                    "lossless": [
-                        d == str(w) for d, w in zip(decoded, pdf["w"])
-                    ],
-                }
-            )
+    def roundtrip(w, _freq):
+        pieces, n_pieces = _bytelevel_encode_word(w, table, merges)
+        decoded = _bytelevel_decode_word(pieces, inv)
+        return [(w, n_pieces, decoded, decoded == w)]
 
     return (
-        words.mapInPandas(
-            batches,
+        map_rows(
+            words,
+            roundtrip,
             "w STRING, n_pieces INT, decoded STRING, lossless BOOLEAN",
         )
         .select(
@@ -3265,16 +3196,15 @@ def wer_pairs_report(documents: DataFrame) -> DataFrame:
 
     Plan shape / 100 TB: blocking is one fingerprint census; ONLY
     member docs of emitted pairs carry their hashed-token arrays into
-    the pair join (dup-mass-bounded, never corpus^2). The DP kernel is
-    an Arrow-batched mapInPandas numpy kernel (the block-MIPS /
-    codec pattern) — token-level edit distance is not expressible
-    with built-in operators (Spark's levenshtein is char-level and
+    the pair join (dup-mass-bounded, never corpus^2). The DP is
+    seqdp.edit_distance, a per-pair numpy kernel run through
+    rowmap.map_rows (the codec pattern) — token-level edit distance is
+    not expressible with built-in operators (Spark's levenshtein is char-level and
     chr() wraps at 256, so a char re-encoding cannot carry a realistic
     vocabulary); per-pair cost is O(n*m) with n,m = doc lengths, the
     inherent cost of the measure, bounded by pair mass — and pair mass
     itself is bounded by blocked_eval_pairs' deterministic per-block
     cap (pre-cap counts surfaced as block_pairs_total)."""
-    import pandas as pd
 
     ws = documents.select(
         "doc_id", F.filter(tokens(F.col("text")), lambda t: t != "").alias("w")
@@ -3314,39 +3244,11 @@ def wer_pairs_report(documents: DataFrame) -> DataFrame:
         .select("doc_id", "ref_id", "block_pairs_total", "ha", "hr", "n_ref")
     )
 
-    def _wer_batches(batches):
-        import numpy as np
-
-        for pdf in batches:
-            dists = []
-            for a, r in zip(pdf["ha"], pdf["hr"]):
-                a = np.asarray(a, dtype=np.int64)
-                r = np.asarray(r, dtype=np.int64)
-                m = len(r)
-                # one DP row at a time; the left-dependency resolves via
-                # the classic minimum.accumulate(t - j) + j trick
-                prev = np.arange(m + 1, dtype=np.int64)
-                idx = np.arange(m + 1, dtype=np.int64)
-                for i in range(len(a)):
-                    t = np.empty(m + 1, dtype=np.int64)
-                    t[0] = i + 1
-                    cost = (a[i] != r).astype(np.int64)
-                    t[1:] = np.minimum(prev[1:] + 1, prev[:-1] + cost)
-                    t = np.minimum(t, np.minimum.accumulate(t - idx) + idx)
-                    prev = t
-                dists.append(int(prev[m]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "ref_id": pdf["ref_id"],
-                    "block_pairs_total": pdf["block_pairs_total"],
-                    "n_ref": pdf["n_ref"],
-                    "dist": dists,
-                }
-            )
-
-    out = joined.mapInPandas(
-        _wer_batches,
+    out = map_rows(
+        joined,
+        lambda doc_id, ref_id, total, ha, hr, n_ref: [
+            (doc_id, ref_id, total, n_ref, seqdp.edit_distance(ha, hr))
+        ],
         "doc_id long, ref_id long, block_pairs_total long, n_ref long, dist long",
     )
     return out.select(
@@ -3374,10 +3276,8 @@ def rouge_l_pairs_report(documents: DataFrame) -> DataFrame:
     Plan shape / 100 TB: identical to wer_pairs_report — fingerprint
     blocking with blocked_eval_pairs' deterministic per-block cap,
     hashed-token arrays only for pair members (dup-mass-bounded), and
-    an Arrow-batched numpy DP kernel. The LCS row recurrence
-    new[j] = max(t[j], new[j-1]) is a running maximum, so each row is
-    two vectorized passes."""
-    import pandas as pd
+    a per-pair numpy DP kernel (seqdp.lcs_length) run through
+    rowmap.map_rows."""
 
     ws = documents.select(
         "doc_id", F.filter(tokens(F.col("text")), lambda t: t != "").alias("w")
@@ -3414,36 +3314,11 @@ def rouge_l_pairs_report(documents: DataFrame) -> DataFrame:
         )
     )
 
-    def _lcs_batches(batches):
-        import numpy as np
-
-        for pdf in batches:
-            lcss = []
-            for a, r in zip(pdf["ha"], pdf["hr"]):
-                a = np.asarray(a, dtype=np.int64)
-                r = np.asarray(r, dtype=np.int64)
-                m = len(r)
-                prev = np.zeros(m + 1, dtype=np.int64)
-                for i in range(len(a)):
-                    t = np.empty(m + 1, dtype=np.int64)
-                    t[0] = 0
-                    eq = (a[i] == r).astype(np.int64)
-                    t[1:] = np.maximum(prev[1:], prev[:-1] + eq)
-                    prev = np.maximum.accumulate(t)
-                lcss.append(int(prev[m]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "ref_id": pdf["ref_id"],
-                    "block_pairs_total": pdf["block_pairs_total"],
-                    "n_cand": pdf["n_cand"],
-                    "n_ref": pdf["n_ref"],
-                    "lcs": lcss,
-                }
-            )
-
-    out = joined.mapInPandas(
-        _lcs_batches,
+    out = map_rows(
+        joined,
+        lambda doc_id, ref_id, total, ha, hr, n_cand, n_ref: [
+            (doc_id, ref_id, total, n_cand, n_ref, seqdp.lcs_length(ha, hr))
+        ],
         "doc_id long, ref_id long, block_pairs_total long, "
         "n_cand long, n_ref long, lcs long",
     )
@@ -3774,10 +3649,7 @@ def wordpiece_encode(
     )
     vocab = wordpiece_vocab_from_census(words, max_piece, min_count, vocab_cap)
     return (
-        words.mapInPandas(
-            _wordpiece_encode_batches(vocab, max_piece),
-            "word STRING, n LONG, pieces STRING, n_pieces INT",
-        )
+        wordpiece_encode_words(words, vocab, max_piece)
         .select(
             "word",
             F.col("n").cast("long").alias("n_occurrences"),
@@ -3878,53 +3750,49 @@ def wordpiece_vocab_from_census(
     return singles | {(r["is_head"], r["piece"]) for r in multi_rows}
 
 
-def _wordpiece_encode_batches(vocab: set, max_piece: int):
-    """Greedy longest-match-first WordPiece segmentation as a
-    mapInPandas kernel over (word, n) rows — shared by the batch
-    encode and the streaming per-occurrence encode (vocab is a frozen
-    driver-held set in both)."""
+def _wordpiece_segment(word: str, vocab: set, max_piece: int) -> "list | None":
+    """Greedy longest-match-first WordPiece segmentation of ONE word
+    against the frozen (is_head, piece) vocab: its pieces, continuation
+    pieces '##'-marked, or None when no vocab piece matches at some
+    position."""
+    pos, pieces = 0, []
+    while pos < len(word):
+        for ln in range(min(max_piece, len(word) - pos), 0, -1):
+            cand = word[pos : pos + ln]
+            if ((pos == 0), cand) in vocab:
+                pieces.append(cand if pos == 0 else "##" + cand)
+                pos += ln
+                break
+        else:
+            # Unreachable while single chars are unconditional, but a
+            # broken vocab invariant must not spin the executor
+            # forever. Mirror the oracle's fixpoint CTE (WHERE pos >
+            # length(word)): the word is DROPPED, not partially emitted.
+            return None
+    return pieces
 
-    def batches(it):
-        import pandas as pd
 
-        for pdf in it:
-            if pdf.empty:
-                continue
-            out_w, out_n, out_p, out_np = [], [], [], []
-            for word, n in zip(pdf["word"], pdf["n"]):
-                pos, pieces = 0, []
-                while pos < len(word):
-                    for ln in range(min(max_piece, len(word) - pos), 0, -1):
-                        cand = word[pos : pos + ln]
-                        if ((pos == 0), cand) in vocab:
-                            pieces.append(cand if pos == 0 else "##" + cand)
-                            pos += ln
-                            break
-                    else:
-                        # No vocab piece matches at pos — unreachable
-                        # while single chars are unconditional, but a
-                        # broken vocab invariant must not spin the
-                        # executor forever. Mirror the oracle's
-                        # fixpoint CTE (WHERE pos > length(word)):
-                        # the word is DROPPED, not partially emitted.
-                        pieces = None
-                        break
-                if pieces is None:
-                    continue
-                out_w.append(word)
-                out_n.append(n)
-                out_p.append(" ".join(pieces))
-                out_np.append(len(pieces))
-            yield pd.DataFrame(
-                {
-                    "word": out_w,
-                    "n": out_n,
-                    "pieces": out_p,
-                    "n_pieces": out_np,
-                }
-            )
+def wordpiece_encode_words(
+    words: DataFrame, vocab: set, max_piece: int
+) -> DataFrame:
+    """WordPiece encode of a (word, n) relation in one Arrow pass:
+    (word, n, pieces, n_pieces), one row per input row whose word
+    segments (a word the vocab cannot cover is dropped). Shared by the
+    batch encode (a distinct-word census) and the streaming encode (one
+    row per occurrence); the vocab is a frozen driver-held set in
+    both."""
 
-    return batches
+    def encode(word, n):
+        pieces = _wordpiece_segment(word, vocab, max_piece)
+        if pieces is None:
+            return []
+        return [(word, n, " ".join(pieces), len(pieces))]
+
+    return map_rows(
+        words.select("word", "n"),
+        encode,
+        "word STRING, n LONG, pieces STRING, n_pieces INT",
+    )
 
 
 def delong_auc_ci(documents: DataFrame) -> DataFrame:
@@ -4042,6 +3910,40 @@ def delong_auc_ci(documents: DataFrame) -> DataFrame:
             ).alias("ci_hi"),
         )
     )
+
+
+def _viterbi_segment(
+    word: str, vocab: dict, max_piece: int
+) -> "tuple[list, int] | None":
+    """Viterbi segmentation of ONE word under the unigram LM ``vocab``
+    (piece -> micro-nat log-prob): the piece sequence with the maximal
+    exact integer score, and that score; None when no segmentation
+    reaches the end of the word. Ties break to the LONGEST piece at
+    each position (ascending-j >= update = the oracle backtrace's
+    MAX(len) achiever)."""
+    L = len(word)
+    NEG = -(1 << 60)
+    dp = [0] + [NEG] * L
+    bp = [0] * (L + 1)
+    for p in range(1, L + 1):
+        for j in range(1, min(max_piece, p) + 1):
+            lp = vocab.get(word[p - j : p])
+            if lp is None:
+                continue
+            cand = dp[p - j] + lp
+            if cand >= dp[p]:
+                dp[p], bp[p] = cand, j
+    # single chars are unconditional, so dp[p] is always reachable; a
+    # broken vocab still terminates (dp stays NEG, bp=0 -> drop), and
+    # the word is DROPPED like the oracle's, not partially emitted
+    if dp[L] <= NEG:
+        return None
+    pieces, p = [], L
+    while p > 0:
+        pieces.append(word[p - bp[p] : p])
+        p -= bp[p]
+    pieces.reverse()
+    return pieces, dp[L]
 
 
 def unigram_lm_encode(
@@ -4163,63 +4065,22 @@ def unigram_lm_encode(
     }
     singles = {p for p in vocab if len(p) == 1}
 
-    def _viterbi_batches(vcb: dict):
-        def batches(it):
-            import pandas as pd
+    def segment(vcb: dict) -> DataFrame:
+        def viterbi(word, n):
+            got = _viterbi_segment(word, vcb, max_piece)
+            if got is None:
+                return []
+            pieces, score = got
+            return [(word, n, " ".join(pieces), len(pieces), score)]
 
-            for pdf in it:
-                if pdf.empty:
-                    continue
-                out_p, out_np, out_s = [], [], []
-                for word in pdf["word"]:
-                    L = len(word)
-                    NEG = -(1 << 60)
-                    dp = [0] + [NEG] * L
-                    bp = [0] * (L + 1)
-                    for p in range(1, L + 1):
-                        for j in range(1, min(max_piece, p) + 1):
-                            lp = vcb.get(word[p - j : p])
-                            if lp is None:
-                                continue
-                            cand = dp[p - j] + lp
-                            # >= with ascending j = longest achiever,
-                            # mirroring the oracle backtrace MAX(len)
-                            if cand >= dp[p]:
-                                dp[p], bp[p] = cand, j
-                        # single chars are unconditional, so dp[p] is
-                        # always reachable; a broken vocab still
-                        # terminates (dp stays NEG, bp=0 -> drop)
-                    if dp[L] <= NEG:
-                        out_p.append(None)
-                        out_np.append(0)
-                        out_s.append(0)
-                        continue
-                    pieces, p = [], L
-                    while p > 0:
-                        pieces.append(word[p - bp[p] : p])
-                        p -= bp[p]
-                    pieces.reverse()
-                    out_p.append(" ".join(pieces))
-                    out_np.append(len(pieces))
-                    out_s.append(dp[L])
-                res = pd.DataFrame(
-                    {
-                        "word": pdf["word"],
-                        "n": pdf["n"],
-                        "pieces": out_p,
-                        "n_pieces": out_np,
-                        "score_u": out_s,
-                    }
-                )
-                yield res[res["pieces"].notna()]
+        return map_rows(
+            words,
+            viterbi,
+            "word STRING, n LONG, pieces STRING, n_pieces INT, score_u LONG",
+        )
 
-        return batches
-
-    seg_schema = (
-        "word STRING, n LONG, pieces STRING, n_pieces INT, score_u LONG"
-    )
     for _ in range(em_iters):
-        seg = words.mapInPandas(_viterbi_batches(vocab), seg_schema)
+        seg = segment(vocab)
         usage = (
             seg.select(
                 F.explode(F.split("pieces", " ")).alias("piece"), "n"
@@ -4239,7 +4100,7 @@ def unigram_lm_encode(
         }
 
     return (
-        words.mapInPandas(_viterbi_batches(vocab), seg_schema)
+        segment(vocab)
         .select(
             "word",
             F.col("n").cast("long").alias("n_occurrences"),

@@ -341,17 +341,15 @@ GROUP BY piece ORDER BY piece
             census, max_piece=6, min_count=50, vocab_cap=65536
         )
 
-        piece_stream = (
+        occurrences = (
             jobs.stream_table(spark, sf_dir, "documents")
             .select(F.explode(text.tokens(F.col("text"))).alias("word"))
             .filter(F.col("word") != "")
             .select("word", F.lit(1).cast("long").alias("n"))
-            .mapInPandas(
-                text._wordpiece_encode_batches(vocab, 6),
-                "word STRING, n LONG, pieces STRING, n_pieces INT",
-            )
-            .select(F.explode(F.split("pieces", " ")).alias("piece"))
         )
+        piece_stream = text.wordpiece_encode_words(
+            occurrences, vocab, 6
+        ).select(F.explode(F.split("pieces", " ")).alias("piece"))
         out = jobs.run_available_now(
             piece_stream.groupBy("piece").agg(
                 F.count("*").alias("n_uses")

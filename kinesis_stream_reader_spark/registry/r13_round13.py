@@ -331,9 +331,7 @@ GROUP BY piece ORDER BY piece
         from ..streaming import jobs
 
         merges = _bytelevel_merges_cached(spark, sf_dir, 6)
-        table = text._bytes_to_unicode()
-
-        piece_stream = (
+        occurrences = (
             jobs.stream_table(spark, sf_dir, "documents")
             .select(
                 F.explode(
@@ -344,12 +342,10 @@ GROUP BY piece ORDER BY piece
             )
             .filter(F.col("w").rlike(text._ASCII_PRINTABLE))
             .select("w", F.lit(1).cast("long").alias("freq"))
-            .mapInPandas(
-                text._bytelevel_encode_batches(table, merges),
-                "w STRING, freq LONG, pieces STRING, n_pieces INT",
-            )
-            .select(F.explode(F.split("pieces", " ")).alias("piece"))
         )
+        piece_stream = text.bytelevel_encode_words(
+            occurrences, text._bytes_to_unicode(), merges
+        ).select(F.explode(F.split("pieces", " ")).alias("piece"))
         out = jobs.run_available_now(
             piece_stream.groupBy("piece").agg(
                 F.count("*").alias("n_uses")

@@ -6,7 +6,8 @@ import time rely on it."""
 from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
-from ..operators import tiny_df
+from ..operators import seqdp, tiny_df
+from ..operators.rowmap import map_rows
 from ._shared import _FLAT_COLS, _nested_events  # noqa: F401
 from .r2_stats_streams import _phash_dedup_report  # noqa: F401
 from .r1_parity_ext import _lang_score  # noqa: F401
@@ -2631,11 +2632,10 @@ def dtw_timeseries_similarity_query(spark: SparkSession, sf_dir: str) -> DataFra
     Plan shape / 100 TB: the corpus collapses to per-type daily
     censuses (one partial-agg shuffle); the dense calendar grid, the
     |types|^2/2 pair relation, and the banded O(n*r) DP all run on
-    census-sized data (an Arrow-batched numpy kernel per pair, the
-    wer/rouge shape). The band keeps per-pair cost linear in series
-    length; series length is |days|, independent of corpus size."""
-    import pandas as pd
-
+    census-sized data (seqdp.banded_dtw per pair through
+    rowmap.map_rows, the wer/rouge shape). The band keeps per-pair cost
+    linear in series length; series length is |days|, independent of
+    corpus size."""
     events = load_events(spark, sf_dir)
     days = events.groupBy(
         F.to_date(F.date_trunc("day", F.col("ts"))).alias("d"),
@@ -2672,47 +2672,12 @@ def dtw_timeseries_similarity_query(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
 
-    def _dtw_batches(batches):
-        import numpy as np
-
-        sent = 1 << 40
-        r = 7
-        for pdf in batches:
-            dtws = []
-            lens = []
-            for va, vb in zip(pdf["va"], pdf["vb"]):
-                a = np.asarray(va, dtype=np.int64)
-                b = np.asarray(vb, dtype=np.int64)
-                n, m = len(a), len(b)
-                prev = np.full(m + 1, sent, dtype=np.int64)
-                prev[0] = 0
-                for i in range(1, n + 1):
-                    cost = np.abs(a[i - 1] - b)
-                    cc = np.concatenate(([0], np.cumsum(cost)))
-                    t = np.minimum(prev[1:], prev[:-1])
-                    lo, hi = max(1, i - r), min(m, i + r)
-                    tprime = np.full(m + 1, sent, dtype=np.int64)
-                    tprime[lo : hi + 1] = t[lo - 1 : hi] - cc[lo - 1 : hi]
-                    run = np.minimum.accumulate(tprime)
-                    new = np.full(m + 1, sent, dtype=np.int64)
-                    new[lo : hi + 1] = np.minimum(
-                        sent, cc[lo : hi + 1] + run[lo : hi + 1]
-                    )
-                    new[0] = sent
-                    prev = new
-                dtws.append(int(prev[m]))
-                lens.append(n)
-            yield pd.DataFrame(
-                {
-                    "type_a": pdf["type_a"],
-                    "type_b": pdf["type_b"],
-                    "n_days": lens,
-                    "dtw": dtws,
-                }
-            )
-
-    out = pairs.mapInPandas(
-        _dtw_batches, "type_a string, type_b string, n_days long, dtw long"
+    out = map_rows(
+        pairs,
+        lambda type_a, type_b, va, vb: [
+            (type_a, type_b, len(va), seqdp.banded_dtw(va, vb, band=7))
+        ],
+        "type_a string, type_b string, n_days long, dtw long",
     )
     return out.select(
         "type_a",

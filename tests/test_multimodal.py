@@ -41,6 +41,26 @@ def test_map_rows_fans_out_per_row(spark):
     ]
 
 
+def test_map_rows_closure_state_is_per_task(spark):
+    """State a kernel keeps in its closure (the byte-level encode memo)
+    starts empty in every task, also when a Python worker is reused for
+    the next task: it is bounded by one task's rows, never a cache that
+    grows across tasks."""
+    from kinesis_stream_reader_spark.operators.rowmap import map_rows
+
+    memo: dict = {}
+
+    def seen(i):
+        memo[i % 3] = True
+        return [(i, len(memo))]
+
+    # 8 tasks of 3 rows on 4 cores: workers are reused across tasks
+    out = map_rows(spark.range(0, 24, 1, 8), seen, "i BIGINT, n_seen INT")
+    assert sorted((r.i, r.n_seen) for r in out.collect()) == [
+        (i, i % 3 + 1) for i in range(24)
+    ]
+
+
 @pytest.mark.parametrize(
     "rows, message",
     [

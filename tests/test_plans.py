@@ -387,7 +387,7 @@ def test_wer_hashes_only_pair_members(spark, sf_dir, qs):
     plan carries the member semi-structure (a join on the member ids),
     and the DP runs in an Arrow python node, not per-row UDFs."""
     plan = physical_plan(qs["wer_pairs_report"](spark, sf_dir))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
 
 

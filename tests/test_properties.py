@@ -674,40 +674,20 @@ def _lcs_naive(a, r):
     return prev[m]
 
 
-def _lev_vectorized(a, r):
-    """The exact numpy recurrence used in text.wer_pairs_report."""
-    import numpy as np
+def _dtw_naive(a, b, band):
+    """Cell-by-cell Sakoe-Chiba banded DTW over the whole grid."""
+    from kinesis_stream_reader_spark.operators.seqdp import DTW_SENTINEL
 
-    a = np.asarray(a, dtype=np.int64)
-    r = np.asarray(r, dtype=np.int64)
-    m = len(r)
-    prev = np.arange(m + 1, dtype=np.int64)
-    idx = np.arange(m + 1, dtype=np.int64)
-    for i in range(len(a)):
-        t = np.empty(m + 1, dtype=np.int64)
-        t[0] = i + 1
-        cost = (a[i] != r).astype(np.int64)
-        t[1:] = np.minimum(prev[1:] + 1, prev[:-1] + cost)
-        t = np.minimum(t, np.minimum.accumulate(t - idx) + idx)
-        prev = t
-    return int(prev[m])
-
-
-def _lcs_vectorized(a, r):
-    """The exact numpy recurrence used in text.rouge_l_pairs_report."""
-    import numpy as np
-
-    a = np.asarray(a, dtype=np.int64)
-    r = np.asarray(r, dtype=np.int64)
-    m = len(r)
-    prev = np.zeros(m + 1, dtype=np.int64)
-    for i in range(len(a)):
-        t = np.empty(m + 1, dtype=np.int64)
-        t[0] = 0
-        eq = (a[i] == r).astype(np.int64)
-        t[1:] = np.maximum(prev[1:], prev[:-1] + eq)
-        prev = np.maximum.accumulate(t)
-    return int(prev[m])
+    n, m = len(a), len(b)
+    dp = [[DTW_SENTINEL] * (m + 1) for _ in range(n + 1)]
+    dp[0][0] = 0
+    for i in range(1, n + 1):
+        for j in range(1, m + 1):
+            if abs(i - j) > band:
+                continue
+            step = min(dp[i - 1][j], dp[i][j - 1], dp[i - 1][j - 1])
+            dp[i][j] = min(DTW_SENTINEL, abs(a[i - 1] - b[j - 1]) + step)
+    return dp[n][m]
 
 
 _seq = st.lists(st.integers(min_value=0, max_value=6), min_size=0, max_size=24)
@@ -716,18 +696,37 @@ _seq = st.lists(st.integers(min_value=0, max_value=6), min_size=0, max_size=24)
 @given(_seq, _seq)
 @settings(max_examples=300, deadline=None)
 def test_wer_dp_matches_naive_levenshtein(a, r):
+    from kinesis_stream_reader_spark.operators.seqdp import edit_distance
+
     if len(r) == 0 or len(a) == 0:
-        assert _lev_vectorized(a or [0], r or [0]) >= 0  # degenerate guard
+        assert edit_distance(a or [0], r or [0]) >= 0  # degenerate guard
         return
-    assert _lev_vectorized(a, r) == _lev_naive(a, r)
+    assert edit_distance(a, r) == _lev_naive(a, r)
 
 
 @given(_seq, _seq)
 @settings(max_examples=300, deadline=None)
 def test_lcs_dp_matches_naive(a, r):
+    from kinesis_stream_reader_spark.operators.seqdp import lcs_length
+
     if len(r) == 0:
         return
-    assert _lcs_vectorized(a, r) == _lcs_naive(a, r)
+    assert lcs_length(a, r) == _lcs_naive(a, r)
+
+
+_series = st.lists(
+    st.integers(min_value=0, max_value=1 << 20), min_size=0, max_size=30
+)
+
+
+@given(_series, _series, st.integers(min_value=0, max_value=9))
+@settings(max_examples=300, deadline=None)
+def test_banded_dtw_matches_cell_dp(a, b, band):
+    """The row-vectorized banded DTW equals the cell-by-cell DP,
+    unequal lengths (and lengths further apart than the band) included."""
+    from kinesis_stream_reader_spark.operators.seqdp import banded_dtw
+
+    assert banded_dtw(a, b, band=band) == _dtw_naive(a, b, band)
 
 
 @given(st.lists(st.integers(min_value=0, max_value=255), min_size=1, max_size=600))
@@ -769,3 +768,32 @@ def test_wordpiece_reconstruction_and_greedy(spark, sf_dir):
             if len(h) > len(first) and r.word.startswith(h)
         ]
         assert not longer, (r.word, first, longer)
+
+
+def test_segmenters_drop_words_the_vocab_cannot_cover():
+    """The broken-vocab contract of both tokenizer segmenters, with no
+    SparkSession: a word that needs a single character the vocab lacks
+    segments to None, so the encode kernels emit NO row for it, never a
+    partial one (the oracles' fixpoint CTEs keep only walks that reach
+    the end of the word). A covered word encodes to the documented
+    wordpiece_encode pieces: greedy longest head piece, '##'-marked
+    continuations that rebuild the word."""
+    from kinesis_stream_reader_spark.operators.text import (
+        _viterbi_segment,
+        _wordpiece_segment,
+    )
+
+    wp_vocab = {
+        (True, "u"), (True, "un"), (True, "und"),
+        (False, "n"), (False, "d"), (False, "o"), (False, "do"),
+    }
+    assert _wordpiece_segment("undo", wp_vocab, 6) == ["und", "##o"]
+    assert _wordpiece_segment("unxo", wp_vocab, 6) is None
+    assert _wordpiece_segment("xun", wp_vocab, 6) is None
+    # 'u' is a head piece only: as a continuation it is not covered
+    assert _wordpiece_segment("uu", wp_vocab, 6) is None
+
+    ug_vocab = {"u": -3, "n": -3, "d": -3, "o": -3, "un": -2, "do": -4}
+    assert _viterbi_segment("undo", ug_vocab, 6) == (["un", "do"], -6)
+    assert _viterbi_segment("unxo", ug_vocab, 6) is None
+    assert _viterbi_segment("x", ug_vocab, 6) is None

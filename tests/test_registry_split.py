@@ -79,3 +79,21 @@ def test_registration_is_unique():
     # must not have duplicated a slice
     names = list(registry.QUERIES)
     assert len(names) == len(set(names))
+
+
+def test_python_map_boundary_is_rowmap():
+    """Every per-row and per-batch Python kernel crosses into the
+    Python worker through operators/rowmap.py: no pandas map closure
+    (mapInPandas, or a hand-written `def batches`) anywhere else in the
+    package."""
+    root = PKG.parent
+    pandas_maps, closures = [], []
+    for mod in sorted(root.rglob("*.py")):
+        src = mod.read_text()
+        rel = mod.relative_to(root).as_posix()
+        if "mapInPandas(" in src:
+            pandas_maps.append(rel)
+        if "def batches" in src:
+            closures.append(rel)
+    assert pandas_maps == []
+    assert closures == ["operators/rowmap.py"]

@@ -485,21 +485,17 @@ def test_bytelevel_encode_handles_utf8():
     encode kernel is total on arbitrary text even though the oracle
     corpus is ASCII."""
     from kinesis_stream_reader_spark.operators.text import (
-        _bytelevel_encode_batches,
+        _bytelevel_encode_word,
         _bytes_to_unicode,
     )
-    import pandas as pd
 
     table = _bytes_to_unicode()
-    kern = _bytelevel_encode_batches(table, [("a", "b")])
-    out = pd.concat(
-        list(kern(iter([pd.DataFrame({"w": ["caféab"], "freq": [1]})])))
-    )
-    pieces = out["pieces"].iloc[0].split(" ")
+    joined, n_pieces = _bytelevel_encode_word("caféab", table, [("a", "b")])
+    pieces = joined.split(" ")
     # 'é' is 2 UTF-8 bytes -> 2 mapped symbols; 'ab' merged to one
     assert len(pieces) == 3 + 2 + 1
     assert pieces[-1] == "ab"
-    assert int(out["n_pieces"].iloc[0]) == 6
+    assert n_pieces == 6
 
 
 def test_batch_refine_serve_equals_single_refine_serve(spark, sf_dir):
@@ -739,23 +735,19 @@ def test_bytelevel_decode_inverts_encode_on_arbitrary_utf8():
     arbitrary UTF-8 — multi-byte sequences, the space/newline marker
     bytes, and merged pieces all map back losslessly through the
     inverted byte table."""
-    import pandas as pd
-
     from kinesis_stream_reader_spark.operators.text import (
         _bytelevel_decode_word,
-        _bytelevel_encode_batches,
+        _bytelevel_encode_word,
         _bytes_to_unicode,
     )
 
     table = _bytes_to_unicode()
     inv = {ch: b for b, ch in table.items()}
     words = ["café", "日本語", "naïve", "a b\nc", "héllo-wörld", "𝄞clef"]
-    kern = _bytelevel_encode_batches(table, [("a", "b"), ("ab", "c")])
-    out = pd.concat(
-        list(kern(iter([pd.DataFrame({"w": words, "freq": [1] * 6})])))
-    )
-    for w, pieces in zip(out["w"], out["pieces"]):
-        assert _bytelevel_decode_word(pieces, inv) == str(w)
+    merges = [("a", "b"), ("ab", "c")]
+    for w in words:
+        pieces, _n = _bytelevel_encode_word(w, table, merges)
+        assert _bytelevel_decode_word(pieces, inv) == w
 
 
 def test_retrain_policy_fully_tombstoned_index_reads_zero(

@@ -425,7 +425,7 @@ def test_streaming_bytelevel_bpe_arrival_order_invariant(
         d = tempfile.mkdtemp(prefix=f"ksr_blbpe_{tag}_")
         for i, src in enumerate(order):
             shutil.copy(src, os.path.join(d, f"part-{i:05d}.parquet"))
-        stream = (
+        occurrences = (
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(d)
@@ -438,11 +438,9 @@ def test_streaming_bytelevel_bpe_arrival_order_invariant(
             )
             .filter(F.col("w").rlike(text._ASCII_PRINTABLE))
             .select("w", F.lit(1).cast("long").alias("freq"))
-            .mapInPandas(
-                text._bytelevel_encode_batches(table, merges),
-                "w STRING, freq LONG, pieces STRING, n_pieces INT",
-            )
-            .select(F.explode(F.split("pieces", " ")).alias("piece"))
+        )
+        stream = text.bytelevel_encode_words(occurrences, table, merges).select(
+            F.explode(F.split("pieces", " ")).alias("piece")
         )
         out = jobs.run_available_now(
             stream.groupBy("piece").agg(F.count("*").alias("n_uses")),
