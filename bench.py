@@ -90,9 +90,12 @@ def main() -> None:
     from kinesis_stream_reader_spark.sources.raw import kpl_raw_records
 
     kpl_raw_records(spark, sf_dir).count()
-    # spin up the Python/Arrow worker pool so the first pandas-UDF query
-    # measures the operator, not interpreter + Arrow channel startup
-    spark.range(10_000).mapInPandas(lambda it: it, "id long").count()
+    # spin up the Python/Arrow worker pool through the adapter every
+    # Arrow kernel uses, so the first such query measures the operator,
+    # not interpreter + Arrow channel startup
+    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+
+    map_batches(spark.range(10_000), lambda batches: batches, "id long").count()
     # compile the nested-event projection once: the first filter query
     # should measure the filter, not struct-builder codegen
     from kinesis_stream_reader_spark.operators.events import to_nested

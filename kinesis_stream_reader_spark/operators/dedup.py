@@ -17,12 +17,12 @@ Extension surface (north-star mandate). Design stance for 100 TB:
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .rowmap import map_rows
+from .rowmap import group_batches, map_rows
 from .text import tokens
 
 # MinHash configuration: 32 permutations in 16 bands of 2 rows.
@@ -579,34 +579,39 @@ def embedding_near_dup_pairs(
 
     Dense vector math is the one workload where Arrow + BLAS beats
     column algebra: each block becomes one numpy normalized matmul
-    (V @ V.T) inside applyInPandas — measured ~5x over the
-    zip_with/aggregate fold at sf0.1, and the gap grows with dimension.
-    One shuffle on the blocking key; emitted pairs are tiny. The
-    column-expression ``cosine`` stays the per-pair scoring primitive
-    for joins that don't batch (ANN probes)."""
-    import numpy as np
+    (V @ V.T) in one grouped Arrow pass (rowmap.group_batches) —
+    measured ~5x over the zip_with/aggregate fold at sf0.1, and the gap
+    grows with dimension. One shuffle on the blocking key; emitted
+    pairs are tiny. The column-expression ``cosine`` stays the per-pair
+    scoring primitive for joins that don't batch (ANN probes)."""
 
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        mat, ids = mat[order], ids[order]
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        sims = (mat / norms) @ (mat / norms).T
+    def block_pairs(block: dict) -> dict:
+        ids, sims = _rounded_cosines(block)
         iu, ju = np.triu_indices(len(ids), k=1)
-        # half-up rounding (np.round is banker's; Spark/DuckDB round half-up)
-        sim = np.floor(sims[iu, ju] * 1000 + 0.5) / 1000
+        sim = sims[iu, ju]
         keep = sim >= threshold
-        return pd.DataFrame(
-            {"a_id": ids[iu][keep], "b_id": ids[ju][keep], "cos_sim": sim[keep]}
-        )
+        return {"a_id": ids[iu][keep], "b_id": ids[ju][keep], "cos_sim": sim[keep]}
 
-    return (
-        embeddings.select("vec_id", F.col(blocking).alias("block"), "embedding")
-        .groupBy("block")
-        .applyInPandas(block_pairs, "a_id BIGINT, b_id BIGINT, cos_sim DOUBLE")
+    return group_batches(
+        embeddings.select("vec_id", F.col(blocking).alias("block"), "embedding"),
+        ["block"],
+        block_pairs,
+        "a_id BIGINT, b_id BIGINT, cos_sim DOUBLE",
     )
+
+
+def _rounded_cosines(block: dict) -> tuple[np.ndarray, np.ndarray]:
+    """One block's vec_ids in ascending order and their pairwise cosine
+    matrix in that order, rounded half-up to 3 decimals (np.round is
+    banker's; Spark/DuckDB round half-up) — the pair view and the
+    SemDeDup keep-rule share this one arithmetic."""
+    order = np.argsort(block["vec_id"])
+    ids = block["vec_id"][order]
+    mat = block["embedding"][order].astype(np.float64)
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    sims = (mat / norms) @ (mat / norms).T
+    return ids, np.floor(sims * 1000 + 0.5) / 1000
 
 
 def fuzzy_levenshtein_pairs(
@@ -861,29 +866,20 @@ def _semdedup_kept(
     one giant dup group (the full pair list of a 1e5-member group is
     ~5e9 rows; this is 1e5). Same math, same half-up rounding as
     embedding_near_dup_pairs, which remains the diagnostic pair view."""
-    import numpy as np
-
     clustered = embeddings.select("vec_id", "embedding").join(assign, "vec_id")
 
-    def block_dropped(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        mat, ids = mat[order], ids[order]
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        sims = (mat / norms) @ (mat / norms).T
-        sims = np.floor(sims * 1000 + 0.5) / 1000
+    def block_dropped(block: dict) -> dict:
+        ids, sims = _rounded_cosines(block)
         # strictly-lower-triangular mask: col j dropped if any i<j row
         # clears the threshold
-        tri = np.tril(sims >= threshold, k=-1)
-        dropped_mask = tri.any(axis=1)
-        return pd.DataFrame({"vec_id": ids[dropped_mask]})
+        dropped_mask = np.tril(sims >= threshold, k=-1).any(axis=1)
+        return {"vec_id": ids[dropped_mask]}
 
-    dropped = (
-        clustered.select("vec_id", F.col("cluster").alias("block"), "embedding")
-        .groupBy("block")
-        .applyInPandas(block_dropped, "vec_id BIGINT")
+    dropped = group_batches(
+        clustered.select("vec_id", F.col("cluster").alias("block"), "embedding"),
+        ["block"],
+        block_dropped,
+        "vec_id BIGINT",
     )
     return (
         assign.join(dropped.withColumn("_d", F.lit(True)), "vec_id", "left_outer")
@@ -915,11 +911,11 @@ def semdedup_trained(
 
     Plan shape / 100 TB: the training loop's map-side GEMM + census
     partials (sample-sized at real scale), one broadcast-argmin
-    assignment pass, then ONE cluster-keyed applyInPandas whose output
-    is dropped-rows-only. n_lists scales with the corpus, bounding
-    cluster sizes, so the quadratic pair step never sees the whole
-    corpus — and unlike the seed variant the cluster count here is a
-    tuning knob, not a fixture constant."""
+    assignment pass, then ONE cluster-keyed grouped Arrow pass
+    (rowmap.group_batches) whose output is dropped-rows-only. n_lists
+    scales with the corpus, bounding cluster sizes, so the quadratic
+    pair step never sees the whole corpus — and unlike the seed variant
+    the cluster count here is a tuning knob, not a fixture constant."""
     from .similarity import trained_lists
 
     assign = trained_lists(embeddings, n_lists=n_lists, max_iter=max_iter).select(
@@ -1243,8 +1239,6 @@ def minhash_band_keys(df: DataFrame, n: int = 3) -> DataFrame:
     bottleneck, not the md5s. Map-only at any scale; the shuffle above
     carries (doc_id, band, bucket) only."""
     import hashlib
-
-    import numpy as np
 
     perms = MD5_MINHASH_PERMS
     a_c = np.array([_uhash_const(f"a{i}") for i in range(perms)], dtype=np.int64)

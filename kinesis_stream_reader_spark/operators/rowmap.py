@@ -1,14 +1,16 @@
-"""Arrow map adapters: run a plain Python kernel over a DataFrame in
-one ``mapInArrow`` pass.
+"""Arrow adapters: run a plain Python kernel over a DataFrame in one
+``mapInArrow`` or ``applyInArrow`` pass.
 
 ``map_rows``: a media kernel decodes, explodes or parses ONE record and
 returns its output rows. ``map_batches``: a numpy kernel scores a whole
 Arrow batch of vectors at once (GEMMs, argmins, census partials).
-Everything around the kernel — reading the Arrow columns, building
-typed RecordBatches from the Arrow schema derived once from the DDL —
-lives here once instead of in a hand-written closure per kernel, with
-no pandas round trip. Payloads stay opaque to the JVM (no codegen over
-blob contents) and one task never holds more than
+``group_batches``: a numpy kernel sees one whole group, or one
+cogrouped pair of groups (a top-k grid cell, a dedup block, a fixture
+shard). Everything around the kernel — reading the Arrow columns,
+building typed RecordBatches from the Arrow schema derived once from
+the DDL — lives here once instead of in a hand-written closure per
+kernel, with no pandas round trip. Payloads stay opaque to the JVM (no
+codegen over blob contents) and a map task never holds more than
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` input rows at a time.
 """
 
@@ -72,33 +74,83 @@ def map_batches(
     A null vector, a null element or unequal widths in an array column
     raise ``ValueError`` naming the column.
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-
-    def to_record_batch(out: dict):
-        cols = []
-        for field in arrow_schema:
-            col = np.asarray(out[field.name])
-            if col.ndim == 2:
-                offsets = np.arange(len(col) + 1) * col.shape[1]
-                cols.append(
-                    pa.ListArray.from_arrays(
-                        pa.array(offsets, pa.int32()),
-                        pa.array(col.ravel(), field.type.value_type),
-                    )
-                )
-            else:
-                cols.append(pa.array(col, field.type))
-        return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+    arrow_schema = _arrow_schema(schema)
 
     def batches(it):
         inputs = (_batch_columns(b) for b in it if b.num_rows)
         for out in kernel(inputs):
-            yield to_record_batch(out)
+            yield _record_batch(out, arrow_schema)
 
     return df.mapInArrow(batches, schema)
+
+
+def group_batches(
+    df: DataFrame,
+    keys: list[str],
+    kernel: Callable[..., dict],
+    schema: str,
+    other: DataFrame | None = None,
+) -> DataFrame:
+    """Run the numpy ``kernel`` once per ``keys`` group of ``df``; the
+    result has DDL ``schema``.
+
+    ``kernel`` receives the group as one ``{column: ndarray}`` dict, key
+    columns included, shaped as in ``map_batches`` (and rejecting the
+    same malformed vectors), and returns one dict of output columns.
+    With ``other``, both sides are grouped by ``keys`` and cogrouped:
+    ``kernel(left, right)`` runs once per key present on either side,
+    and a side with no rows for the key arrives as a 0-row dict. A group
+    is held in memory whole, so the caller bounds group sizes (grid
+    cells, clusters, shards).
+    """
+    import pyarrow as pa
+
+    arrow_schema = _arrow_schema(schema)
+
+    def columns(table) -> dict:
+        return _batch_columns(
+            pa.RecordBatch.from_arrays(
+                [c.combine_chunks() for c in table.columns], schema=table.schema
+            )
+        )
+
+    def table(out: dict):
+        return pa.Table.from_batches([_record_batch(out, arrow_schema)])
+
+    grouped = df.groupBy(*keys)
+    if other is None:
+        return grouped.applyInArrow(lambda t: table(kernel(columns(t))), schema)
+    return grouped.cogroup(other.groupBy(*keys)).applyInArrow(
+        lambda lt, rt: table(kernel(columns(lt), columns(rt))), schema
+    )
+
+
+def _arrow_schema(schema: str):
+    """The Arrow schema of DDL ``schema``, derived once on the driver."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(StructType.fromDDL(schema))
+
+
+def _record_batch(out: dict, arrow_schema):
+    """Kernel output ``{column: ndarray}`` as a RecordBatch typed by
+    ``arrow_schema``; a 2-D value becomes an ARRAY column."""
+    import pyarrow as pa
+
+    cols = []
+    for field in arrow_schema:
+        col = np.asarray(out[field.name])
+        if col.ndim == 2:
+            offsets = np.arange(len(col) + 1) * col.shape[1]
+            cols.append(
+                pa.ListArray.from_arrays(
+                    pa.array(offsets, pa.int32()),
+                    pa.array(col.ravel(), field.type.value_type),
+                )
+            )
+        else:
+            cols.append(pa.array(col, field.type))
+    return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
 def _batch_columns(batch) -> dict:
@@ -117,13 +169,14 @@ def _batch_columns(batch) -> dict:
         if values.null_count:
             raise ValueError(f"column {name!r}: null vector element")
         widths = pc.list_value_length(col).to_numpy()
-        if (widths != widths[0]).any():
+        width = int(widths[0]) if len(widths) else 0
+        if (widths != width).any():
             raise ValueError(
                 f"column {name!r}: unequal vector widths "
                 f"{int(widths.min())}..{int(widths.max())}"
             )
         cols[name] = values.to_numpy(zero_copy_only=False).reshape(
-            len(col), int(widths[0])
+            len(col), width
         )
     return cols
 

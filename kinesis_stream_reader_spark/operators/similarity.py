@@ -23,14 +23,13 @@ int64, ties to the lowest id, bit-identical to the SQL oracles.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import ivfpq
 from .dedup import _as_double, cosine
-from .rowmap import map_batches
+from .rowmap import group_batches, map_batches
 from ..session import env_int
 
 # 16 fixed Gaussian hyperplanes for sign-LSH, generated from a seeded
@@ -1585,37 +1584,31 @@ def knn_graph(
     return _block_topk_mips(emb, cand, k=k, blocks=blocks)
 
 
-def _topk_mips_cell(lpdf: pd.DataFrame, rpdf: pd.DataFrame, k: int) -> pd.DataFrame:
-    """One co-grouped cell of an exact-MIPS top-k: lpdf carries
-    (vec_id, qv), rpdf (cand_id, cv), both integer-quantized; emits the
-    cell-local top-k per query by (dot desc, cand_id asc), self rows
-    (vec_id == cand_id) excluded. Shared by the block-grid exact kernel
-    (_block_topk_mips) and the IVF-list-pruned kernel (ivf_knn_graph) —
-    one arithmetic, two pruning layouts."""
-    import numpy as np
-
+def _topk_mips_cell(left: dict, right: dict, k: int) -> dict:
+    """One cell of an exact-MIPS top-k: ``left`` carries (vec_id, qv),
+    ``right`` (cand_id, cv), both integer-quantized; returns the
+    cell-local top-k per query by (dot desc, cand_id asc) as
+    (vec_id, neighbor_id, dot_q) arrays, self rows (vec_id == cand_id)
+    excluded. Every layout — the exact hash grid, IVF lists, sub-blocked
+    lists — runs this one arithmetic (see _grid_topk)."""
     # self-mask sentinel: far below any real dot (|dot| <= dims*|q|^2 ~
     # 2^32) yet safely negatable — int64.min would overflow back to
     # itself under the lexsort's negation and rank masked entries FIRST
     neg_inf = -(1 << 62)
-    empty = pd.DataFrame({"vec_id": [], "neighbor_id": [], "dot_q": []})
-    if lpdf.empty or rpdf.empty:
-        return empty.astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "dot_q": "int64"}
-        )
+    qid, cid = left["vec_id"], right["cand_id"]
+    if not len(qid) or not len(cid):
+        empty = np.empty(0, np.int64)
+        return {"vec_id": empty, "neighbor_id": empty, "dot_q": empty}
     # float64 GEMM on integer-valued matrices: every dot is an exact
     # integer far below 2^53 (dims * |q|^2 ~ 2^32), and float64
     # addition of exact integers under 2^53 is associative-exact, so
     # BLAS gives bit-identical integers ~100x faster than numpy's
     # non-BLAS int64 matmul path.
-    Q = np.array(lpdf["qv"].tolist(), dtype=np.float64)
-    qid = lpdf["vec_id"].to_numpy()
-    C = np.array(rpdf["cv"].tolist(), dtype=np.float64)
-    cid = rpdf["cand_id"].to_numpy()
+    Q = left["qv"].astype(np.float64)
     # candidates sorted by id once per cell: column position then
     # stands in for the id tie-break inside the composite key below
     corder = np.argsort(cid, kind="stable")
-    C, cid = C[corder], cid[corder]
+    C, cid = right["cv"][corder].astype(np.float64), cid[corder]
     nc = C.shape[0]
     kk = min(k, nc)
     # composite int64 key = dot * npow + (reverse column position):
@@ -1631,10 +1624,9 @@ def _topk_mips_cell(lpdf: pd.DataFrame, rpdf: pd.DataFrame, k: int) -> pd.DataFr
     # chunk the query side so the score matrix stays ~100 MB no
     # matter how large the grid cell is (memory safety at scale)
     chunk = max(1, (100 << 20) // (8 * max(1, nc)))
-    outs = []
+    vec, nbr, dots = [], [], []
     for s in range(0, Q.shape[0], chunk):
-        D = Q[s : s + chunk] @ C.T
-        Di = D.astype(np.int64)
+        Di = (Q[s : s + chunk] @ C.T).astype(np.int64)
         key = Di * npow + (nc - 1 - colpos)[None, :]
         self_mask = qid[s : s + chunk, None] == cid[None, :]
         key[self_mask] = neg_inf  # never selected ahead of real dots
@@ -1646,29 +1638,83 @@ def _topk_mips_cell(lpdf: pd.DataFrame, rpdf: pd.DataFrame, k: int) -> pd.DataFr
         pk = np.take_along_axis(key, part, axis=1)
         order = np.argsort(-pk, axis=1, kind="stable")
         sel = np.take_along_axis(part, order, axis=1)
-        dot = np.take_along_axis(Di, sel, axis=1)
-        nbr = cid[sel]
-        keep = dot.ravel() != neg_inf
-        outs.append(
-            pd.DataFrame(
-                {
-                    "vec_id": np.repeat(qid[s : s + chunk], kk)[keep],
-                    "neighbor_id": nbr.ravel()[keep],
-                    "dot_q": dot.ravel()[keep],
-                }
-            )
-        )
-    return pd.concat(outs, ignore_index=True)
+        dot = np.take_along_axis(Di, sel, axis=1).ravel()
+        keep = dot != neg_inf
+        vec.append(np.repeat(qid[s : s + chunk], kk)[keep])
+        nbr.append(cid[sel].ravel()[keep])
+        dots.append(dot[keep])
+    return {
+        "vec_id": np.concatenate(vec),
+        "neighbor_id": np.concatenate(nbr),
+        "dot_q": np.concatenate(dots),
+    }
+
+
+def _grid_topk(
+    queries: DataFrame, candidates: DataFrame, k: int, b: int, n_lists: int = 1
+) -> DataFrame:
+    """The one exact-MIPS top-k grid: (vec_id, rank, neighbor_id,
+    dot_q), each query's top-k candidates by (dot desc, id), rank 1..k,
+    self excluded. `queries` is (vec_id, qv), `candidates` (cand_id,
+    cv), both already quantized. With a list_id column on both sides
+    (IVF: probed lists x list members) the grid runs inside each list
+    (`n_lists` of them); without it the whole input is one list.
+
+    Each list is split into a b x b hash grid (qb = vec_id mod b, cb =
+    cand_id mod b; each side replicated b times), every (list, qb, cb)
+    cell runs _topk_mips_cell in one cogroup, and one (dot desc, id)
+    window merges the cell-local top-k rows per query. The cells cover
+    every (query, candidate) pair of a list exactly once and each keeps
+    its exact top-k, so the result is invariant in b; b only trades
+    per-cell Arrow+Python round trips against parallelism of the
+    quadratic GEMM."""
+    keys = ["qb", "cb"]
+    if "list_id" in queries.columns:
+        keys.insert(0, "list_id")
+    grid = queries.sparkSession.range(b * b).select(
+        F.pmod(F.col("id"), F.lit(b)).cast("int").alias("qb"),
+        F.floor(F.col("id") / b).cast("int").alias("cb"),
+    )
+    # Distinct column names on the candidate side keep the self-join
+    # lineage unambiguous (both sides may derive from the same scan).
+    left = queries.withColumn(
+        "qb", F.pmod(F.col("vec_id"), F.lit(b)).cast("int")
+    ).join(F.broadcast(grid), "qb")
+    right = candidates.withColumn(
+        "cb", F.pmod(F.col("cand_id"), F.lit(b)).cast("int")
+    ).join(F.broadcast(grid), "cb")
+    if b > 1:
+        # USER repartition (not the groupBy's own exchange): AQE
+        # coalesces exchanges by BYTES, but a sub-blocked cell's GEMM
+        # cost is quadratic in its rows — byte-sized coalescing
+        # under-parallelizes the compute by 3-5x on small fixtures. AQE
+        # leaves user-specified repartitioning alone, so the cells stay
+        # spread across the cluster. At b = 1 each list is one cell the
+        # sizing already keeps small, and pinning one Python task per
+        # list measured slower than the coalesced exchange.
+        n_cells = n_lists * b * b
+        left = left.repartition(n_cells, *keys)
+        right = right.repartition(n_cells, *keys)
+    partial = group_batches(
+        left,
+        keys,
+        lambda lcell, rcell: _topk_mips_cell(lcell, rcell, k),
+        "vec_id BIGINT, neighbor_id BIGINT, dot_q BIGINT",
+        other=right,
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("dot_q").desc(), "neighbor_id")
+    return (
+        partial.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("vec_id", "rank", "neighbor_id", "dot_q")
+    )
 
 
 def _block_topk_mips(
     queries: DataFrame, candidates: DataFrame, k: int, blocks: int | None
 ) -> DataFrame:
-    """Shared block-grid exact-MIPS kernel: top-k candidates per query
-    by integer dot product. `queries` is (vec_id, qv), `candidates` is
-    (cand_id, cv) — both already quantized; rows where vec_id ==
-    cand_id are excluded (self is never a neighbor). Output:
-    (vec_id, rank, neighbor_id, dot_q), rank 1..k by (dot desc, id).
+    """Exact-MIPS top-k over the whole input (_grid_topk with one list),
+    ordered by (vec_id, rank).
 
     blocks=None auto-sizes the grid so a block holds ~1000 vectors
     (capped at 64 blocks = 4096 cells): the result is invariant in
@@ -1680,54 +1726,10 @@ def _block_topk_mips(
     counts cost one metadata-only action each on a parquet source."""
     import math
 
-    import numpy as np
-
-    spark = queries.sparkSession
     if blocks is None:
         n = max(queries.count(), candidates.count(), 1)
         blocks = max(1, min(64, math.ceil(n / 1000)))
-    grid = spark.range(blocks * blocks).select(
-        F.pmod(F.col("id"), F.lit(blocks)).cast("int").alias("qb"),
-        F.floor(F.col("id") / blocks).cast("int").alias("cb"),
-    )
-    # USER repartition (not the groupBy's own exchange): AQE coalesces
-    # exchanges by BYTES, but a grid cell's GEMM cost is quadratic in its
-    # rows — byte-sized coalescing under-parallelizes the compute by 3-5x
-    # on small fixtures. AQE leaves user-specified repartitioning alone,
-    # so the blocks^2 cells stay spread across the cluster.
-    left = (
-        queries.withColumn(
-            "qb", F.pmod(F.col("vec_id"), F.lit(blocks)).cast("int")
-        )
-        .join(F.broadcast(grid), "qb")
-        .repartition(blocks * blocks, "qb", "cb")
-    )
-    # distinct column names on the candidate side keep the self-join
-    # lineage unambiguous (both sides may derive from the same scan)
-    right = (
-        candidates.withColumn(
-            "cb", F.pmod(F.col("cand_id"), F.lit(blocks)).cast("int")
-        )
-        .join(F.broadcast(grid), "cb")
-        .repartition(blocks * blocks, "qb", "cb")
-    )
-    def block_topk(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        return _topk_mips_cell(lpdf, rpdf, k)
-
-    partial = (
-        left.groupBy("qb", "cb")
-        .cogroup(right.groupBy("qb", "cb"))
-        .applyInPandas(block_topk, "vec_id BIGINT, neighbor_id BIGINT, dot_q BIGINT")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("dot_q").desc(), "neighbor_id")
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "dot_q"
-        )
-        .orderBy("vec_id", "rank")
-    )
+    return _grid_topk(queries, candidates, k, blocks).orderBy("vec_id", "rank")
 
 
 def _listed(embeddings: DataFrame, lists: DataFrame | None) -> DataFrame:
@@ -1912,7 +1914,7 @@ def ivf_knn_graph(
     linear in N once lists scale with the corpus, the documented scale
     path ('ann_ivf's list_id replaces the hash block').
 
-    Same arithmetic as knn_graph (the shared _topk_mips_cell), same
+    Same arithmetic as knn_graph (the shared _grid_topk), same
     output contract (vec_id, rank, neighbor_id, dot_q); results differ
     from the exact graph only where a true neighbor lives outside the
     probed lists — measure that with ivf_knn_recall_report before
@@ -1924,20 +1926,17 @@ def ivf_knn_graph(
     (each candidate lives in exactly one list). At scale list_id is the
     table's partition key, so the cogroup co-locates with the layout."""
     probes = ivf_probes(embeddings, nprobe=nprobe, metric="ip", lists=lists)
-    cand = _listed(embeddings, lists).select(
+    return _ivf_list_grid_topk(
+        probes, _ivf_candidates(embeddings, lists), embeddings, k, lists
+    ).orderBy("vec_id", "rank")
+
+
+def _ivf_candidates(embeddings: DataFrame, lists: DataFrame | None) -> DataFrame:
+    """(list_id, cand_id, cv): every vector as a member of its list."""
+    return _listed(embeddings, lists).select(
         "list_id",
         F.col("vec_id").alias("cand_id"),
         _quantized_vec(F.col("embedding")).alias("cv"),
-    )
-    partial = _ivf_list_grid_topk(probes, cand, embeddings, k, lists)
-    w = Window.partitionBy("vec_id").orderBy(F.col("dot_q").desc(), "neighbor_id")
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "dot_q"
-        )
-        .orderBy("vec_id", "rank")
     )
 
 
@@ -1948,14 +1947,12 @@ def _ivf_list_grid_topk(
     k: int,
     lists: DataFrame | None = None,
 ) -> DataFrame:
-    """The IVF cogroup with SUB-BLOCKED list cells: a corpus with few
-    inverted lists (the 10-label fixture; any under-sharded index)
-    yields only n_lists cogroup cells — starving a 32-core executor and
-    leaving each cell's GEMM huge. Each (query-side, candidate-side)
-    list cell is therefore split into a B x B hash grid exactly like
-    _block_topk_mips's (the per-cell top-k then global merge argument
-    makes the result invariant in B), restoring L * B^2-way
-    parallelism while keeping the nprobe/L pruning.
+    """_grid_topk over the inverted lists, with SUB-BLOCKED list cells:
+    a corpus with few inverted lists (the 10-label fixture; any under-
+    sharded index) would yield only n_lists cells — starving a 32-core
+    executor and leaving each cell's GEMM huge. Each list is therefore
+    split into a B x B hash grid, restoring L * B^2-way parallelism
+    while keeping the nprobe/L pruning.
 
     B auto-sizes to ~1000-candidate cells from one metadata-cheap agg
     (count + distinct labels) — an eager action, same contract as
@@ -1963,46 +1960,62 @@ def _ivf_list_grid_topk(
     `cand` (list_id, cand_id, cv)."""
     import math
 
-    spark = embeddings.sparkSession
     sized = embeddings.select(F.col("label").alias("list_id")) if lists is None else lists
     n, n_lists = (
         sized.agg(
             F.count("*").alias("n"), F.countDistinct("list_id").alias("l")
         ).first()
     )
-    b = max(1, min(8, math.ceil(n / max(int(n_lists), 1) / 1000)))
-    if b == 1:
-        return (
-            probes.groupBy("list_id")
-            .cogroup(cand.groupBy("list_id"))
-            .applyInPandas(
-                lambda lpdf, rpdf: _topk_mips_cell(lpdf, rpdf, k),
-                "vec_id BIGINT, neighbor_id BIGINT, dot_q BIGINT",
-            )
+    n_lists = max(int(n_lists), 1)
+    b = max(1, min(8, math.ceil(n / n_lists / 1000)))
+    return _grid_topk(probes, cand, k, b, n_lists)
+
+
+def _l2_knn(queries: DataFrame, candidates: DataFrame, topk) -> DataFrame:
+    """Exact-L2 kNN through an exact-MIPS top-k: (vec_id, neighbor_id,
+    dq) with dq = round(sqrt(d2)) on exact-integer d2. `queries` is
+    (vec_id, qv), `candidates` (cand_id, cv), quantized, with every
+    query id among the candidates; extra columns (list_id) pass through
+    to `topk(queries, candidates)`, a _grid_topk layout. The classic
+    MIPS reduction (query -> (2v, 1), candidate -> (v, -|c|^2)) turns
+    argmin-d2 into argmax-dot, ties by id, so the shared cell kernel
+    applies unchanged; then d2 = |a|^2 - dot_q."""
+
+    def sq_norm(v: Column) -> Column:
+        return F.aggregate(
+            F.transform(v, lambda x: x * x), F.lit(0).cast("long"), lambda acc, x: acc + x
         )
-    grid = spark.range(b * b).select(
-        F.pmod(F.col("id"), F.lit(b)).cast("int").alias("qb"),
-        F.floor(F.col("id") / b).cast("int").alias("cb"),
+
+    n2 = candidates.select(F.col("cand_id").alias("vec_id"), sq_norm(F.col("cv")).alias("nn"))
+    lifted = topk(
+        queries.withColumn(
+            "qv",
+            F.concat(
+                F.transform("qv", lambda x: x * F.lit(2)), F.array(F.lit(1).cast("long"))
+            ),
+        ),
+        candidates.withColumn(
+            "cv", F.concat(F.col("cv"), F.array(-sq_norm(F.col("cv"))))
+        ),
     )
-    n_cells = int(n_lists) * b * b
-    left = (
-        probes.withColumn("qb", F.pmod(F.col("vec_id"), F.lit(b)).cast("int"))
-        .join(F.broadcast(grid), "qb")
-        .repartition(n_cells, "list_id", "qb", "cb")
+    return lifted.join(n2, "vec_id").select(
+        "vec_id",
+        "neighbor_id",
+        F.floor(F.sqrt((F.col("nn") - F.col("dot_q")).cast("double")) + F.lit(0.5))
+        .cast("long")
+        .alias("dq"),
     )
-    right = (
-        cand.withColumn("cb", F.pmod(F.col("cand_id"), F.lit(b)).cast("int"))
-        .join(F.broadcast(grid), "cb")
-        .repartition(n_cells, "list_id", "qb", "cb")
-    )
-    return (
-        left.groupBy("list_id", "qb", "cb")
-        .cogroup(right.groupBy("list_id", "qb", "cb"))
-        .applyInPandas(
-            lambda lpdf, rpdf: _topk_mips_cell(lpdf, rpdf, k),
-            "vec_id BIGINT, neighbor_id BIGINT, dot_q BIGINT",
-        )
-    )
+
+
+def knn_l2(
+    embeddings: DataFrame, k: int = 5, blocks: int | None = None
+) -> DataFrame:
+    """Exact L2 kNN over the whole corpus, self excluded: (vec_id,
+    neighbor_id, dq), the input to lof_from_knn. knn_graph's block grid
+    under the L2 -> MIPS lift of _l2_knn."""
+    qv = embeddings.select("vec_id", _quantized_vec(F.col("embedding")).alias("qv"))
+    cand = qv.select(F.col("vec_id").alias("cand_id"), F.col("qv").alias("cv"))
+    return _l2_knn(qv, cand, lambda q, c: _block_topk_mips(q, c, k, blocks))
 
 
 def ivf_knn_l2(
@@ -2011,63 +2024,23 @@ def ivf_knn_l2(
     nprobe: int = 2,
     lists: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-pruned exact-L2 kNN within probed lists: (vec_id,
-    neighbor_id, dq) with dq = round(sqrt(d2)) on exact-integer d2 —
-    the pruned candidate generator for density-based reports (LOF).
-    Probing uses the L2 centroid key; within candidates the classic
-    MIPS reduction (query -> (2v, 1), candidate -> (v, -|c|^2)) turns
-    argmin-d2 into argmax-dot so the shared cell kernel applies
-    unchanged, then d2 = |a|^2 - dot_q."""
+    """IVF-pruned exact-L2 kNN within probed lists: knn_l2's output
+    (vec_id, neighbor_id, dq) — the pruned candidate generator for
+    density-based reports (LOF). Probing uses the L2 centroid key;
+    within candidates the lift of _l2_knn applies unchanged."""
     probes = ivf_probes(embeddings, nprobe=nprobe, metric="l2", lists=lists)
-    left = probes.select(
-        "list_id",
-        "vec_id",
-        F.concat(
-            F.transform("qv", lambda x: x * F.lit(2)),
-            F.array(F.lit(1).cast("long")),
-        ).alias("qv"),
-    )
-    qv = _listed(embeddings, lists).select(
-        "vec_id",
-        "list_id",
-        _quantized_vec(F.col("embedding")).alias("v"),
-    )
-    n2 = qv.select(
-        "vec_id",
-        F.aggregate(
-            F.transform("v", lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("nn"),
-    )
-    cand = qv.join(n2, "vec_id").select(
-        "list_id",
-        F.col("vec_id").alias("cand_id"),
-        F.concat(F.col("v"), F.array(-F.col("nn"))).alias("cv"),
-    )
-    partial = _ivf_list_grid_topk(left, cand, embeddings, k, lists)
-    w = Window.partitionBy("vec_id").orderBy(F.col("dot_q").desc(), "neighbor_id")
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .join(n2, "vec_id")
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.floor(
-                F.sqrt((F.col("nn") - F.col("dot_q")).cast("double")) + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dq"),
-        )
+    return _l2_knn(
+        probes,
+        _ivf_candidates(embeddings, lists),
+        lambda q, c: _ivf_list_grid_topk(q, c, embeddings, k, lists),
     )
 
 
 def lof_from_knn(knn: DataFrame, k: int = 5) -> DataFrame:
     """Breunig et al. LOF chain over ANY (vec_id, neighbor_id, dq) kNN
     relation — reachability distances, integer lrd (5e12 DIV sum-reach),
-    integer LOF ratios; the arithmetic of lof_outlier_scores verbatim so
-    the exact and IVF-pruned reports share one scoring definition.
+    integer LOF ratios; the exact (knn_l2) and IVF-pruned (ivf_knn_l2)
+    LOF reports share this one scoring definition.
     Everything after the kNN is three vec_id-keyed joins over k-bounded
     rows — linear.
 

@@ -3780,13 +3780,16 @@ def wordpiece_encode_words(
     segments (a word the vocab cannot cover is dropped). Shared by the
     batch encode (a distinct-word census) and the streaming encode (one
     row per occurrence); the vocab is a frozen driver-held set in
-    both."""
+    both. Each task segments a distinct word once, through the same
+    per-task closure memo as bytelevel_encode_words."""
+    memo: dict = {}
 
     def encode(word, n):
-        pieces = _wordpiece_segment(word, vocab, max_piece)
-        if pieces is None:
-            return []
-        return [(word, n, " ".join(pieces), len(pieces))]
+        if word not in memo:
+            pieces = _wordpiece_segment(word, vocab, max_piece)
+            memo[word] = None if pieces is None else (" ".join(pieces), len(pieces))
+        got = memo[word]
+        return [] if got is None else [(word, n, *got)]
 
     return map_rows(
         words.select("word", "n"),

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 from ..scratch import scratch
 from ._shared import load_table, register
 from ..operators import tiny_df
-from ..operators.rowmap import doc_id_seed, map_rows
+from ..operators.rowmap import doc_id_seed, group_batches, map_rows
 
 
 # ---------------------------------------------------------------------------
@@ -89,25 +89,21 @@ def _reshard_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
         _RESHARD_ROUTING_SQL.format(div="DIV", tbl="ksr_reshard_events")
     )
 
-    def dump(pdf):
-        import pandas as pd
-
-        shard = str(pdf["shard_id"].iloc[0])
+    def dump(group: dict) -> dict:
+        shard = str(group["shard_id"][0])
         write_reshard_shard_file(
             d,
             shard,
             [
                 (int(s), int(k), str(int(e)).encode())
-                for s, k, e in zip(pdf["seq"], pdf["key"], pdf["event_id"])
+                for s, k, e in zip(group["seq"], group["key"], group["event_id"])
             ],
         )
-        return pd.DataFrame({"shard_id": [shard], "n": [len(pdf)]})
+        return {"shard_id": [shard], "n": [len(group["seq"])]}
 
     # executor-side per-shard file write (local-mode shared scratch; a
     # cluster would target shared storage), same pattern as ksr_pyds
-    routed.groupBy("shard_id").applyInPandas(
-        dump, "shard_id string, n long"
-    ).count()
+    group_batches(routed, ["shard_id"], dump, "shard_id string, n long").count()
     spark.catalog.dropTempView("ksr_reshard_events")
     write_reshard_manifest(d, _RESHARD_LINEAGE)
     return d

@@ -307,8 +307,9 @@ def _ensure_pyds_fixture(spark: SparkSession, sf_dir: str) -> str:
     cleared and rebuilt, never read as complete."""
     import shutil
 
-    import pandas as _pd
+    import numpy as np
 
+    from ..operators.rowmap import group_batches
     from ..sources.python_source import KinesisBackfillDataSource, write_shard_file
     from ..sources.raw import kpl_raw_records
 
@@ -318,22 +319,22 @@ def _ensure_pyds_fixture(spark: SparkSession, sf_dir: str) -> str:
     if not os.path.exists(marker):
         shutil.rmtree(shard_dir, ignore_errors=True)
         os.makedirs(shard_dir)
-        raw = kpl_raw_records(spark, sf_dir).withColumn(
-            "shard", (F.col("agg_id") % 4).cast("int")
+        raw = kpl_raw_records(spark, sf_dir).select(
+            (F.col("agg_id") % 4).cast("int").alias("shard"), "agg_id", "data"
         )
 
-        def dump(pdf: _pd.DataFrame) -> _pd.DataFrame:
+        def dump(group: dict) -> dict:
             # executor-side shard-file write (local-mode shared /tmp;
             # a cluster would target shared storage)
-            pdf = pdf.sort_values("agg_id")
-            shard = int(pdf["shard"].iloc[0])
+            shard = int(group["shard"][0])
+            order = np.argsort(group["agg_id"], kind="stable")
             write_shard_file(
                 f"{shard_dir}/shard-{shard}.jsonl",
-                [bytes(b) for b in pdf["data"]],
+                [bytes(b) for b in group["data"][order]],
             )
-            return _pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
+            return {"shard": [shard], "n": [len(order)]}
 
-        raw.groupBy("shard").applyInPandas(dump, "shard INT, n INT").count()
+        group_batches(raw, ["shard"], dump, "shard INT, n INT").count()
         open(marker, "w").close()
     return shard_dir
 

@@ -3392,82 +3392,11 @@ def lof_outlier_scores_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape / 100 TB: the kNN is the documented block-grid exact
     diagnostic (IVF pruning replaces the grid at scale — ann_ivf's
     layout); everything after is three joins keyed on vec_id over
-    k-bounded rows. Linear beyond the kNN."""
-    from ..operators.similarity import _block_topk_mips
+    k-bounded rows (similarity.lof_from_knn, shared with the IVF
+    twins). Linear beyond the kNN."""
+    from ..operators.similarity import knn_l2, lof_from_knn
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("long"),
-        ).alias("v"),
-    )
-    n2 = qv.select(
-        "vec_id",
-        F.aggregate(
-            F.transform("v", lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("nn"),
-    )
-    queries = qv.join(n2, "vec_id").select(
-        "vec_id",
-        F.concat(
-            F.transform("v", lambda x: x * F.lit(2)), F.array(F.lit(1).cast("long"))
-        ).alias("qv"),
-    )
-    cands = qv.join(n2, "vec_id").select(
-        F.col("vec_id").alias("cand_id"),
-        F.concat(F.col("v"), F.array(-F.col("nn"))).alias("cv"),
-    )
-    knn_aug = _block_topk_mips(queries, cands, k=5, blocks=None)
-    # dot_q = 2*dot - |c|^2  ->  d2 = |a|^2 - dot_q
-    # knn is referenced by the k-dist census, the reachability join and
-    # the LOF ratio join — lazy-checkpoint so the block-GEMM subtree
-    # plans and executes once (round 13, guide §7.3)
-    knn = (
-        knn_aug.join(n2, "vec_id")
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.floor(
-                F.sqrt((F.col("nn") - F.col("dot_q")).cast("double")) + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dq"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    kd = knn.groupBy("vec_id").agg(F.max("dq").alias("k_dist"))
-    reach = knn.join(
-        kd.select(F.col("vec_id").alias("neighbor_id"), F.col("k_dist").alias("kd_b")),
-        "neighbor_id",
-    ).select("vec_id", F.greatest(F.col("kd_b"), F.col("dq")).alias("r"))
-    lrd = reach.groupBy("vec_id").agg(
-        F.expr("5000000000000L DIV GREATEST(SUM(r), 1L)").alias("lrd_q")
-    )
-    lof = (
-        knn.join(
-            lrd.select(F.col("vec_id").alias("neighbor_id"), F.col("lrd_q").alias("lrd_b")),
-            "neighbor_id",
-        )
-        .join(lrd, "vec_id")
-        .groupBy("vec_id", "lrd_q")
-        .agg(F.expr("SUM(lrd_b) * 1000000L DIV (5 * FIRST(lrd_q))").alias("lof_q"))
-    )
-    return (
-        lof.join(kd, "vec_id")
-        .select(
-            "vec_id",
-            F.col("k_dist").cast("long").alias("k_dist"),
-            (F.floor(F.col("lof_q").cast("double") / 1e6 * 1e4 + F.lit(0.5)) / 1e4).alias(
-                "lof"
-            ),
-        )
-        .orderBy("vec_id")
-    )
-
+    return lof_from_knn(knn_l2(load_table(spark, sf_dir, "embeddings"), k=5), k=5)
 
 
 def _mcnemar_oracle() -> str:

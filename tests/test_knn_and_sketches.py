@@ -344,6 +344,36 @@ def test_ivf_knn_graph_full_probe_recovers_exact(spark, sf_dir):
     assert full == exact
 
 
+def test_topk_grid_is_invariant_in_its_blocking(spark, sf_dir):
+    """The exact top-k keeps each cell's exact top-k and merges them, so
+    the hash grid cannot change the rows: knn_graph at blocks 1, 2, 3
+    and auto is identical, and the IVF layout with sub-blocked lists
+    (b > 1, which auto-sizing reaches only past ~1000 vectors per list)
+    equals whole-list cells (b = 1). With more cells than vectors many
+    cells have one empty side."""
+    from kinesis_stream_reader_spark.operators import similarity
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    graphs = [
+        [tuple(r) for r in similarity.knn_graph(emb, k=5, blocks=b).collect()]
+        for b in (1, 2, 3, None)
+    ]
+    assert graphs[0] and all(g == graphs[0] for g in graphs[1:])
+
+    probes = similarity.ivf_probes(emb, nprobe=2, metric="ip")
+    cand = similarity._ivf_candidates(emb, None)
+    n_lists = emb.select("label").distinct().count()
+
+    def ivf_grid(b):
+        return sorted(
+            tuple(r)
+            for r in similarity._grid_topk(probes, cand, 5, b, n_lists).collect()
+        )
+
+    whole = ivf_grid(1)
+    assert whole and ivf_grid(2) == whole and ivf_grid(3) == whole
+
+
 def test_lof_ivf_full_probe_recovers_exact(spark, sf_dir):
     """ivf_knn_l2 at nprobe = n_lists + lof_from_knn must reproduce the
     exact LOF query's scores exactly (same arithmetic, no pruning)."""

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from kinesis_stream_reader_spark.operators import multimodal
 from kinesis_stream_reader_spark.sources.tables import load_table
@@ -71,28 +72,85 @@ def test_map_rows_closure_state_is_per_task(spark):
 )
 def test_map_batches_rejects_malformed_vectors(spark, rows, message):
     """A null vector, a null element or ragged widths fail loudly with
-    the column named, not with an opaque numpy error."""
-    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+    the column named, not with an opaque numpy error — per batch
+    (map_batches) and per group (group_batches, one or two sides)."""
+    from kinesis_stream_reader_spark.operators.rowmap import (
+        group_batches,
+        map_batches,
+    )
 
     def identity(batches):  # nested: pickled by value for the workers
         yield from batches
 
-    df = spark.createDataFrame(rows, "id BIGINT, v ARRAY<BIGINT>").coalesce(1)
-    out = map_batches(df, identity, "id BIGINT, v ARRAY<BIGINT>")
-    with pytest.raises(Exception, match=f"ValueError: column 'v': {message}"):
-        out.collect()
+    schema = "id BIGINT, v ARRAY<BIGINT>"
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    grouped = df.withColumn("g", F.lit(1))
+    outs = [
+        map_batches(df, identity, schema),
+        group_batches(grouped, ["g"], lambda group: group, schema),
+        group_batches(
+            grouped, ["g"], lambda left, right: right, schema, other=grouped
+        ),
+    ]
+    for out in outs:
+        with pytest.raises(Exception, match=f"ValueError: column 'v': {message}"):
+            out.collect()
 
 
 def test_map_batches_empty_input_keeps_schema(spark):
-    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+    from kinesis_stream_reader_spark.operators.rowmap import (
+        group_batches,
+        map_batches,
+    )
 
     def identity(batches):
         yield from batches
 
-    df = spark.createDataFrame([], "id BIGINT, v ARRAY<BIGINT>")
-    out = map_batches(df, identity, "id BIGINT, v ARRAY<BIGINT>")
-    assert out.collect() == []
-    assert out.schema.simpleString() == "struct<id:bigint,v:array<bigint>>"
+    schema = "id BIGINT, v ARRAY<BIGINT>"
+    df = spark.createDataFrame([], schema)
+    outs = [
+        map_batches(df, identity, schema),
+        group_batches(df, ["id"], lambda group: group, schema),
+        group_batches(df, ["id"], lambda left, right: left, schema, other=df),
+    ]
+    for out in outs:
+        assert out.collect() == []
+        assert out.schema.simpleString() == "struct<id:bigint,v:array<bigint>>"
+
+
+def test_group_batches_cogroup_empty_side_is_zero_row_dict(spark):
+    """A key present on one cogroup side only reaches the kernel with a
+    0-row dict for the other side: every column present, 1-D scalars,
+    an empty 2-D array column."""
+    from kinesis_stream_reader_spark.operators.rowmap import group_batches
+
+    left = spark.createDataFrame(
+        [(1, 10, [1, 2]), (1, 11, [3, 4]), (2, 12, [5, 6])],
+        "g INT, id BIGINT, v ARRAY<BIGINT>",
+    )
+    right = spark.createDataFrame([(1, 7), (3, 8)], "g INT, w BIGINT")
+
+    def sizes(lg, rg):
+        assert set(lg) == {"g", "id", "v"} and set(rg) == {"g", "w"}
+        assert lg["v"].ndim == 2 and lg["v"].shape[0] == len(lg["id"])
+        key = lg["g"][0] if len(lg["g"]) else rg["g"][0]
+        return {
+            "g": [key],
+            "n_left": [len(lg["id"])],
+            "n_right": [len(rg["w"])],
+            "right_sum": [int(rg["w"].sum())],
+        }
+
+    out = group_batches(
+        left,
+        ["g"],
+        sizes,
+        "g INT, n_left INT, n_right INT, right_sum BIGINT",
+        other=right,
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 2, 1, 7), (2, 1, 0, 0), (3, 0, 1, 8),
+    ]
 
 
 def test_map_batches_long_arrays_round_trip(spark):

@@ -82,18 +82,25 @@ def test_registration_is_unique():
 
 
 def test_python_map_boundary_is_rowmap():
-    """Every per-row and per-batch Python kernel crosses into the
-    Python worker through operators/rowmap.py: no pandas map closure
-    (mapInPandas, or a hand-written `def batches`) anywhere else in the
-    package."""
+    """Every per-row, per-batch and per-group Python kernel crosses into
+    the Python worker through operators/rowmap.py: no pandas map or
+    group closure (mapInPandas, applyInPandas, or a hand-written `def
+    batches`) anywhere else in the package, and no grouped Arrow call
+    (cogroup, applyInArrow) outside the adapter."""
     root = PKG.parent
-    pandas_maps, closures = [], []
+    pandas_maps, pandas_groups, closures, arrow_groups = [], [], [], []
     for mod in sorted(root.rglob("*.py")):
         src = mod.read_text()
         rel = mod.relative_to(root).as_posix()
         if "mapInPandas(" in src:
             pandas_maps.append(rel)
+        if "applyInPandas(" in src:
+            pandas_groups.append(rel)
         if "def batches" in src:
             closures.append(rel)
+        if ".cogroup(" in src or "applyInArrow" in src:
+            arrow_groups.append(rel)
     assert pandas_maps == []
+    assert pandas_groups == []
     assert closures == ["operators/rowmap.py"]
+    assert arrow_groups == ["operators/rowmap.py"]

@@ -30,7 +30,8 @@ def main() -> None:
         spark.read.parquet(f"{sf_dir}/{table}.parquet").count()
     from kinesis_stream_reader_spark.sources.raw import kpl_raw_records
     kpl_raw_records(spark, sf_dir).count()
-    spark.range(10_000).mapInPandas(lambda it: it, "id long").count()
+    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+    map_batches(spark.range(10_000), lambda batches: batches, "id long").count()
     from kinesis_stream_reader_spark.operators.events import to_nested
     from kinesis_stream_reader_spark.sources.tables import load_events
     to_nested(load_events(spark, sf_dir)).count()
