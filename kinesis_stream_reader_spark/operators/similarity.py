@@ -1577,11 +1577,11 @@ def knn_graph(
     Arrow batches carry the quantized vectors; scores never shuffle un-
     topped. Ties break on neighbor_id, so output is order-deterministic.
     The output is invariant in `blocks` (exact kernel), so the default
-    auto-sizes the grid to the data — see _block_topk_mips.
+    auto-sizes the grid to the data — see _grid_topk.
     """
     emb = embeddings.select("vec_id", _quantized_vec(F.col("embedding")).alias("qv"))
     cand = emb.select(F.col("vec_id").alias("cand_id"), F.col("qv").alias("cv"))
-    return _block_topk_mips(emb, cand, k=k, blocks=blocks)
+    return _grid_topk(emb, cand, k, blocks).orderBy("vec_id", "rank")
 
 
 def _topk_mips_cell(left: dict, right: dict, k: int) -> dict:
@@ -1651,26 +1651,41 @@ def _topk_mips_cell(left: dict, right: dict, k: int) -> dict:
 
 
 def _grid_topk(
-    queries: DataFrame, candidates: DataFrame, k: int, b: int, n_lists: int = 1
+    queries: DataFrame, candidates: DataFrame, k: int, b: int | None = None
 ) -> DataFrame:
     """The one exact-MIPS top-k grid: (vec_id, rank, neighbor_id,
     dot_q), each query's top-k candidates by (dot desc, id), rank 1..k,
     self excluded. `queries` is (vec_id, qv), `candidates` (cand_id,
     cv), both already quantized. With a list_id column on both sides
-    (IVF: probed lists x list members) the grid runs inside each list
-    (`n_lists` of them); without it the whole input is one list.
+    (IVF: probed lists x list members) the grid runs inside each list;
+    without it the whole input is one list.
 
     Each list is split into a b x b hash grid (qb = vec_id mod b, cb =
     cand_id mod b; each side replicated b times), every (list, qb, cb)
     cell runs _topk_mips_cell in one cogroup, and one (dot desc, id)
     window merges the cell-local top-k rows per query. The cells cover
     every (query, candidate) pair of a list exactly once and each keeps
-    its exact top-k, so the result is invariant in b; b only trades
-    per-cell Arrow+Python round trips against parallelism of the
-    quadratic GEMM."""
-    keys = ["qb", "cb"]
-    if "list_id" in queries.columns:
-        keys.insert(0, "list_id")
+    its exact top-k, so the result is invariant in b.
+
+    The COST is not: each side is replicated b times and every cell
+    pays an Arrow+Python round trip, so a fixture-sized input on a fine
+    grid is pure per-cell overhead (measured 1.8 s -> 1.1 s at sf0.1
+    going 64 -> 4 cells), while a coarse grid on a big input — or few
+    inverted lists (the 10-label fixture; any under-sharded index) —
+    starves the executor and leaves each cell's GEMM huge. b=None
+    therefore sizes cells to ~1000 candidates, at most 4096 cells, from
+    one metadata-cheap aggregate over the candidates (rows, lists): an
+    eager action."""
+    import math
+
+    listed = "list_id" in candidates.columns
+    keys = ["list_id", "qb", "cb"] if listed else ["qb", "cb"]
+    n, n_lists = candidates.agg(
+        F.count("*"), F.countDistinct("list_id") if listed else F.lit(1)
+    ).first()
+    n_lists = max(int(n_lists), 1)
+    if b is None:
+        b = max(1, min(math.isqrt(4096 // n_lists), math.ceil(n / n_lists / 1000)))
     grid = queries.sparkSession.range(b * b).select(
         F.pmod(F.col("id"), F.lit(b)).cast("int").alias("qb"),
         F.floor(F.col("id") / b).cast("int").alias("cb"),
@@ -1708,28 +1723,6 @@ def _grid_topk(
         .filter(F.col("rank") <= k)
         .select("vec_id", "rank", "neighbor_id", "dot_q")
     )
-
-
-def _block_topk_mips(
-    queries: DataFrame, candidates: DataFrame, k: int, blocks: int | None
-) -> DataFrame:
-    """Exact-MIPS top-k over the whole input (_grid_topk with one list),
-    ordered by (vec_id, rank).
-
-    blocks=None auto-sizes the grid so a block holds ~1000 vectors
-    (capped at 64 blocks = 4096 cells): the result is invariant in
-    `blocks`, but the COST is not — each side is replicated `blocks`
-    times and every cell pays an Arrow+Python round-trip, so a fixture-
-    sized input on a fine grid is pure per-cell overhead (measured
-    1.8 s -> 1.1 s at sf0.1 going 64 -> 4 cells) while a coarse grid on
-    a big input under-parallelizes the quadratic GEMM. The two row
-    counts cost one metadata-only action each on a parquet source."""
-    import math
-
-    if blocks is None:
-        n = max(queries.count(), candidates.count(), 1)
-        blocks = max(1, min(64, math.ceil(n / 1000)))
-    return _grid_topk(queries, candidates, k, blocks).orderBy("vec_id", "rank")
 
 
 def _listed(embeddings: DataFrame, lists: DataFrame | None) -> DataFrame:
@@ -1926,9 +1919,9 @@ def ivf_knn_graph(
     (each candidate lives in exactly one list). At scale list_id is the
     table's partition key, so the cogroup co-locates with the layout."""
     probes = ivf_probes(embeddings, nprobe=nprobe, metric="ip", lists=lists)
-    return _ivf_list_grid_topk(
-        probes, _ivf_candidates(embeddings, lists), embeddings, k, lists
-    ).orderBy("vec_id", "rank")
+    return _grid_topk(probes, _ivf_candidates(embeddings, lists), k).orderBy(
+        "vec_id", "rank"
+    )
 
 
 def _ivf_candidates(embeddings: DataFrame, lists: DataFrame | None) -> DataFrame:
@@ -1940,43 +1933,12 @@ def _ivf_candidates(embeddings: DataFrame, lists: DataFrame | None) -> DataFrame
     )
 
 
-def _ivf_list_grid_topk(
-    probes: DataFrame,
-    cand: DataFrame,
-    embeddings: DataFrame,
-    k: int,
-    lists: DataFrame | None = None,
-) -> DataFrame:
-    """_grid_topk over the inverted lists, with SUB-BLOCKED list cells:
-    a corpus with few inverted lists (the 10-label fixture; any under-
-    sharded index) would yield only n_lists cells — starving a 32-core
-    executor and leaving each cell's GEMM huge. Each list is therefore
-    split into a B x B hash grid, restoring L * B^2-way parallelism
-    while keeping the nprobe/L pruning.
-
-    B auto-sizes to ~1000-candidate cells from one metadata-cheap agg
-    (count + distinct labels) — an eager action, same contract as
-    knn_graph's auto grid. `probes` must carry (list_id, vec_id, qv),
-    `cand` (list_id, cand_id, cv)."""
-    import math
-
-    sized = embeddings.select(F.col("label").alias("list_id")) if lists is None else lists
-    n, n_lists = (
-        sized.agg(
-            F.count("*").alias("n"), F.countDistinct("list_id").alias("l")
-        ).first()
-    )
-    n_lists = max(int(n_lists), 1)
-    b = max(1, min(8, math.ceil(n / n_lists / 1000)))
-    return _grid_topk(probes, cand, k, b, n_lists)
-
-
-def _l2_knn(queries: DataFrame, candidates: DataFrame, topk) -> DataFrame:
+def _l2_knn(queries: DataFrame, candidates: DataFrame, k: int) -> DataFrame:
     """Exact-L2 kNN through an exact-MIPS top-k: (vec_id, neighbor_id,
     dq) with dq = round(sqrt(d2)) on exact-integer d2. `queries` is
     (vec_id, qv), `candidates` (cand_id, cv), quantized, with every
-    query id among the candidates; extra columns (list_id) pass through
-    to `topk(queries, candidates)`, a _grid_topk layout. The classic
+    query id among the candidates; a list_id column on both sides
+    passes through to _grid_topk, which then runs per list. The classic
     MIPS reduction (query -> (2v, 1), candidate -> (v, -|c|^2)) turns
     argmin-d2 into argmax-dot, ties by id, so the shared cell kernel
     applies unchanged; then d2 = |a|^2 - dot_q."""
@@ -1987,7 +1949,7 @@ def _l2_knn(queries: DataFrame, candidates: DataFrame, topk) -> DataFrame:
         )
 
     n2 = candidates.select(F.col("cand_id").alias("vec_id"), sq_norm(F.col("cv")).alias("nn"))
-    lifted = topk(
+    lifted = _grid_topk(
         queries.withColumn(
             "qv",
             F.concat(
@@ -1997,6 +1959,7 @@ def _l2_knn(queries: DataFrame, candidates: DataFrame, topk) -> DataFrame:
         candidates.withColumn(
             "cv", F.concat(F.col("cv"), F.array(-sq_norm(F.col("cv"))))
         ),
+        k,
     )
     return lifted.join(n2, "vec_id").select(
         "vec_id",
@@ -2007,15 +1970,13 @@ def _l2_knn(queries: DataFrame, candidates: DataFrame, topk) -> DataFrame:
     )
 
 
-def knn_l2(
-    embeddings: DataFrame, k: int = 5, blocks: int | None = None
-) -> DataFrame:
+def knn_l2(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """Exact L2 kNN over the whole corpus, self excluded: (vec_id,
     neighbor_id, dq), the input to lof_from_knn. knn_graph's block grid
     under the L2 -> MIPS lift of _l2_knn."""
     qv = embeddings.select("vec_id", _quantized_vec(F.col("embedding")).alias("qv"))
     cand = qv.select(F.col("vec_id").alias("cand_id"), F.col("qv").alias("cv"))
-    return _l2_knn(qv, cand, lambda q, c: _block_topk_mips(q, c, k, blocks))
+    return _l2_knn(qv, cand, k)
 
 
 def ivf_knn_l2(
@@ -2029,11 +1990,7 @@ def ivf_knn_l2(
     density-based reports (LOF). Probing uses the L2 centroid key;
     within candidates the lift of _l2_knn applies unchanged."""
     probes = ivf_probes(embeddings, nprobe=nprobe, metric="l2", lists=lists)
-    return _l2_knn(
-        probes,
-        _ivf_candidates(embeddings, lists),
-        lambda q, c: _ivf_list_grid_topk(q, c, embeddings, k, lists),
-    )
+    return _l2_knn(probes, _ivf_candidates(embeddings, lists), k)
 
 
 def lof_from_knn(knn: DataFrame, k: int = 5) -> DataFrame:
@@ -2161,7 +2118,7 @@ def split_semantic_leakage(
     train = emb.filter(~F.col("is_test")).select(
         F.col("vec_id").alias("cand_id"), F.col("qv").alias("cv")
     )
-    top1 = _block_topk_mips(test, train, k=1, blocks=blocks)
+    top1 = _grid_topk(test, train, 1, blocks)
     return top1.select(
         F.col("vec_id").alias("test_id"),
         F.col("neighbor_id").alias("nearest_train_id"),

@@ -3780,16 +3780,13 @@ def wordpiece_encode_words(
     segments (a word the vocab cannot cover is dropped). Shared by the
     batch encode (a distinct-word census) and the streaming encode (one
     row per occurrence); the vocab is a frozen driver-held set in
-    both. Each task segments a distinct word once, through the same
-    per-task closure memo as bytelevel_encode_words."""
-    memo: dict = {}
+    both."""
 
     def encode(word, n):
-        if word not in memo:
-            pieces = _wordpiece_segment(word, vocab, max_piece)
-            memo[word] = None if pieces is None else (" ".join(pieces), len(pieces))
-        got = memo[word]
-        return [] if got is None else [(word, n, *got)]
+        pieces = _wordpiece_segment(word, vocab, max_piece)
+        if pieces is None:
+            return []
+        return [(word, n, " ".join(pieces), len(pieces))]
 
     return map_rows(
         words.select("word", "n"),

@@ -349,8 +349,8 @@ def test_topk_grid_is_invariant_in_its_blocking(spark, sf_dir):
     the hash grid cannot change the rows: knn_graph at blocks 1, 2, 3
     and auto is identical, and the IVF layout with sub-blocked lists
     (b > 1, which auto-sizing reaches only past ~1000 vectors per list)
-    equals whole-list cells (b = 1). With more cells than vectors many
-    cells have one empty side."""
+    and the auto-sized grid equal whole-list cells (b = 1). With more
+    cells than vectors many cells have one empty side."""
     from kinesis_stream_reader_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -362,16 +362,14 @@ def test_topk_grid_is_invariant_in_its_blocking(spark, sf_dir):
 
     probes = similarity.ivf_probes(emb, nprobe=2, metric="ip")
     cand = similarity._ivf_candidates(emb, None)
-    n_lists = emb.select("label").distinct().count()
 
     def ivf_grid(b):
         return sorted(
-            tuple(r)
-            for r in similarity._grid_topk(probes, cand, 5, b, n_lists).collect()
+            tuple(r) for r in similarity._grid_topk(probes, cand, 5, b).collect()
         )
 
     whole = ivf_grid(1)
-    assert whole and ivf_grid(2) == whole and ivf_grid(3) == whole
+    assert whole and all(ivf_grid(b) == whole for b in (2, 3, None))
 
 
 def test_lof_ivf_full_probe_recovers_exact(spark, sf_dir):
