@@ -27,6 +27,15 @@ pytest where the JDK has a reference codec (rounds 3-12):
   and partially-interleaved component groups (round 13) all decode
   through one unified predictive loop.
 
+One writer per container: every TIFF file is laid out by `_tiff_file`
+(`encode_tiff` for 8/16-bit gray and RGB in every strip/tile/planar
+layout, `encode_tiff_bilevel` for the CCITT codings); every PNG by
+`encode_png` (color type from the channel count or `palette`, one
+Adam7 pass loop); every lossless JPEG by `encode_jpeg_lossless` (the
+scan layout is its `scan_groups`); and the baseline and 12-bit
+sequential JPEG scans by one block coder, `_huffman_scan`. On the read
+side, `decode_tiff` walks every layout through one segment reader.
+
 The remaining NotImplementedError sites are honest FORMAT-EDGE gates,
 each with a loud message naming the edge (e.g. arithmetic-coded JPEG,
 hierarchical/differential frames, the lossless point transform, GIF
@@ -150,143 +159,66 @@ def _png_chunk(ctype: bytes, body: bytes) -> bytes:
     return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
 
 
-def _encode_png_truecolor(arr, ctyp: int, channels: int, filter_for_row, interlace):
-    """Shared encoder for the non-paletted color types: gray (0, 1ch),
-    RGB (2, 3ch), RGBA (6, 4ch); optional Adam7."""
+def encode_png(
+    arr,
+    *,
+    depth: int = 8,
+    palette=None,
+    filter_for_row=None,
+    interlace: bool = False,
+) -> bytes:
+    """Pixels -> PNG bytes, pure stdlib (zlib + struct), critical
+    chunks only (+ PLTE when paletted). The color type follows from the
+    input: (h, w) gray (0), (h, w, 2) gray+alpha (4), (h, w, 3) RGB (2),
+    (h, w, 4) RGBA (6), or (h, w) palette indices when `palette` (an
+    (n, 3) table) is given (3). `depth` is 8 or 16 for the byte-wide
+    types (16-bit samples big-endian) and 1/2/4/8 for gray and palette,
+    sub-byte samples packed MSB-first per spec 7.2 (each row zero-pads
+    its trailing bits). Per-scanline filter type comes from
+    `filter_for_row(y)` (default 0) and acts on BYTES over the pixel's
+    byte unit (1 for packed samples, spec 9.2); `interlace=True` writes
+    Adam7 (spec 8.2: seven pass sub-images, each packed and filtered
+    independently; an empty pass contributes no bytes). decode_png
+    returns RGB with alpha dropped, but the alpha plane rides every
+    filter, so a channel-offset bug still corrupts the color samples."""
     import struct
     import zlib
 
     import numpy as np
 
-    h, w = arr.shape[0], arr.shape[1]
-    raw = arr.astype(np.int64).reshape(h, w, channels)
-    if not interlace:
-        scan = _png_filter_scanlines(
-            raw.reshape(h, w * channels), channels, filter_for_row
+    a = np.asarray(arr)
+    h, w = a.shape[0], a.shape[1]
+    channels = 1 if a.ndim == 2 else a.shape[2]
+    ctyp = 3 if palette is not None else {1: 0, 2: 4, 3: 2, 4: 6}[channels]
+    legal = {0: (1, 2, 4, 8, 16), 3: (1, 2, 4, 8)}.get(ctyp, (8, 16))
+    if depth not in legal:
+        raise ValueError(f"PNG color type {ctyp} has no bit depth {depth}")
+    if depth == 16:
+        a = np.frombuffer(a.astype(np.uint16).astype(">u2").tobytes(), np.uint8)
+    # (h, w, unit) samples: the unit is the filter's byte stride
+    base = a.astype(np.int64).reshape(h, w, -1)
+    parts = []
+    for x0, y0, dx, dy in _ADAM7 if interlace else ((0, 0, 1, 1),):
+        sub = base[y0::dy, x0::dx]
+        if sub.shape[0] == 0 or sub.shape[1] == 0:
+            continue
+        rows = (
+            _pack_indices(sub[:, :, 0], depth)
+            if depth < 8
+            else sub.reshape(sub.shape[0], -1)
         )
-    else:
-        parts = []
-        for x0, y0, dx, dy in _ADAM7:
-            sub = raw[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue  # empty pass contributes NO bytes (spec 8.2)
-            parts.append(
-                _png_filter_scanlines(
-                    sub.reshape(sub.shape[0], sub.shape[1] * channels),
-                    channels,
-                    filter_for_row,
-                )
-            )
-        scan = b"".join(parts)
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctyp, 0, 0, 1 if interlace else 0)
-    idat = zlib.compress(scan)
+        parts.append(_png_filter_scanlines(rows, base.shape[2], filter_for_row))
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, ctyp, 0, 0, 1 if interlace else 0)
+    plte = b""
+    if palette is not None:
+        plte = _png_chunk(b"PLTE", np.asarray(palette, dtype=np.uint8).tobytes())
     return (
         _PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", idat)
+        + plte
+        + _png_chunk(b"IDAT", zlib.compress(b"".join(parts)))
         + _png_chunk(b"IEND", b"")
     )
-
-
-def encode_png(arr, filter_for_row=None, interlace: bool = False) -> bytes:
-    """(h, w, 3) uint8 -> PNG bytes, pure stdlib (zlib + struct): 8-bit
-    RGB (color type 2), critical chunks only; optional Adam7 interlace
-    (spec 8.2: seven pass sub-images, each independently filtered).
-    Per-scanline filter type comes from `filter_for_row(y)` (default
-    0/None) so fixtures can exercise every filter the decoder must
-    invert."""
-    return _encode_png_truecolor(arr, 2, 3, filter_for_row, interlace)
-
-
-def encode_png_gray(arr, filter_for_row=None, interlace: bool = False) -> bytes:
-    """(h, w) uint8 -> 8-bit grayscale PNG (color type 0)."""
-    return _encode_png_truecolor(arr, 0, 1, filter_for_row, interlace)
-
-
-def encode_png_rgba(arr, filter_for_row=None, interlace: bool = False) -> bytes:
-    """(h, w, 4) uint8 -> 8-bit RGBA PNG (color type 6). decode_png
-    returns the RGB channels (alpha dropped, not composited) — the
-    4-byte filter unit still exercises the alpha plane, so a
-    channel-offset bug corrupts RGB and is caught."""
-    return _encode_png_truecolor(arr, 6, 4, filter_for_row, interlace)
-
-
-def encode_png_gray_alpha(arr, filter_for_row=None, interlace: bool = False) -> bytes:
-    """(h, w, 2) uint8 -> 8-bit gray+alpha PNG (color type 4): the
-    2-byte filter unit; decode_png returns the gray sample replicated
-    (alpha dropped, not composited) but the alpha plane rides every
-    filter, so a channel-offset bug corrupts gray and is caught."""
-    return _encode_png_truecolor(arr, 4, 2, filter_for_row, interlace)
-
-
-def _encode_png16(arr, ctyp: int, channels: int, filter_for_row, interlace):
-    """Shared 16-bit-depth encoder for gray (0, 1ch) and RGB (2, 3ch):
-    big-endian sample bytes, filters over the (2 * channels)-byte pixel
-    unit per spec 9.2 (filters always act on BYTES regardless of
-    depth)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint16)
-    h, w = arr.shape[0], arr.shape[1]
-    unit = 2 * channels
-    rows = (
-        np.frombuffer(arr.astype(">u2").tobytes(), dtype=np.uint8)
-        .reshape(h, w, unit)
-        .astype(np.int64)
-    )
-    if not interlace:
-        scan = _png_filter_scanlines(rows.reshape(h, w * unit), unit, filter_for_row)
-    else:
-        parts = []
-        for x0, y0, dx, dy in _ADAM7:
-            sub = rows[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            parts.append(
-                _png_filter_scanlines(
-                    sub.reshape(sub.shape[0], sub.shape[1] * unit),
-                    unit,
-                    filter_for_row,
-                )
-            )
-        scan = b"".join(parts)
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, ctyp, 0, 0, 1 if interlace else 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(scan))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def encode_png16(arr, filter_for_row=None, interlace: bool = False) -> bytes:
-    """(h, w, 3) uint16 -> 16-bit RGB PNG (color type 2, depth 16)."""
-    return _encode_png16(arr, 2, 3, filter_for_row, interlace)
-
-
-def encode_png16_gray(arr, filter_for_row=None, interlace: bool = False) -> bytes:
-    """(h, w) uint16 -> 16-bit grayscale PNG (color type 0, depth 16):
-    the 2-byte pixel unit is the smallest multi-byte filter stride, so
-    a bpp-vs-sample-bytes confusion that RGB16's 6-byte unit can mask
-    breaks this layout immediately."""
-    return _encode_png16(arr, 0, 1, filter_for_row, interlace)
-
-
-def encode_png16_rgba(arr, filter_for_row=None, interlace: bool = False) -> bytes:
-    """(h, w, 4) uint16 -> 16-bit RGBA PNG (color type 6, depth 16):
-    the 8-byte pixel unit; decode_png returns RGB (alpha dropped, not
-    composited) but the alpha plane still rides every filter, so a
-    channel-offset bug corrupts RGB and fails the checksum."""
-    return _encode_png16(arr, 6, 4, filter_for_row, interlace)
-
-
-def encode_png16_gray_alpha(arr, filter_for_row=None, interlace: bool = False) -> bytes:
-    """(h, w, 2) uint16 -> 16-bit gray+alpha PNG (color type 4): the
-    4-byte pixel unit."""
-    return _encode_png16(arr, 4, 2, filter_for_row, interlace)
 
 
 def _pack_indices(idx, depth: int):
@@ -308,89 +240,6 @@ def _pack_indices(idx, depth: int):
     for i in range(per):
         out |= grouped[:, :, i] << (8 - depth * (i + 1))
     return out
-
-
-def encode_png_indexed(
-    indices, palette, depth: int = 8, filter_for_row=None, interlace: bool = False
-) -> bytes:
-    """(h, w) palette indices + (n, 3) palette -> paletted PNG (color
-    type 3) at depth 8 or 4, critical chunks + PLTE; per-scanline
-    filter from `filter_for_row(y)` (filters act on packed BYTES at
-    sub-byte depths per spec 9.2); optional Adam7 interlace (each pass
-    sub-image packs its own rows — a pass row's trailing nibble pads
-    independently, spec 8.2). Fixture twin of the decode_png palette
-    path."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    idx = np.asarray(indices, dtype=np.int64)
-    h, w = idx.shape
-    if not interlace:
-        packed = _pack_indices(idx, depth)
-        scan = _png_filter_scanlines(packed, 1, filter_for_row)
-    else:
-        parts = []
-        for x0, y0, dx, dy in _ADAM7:
-            sub = idx[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            parts.append(
-                _png_filter_scanlines(_pack_indices(sub, depth), 1, filter_for_row)
-            )
-        scan = b"".join(parts)
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 1 if interlace else 0)
-    plte = np.asarray(palette, dtype=np.uint8).tobytes()
-    idat = zlib.compress(scan)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", plte)
-        + _png_chunk(b"IDAT", idat)
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def encode_png_gray_lowdepth(
-    arr, depth: int, filter_for_row=None, interlace: bool = False
-) -> bytes:
-    """(h, w) samples < 2^depth -> grayscale PNG at depth 1/2/4 (color
-    type 0): MSB-first bit packing per spec 7.2 (each row zero-pads its
-    trailing bits independently), per-scanline filters acting on packed
-    BYTES (spec 9.2, bpp = 1), optional Adam7 (each pass sub-image
-    packs its own rows, spec 8.2). Fixture twin of the decode_png
-    sub-8-bit gray path."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if depth not in (1, 2, 4):
-        raise ValueError("encode_png_gray_lowdepth: depth must be 1, 2 or 4")
-    a = np.asarray(arr, dtype=np.int64)
-    h, w = a.shape
-    if not interlace:
-        scan = _png_filter_scanlines(_pack_indices(a, depth), 1, filter_for_row)
-    else:
-        parts = []
-        for x0, y0, dx, dy in _ADAM7:
-            sub = a[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            parts.append(
-                _png_filter_scanlines(
-                    _pack_indices(sub, depth), 1, filter_for_row
-                )
-            )
-        scan = b"".join(parts)
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 1 if interlace else 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(scan))
-        + _png_chunk(b"IEND", b"")
-    )
 
 
 def _png_unfilter(raw, h: int, stride: int, bpp: int):
@@ -983,76 +832,42 @@ def _lzw_decode_tiff_seq(data: bytes, expected: int | None = None) -> bytes:
     return bytes(out)
 
 
-def encode_tiff(
-    arr,
-    big_endian: bool = False,
-    rows_per_strip: int = 4,
-    compression: int = 1,
+def _tiff_file(
+    segs,
+    w: int,
+    h: int,
+    bits: tuple,
+    compression: int,
+    photometric: int,
+    *,
+    big_endian: bool,
+    rows_per_strip: int,
     planar: bool = False,
     tile: tuple[int, int] | None = None,
+    extra: tuple = (),
 ) -> bytes:
-    """(h, w, 3) uint8 RGB -> TIFF 6.0 (public spec): header, one IFD
-    with the required tags. Both byte orders (II little / MM big);
-    compression 1 = none, 5 = LZW (§13), 8 = Adobe Deflate
-    (per-segment zlib streams), 32773 = PackBits (§9),
-    applied per segment as the spec requires; `planar=True` writes
-    PlanarConfiguration 2 (all segments of plane R, then G, then B);
-    `tile=(tw, tl)` writes the §15 tiled layout (tile dims multiples
-    of 16, edge tiles padded to full size, tiles across then down,
-    plane-major when planar). The fixture twin of decode_tiff."""
+    """Lay one TIFF 6.0 file (public spec) out around its coded
+    segments — the one header/IFD writer behind every encoder: header
+    (II little / MM big) | segment data | BitsPerSample array (when
+    SamplesPerPixel > 1 it no longer fits the entry) | offsets array |
+    byte-count array | one IFD, entries in ascending tag order. A
+    single segment's offset and count sit inline in their entries.
+    `bits` holds BitsPerSample per sample, so its length is
+    SamplesPerPixel; PlanarConfiguration is written for multi-sample
+    images; `tile=(tw, tl)` writes the §15 tile tags instead of the
+    strip tags; `extra` adds (tag, LONG value) entries."""
     import struct
 
-    import numpy as np
-
-    if compression not in (1, 5, 8, 32773):
-        raise ValueError(f"unsupported TIFF compression {compression}")
     e = ">" if big_endian else "<"
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w, _ = arr.shape
-    planes = range(3) if planar else (None,)
-
-    segs: list[bytes] = []
-    if tile is not None:
-        tw, tl = tile
-        if tw % 16 or tl % 16:
-            raise ValueError("TIFF tile dimensions must be multiples of 16")
-        ta, td = -(-w // tw), -(-h // tl)
-        padded = np.zeros((td * tl, ta * tw, 3), dtype=np.uint8)
-        padded[:h, :w] = arr
-        for c in planes:
-            for ty in range(td):
-                for tx in range(ta):
-                    t = padded[ty * tl : (ty + 1) * tl, tx * tw : (tx + 1) * tw]
-                    segs.append((t if c is None else t[:, :, c]).tobytes())
-    else:
-        nstrips = -(-h // rows_per_strip)
-        for c in planes:
-            for i in range(nstrips):
-                s = arr[i * rows_per_strip : (i + 1) * rows_per_strip]
-                segs.append((s if c is None else s[:, :, c]).tobytes())
-    if compression == 5:
-        segs = [_lzw_encode_tiff(s) for s in segs]
-    elif compression == 8:
-        # Adobe Deflate (8): each segment is an independent zlib stream
-        import zlib
-
-        segs = [zlib.compress(s) for s in segs]
-    elif compression == 32773:
-        segs = [_packbits_encode(s) for s in segs]
-
-    # layout: header(8) | segment data | BitsPerSample value(6) |
-    # offsets array | bytecounts array | IFD
-    nsegs = len(segs)
-    pos = 8
-    seg_offsets = []
+    spp, nsegs = len(bits), len(segs)
+    seg_offsets, pos = [], 8
     for s in segs:
         seg_offsets.append(pos)
         pos += len(s)
     bits_off = pos
-    pos += 6
-    so_off, sbc_off = pos, pos + 4 * nsegs
-    pos += 8 * nsegs
-    ifd_off = pos
+    if spp > 1:
+        pos += 2 * spp
+    so_off, sbc_off, ifd_off = pos, pos + 4 * nsegs, pos + 8 * nsegs
 
     def entry(tag, typ, count, value):
         return struct.pack(f"{e}HHI", tag, typ, count) + value
@@ -1063,56 +878,119 @@ def encode_tiff(
     def long_val(v):
         return struct.pack(f"{e}I", v)
 
-    entries = [
-        entry(256, 4, 1, long_val(w)),       # ImageWidth
-        entry(257, 4, 1, long_val(h)),       # ImageLength
-        entry(258, 3, 3, long_val(bits_off)),  # BitsPerSample -> offset
-        entry(259, 3, 1, short_val(compression)),
-        entry(262, 3, 1, short_val(2)),      # Photometric: RGB
-        entry(277, 3, 1, short_val(3)),      # SamplesPerPixel
-        entry(284, 3, 1, short_val(2 if planar else 1)),
-    ]
     off_val = long_val(so_off if nsegs > 1 else seg_offsets[0])
     cnt_val = long_val(sbc_off if nsegs > 1 else len(segs[0]))
+    entries = [
+        entry(256, 4, 1, long_val(w)),  # ImageWidth
+        entry(257, 4, 1, long_val(h)),  # ImageLength
+        entry(258, 3, spp, long_val(bits_off) if spp > 1 else short_val(bits[0])),
+        entry(259, 3, 1, short_val(compression)),
+        entry(262, 3, 1, short_val(photometric)),
+        entry(277, 3, 1, short_val(spp)),  # SamplesPerPixel
+    ]
+    if spp > 1:
+        entries.append(entry(284, 3, 1, short_val(2 if planar else 1)))
     if tile is not None:
         entries += [
-            entry(322, 3, 1, short_val(tw)),   # TileWidth
-            entry(323, 3, 1, short_val(tl)),   # TileLength
-            entry(324, 4, nsegs, off_val),     # TileOffsets
-            entry(325, 4, nsegs, cnt_val),     # TileByteCounts
+            entry(322, 3, 1, short_val(tile[0])),  # TileWidth
+            entry(323, 3, 1, short_val(tile[1])),  # TileLength
+            entry(324, 4, nsegs, off_val),  # TileOffsets
+            entry(325, 4, nsegs, cnt_val),  # TileByteCounts
         ]
     else:
         entries += [
-            entry(273, 4, nsegs, off_val),     # StripOffsets
+            entry(273, 4, nsegs, off_val),  # StripOffsets
             entry(278, 4, 1, long_val(rows_per_strip)),
-            entry(279, 4, nsegs, cnt_val),     # StripByteCounts
+            entry(279, 4, nsegs, cnt_val),  # StripByteCounts
         ]
-    entries.sort(key=lambda b: struct.unpack(f"{e}H", b[:2])[0])  # spec: ascending tags
-    out = bytearray()
-    out += (b"MM\x00*" if big_endian else b"II*\x00") + struct.pack(f"{e}I", ifd_off)
+    entries += [entry(tag, 4, 1, long_val(v)) for tag, v in extra]
+    entries.sort(key=lambda b: struct.unpack(f"{e}H", b[:2])[0])
+    out = bytearray(b"MM\x00*" if big_endian else b"II*\x00")
+    out += long_val(ifd_off)
     for s in segs:
         out += s
-    out += struct.pack(f"{e}HHH", 8, 8, 8)
-    for off in seg_offsets:
-        out += struct.pack(f"{e}I", off)
-    for s in segs:
-        out += struct.pack(f"{e}I", len(s))
+    if spp > 1:
+        out += struct.pack(f"{e}{spp}H", *bits)
+    out += struct.pack(f"{e}{nsegs}I", *seg_offsets)
+    out += struct.pack(f"{e}{nsegs}I", *map(len, segs))
     out += struct.pack(f"{e}H", len(entries)) + b"".join(entries)
-    out += struct.pack(f"{e}I", 0)  # next-IFD terminator
+    out += long_val(0)  # next-IFD terminator
     return bytes(out)
+
+
+def encode_tiff(
+    arr,
+    *,
+    compression: int = 1,
+    big_endian: bool = False,
+    rows_per_strip: int = 4,
+    planar: bool = False,
+    tile: tuple[int, int] | None = None,
+    depth: int = 8,
+) -> bytes:
+    """(h, w) gray or (h, w, 3) RGB samples -> TIFF 6.0, 8- or 16-bit
+    (`depth`; 16-bit sample words in the FILE byte order, spec §7).
+    Gray is BlackIsZero (PhotometricInterpretation 1), RGB is
+    Photometric 2. Compression 1 = none, 5 = LZW (§13), 8 = Adobe
+    Deflate (per-segment zlib streams), 32773 = PackBits (§9), applied
+    per segment as the spec requires; `planar=True` writes
+    PlanarConfiguration 2 (all segments of plane R, then G, then B);
+    `tile=(tw, tl)` writes the §15 tiled layout (tile dims multiples of
+    16, edge tiles padded to full size, tiles across then down,
+    plane-major when planar). The fixture twin of decode_tiff."""
+    import zlib
+
+    import numpy as np
+
+    codec = {1: bytes, 5: _lzw_encode_tiff, 8: zlib.compress, 32773: _packbits_encode}
+    if compression not in codec:
+        raise ValueError(f"unsupported TIFF compression {compression}")
+    if depth not in (8, 16):
+        raise ValueError(f"unsupported TIFF bit depth {depth}")
+    a = np.asarray(arr, dtype=np.dtype(f"{'>' if big_endian else '<'}u{depth // 8}"))
+    if a.ndim == 2:
+        a = a[:, :, None]
+    h, w, spp = a.shape
+    if tile is None:
+        sw, sh = w, rows_per_strip  # strips: the last one may be short
+    else:
+        sw, sh = tile
+        if sw % 16 or sh % 16:
+            raise ValueError("TIFF tile dimensions must be multiples of 16")
+        padded = np.zeros((-(-h // sh) * sh, -(-w // sw) * sw, spp), dtype=a.dtype)
+        padded[:h, :w] = a
+        a = padded
+    planes = [slice(c, c + 1) for c in range(spp)] if planar else [slice(None)]
+    segs = [
+        codec[compression](a[y : y + sh, x : x + sw, p].tobytes())
+        for p in planes
+        for y in range(0, h, sh)
+        for x in range(0, w, sw)
+    ]
+    return _tiff_file(
+        segs, w, h, (depth,) * spp, compression, 2 if spp == 3 else 1,
+        big_endian=big_endian, rows_per_strip=rows_per_strip,
+        planar=planar, tile=tile,
+    )
 
 
 def decode_tiff(data: bytes):
     """REAL TIFF 6.0 decode, pure stdlib + numpy: both byte orders,
-    first-IFD tag walk, 8-bit RGB in EVERY baseline layout — chunky
-    AND planar (PlanarConfiguration 2, plane-major segments), stripped
-    AND tiled (§15: edge tiles padded to full size, tiles across then
-    down) — with per-segment decompression: none (1), Deflate (8,
-    per-segment zlib), LZW (5, §13
-    incl. the early-change width rule), PackBits (32773, §9). Raises
-    NotImplementedError only for other compressions or non-8-bit/
-    non-RGB streams."""
+    first-IFD tag walk, 1-bit bilevel, 8/16-bit gray and 8/16-bit RGB
+    in EVERY baseline layout — chunky AND planar (PlanarConfiguration
+    2, plane-major segments), stripped AND tiled (§15: edge tiles
+    padded to full size, tiles across then down). Every layout goes
+    through one segment reader (offsets, byte counts and the segment
+    grid checked against the dimensions) and one per-segment
+    decompression: none (1), Deflate (8, per-segment zlib), LZW (5, §13
+    incl. the early-change width rule), PackBits (32773, §9), and for
+    bilevel CCITT MH (2), T.4 (3) and T.6 (4). Gray and bilevel
+    samples come back replicated to 3 channels (bilevel as luma, 1 =
+    white); 16-bit samples keep the full uint16 range. Raises
+    NotImplementedError only for other compressions or sample
+    layouts."""
     import struct
+    import zlib
 
     import numpy as np
 
@@ -1130,7 +1008,7 @@ def decode_tiff(data: bytes):
         val_off = ifd_off + 2 + 12 * i + 8
         size = {1: 1, 2: 1, 3: 2, 4: 4}.get(typ)
         if size is None:
-            continue  # RATIONAL etc.: not needed for baseline RGB
+            continue  # RATIONAL etc.: not needed for baseline images
         if size * count > 4:
             (ptr,) = struct.unpack_from(f"{e}I", data, val_off)
         else:
@@ -1145,256 +1023,99 @@ def decode_tiff(data: bytes):
         compression = 8
     # BitsPerSample DEFAULTS to 1 (spec §8) — the JDK writer omits the
     # tag entirely for bilevel files
-    bilevel = tags.get(258, [1]) == [1] and tags.get(277, [1])[0] == 1
-    if bilevel:
-        # bit-per-sample path: uncompressed (rows byte-padded) or CCITT
-        # Group 3 1-D Modified Huffman (compression 2, "CCITT RLE").
-        # LUMA samples out (1 = white, photometric applied — the JDK
-        # TYPE_BYTE_BINARY raster convention), replicated to RGB.
+    bits = tags.get(258, [1])
+    spp = tags.get(277, [len(bits)])[0]
+    depth = bits[0] if bits else None
+    if bits == [1] and spp == 1:
+        # bilevel: uncompressed (rows byte-padded) or CCITT MH / T.4 /
+        # T.6. LUMA samples out (1 = white, photometric applied — the
+        # JDK TYPE_BYTE_BINARY raster convention), replicated to RGB.
         if compression not in (1, 2, 3, 4):
             raise NotImplementedError(
                 f"bilevel TIFF compression {compression} not supported "
                 "(have none/CCITT-MH/T.4/T.6)"
             )
-        if compression in (2, 3, 4) and tags.get(262, [0])[0] != 0:
+        if compression != 1 and tags.get(262, [0])[0] != 0:
             raise NotImplementedError(
                 "CCITT coding requires PhotometricInterpretation 0 here"
             )
+    else:
+        if compression not in (1, 5, 8, 32773):
+            raise NotImplementedError(
+                f"TIFF compression {compression} not supported "
+                "(have none/LZW/Deflate/PackBits)"
+            )
+        if spp not in (1, 3) or depth not in (8, 16) or bits[:spp] != [depth] * spp:
+            raise NotImplementedError(
+                "only 8/16-bit gray, 8/16-bit RGB and 1-bit bilevel TIFF "
+                "supported"
+            )
+        if spp == 1 and tags.get(262, [1])[0] != 1:
+            raise NotImplementedError(
+                f"{depth}-bit gray TIFF requires PhotometricInterpretation 1"
+            )
+    planar = spp > 1 and tags.get(284, [1])[0] == 2
+    n = 1 if planar else spp  # samples per segment pixel
+    tiled = 322 in tags or 323 in tags
+    if tiled:  # §15: every tile full size, edge tiles padded
+        kind, sw, sh = "tile", tags[322][0], tags[323][0]
+        offsets, counts = tags[324], tags[325]
+    else:
+        kind, sw, sh = "strip", w, tags.get(278, [h])[0]
         offsets, counts = tags[273], tags[279]
-        rows_per_strip = tags.get(278, [h])[0]
-        if len(offsets) != -(-h // rows_per_strip):
-            raise ValueError("TIFF strip count does not match dimensions")
-        rows = []
-        for si, (o, c) in enumerate(zip(offsets, counts)):
-            nrows = min(rows_per_strip, h - si * rows_per_strip)
-            raw = data[o : o + c]
-            if compression == 2:
-                rows.append(_mh_decode(raw, w, nrows))
-            elif compression == 3:
-                rows.append(
-                    _t4_decode_strip(
-                        raw, w, nrows,
-                        two_d=bool(tags.get(292, [0])[0] & 1),
-                    )
-                )
-            elif compression == 4:
-                rows.append(_g4_decode_strip(raw, w, nrows))
-            else:
-                stride = (w + 7) // 8
-                if len(raw) < nrows * stride:
-                    raise ValueError("TIFF segment shorter than expected")
-                packed = np.frombuffer(
-                    raw[: nrows * stride], dtype=np.uint8
-                ).reshape(nrows, stride).astype(np.int64)
-                rows.append(_unpack_indices(packed, w, 1))
-        bits = np.concatenate(rows, axis=0)
-        if tags.get(262, [0])[0] == 0:  # WhiteIsZero -> luma inverts
-            bits = 1 - bits
-        return np.repeat(bits[:, :, None], 3, axis=2).astype(np.uint8)
-    if compression not in (1, 5, 8, 32773):
-        raise NotImplementedError(
-            f"TIFF compression {compression} not supported "
-            "(have none/LZW/Deflate/PackBits)"
-        )
-    if tags.get(258, [8]) == [16] and tags.get(277, [1])[0] == 1:
-        # 16-bit grayscale (stripped, BlackIsZero): the scientific/
-        # scanned-corpus depth. Samples are 16-bit words in the FILE
-        # byte order (spec §7: the header's II/MM governs sample
-        # bytes), decompressed per segment like every other layout;
-        # output keeps the full uint16 range (the PNG16 convention),
-        # replicated to 3 channels.
-        if tags.get(262, [1])[0] != 1:
-            raise NotImplementedError(
-                "16-bit gray TIFF requires PhotometricInterpretation 1"
-            )
-        if 322 in tags or 323 in tags or tags.get(284, [1])[0] == 2:
-            raise NotImplementedError(
-                "16-bit gray TIFF supports the stripped chunky layout"
-            )
+    if sw < 1 or sh < 1:
+        raise ValueError(f"TIFF {kind} dimensions must be positive")
+    across, down = -(-w // sw), -(-h // sh)
+    if len(offsets) != across * down * (spp // n):
+        raise ValueError(f"TIFF {kind} count does not match dimensions")
+    if len(counts) != len(offsets):
+        raise ValueError(f"TIFF {kind} byte counts do not match {kind} offsets")
+    dtype = np.dtype(f"{e}u2") if depth == 16 else np.dtype(np.uint8)
 
-        def _inflate_gray16(o, c, expected):
-            raw = data[o : o + c]
-            if compression == 5:
-                return _lzw_decode_tiff(raw, expected)
-            if compression == 8:
-                import zlib
-
-                out = zlib.decompress(raw)
-                if len(out) < expected:
-                    raise ValueError(
-                        "TIFF Deflate segment shorter than expected"
-                    )
-                return out[:expected]
-            if compression == 32773:
-                return _packbits_decode(raw, expected)
-            if len(raw) < expected:
-                raise ValueError("TIFF segment shorter than expected")
-            return raw[:expected]
-
-        offsets, counts = tags[273], tags[279]
-        rows_per_strip = tags.get(278, [h])[0]
-        if len(offsets) != -(-h // rows_per_strip):
-            raise ValueError("TIFF strip count does not match dimensions")
-        pieces = []
-        for si, (o, c) in enumerate(zip(offsets, counts)):
-            nrows = min(rows_per_strip, h - si * rows_per_strip)
-            pieces.append(_inflate_gray16(o, c, nrows * w * 2))
-        g = np.frombuffer(
-            b"".join(pieces), dtype=np.dtype(f"{e}u2")
-        ).reshape(h, w)
-        return np.repeat(g[:, :, None], 3, axis=2).astype(np.uint16)
-    if tags.get(258, [8]) == [8] and tags.get(277, [1])[0] == 1:
-        # 8-bit grayscale (stripped, BlackIsZero): per-segment inflate
-        # shared with the RGB path; raw samples replicated to RGB
-        if tags.get(262, [1])[0] != 1:
-            raise NotImplementedError(
-                "8-bit gray TIFF requires PhotometricInterpretation 1"
-            )
-        if 322 in tags or 323 in tags or tags.get(284, [1])[0] == 2:
-            raise NotImplementedError(
-                "8-bit gray TIFF supports the stripped chunky layout"
-            )
-
-        def _inflate_gray(o, c, expected):
-            raw = data[o : o + c]
-            if compression == 5:
-                return _lzw_decode_tiff(raw, expected)
-            if compression == 8:
-                import zlib
-
-                out = zlib.decompress(raw)
-                if len(out) < expected:
-                    raise ValueError(
-                        "TIFF Deflate segment shorter than expected"
-                    )
-                return out[:expected]
-            if compression == 32773:
-                return _packbits_decode(raw, expected)
-            if len(raw) < expected:
-                raise ValueError("TIFF segment shorter than expected")
-            return raw[:expected]
-
-        offsets, counts = tags[273], tags[279]
-        rows_per_strip = tags.get(278, [h])[0]
-        if len(offsets) != -(-h // rows_per_strip):
-            raise ValueError("TIFF strip count does not match dimensions")
-        pieces = []
-        for si, (o, c) in enumerate(zip(offsets, counts)):
-            nrows = min(rows_per_strip, h - si * rows_per_strip)
-            pieces.append(_inflate_gray(o, c, nrows * w))
-        g = np.frombuffer(b"".join(pieces), dtype=np.uint8).reshape(h, w)
-        return np.repeat(g[:, :, None], 3, axis=2).copy()
-    if tags.get(258, [8])[:3] == [16, 16, 16] and tags.get(277, [3])[0] == 3:
-        # 16-bit RGB (stripped chunky): interleaved 16-bit sample words
-        # in the FILE byte order, full uint16 range out
-        if 322 in tags or 323 in tags or tags.get(284, [1])[0] == 2:
-            raise NotImplementedError(
-                "16-bit RGB TIFF supports the stripped chunky layout"
-            )
-
-        def _inflate_rgb16(o, c, expected):
-            raw = data[o : o + c]
-            if compression == 5:
-                return _lzw_decode_tiff(raw, expected)
-            if compression == 8:
-                import zlib
-
-                out = zlib.decompress(raw)
-                if len(out) < expected:
-                    raise ValueError(
-                        "TIFF Deflate segment shorter than expected"
-                    )
-                return out[:expected]
-            if compression == 32773:
-                return _packbits_decode(raw, expected)
-            if len(raw) < expected:
-                raise ValueError("TIFF segment shorter than expected")
-            return raw[:expected]
-
-        offsets, counts = tags[273], tags[279]
-        rows_per_strip = tags.get(278, [h])[0]
-        if len(offsets) != -(-h // rows_per_strip):
-            raise ValueError("TIFF strip count does not match dimensions")
-        pieces = []
-        for si, (o, c) in enumerate(zip(offsets, counts)):
-            nrows = min(rows_per_strip, h - si * rows_per_strip)
-            pieces.append(_inflate_rgb16(o, c, nrows * w * 6))
-        return (
-            np.frombuffer(b"".join(pieces), dtype=np.dtype(f"{e}u2"))
-            .reshape(h, w, 3)
-            .astype(np.uint16)
-        )
-    if tags.get(258, [8])[:3] != [8, 8, 8] or tags.get(277, [3])[0] != 3:
-        raise NotImplementedError(
-            "only 8/16-bit gray, 8/16-bit RGB and 1-bit bilevel TIFF "
-            "supported"
-        )
-    planar = tags.get(284, [1])[0] == 2
-    spp = 1 if planar else 3
-
-    def inflate(o, c, expected):
-        raw = data[o : o + c]
+    def inflate(raw, expected):
         if compression == 5:
             return _lzw_decode_tiff(raw, expected)
-        if compression == 8:
-            import zlib
-
-            out = zlib.decompress(raw)
-            if len(out) < expected:
-                raise ValueError("TIFF Deflate segment shorter than expected")
-            return out[:expected]
         if compression == 32773:
             return _packbits_decode(raw, expected)
+        if compression == 8:
+            raw = zlib.decompress(raw)
         if len(raw) < expected:
             raise ValueError("TIFF segment shorter than expected")
         return raw[:expected]
 
-    if 322 in tags or 323 in tags:  # tiled layout (§15)
-        tw, tl = tags[322][0], tags[323][0]
-        offsets, counts = tags[324], tags[325]
-        ta, td = -(-w // tw), -(-h // tl)
-        if len(offsets) != ta * td * (3 if planar else 1):
-            raise ValueError("TIFF tile count does not match dimensions")
-        out = np.zeros((h, w, 3), dtype=np.uint8)
-        for si, (o, c) in enumerate(zip(offsets, counts)):
-            plane, cell = divmod(si, ta * td)
-            ty, tx = divmod(cell, ta)
-            raw = inflate(o, c, tw * tl * spp)
-            t = np.frombuffer(raw, dtype=np.uint8).reshape(tl, tw, spp)
-            y0, x0 = ty * tl, tx * tw
-            ch = min(tl, h - y0)
-            cw = min(tw, w - x0)
-            if planar:
-                out[y0 : y0 + ch, x0 : x0 + cw, plane] = t[:ch, :cw, 0]
-            else:
-                out[y0 : y0 + ch, x0 : x0 + cw] = t[:ch, :cw]
-        return out
+    def segment(raw, rows):  # one segment -> (rows, sw, n) samples
+        if compression == 2:
+            return _mh_decode(raw, sw, rows)[:, :, None]
+        if compression == 3:
+            two_d = bool(tags.get(292, [0])[0] & 1)
+            return _t4_decode_strip(raw, sw, rows, two_d)[:, :, None]
+        if compression == 4:
+            return _g4_decode_strip(raw, sw, rows)[:, :, None]
+        if depth == 1:
+            stride = (sw + 7) // 8
+            packed = np.frombuffer(inflate(raw, rows * stride), dtype=np.uint8)
+            packed = packed.reshape(rows, stride).astype(np.int64)
+            return _unpack_indices(packed, sw, 1)[:, :, None]
+        raw = inflate(raw, rows * sw * n * dtype.itemsize)
+        return np.frombuffer(raw, dtype=dtype).reshape(rows, sw, n)
 
-    offsets, counts = tags[273], tags[279]
-    rows_per_strip = tags.get(278, [h])[0]
-    spi = -(-h // rows_per_strip)  # strips per image (per plane)
-    if len(offsets) != spi * (3 if planar else 1):
-        raise ValueError("TIFF strip count does not match dimensions")
-    if planar:
-        planes = []
-        for p in range(3):
-            pieces = []
-            for si in range(spi):
-                o, c = offsets[p * spi + si], counts[p * spi + si]
-                nrows = min(rows_per_strip, h - si * rows_per_strip)
-                pieces.append(inflate(o, c, nrows * w))
-            planes.append(
-                np.frombuffer(b"".join(pieces), dtype=np.uint8).reshape(h, w)
-            )
-        return np.stack(planes, axis=-1).copy()
-    pieces = []
+    # decode every segment before allocating: a corrupt dimension then
+    # fails on its segment's length, not on a huge allocation
+    placed = []
     for si, (o, c) in enumerate(zip(offsets, counts)):
-        nrows = min(rows_per_strip, h - si * rows_per_strip)
-        pieces.append(inflate(o, c, nrows * w * 3))
-    raw = b"".join(pieces)
-    if len(raw) != w * h * 3:
-        raise ValueError("TIFF strip data does not match dimensions")
-    return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3).copy()
+        plane, cell = divmod(si, across * down)
+        ty, tx = divmod(cell, across)
+        rows = sh if tiled else min(sh, h - ty * sh)
+        placed.append((ty * sh, tx * sw, plane * n, segment(data[o : o + c], rows)))
+    out_dtype = np.int64 if depth == 1 else dtype.newbyteorder("=")
+    out = np.zeros((h, w, spp), dtype=out_dtype)
+    for y0, x0, p0, seg in placed:  # edge tiles crop to the image
+        out[y0 : y0 + sh, x0 : x0 + sw, p0 : p0 + n] = seg[: h - y0, : w - x0]
+    if depth == 1:
+        if tags.get(262, [0])[0] == 0:  # WhiteIsZero -> luma inverts
+            out = 1 - out
+        return np.repeat(out, 3, axis=2).astype(np.uint8)
+    return np.repeat(out, 3, axis=2) if spp == 1 else out
 
 
 def encode_qoi(arr) -> bytes:
@@ -2892,68 +2613,81 @@ def _dc_category(v: int) -> int:
     return 0 if v == 0 else abs(v).bit_length()
 
 
-def encode_jpeg_blocks(
-    w: int,
-    h: int,
-    comp_blocks,
-    quant_tables,
-    comp_quant=(0, 1, 1),
-    restart_interval: int = 0,
-) -> bytes:
-    """Fixture twin of decode_jpeg: pack QUANTIZED coefficient blocks
-    (zigzag order, per component, raster block order) into a valid
-    baseline JFIF stream — 4:4:4 sampling, custom canonical Huffman
-    tables, optional DRI/RSTn restarts. Constructing fixtures in the
-    compressed domain keeps the decoded-pixel formula closed-form (the
-    lossy quantizer never runs), so the oracle stays integer-exact."""
+def _write_diff(bw: _BitWriter, codes, d: int) -> None:
+    """One Huffman-coded difference (T.81 F.1.2.1, H.1.2.2): the
+    category code, then `cat` magnitude bits with negatives written as
+    d + 2^cat - 1; the lossless SSSS=16 escape (d = -32768) carries no
+    extra bits."""
+    cat = 16 if d == -32768 else _dc_category(d)
+    code, length = codes[cat]
+    bw.write(code, length)
+    if 0 < cat < 16:
+        bw.write(d if d >= 0 else d + (1 << cat) - 1, cat)
+
+
+def _jfif_dqt(quant_tables) -> bytes:
+    """JFIF APP0 plus one 8-bit DQT segment per table (ids in order)."""
     import struct
 
-    ncomp = len(comp_blocks)
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    out = b"\xff\xe0" + struct.pack(">H", 16)
+    out += b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
     for tid, qt in enumerate(quant_tables):
         out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tid]) + bytes(qt)
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
-    for ci in range(ncomp):
-        out += bytes([ci + 1, 0x11, comp_quant[ci]])
-    for tc_th, counts, symbols in (
-        (0x00, _FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
-        (0x10, _FIX_AC_COUNTS, _FIX_AC_SYMBOLS),
-        (0x01, _FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
-        (0x11, _FIX_AC_COUNTS, _FIX_AC_SYMBOLS),
-    ):
+    return out
+
+
+def _jpeg_frame(sof: int, precision: int, w: int, h: int, comp_quant) -> bytes:
+    """SOFn segment: components 1..n, 1x1 sampling, the given DQT ids."""
+    import struct
+
+    nc = len(comp_quant)
+    out = bytes([0xFF, sof]) + struct.pack(">HBHHB", 8 + 3 * nc, precision, h, w, nc)
+    return out + b"".join(bytes([ci + 1, 0x11, q]) for ci, q in enumerate(comp_quant))
+
+
+def _jpeg_tables(tables, restart_interval: int) -> bytes:
+    """One DHT segment per (Tc << 4 | Th, counts, symbols) table, then
+    DRI when restarts are on."""
+    import struct
+
+    out = b""
+    for tc_th, counts, symbols in tables:
         out += b"\xff\xc4" + struct.pack(">H", 19 + len(symbols))
         out += bytes([tc_th]) + bytes(counts) + bytes(symbols)
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for ci in range(ncomp):
-        tbl = 0 if ci == 0 else 1
-        out += bytes([ci + 1, (tbl << 4) | tbl])
-    out += b"\x00\x3f\x00"  # Ss=0 Se=63 AhAl=0
+    return out
 
-    dc_codes = _huffman_codes(_FIX_DC_COUNTS, _FIX_DC_SYMBOLS)
-    ac_codes = _huffman_codes(_FIX_AC_COUNTS, _FIX_AC_SYMBOLS)
+
+def _jpeg_sos(comp_tables, ss: int, se: int, ah_al: int) -> bytes:
+    """SOS header over (component id, Td << 4 | Ta) pairs."""
+    import struct
+
+    out = b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comp_tables), len(comp_tables))
+    return out + b"".join(bytes(p) for p in comp_tables) + bytes([ss, se, ah_al])
+
+
+def _huffman_scan(
+    comp_blocks, n_mcu: int, restart_interval: int, dc_codes, ac_codes
+) -> bytes:
+    """Entropy-code one interleaved sequential DCT scan (T.81 F.1.2) —
+    the one block coder behind the baseline and 12-bit encoders: per
+    MCU one zigzag block per component, the DC difference against that
+    component's predictor, then AC run/size symbols with ZRL and EOB;
+    an RSTn after every `restart_interval` MCUs resets the predictors."""
+    out = bytearray()
     bw = _BitWriter()
-    pred = [0] * ncomp
-    # MCU grid is 8-ALIGNED (ceil), so non-multiple declared dims carry
-    # full edge blocks the decoder crops back to (w, h)
-    n_mcu = -(-w // 8) * (-(-h // 8))
+    pred = [0] * len(comp_blocks)
     for m in range(n_mcu):
         if restart_interval and m and m % restart_interval == 0:
             out += bw.flush()
             bw = _BitWriter()
             out += bytes([0xFF, 0xD0 + ((m // restart_interval - 1) % 8)])
-            pred = [0] * ncomp
-        for ci in range(ncomp):
-            zz = comp_blocks[ci][m]
-            diff = zz[0] - pred[ci]
+            pred = [0] * len(comp_blocks)
+        for ci, blocks in enumerate(comp_blocks):
+            zz = blocks[m]
+            _write_diff(bw, dc_codes, zz[0] - pred[ci])
             pred[ci] = zz[0]
-            cat = _dc_category(diff)
-            code, length = dc_codes[cat]
-            bw.write(code, length)
-            if cat:
-                bw.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
             k = 1
             while k < 64:
                 run = 0
@@ -2974,9 +2708,47 @@ def encode_jpeg_blocks(
                 bw.write(code, length)
                 bw.write(v if v >= 0 else v + (1 << size) - 1, size)
                 k += 1
-    out += bw.flush()
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    return bytes(out + bw.flush())
+
+
+def encode_jpeg_blocks(
+    w: int,
+    h: int,
+    comp_blocks,
+    quant_tables,
+    comp_quant=(0, 1, 1),
+    restart_interval: int = 0,
+) -> bytes:
+    """Fixture twin of decode_jpeg: pack QUANTIZED coefficient blocks
+    (zigzag order, per component, raster block order) into a valid
+    baseline JFIF stream — 4:4:4 sampling, custom canonical Huffman
+    tables, optional DRI/RSTn restarts. Constructing fixtures in the
+    compressed domain keeps the decoded-pixel formula closed-form (the
+    lossy quantizer never runs), so the oracle stays integer-exact."""
+    ncomp = len(comp_blocks)
+    out = bytearray(b"\xff\xd8") + _jfif_dqt(quant_tables)  # SOI
+    out += _jpeg_frame(0xC0, 8, w, h, [comp_quant[ci] for ci in range(ncomp)])
+    out += _jpeg_tables(
+        (
+            (0x00, _FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
+            (0x10, _FIX_AC_COUNTS, _FIX_AC_SYMBOLS),
+            (0x01, _FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
+            (0x11, _FIX_AC_COUNTS, _FIX_AC_SYMBOLS),
+        ),
+        restart_interval,
+    )
+    tables = [(ci + 1, 0x00 if ci == 0 else 0x11) for ci in range(ncomp)]
+    out += _jpeg_sos(tables, 0, 63, 0)
+    # MCU grid is 8-ALIGNED (ceil), so non-multiple declared dims carry
+    # full edge blocks the decoder crops back to (w, h)
+    out += _huffman_scan(
+        comp_blocks,
+        -(-w // 8) * (-(-h // 8)),
+        restart_interval,
+        _huffman_codes(_FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
+        _huffman_codes(_FIX_AC_COUNTS, _FIX_AC_SYMBOLS),
+    )
+    return bytes(out + b"\xff\xd9")  # EOI
 
 
 # AC table for the PROGRESSIVE fixture encoder: EOB runs up to 7
@@ -3000,28 +2772,20 @@ def encode_jpeg_progressive(w, h, comp_blocks, quant_tables, comp_quant=(0, 1, 1
     correction bits). Constraint inherited from the 5-bit fixture AC
     table: first-pass AC values (|v| >> 1) must be 0 or 1, i.e.
     |coefficient| <= 3."""
-    import struct
-
     AL = 1
     ncomp = len(comp_blocks)
     nb = -(-w // 8) * (-(-h // 8))
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    for tid, qt in enumerate(quant_tables):
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tid]) + bytes(qt)
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
-    for ci in range(ncomp):
-        out += bytes([ci + 1, 0x11, comp_quant[ci]])
-    for tc_th, counts, symbols in (
-        (0x00, _FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
-        (0x10, _PROG_AC_COUNTS, _PROG_AC_SYMBOLS),
-        (0x01, _FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
-        (0x11, _PROG_AC_COUNTS, _PROG_AC_SYMBOLS),
-    ):
-        out += b"\xff\xc4" + struct.pack(">H", 19 + len(symbols))
-        out += bytes([tc_th]) + bytes(counts) + bytes(symbols)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+    out = bytearray(b"\xff\xd8") + _jfif_dqt(quant_tables)
+    out += _jpeg_frame(0xC2, 8, w, h, [comp_quant[ci] for ci in range(ncomp)])
+    out += _jpeg_tables(
+        (
+            (0x00, _FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
+            (0x10, _PROG_AC_COUNTS, _PROG_AC_SYMBOLS),
+            (0x01, _FIX_DC_COUNTS, _FIX_DC_SYMBOLS),
+            (0x11, _PROG_AC_COUNTS, _PROG_AC_SYMBOLS),
+        ),
+        restart_interval,
+    )
     dc_codes = _huffman_codes(_FIX_DC_COUNTS, _FIX_DC_SYMBOLS)
     ac_codes = _huffman_codes(_PROG_AC_COUNTS, _PROG_AC_SYMBOLS)
     rst_count = 0
@@ -3041,11 +2805,8 @@ def encode_jpeg_progressive(w, h, comp_blocks, quant_tables, comp_quant=(0, 1, 1
         return bw, False
 
     def sos_header(comp_ids, ss, se, ah, al):
-        hdr = b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comp_ids), len(comp_ids))
-        for cid in comp_ids:
-            tbl = 0 if cid == 1 else 1
-            hdr += bytes([cid, (tbl << 4) | tbl])
-        return hdr + bytes([ss, se, (ah << 4) | al])
+        tables = [(cid, 0x00 if cid == 1 else 0x11) for cid in comp_ids]
+        return _jpeg_sos(tables, ss, se, (ah << 4) | al)
 
     def stv(v):  # successive-approximation point transform (sign-magnitude)
         return -((-v) >> AL) if v < 0 else v >> AL
@@ -3061,13 +2822,8 @@ def encode_jpeg_progressive(w, h, comp_blocks, quant_tables, comp_quant=(0, 1, 1
             pred = [0] * ncomp
         for ci in range(ncomp):
             v = comp_blocks[ci][m][0] >> AL  # DC uses arithmetic shift (T.81)
-            diff = v - pred[ci]
+            _write_diff(bw, dc_codes, v - pred[ci])
             pred[ci] = v
-            cat = _dc_category(diff)
-            code, length = dc_codes[cat]
-            bw.write(code, length)
-            if cat:
-                bw.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
     out += bw.flush()
 
     # --- scans 2-3: per-component AC first, bands 1-5 then 6-63 ---
@@ -4514,20 +4270,21 @@ _T4_EXT_MAKEUP = {  # shared by both colors (T.4 table 4)
 }
 
 
-def _mh_encode_line(runs: list) -> str:
-    """Alternating white-first run lengths -> T.4 MH bit string."""
+def _mh_encode_run(r: int, white: bool) -> str:
+    """One T.4 run of `r` pixels of one color: extended 2560 makeups
+    while r > 2623, one makeup code for the multiple of 64, then the
+    terminating code — MH lines and T.6/T.4 horizontal mode alike."""
+    makeup = _T4_WHITE_MAKEUP if white else _T4_BLACK_MAKEUP
+    term = _T4_WHITE_TERM if white else _T4_BLACK_TERM
     bits = []
-    for i, r in enumerate(runs):
-        makeup = _T4_WHITE_MAKEUP if i % 2 == 0 else _T4_BLACK_MAKEUP
-        term = _T4_WHITE_TERM if i % 2 == 0 else _T4_BLACK_TERM
-        while r > 2623:
-            bits.append(_T4_EXT_MAKEUP[2560])
-            r -= 2560
-        if r >= 64:
-            m = (r // 64) * 64
-            bits.append(makeup[m] if m <= 1728 else _T4_EXT_MAKEUP[m])
-            r -= m
-        bits.append(term[r])
+    while r > 2623:
+        bits.append(_T4_EXT_MAKEUP[2560])
+        r -= 2560
+    if r >= 64:
+        m = (r // 64) * 64
+        bits.append(makeup[m] if m <= 1728 else _T4_EXT_MAKEUP[m])
+        r -= m
+    bits.append(term[r])
     return "".join(bits)
 
 
@@ -4547,39 +4304,11 @@ def _mh_decode(data: bytes, w: int, h: int):
     under PhotometricInterpretation 0). Each line is byte-aligned."""
     import numpy as np
 
-    white, black = _mh_decode_tables()
-    maxlen = max(max(len(c) for c in white), max(len(c) for c in black))
-    bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-    bitstr = "".join("1" if b else "0" for b in bits)
+    rd = _G4BitReader(data)
     out = np.zeros((h, w), dtype=np.int64)
-    pos = 0
     for y in range(h):
-        pos = (pos + 7) // 8 * 8  # line starts byte-aligned
-        x = 0
-        is_white = True
-        run = 0
-        while x < w:
-            table = white if is_white else black
-            for ln in range(2, maxlen + 1):
-                code = bitstr[pos : pos + ln]
-                if len(code) < ln:
-                    raise ValueError("CCITT MH stream truncated")
-                hit = table.get(code)
-                if hit is not None:
-                    n, terminating = hit
-                    pos += ln
-                    run += n
-                    if terminating:
-                        if x + run > w:
-                            raise ValueError("CCITT MH run overruns line")
-                        if not is_white:
-                            out[y, x : x + run] = 1
-                        x += run
-                        run = 0
-                        is_white = not is_white
-                    break
-            else:
-                raise ValueError("invalid CCITT MH code")
+        rd.pos = (rd.pos + 7) // 8 * 8  # line starts byte-aligned
+        _changes_to_row(_mh_decode_line(rd, w), out[y], w)
     return out
 
 
@@ -4601,105 +4330,34 @@ def encode_tiff_bilevel(
     each strip restarting from an imaginary all-white reference,
     continuous bit stream). Fixture twin of the decode_tiff bilevel
     path; JDK ImageIO cross-validated both directions."""
-    import struct
-
     import numpy as np
 
     if compression not in (1, 2, 3, 4):
         raise ValueError("bilevel TIFF supports compression 1-4 here")
-    e = ">" if big_endian else "<"
     a = np.asarray(arr, dtype=np.int64)
     if a.max(initial=0) > 1 or a.min(initial=0) < 0:
         raise ValueError("bilevel TIFF needs 0/1 samples")
     fb = 1 - a  # stored file bits under WhiteIsZero (0 = white)
     h, w = a.shape
-    nstrips = -(-h // rows_per_strip)
     segs = []
-    for i in range(nstrips):
-        s = fb[i * rows_per_strip : (i + 1) * rows_per_strip]
+    for y in range(0, h, rows_per_strip):
+        s = fb[y : y + rows_per_strip]
         if compression == 1:
             segs.append(_pack_indices(s, 1).astype(np.uint8).tobytes())
-        elif compression in (3, 4):
-            allbits = (
-                _t4_encode_strip(s) if compression == 3
-                else _g4_encode_strip(s)
-            )
-            allbits += "0" * (-len(allbits) % 8)
-            segs.append(
-                np.packbits(
-                    np.frombuffer(allbits.encode(), dtype=np.uint8)
-                    - ord("0")
-                ).tobytes()
-            )
+            continue
+        if compression == 2:  # MH: every line starts byte-aligned
+            lines = [_mh_encode_row(row, w) for row in s]
+            bits = "".join(b + "0" * (-len(b) % 8) for b in lines)
         else:
-            lines = []
-            for row in s:
-                # run-length split: white (0) first, alternating
-                change = np.flatnonzero(np.diff(row)) + 1
-                bounds = np.concatenate(([0], change, [w]))
-                runs = np.diff(bounds).tolist()
-                if row[0] == 1:  # line starts black: zero white run
-                    runs = [0] + runs
-                enc = _mh_encode_line(runs)
-                enc += "0" * (-len(enc) % 8)  # byte-align the line
-                lines.append(enc)
-            allbits = "".join(lines)
-            segs.append(
-                np.packbits(
-                    np.frombuffer(
-                        allbits.encode(), dtype=np.uint8
-                    ) - ord("0")
-                ).tobytes()
-            )
-
-    nsegs = len(segs)
-    pos = 8
-    seg_offsets = []
-    for s in segs:
-        seg_offsets.append(pos)
-        pos += len(s)
-    so_off, sbc_off = pos, pos + 4 * nsegs
-    pos += 8 * nsegs
-    ifd_off = pos
-
-    def entry(tag, typ, count, value):
-        return struct.pack(f"{e}HHI", tag, typ, count) + value
-
-    def short_val(v):
-        return struct.pack(f"{e}HH", v, 0)
-
-    def long_val(v):
-        return struct.pack(f"{e}I", v)
-
-    off_val = long_val(so_off if nsegs > 1 else seg_offsets[0])
-    cnt_val = long_val(sbc_off if nsegs > 1 else len(segs[0]))
-    entries = [
-        entry(256, 4, 1, long_val(w)),
-        entry(257, 4, 1, long_val(h)),
-        entry(258, 3, 1, short_val(1)),      # BitsPerSample 1 (inline)
-        entry(259, 3, 1, short_val(compression)),
-        entry(262, 3, 1, short_val(0)),      # Photometric: WhiteIsZero
-        entry(273, 4, nsegs, off_val),
-        entry(277, 3, 1, short_val(1)),      # SamplesPerPixel
-        entry(278, 4, 1, long_val(rows_per_strip)),
-        entry(279, 4, nsegs, cnt_val),
-    ]
-    if compression == 3:
-        entries.append(entry(292, 4, 1, long_val(1)))  # T4Options: 2-D
-        entries.sort(key=lambda b: struct.unpack(f"{e}H", b[:2])[0])
-    out = bytearray()
-    out += (b"MM\x00*" if big_endian else b"II*\x00") + struct.pack(
-        f"{e}I", ifd_off
+            bits = _t4_encode_strip(s) if compression == 3 else _g4_encode_strip(s)
+        bits += "0" * (-len(bits) % 8)
+        bitarr = np.frombuffer(bits.encode(), dtype=np.uint8) - ord("0")
+        segs.append(np.packbits(bitarr).tobytes())
+    return _tiff_file(
+        segs, w, h, (1,), compression, 0,  # Photometric 0: WhiteIsZero
+        big_endian=big_endian, rows_per_strip=rows_per_strip,
+        extra=((292, 1),) if compression == 3 else (),  # T4Options: 2-D
     )
-    for s in segs:
-        out += s
-    for off in seg_offsets:
-        out += struct.pack(f"{e}I", off)
-    for s in segs:
-        out += struct.pack(f"{e}I", len(s))
-    out += struct.pack(f"{e}H", len(entries)) + b"".join(entries)
-    out += struct.pack(f"{e}I", 0)
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -4760,12 +4418,8 @@ def _g4_encode_line(cur: list, ref: list, w: int) -> str:
             a2 = cur[ia2] if ia2 < len(cur) else w
             base = max(a0, 0)
             bits.append(_T6_HORIZ)
-            if color == 0:
-                bits.append(_mh_encode_white(a1 - base))
-                bits.append(_mh_encode_black(a2 - a1))
-            else:
-                bits.append(_mh_encode_black(a1 - base))
-                bits.append(_mh_encode_white(a2 - a1))
+            bits.append(_mh_encode_run(a1 - base, white=(color == 0)))
+            bits.append(_mh_encode_run(a2 - a1, white=(color == 1)))
             a0 = a2
         if a0 >= w:
             break
@@ -4788,15 +4442,15 @@ _T4_EOL = "000000000001"
 
 
 def _mh_encode_row(row, w: int) -> str:
-    """One 1-D MH line from file bits (white-first alternation)."""
+    """One 1-D MH line from file bits: alternating white-first run
+    lengths (a line starting black emits the zero-length white code)."""
     import numpy as np
 
     change = np.flatnonzero(np.diff(row)) + 1
-    bounds = np.concatenate(([0], change, [w]))
-    runs = np.diff(bounds).tolist()
+    runs = np.diff(np.concatenate(([0], change, [w]))).tolist()
     if row[0] == 1:
         runs = [0] + runs
-    return _mh_encode_line(runs)
+    return "".join(_mh_encode_run(r, white=(i % 2 == 0)) for i, r in enumerate(runs))
 
 
 def _t4_encode_strip(rows) -> str:
@@ -4822,49 +4476,29 @@ def _t4_encode_strip(rows) -> str:
     return "".join(bits)
 
 
-def _mh_encode_white(r: int) -> str:
-    bits = []
-    while r > 2623:
-        bits.append(_T4_EXT_MAKEUP[2560])
-        r -= 2560
-    if r >= 64:
-        m = (r // 64) * 64
-        bits.append(_T4_WHITE_MAKEUP[m] if m <= 1728 else _T4_EXT_MAKEUP[m])
-        r -= m
-    bits.append(_T4_WHITE_TERM[r])
-    return "".join(bits)
-
-
-def _mh_encode_black(r: int) -> str:
-    bits = []
-    while r > 2623:
-        bits.append(_T4_EXT_MAKEUP[2560])
-        r -= 2560
-    if r >= 64:
-        m = (r // 64) * 64
-        bits.append(_T4_BLACK_MAKEUP[m] if m <= 1728 else _T4_EXT_MAKEUP[m])
-        r -= m
-    bits.append(_T4_BLACK_TERM[r])
-    return "".join(bits)
-
-
 class _G4BitReader:
+    """CCITT segment as a '0'/'1' string with a read cursor: table
+    lookups by code prefix for the MH, T.4 and T.6 decoders."""
+
     __slots__ = ("bits", "pos")
 
-    def __init__(self, bits: str):
-        self.bits = bits
+    def __init__(self, data: bytes):
+        import numpy as np
+
+        bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8)) + ord("0")
+        self.bits = bits.tobytes().decode("ascii")
         self.pos = 0
 
     def take(self, table: dict, maxlen: int):
         for ln in range(1, maxlen + 1):
             code = self.bits[self.pos : self.pos + ln]
             if len(code) < ln:
-                raise ValueError("CCITT G4 stream truncated")
+                raise ValueError("CCITT stream truncated")
             hit = table.get(code)
             if hit is not None:
                 self.pos += ln
                 return hit
-        raise ValueError("invalid CCITT G4 code")
+        raise ValueError("invalid CCITT code")
 
 
 _MH_TABLES_CACHE: list = []
@@ -4919,28 +4553,19 @@ def _g4_decode_line(rd: "_G4BitReader", ref: list, w: int) -> list:
 
 
 def _mh_decode_line(rd: "_G4BitReader", w: int) -> list:
-    """Decode one 1-D MH line -> changing-element list."""
-    cur: list = []
-    x, is_white = 0, True
-    while x < w:
-        run = _mh_read_run(rd, white=is_white)
-        if run:
-            if not is_white:
-                cur.append(x)
-                cur.append(min(x + run, w))
-            x += run
-        elif not is_white:
-            pass  # zero-length black run (possible after makeup-free W0)
-        is_white = not is_white
-    # merge adjacent black intervals into changes (they cannot overlap)
+    """Decode one 1-D MH line -> changing-element list (the positions
+    where the color flips, starting from white)."""
     changes: list = []
-    for i in range(0, len(cur), 2):
-        if changes and changes[-1] == cur[i]:
-            changes[-1] = cur[i + 1]
-        else:
-            changes.append(cur[i])
-            changes.append(cur[i + 1])
-    return [c for c in changes if c <= w]
+    x, white = 0, True
+    while x < w:
+        run = _mh_read_run(rd, white=white)
+        if x + run > w:
+            raise ValueError("CCITT MH run overruns line")
+        if run and white == (len(changes) % 2 == 1):  # a color change
+            changes.append(x)
+        x += run
+        white = not white
+    return changes
 
 
 def _changes_to_row(cur: list, row, w: int) -> None:
@@ -4955,8 +4580,7 @@ def _g4_decode_strip(data: bytes, w: int, nrows: int):
     """T.6 segment -> (nrows, w) file bits (0 = white)."""
     import numpy as np
 
-    bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-    rd = _G4BitReader("".join("1" if b else "0" for b in bits))
+    rd = _G4BitReader(data)
     out = np.zeros((nrows, w), dtype=np.int64)
     ref: list = []
     for y in range(nrows):
@@ -4972,8 +4596,7 @@ def _t4_decode_strip(data: bytes, w: int, nrows: int, two_d: bool):
     when T4Options bit 0 is set; trailing RTC ignored."""
     import numpy as np
 
-    bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-    rd = _G4BitReader("".join("1" if b else "0" for b in bits))
+    rd = _G4BitReader(data)
     out = np.zeros((nrows, w), dtype=np.int64)
     ref: list = []
     for y in range(nrows):
@@ -5041,87 +4664,6 @@ def block_motion_search(prev, cur, block: int = 8, radius: int = 2):
             sad, dy, dx = best
             out.append((bx, by, dx, dy, sad))
     return out
-
-
-def encode_tiff_gray(
-    arr,
-    compression: int = 1,
-    big_endian: bool = False,
-    rows_per_strip: int = 4,
-) -> bytes:
-    """(h, w) uint8 -> 8-bit grayscale TIFF (PhotometricInterpretation
-    1 BlackIsZero, SamplesPerPixel 1), stripped chunky layout, same
-    per-segment compressions as the RGB encoder (none/LZW/Deflate/
-    PackBits). Fixture twin of decode_tiff's gray path."""
-    import struct
-
-    import numpy as np
-
-    if compression not in (1, 5, 8, 32773):
-        raise ValueError(f"unsupported TIFF compression {compression}")
-    e = ">" if big_endian else "<"
-    a = np.asarray(arr, dtype=np.uint8)
-    h, w = a.shape
-    nstrips = -(-h // rows_per_strip)
-    segs = [
-        a[i * rows_per_strip : (i + 1) * rows_per_strip].tobytes()
-        for i in range(nstrips)
-    ]
-    if compression == 5:
-        segs = [_lzw_encode_tiff(s) for s in segs]
-    elif compression == 8:
-        import zlib
-
-        segs = [zlib.compress(s) for s in segs]
-    elif compression == 32773:
-        segs = [_packbits_encode(s) for s in segs]
-
-    nsegs = len(segs)
-    pos = 8
-    seg_offsets = []
-    for s in segs:
-        seg_offsets.append(pos)
-        pos += len(s)
-    so_off, sbc_off = pos, pos + 4 * nsegs
-    pos += 8 * nsegs
-    ifd_off = pos
-
-    def entry(tag, typ, count, value):
-        return struct.pack(f"{e}HHI", tag, typ, count) + value
-
-    def short_val(v):
-        return struct.pack(f"{e}HH", v, 0)
-
-    def long_val(v):
-        return struct.pack(f"{e}I", v)
-
-    off_val = long_val(so_off if nsegs > 1 else seg_offsets[0])
-    cnt_val = long_val(sbc_off if nsegs > 1 else len(segs[0]))
-    entries = [
-        entry(256, 4, 1, long_val(w)),
-        entry(257, 4, 1, long_val(h)),
-        entry(258, 3, 1, short_val(8)),
-        entry(259, 3, 1, short_val(compression)),
-        entry(262, 3, 1, short_val(1)),      # BlackIsZero
-        entry(273, 4, nsegs, off_val),
-        entry(277, 3, 1, short_val(1)),
-        entry(278, 4, 1, long_val(rows_per_strip)),
-        entry(279, 4, nsegs, cnt_val),
-    ]
-    out = bytearray()
-    out += (b"MM\x00*" if big_endian else b"II*\x00") + struct.pack(
-        f"{e}I", ifd_off
-    )
-    for s in segs:
-        out += s
-    for off in seg_offsets:
-        out += struct.pack(f"{e}I", off)
-    for s in segs:
-        out += struct.pack(f"{e}I", len(s))
-    out += struct.pack(f"{e}H", len(entries)) + b"".join(entries)
-    out += struct.pack(f"{e}I", 0)
-    return bytes(out)
-
 
 
 # MS ADPCM (Microsoft WAVE spec, public): 7 fixed predictor-coefficient
@@ -5306,171 +4848,6 @@ def decode_gif_animated(data: bytes):
     return frames
 
 
-def encode_tiff_gray16(
-    arr,
-    compression: int = 1,
-    big_endian: bool = False,
-    rows_per_strip: int = 4,
-) -> bytes:
-    """(h, w) uint16 -> 16-bit grayscale TIFF (BitsPerSample 16,
-    PhotometricInterpretation 1 BlackIsZero, SamplesPerPixel 1),
-    stripped chunky layout, same per-segment compressions as the 8-bit
-    encoders (none/LZW/Deflate/PackBits). Sample words are written in
-    the FILE byte order (spec §7). Fixture twin of decode_tiff's
-    16-bit gray path."""
-    import struct
-
-    import numpy as np
-
-    if compression not in (1, 5, 8, 32773):
-        raise ValueError(f"unsupported TIFF compression {compression}")
-    e = ">" if big_endian else "<"
-    a = np.asarray(arr, dtype=np.dtype(f"{e}u2"))
-    h, w = a.shape
-    nstrips = -(-h // rows_per_strip)
-    segs = [
-        a[i * rows_per_strip : (i + 1) * rows_per_strip].tobytes()
-        for i in range(nstrips)
-    ]
-    if compression == 5:
-        segs = [_lzw_encode_tiff(s) for s in segs]
-    elif compression == 8:
-        import zlib
-
-        segs = [zlib.compress(s) for s in segs]
-    elif compression == 32773:
-        segs = [_packbits_encode(s) for s in segs]
-
-    nsegs = len(segs)
-    pos = 8
-    seg_offsets = []
-    for s in segs:
-        seg_offsets.append(pos)
-        pos += len(s)
-    so_off, sbc_off = pos, pos + 4 * nsegs
-    pos += 8 * nsegs
-    ifd_off = pos
-
-    def entry(tag, typ, count, value):
-        return struct.pack(f"{e}HHI", tag, typ, count) + value
-
-    def short_val(v):
-        return struct.pack(f"{e}HH", v, 0)
-
-    def long_val(v):
-        return struct.pack(f"{e}I", v)
-
-    off_val = long_val(so_off if nsegs > 1 else seg_offsets[0])
-    cnt_val = long_val(sbc_off if nsegs > 1 else len(segs[0]))
-    entries = [
-        entry(256, 4, 1, long_val(w)),
-        entry(257, 4, 1, long_val(h)),
-        entry(258, 3, 1, short_val(16)),
-        entry(259, 3, 1, short_val(compression)),
-        entry(262, 3, 1, short_val(1)),      # BlackIsZero
-        entry(273, 4, nsegs, off_val),
-        entry(277, 3, 1, short_val(1)),
-        entry(278, 4, 1, long_val(rows_per_strip)),
-        entry(279, 4, nsegs, cnt_val),
-    ]
-    out = bytearray()
-    out += (b"MM\x00*" if big_endian else b"II*\x00") + struct.pack(
-        f"{e}I", ifd_off
-    )
-    for s in segs:
-        out += s
-    for off in seg_offsets:
-        out += struct.pack(f"{e}I", off)
-    for s in segs:
-        out += struct.pack(f"{e}I", len(s))
-    out += struct.pack(f"{e}H", len(entries)) + b"".join(entries)
-    out += struct.pack(f"{e}I", 0)
-    return bytes(out)
-
-
-def encode_tiff_rgb16(
-    arr,
-    compression: int = 1,
-    big_endian: bool = False,
-    rows_per_strip: int = 4,
-) -> bytes:
-    """(h, w, 3) uint16 -> 16-bit RGB TIFF (BitsPerSample [16,16,16],
-    chunky stripped), sample words in the FILE byte order, same
-    per-segment compressions as the other encoders. Fixture twin of
-    decode_tiff's 16-bit RGB path."""
-    import struct
-
-    import numpy as np
-
-    if compression not in (1, 5, 8, 32773):
-        raise ValueError(f"unsupported TIFF compression {compression}")
-    e = ">" if big_endian else "<"
-    a = np.asarray(arr, dtype=np.dtype(f"{e}u2"))
-    h, w, _ = a.shape
-    nstrips = -(-h // rows_per_strip)
-    segs = [
-        a[i * rows_per_strip : (i + 1) * rows_per_strip].tobytes()
-        for i in range(nstrips)
-    ]
-    if compression == 5:
-        segs = [_lzw_encode_tiff(s) for s in segs]
-    elif compression == 8:
-        import zlib
-
-        segs = [zlib.compress(s) for s in segs]
-    elif compression == 32773:
-        segs = [_packbits_encode(s) for s in segs]
-
-    nsegs = len(segs)
-    pos = 8
-    seg_offsets = []
-    for s in segs:
-        seg_offsets.append(pos)
-        pos += len(s)
-    bits_off = pos
-    pos += 6
-    so_off, sbc_off = pos, pos + 4 * nsegs
-    pos += 8 * nsegs
-    ifd_off = pos
-
-    def entry(tag, typ, count, value):
-        return struct.pack(f"{e}HHI", tag, typ, count) + value
-
-    def short_val(v):
-        return struct.pack(f"{e}HH", v, 0)
-
-    def long_val(v):
-        return struct.pack(f"{e}I", v)
-
-    off_val = long_val(so_off if nsegs > 1 else seg_offsets[0])
-    cnt_val = long_val(sbc_off if nsegs > 1 else len(segs[0]))
-    entries = [
-        entry(256, 4, 1, long_val(w)),
-        entry(257, 4, 1, long_val(h)),
-        entry(258, 3, 3, long_val(bits_off)),
-        entry(259, 3, 1, short_val(compression)),
-        entry(262, 3, 1, short_val(2)),      # RGB
-        entry(273, 4, nsegs, off_val),
-        entry(277, 3, 1, short_val(3)),
-        entry(278, 4, 1, long_val(rows_per_strip)),
-        entry(279, 4, nsegs, cnt_val),
-    ]
-    out = bytearray()
-    out += (b"MM\x00*" if big_endian else b"II*\x00") + struct.pack(
-        f"{e}I", ifd_off
-    )
-    for s in segs:
-        out += s
-    out += struct.pack(f"{e}HHH", 16, 16, 16)
-    for off in seg_offsets:
-        out += struct.pack(f"{e}I", off)
-    for s in segs:
-        out += struct.pack(f"{e}I", len(s))
-    out += struct.pack(f"{e}H", len(entries)) + b"".join(entries)
-    out += struct.pack(f"{e}I", 0)
-    return bytes(out)
-
-
 # DC table for the 12-bit fixture encoder: all 16 categories (0..15)
 # as 4-bit codes — a complete tree (16 * 2^-4 = 1 satisfies Kraft).
 _J12_DC_COUNTS = [0, 0, 0, 16] + [0] * 12
@@ -5495,63 +4872,24 @@ def encode_jpeg12_gray(
 
     out = bytearray(b"\xff\xd8")
     out += b"\xff\xdb" + struct.pack(">H", 2 + 1 + 128) + bytes([0x10])
-    for q in quant_table:
-        out += struct.pack(">H", q)
-    out += b"\xff\xc1" + struct.pack(">HBHHB", 11, 12, h, w, 1)
-    out += bytes([1, 0x11, 0])
-    for tc_th, counts, symbols in (
-        (0x00, _J12_DC_COUNTS, _J12_DC_SYMBOLS),
-        (0x10, _FIX_AC_COUNTS, _FIX_AC_SYMBOLS),
-    ):
-        out += b"\xff\xc4" + struct.pack(">H", 19 + len(symbols))
-        out += bytes([tc_th]) + bytes(counts) + bytes(symbols)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00])
-    out += b"\x00\x3f\x00"
-
-    dc_codes = _huffman_codes(_J12_DC_COUNTS, _J12_DC_SYMBOLS)
-    ac_codes = _huffman_codes(_FIX_AC_COUNTS, _FIX_AC_SYMBOLS)
-    bw = _BitWriter()
-    pred = 0
-    n_blk = -(-w // 8) * (-(-h // 8))
-    for m in range(n_blk):
-        if restart_interval and m and m % restart_interval == 0:
-            out += bw.flush()
-            bw = _BitWriter()
-            out += bytes([0xFF, 0xD0 + ((m // restart_interval - 1) % 8)])
-            pred = 0
-        zz = blocks[m]
-        diff = zz[0] - pred
-        pred = zz[0]
-        cat = _dc_category(diff)
-        code, length = dc_codes[cat]
-        bw.write(code, length)
-        if cat:
-            bw.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-        k = 1
-        while k < 64:
-            run = 0
-            while k < 64 and zz[k] == 0:
-                run += 1
-                k += 1
-            if k == 64:
-                code, length = ac_codes[0x00]
-                bw.write(code, length)
-                break
-            while run >= 16:
-                code, length = ac_codes[0xF0]
-                bw.write(code, length)
-                run -= 16
-            v = zz[k]
-            size = _dc_category(v)
-            code, length = ac_codes[(run << 4) | size]
-            bw.write(code, length)
-            bw.write(v if v >= 0 else v + (1 << size) - 1, size)
-            k += 1
-    out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
+    out += struct.pack(f">{len(quant_table)}H", *quant_table)
+    out += _jpeg_frame(0xC1, 12, w, h, (0,))
+    out += _jpeg_tables(
+        (
+            (0x00, _J12_DC_COUNTS, _J12_DC_SYMBOLS),
+            (0x10, _FIX_AC_COUNTS, _FIX_AC_SYMBOLS),
+        ),
+        restart_interval,
+    )
+    out += _jpeg_sos([(1, 0x00)], 0, 63, 0)
+    out += _huffman_scan(
+        [blocks],
+        -(-w // 8) * (-(-h // 8)),
+        restart_interval,
+        _huffman_codes(_J12_DC_COUNTS, _J12_DC_SYMBOLS),
+        _huffman_codes(_FIX_AC_COUNTS, _FIX_AC_SYMBOLS),
+    )
+    return bytes(out + b"\xff\xd9")
 
 
 # DC table for the lossless fixture encoder: categories 0..16 (SSSS=16
@@ -5560,328 +4898,67 @@ _JLL_DC_COUNTS = [0, 0, 0, 0, 17] + [0] * 11
 _JLL_DC_SYMBOLS = list(range(17))
 
 
-def encode_jpeg_lossless_gray(
+def encode_jpeg_lossless(
     arr,
     precision: int,
+    *,
     predictor: int = 1,
     restart_interval: int = 0,
+    scan_groups: "tuple[tuple[int, ...], ...] | None" = None,
 ) -> bytes:
     """Fixture twin of decode_jpeg's SOF3 path: LOSSLESS sequential
-    JPEG (T.81 Annex H) over a (h, w) integer grayscale array —
-    predictive coding with the 7 standard predictors, differences mod
-    2^16 with the SSSS=16 escape, optional DRI/RSTn (the predictor
-    resets to 2^(P-1) after a restart). Decoded samples equal the
-    input EXACTLY — the whole point of the format."""
-    import struct
-
+    JPEG (T.81 Annex H) — predictive coding with the 7 standard
+    predictors, differences mod 2^16 with the SSSS=16 escape, optional
+    DRI/RSTn (the predictor resets to 2^(P-1) after a restart). A
+    (h, w) array is one gray component; an (h, w, nc) array is stored
+    color = output color (no transform), non-subsampled, one shared DC
+    table. By default one scan interleaves every component;
+    `scan_groups` splits the components over several scans (T.81
+    allows any 1 <= Ns <= Nf): ((0,), (1,), (2,)) is one scan per
+    component, ((0, 1), (2,)) a partially interleaved layout. The
+    groups must cover each component once, in any order; each scan
+    runs its own restart cadence and per-component predictor state.
+    Decoded samples equal the input EXACTLY whatever the layout — the
+    whole point of the format."""
     import numpy as np
 
     a = np.asarray(arr, dtype=np.int64)
-    h, w = a.shape
-    if not 1 <= predictor <= 7:
-        raise ValueError("lossless predictor must be 1..7")
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xc3" + struct.pack(">HBHHB", 11, precision, h, w, 1)
-    out += bytes([1, 0x11, 0])
-    out += b"\xff\xc4" + struct.pack(">H", 19 + len(_JLL_DC_SYMBOLS))
-    out += bytes([0x00]) + bytes(_JLL_DC_COUNTS) + bytes(_JLL_DC_SYMBOLS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00])
-    out += bytes([predictor, 0x00, 0x00])  # Ss=predictor, Se=0, Ah/Al=0
-
-    codes = _huffman_codes(_JLL_DC_COUNTS, _JLL_DC_SYMBOLS)
-    bw = _BitWriter()
-    default = 1 << (precision - 1)
-    n = 0
-    restarted = True
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and n == restart_interval:
-                out += bw.flush()
-                bw = _BitWriter()
-                out += bytes(
-                    [0xFF, 0xD0 + (((n and y * w + x) // restart_interval - 1) % 8)]
-                )
-                n = 0
-                restarted = True
-            if restarted:
-                px = default
-                restarted = False
-            elif y == 0:
-                px = a[0, x - 1] if x else default
-            elif x == 0:
-                px = a[y - 1, 0]
-            else:
-                aa, bb, cc = a[y, x - 1], a[y - 1, x], a[y - 1, x - 1]
-                px = (
-                    aa,
-                    bb,
-                    cc,
-                    aa + bb - cc,
-                    aa + ((bb - cc) >> 1),
-                    bb + ((aa - cc) >> 1),
-                    (aa + bb) >> 1,
-                )[predictor - 1]
-            d = (int(a[y, x]) - int(px)) % 65536
-            if d >= 32768:
-                d -= 65536
-            if d == -32768:
-                code, length = codes[16]
-                bw.write(code, length)  # SSSS=16: no appended bits
-            else:
-                cat = _dc_category(d)
-                code, length = codes[cat]
-                bw.write(code, length)
-                if cat:
-                    bw.write(d if d >= 0 else d + (1 << cat) - 1, cat)
-            n += 1
-    out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_lossless_rgb_multiscan(
-    arr,
-    precision: int = 8,
-    predictor: int = 1,
-    restart_interval: int = 0,
-) -> bytes:
-    """Fixture twin of the NON-INTERLEAVED SOF3 path (round 12): one
-    SOS per component, legal per T.81 §H — each scan carries its own
-    predictor/restart state over its component plane. Decoding this
-    stream must be pixel-identical to decoding the interleaved
-    encode_jpeg_lossless_rgb of the same array (the sample values and
-    predictor walks are the same; only the scan layout differs)."""
-    import struct
-
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.int64)
+    if a.ndim == 2:
+        a = a[:, :, None]
     h, w, nc = a.shape
-    assert nc == 3
-    if not 1 <= predictor <= 7:
-        raise ValueError("lossless predictor must be 1..7")
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xc3" + struct.pack(">HBHHB", 8 + 3 * nc, precision, h, w, nc)
-    for ci in range(nc):
-        out += bytes([ci + 1, 0x11, 0])
-    out += b"\xff\xc4" + struct.pack(">H", 19 + len(_JLL_DC_SYMBOLS))
-    out += bytes([0x00]) + bytes(_JLL_DC_COUNTS) + bytes(_JLL_DC_SYMBOLS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    codes = _huffman_codes(_JLL_DC_COUNTS, _JLL_DC_SYMBOLS)
-    default = 1 << (precision - 1)
-    for ci in range(nc):
-        # one scan per component: ns=1 SOS header, then the plane walk
-        out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-        out += bytes([ci + 1, 0x00, predictor, 0x00, 0x00])
-        bw = _BitWriter()
-        n = 0
-        n_restarts = 0
-        restarted = True
-        for y in range(h):
-            for x in range(w):
-                if restart_interval and n == restart_interval:
-                    out += bw.flush()
-                    bw = _BitWriter()
-                    out += bytes([0xFF, 0xD0 + (n_restarts % 8)])
-                    n_restarts += 1
-                    n = 0
-                    restarted = True
-                if restarted:
-                    px = default
-                    restarted = False
-                elif y == 0:
-                    px = a[0, x - 1, ci] if x else default
-                elif x == 0:
-                    px = a[y - 1, 0, ci]
-                else:
-                    aa = a[y, x - 1, ci]
-                    bb = a[y - 1, x, ci]
-                    cc = a[y - 1, x - 1, ci]
-                    px = (
-                        aa,
-                        bb,
-                        cc,
-                        aa + bb - cc,
-                        aa + ((bb - cc) >> 1),
-                        bb + ((aa - cc) >> 1),
-                        (aa + bb) >> 1,
-                    )[predictor - 1]
-                d = (int(a[y, x, ci]) - int(px)) % 65536
-                if d >= 32768:
-                    d -= 65536
-                if d == -32768:
-                    code, length = codes[16]
-                    bw.write(code, length)
-                else:
-                    cat = _dc_category(d)
-                    code, length = codes[cat]
-                    bw.write(code, length)
-                    if cat:
-                        bw.write(d if d >= 0 else d + (1 << cat) - 1, cat)
-                n += 1
-        out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_lossless_rgb_partial(
-    arr,
-    precision: int = 8,
-    predictor: int = 1,
-    restart_interval: int = 0,
-    scan_groups: "tuple[tuple[int, ...], ...]" = ((0, 1), (2,)),
-) -> bytes:
-    """Fixture twin of the PARTIALLY-INTERLEAVED SOF3 layout (round
-    13): the frame declares 3 components but each SOS interleaves only
-    a SUBSET of them (T.81 allows any 1 <= Ns <= Nf) — e.g. one scan
-    carrying R+G interleaved, a second carrying B. Each scan has its
-    own restart cadence and per-component predictor state; decoding
-    must be pixel-identical to the interleaved and one-scan-per-
-    component encodings of the same array. scan_groups must cover all
-    three channel indices exactly once."""
-    import struct
-
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.int64)
-    h, w, nc = a.shape
-    assert nc == 3
+    if scan_groups is None:
+        scan_groups = (tuple(range(nc)),)
     if sorted(ci for g in scan_groups for ci in g) != list(range(nc)):
         raise ValueError("scan_groups must cover each component once")
     if not 1 <= predictor <= 7:
         raise ValueError("lossless predictor must be 1..7")
     out = bytearray(b"\xff\xd8")
-    out += b"\xff\xc3" + struct.pack(">HBHHB", 8 + 3 * nc, precision, h, w, nc)
-    for ci in range(nc):
-        out += bytes([ci + 1, 0x11, 0])
-    out += b"\xff\xc4" + struct.pack(">H", 19 + len(_JLL_DC_SYMBOLS))
-    out += bytes([0x00]) + bytes(_JLL_DC_COUNTS) + bytes(_JLL_DC_SYMBOLS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+    out += _jpeg_frame(0xC3, precision, w, h, (0,) * nc)
+    out += _jpeg_tables([(0x00, _JLL_DC_COUNTS, _JLL_DC_SYMBOLS)], restart_interval)
     codes = _huffman_codes(_JLL_DC_COUNTS, _JLL_DC_SYMBOLS)
     default = 1 << (precision - 1)
+    px = a.tolist()
     for group in scan_groups:
-        gn = len(group)
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * gn, gn)
-        for ci in group:
-            out += bytes([ci + 1, 0x00])
-        out += bytes([predictor, 0x00, 0x00])
+        out += _jpeg_sos([(ci + 1, 0x00) for ci in group], predictor, 0, 0)
         bw = _BitWriter()
-        n = 0
-        n_restarts = 0
-        restarted = {ci: True for ci in group}
-        for y in range(h):
-            for x in range(w):
-                if restart_interval and n == restart_interval:
-                    out += bw.flush()
-                    bw = _BitWriter()
-                    out += bytes([0xFF, 0xD0 + (n_restarts % 8)])
-                    n_restarts += 1
-                    n = 0
-                    restarted = {ci: True for ci in group}
-                for ci in group:
-                    if restarted[ci]:
-                        px = default
-                        restarted[ci] = False
-                    elif y == 0:
-                        px = a[0, x - 1, ci] if x else default
-                    elif x == 0:
-                        px = a[y - 1, 0, ci]
-                    else:
-                        aa = a[y, x - 1, ci]
-                        bb = a[y - 1, x, ci]
-                        cc = a[y - 1, x - 1, ci]
-                        px = (
-                            aa,
-                            bb,
-                            cc,
-                            aa + bb - cc,
-                            aa + ((bb - cc) >> 1),
-                            bb + ((aa - cc) >> 1),
-                            (aa + bb) >> 1,
-                        )[predictor - 1]
-                    d = (int(a[y, x, ci]) - int(px)) % 65536
-                    if d >= 32768:
-                        d -= 65536
-                    if d == -32768:
-                        code, length = codes[16]
-                        bw.write(code, length)
-                    else:
-                        cat = _dc_category(d)
-                        code, length = codes[cat]
-                        bw.write(code, length)
-                        if cat:
-                            bw.write(
-                                d if d >= 0 else d + (1 << cat) - 1, cat
-                            )
-                n += 1
-        out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_lossless_rgb(
-    arr,
-    precision: int = 8,
-    predictor: int = 1,
-    restart_interval: int = 0,
-) -> bytes:
-    """Fixture twin of the 3-component SOF3 path: interleaved
-    non-subsampled lossless RGB (stored color = output color, no
-    transform), per-component predictor state, shared DC table."""
-    import struct
-
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.int64)
-    h, w, nc = a.shape
-    assert nc == 3
-    if not 1 <= predictor <= 7:
-        raise ValueError("lossless predictor must be 1..7")
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xc3" + struct.pack(">HBHHB", 8 + 3 * nc, precision, h, w, nc)
-    for ci in range(nc):
-        out += bytes([ci + 1, 0x11, 0])
-    out += b"\xff\xc4" + struct.pack(">H", 19 + len(_JLL_DC_SYMBOLS))
-    out += bytes([0x00]) + bytes(_JLL_DC_COUNTS) + bytes(_JLL_DC_SYMBOLS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * nc, nc)
-    for ci in range(nc):
-        out += bytes([ci + 1, 0x00])
-    out += bytes([predictor, 0x00, 0x00])
-
-    codes = _huffman_codes(_JLL_DC_COUNTS, _JLL_DC_SYMBOLS)
-    bw = _BitWriter()
-    default = 1 << (precision - 1)
-    n = 0
-    restarted = [True] * nc
-    n_restarts = 0
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and n == restart_interval:
+        for i in range(h * w):
+            y, x = divmod(i, w)
+            restarted = i == 0 or (restart_interval and i % restart_interval == 0)
+            if restarted and i:
                 out += bw.flush()
                 bw = _BitWriter()
-                out += bytes([0xFF, 0xD0 + (n_restarts % 8)])
-                n_restarts += 1
-                n = 0
-                restarted = [True] * nc
-            for ci in range(nc):
-                if restarted[ci]:
-                    px = default
-                    restarted[ci] = False
+                out += bytes([0xFF, 0xD0 + ((i // restart_interval - 1) % 8)])
+            for ci in group:
+                if restarted:
+                    p = default
                 elif y == 0:
-                    px = a[0, x - 1, ci] if x else default
+                    p = px[0][x - 1][ci]
                 elif x == 0:
-                    px = a[y - 1, 0, ci]
+                    p = px[y - 1][0][ci]
                 else:
-                    aa = a[y, x - 1, ci]
-                    bb = a[y - 1, x, ci]
-                    cc = a[y - 1, x - 1, ci]
-                    px = (
+                    aa, bb = px[y][x - 1][ci], px[y - 1][x][ci]
+                    cc = px[y - 1][x - 1][ci]
+                    p = (
                         aa,
                         bb,
                         cc,
@@ -5890,19 +4967,7 @@ def encode_jpeg_lossless_rgb(
                         bb + ((aa - cc) >> 1),
                         (aa + bb) >> 1,
                     )[predictor - 1]
-                d = (int(a[y, x, ci]) - int(px)) % 65536
-                if d >= 32768:
-                    d -= 65536
-                if d == -32768:
-                    code, length = codes[16]
-                    bw.write(code, length)
-                else:
-                    cat = _dc_category(d)
-                    code, length = codes[cat]
-                    bw.write(code, length)
-                    if cat:
-                        bw.write(d if d >= 0 else d + (1 << cat) - 1, cat)
-            n += 1
-    out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
+                d = (px[y][x][ci] - p) % 65536
+                _write_diff(bw, codes, d - 65536 if d >= 32768 else d)
+        out += bw.flush()
+    return bytes(out + b"\xff\xd9")

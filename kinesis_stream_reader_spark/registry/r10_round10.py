@@ -464,8 +464,9 @@ def multimodal_tiff16_decode_query(
     def encode(d):
         w, h = 8 + d % 5, 6 + d % 3
         v = (d * 48271 + 977 * np.arange(w * h, dtype=np.int64)) % 65536
-        blob = multimodal.encode_tiff_gray16(
+        blob = multimodal.encode_tiff(
             v.reshape(h, w).astype(np.uint16),
+            depth=16,
             compression=(1, 5, 8, 32773)[d % 4],
             big_endian=bool(d % 2),
             rows_per_strip=3,
@@ -1024,8 +1025,9 @@ def multimodal_tiff16_rgb_decode_query(
             ],
             axis=1,
         ).reshape(h, w, 3)
-        blob = multimodal.encode_tiff_rgb16(
+        blob = multimodal.encode_tiff(
             px.astype(np.uint16),
+            depth=16,
             compression=(1, 5, 8, 32773)[d % 4],
             big_endian=bool(d % 2),
             rows_per_strip=3,
@@ -1326,7 +1328,7 @@ def multimodal_jpeg_lossless_decode_query(
         w, h = 8 + d % 5, 6 + d % 3
         P = (8, 12, 16)[d % 3]
         v = (d * 37 + 101 * np.arange(w * h, dtype=np.int64)) % (1 << P)
-        blob = multimodal.encode_jpeg_lossless_gray(
+        blob = multimodal.encode_jpeg_lossless(
             v.reshape(h, w),
             P,
             predictor=d % 7 + 1,
@@ -1386,7 +1388,7 @@ def multimodal_jpeg_lossless_rgb_decode_query(
             ],
             axis=1,
         ).reshape(h, w, 3)
-        blob = multimodal.encode_jpeg_lossless_rgb(
+        blob = multimodal.encode_jpeg_lossless(
             px,
             P,
             predictor=d % 7 + 1,

@@ -362,8 +362,8 @@ def _register_multiscan_lossless():
         """REAL non-interleaved lossless JPEG decode: the same
         per-channel LCG pixel formulas, precisions, predictors and
         restart cadence as the interleaved query, but encoded with
-        one scan per component (multimodal.
-        encode_jpeg_lossless_rgb_multiscan)."""
+        one scan per component (multimodal.encode_jpeg_lossless with
+        scan_groups ((0,), (1,), (2,)))."""
         import numpy as np
 
         from ..operators import multimodal
@@ -380,11 +380,12 @@ def _register_multiscan_lossless():
                 ],
                 axis=1,
             ).reshape(h, w, 3)
-            blob = multimodal.encode_jpeg_lossless_rgb_multiscan(
+            blob = multimodal.encode_jpeg_lossless(
                 px,
                 P,
                 predictor=d % 7 + 1,
                 restart_interval=5 if d % 3 == 0 else 0,
+                scan_groups=((0,), (1,), (2,)),
             )
             return [(d, blob)]
 

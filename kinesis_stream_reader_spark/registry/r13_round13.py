@@ -385,7 +385,7 @@ def _register_partial_lossless():
         """REAL partially-interleaved lossless JPEG decode: the same
         pixel formulas as the interleaved query, encoded with a
         per-doc rotation of two-scan component groupings
-        (multimodal.encode_jpeg_lossless_rgb_partial)."""
+        (multimodal.encode_jpeg_lossless scan_groups)."""
         import numpy as np
 
         from ..operators import multimodal
@@ -410,7 +410,7 @@ def _register_partial_lossless():
                 ],
                 axis=1,
             ).reshape(h, w, 3)
-            blob = multimodal.encode_jpeg_lossless_rgb_partial(
+            blob = multimodal.encode_jpeg_lossless(
                 px,
                 P,
                 predictor=d % 7 + 1,

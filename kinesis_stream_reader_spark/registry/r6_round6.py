@@ -727,13 +727,13 @@ def multimodal_png_palette_decode_query(
         w, h = 8 + d % 5, 6 + d % 3
         if d % 2 == 0:
             idx = ((d * 7 + np.arange(w * h)) % 256).reshape(h, w)
-            blob = multimodal.encode_png_indexed(
-                idx, pal256, depth=8, filter_for_row=lambda y: y
+            blob = multimodal.encode_png(
+                idx, palette=pal256, depth=8, filter_for_row=lambda y: y
             )
         else:
             idx = ((d * 7 + np.arange(w * h)) % 16).reshape(h, w)
-            blob = multimodal.encode_png_indexed(
-                idx, pal256[:16], depth=4, filter_for_row=lambda y: y
+            blob = multimodal.encode_png(
+                idx, palette=pal256[:16], depth=4, filter_for_row=lambda y: y
             )
         return [(d, blob)]
 

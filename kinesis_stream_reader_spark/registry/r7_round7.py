@@ -385,13 +385,17 @@ def multimodal_png_interlaced_decode_query(
             )
         elif d % 3 == 1:
             idx = ((d * 7 + np.arange(w * h)) % 256).reshape(h, w)
-            blob = multimodal.encode_png_indexed(
-                idx, pal256, depth=8, filter_for_row=lambda y: y, interlace=True
+            blob = multimodal.encode_png(
+                idx, palette=pal256, depth=8, filter_for_row=lambda y: y, interlace=True
             )
         else:
             idx = ((d * 7 + np.arange(w * h)) % 16).reshape(h, w)
-            blob = multimodal.encode_png_indexed(
-                idx, pal256[:16], depth=4, filter_for_row=lambda y: y, interlace=True
+            blob = multimodal.encode_png(
+                idx,
+                palette=pal256[:16],
+                depth=4,
+                filter_for_row=lambda y: y,
+                interlace=True,
             )
         return [(d, blob)]
 
@@ -700,12 +704,12 @@ def multimodal_png_colortype_decode_query(
         il = (d % 4) >= 2
         if d % 2 == 0:
             v = ((d * 7 + np.arange(w * h)) % 256).astype(np.uint8)
-            blob = multimodal.encode_png_gray(
+            blob = multimodal.encode_png(
                 v.reshape(h, w), filter_for_row=lambda y: y, interlace=il
             )
         else:
             v = ((d * 7 + np.arange(w * h * 4)) % 256).astype(np.uint8)
-            blob = multimodal.encode_png_rgba(
+            blob = multimodal.encode_png(
                 v.reshape(h, w, 4), filter_for_row=lambda y: y, interlace=il
             )
         return [(d, blob)]
@@ -821,8 +825,9 @@ def multimodal_png16_decode_query(spark: SparkSession, sf_dir: str) -> DataFrame
     def encode(d):
         w, h = 8 + d % 5, 6 + d % 3
         s = (d * 4099 + 257 * np.arange(w * h * 3, dtype=np.int64)) % 65536
-        blob = multimodal.encode_png16(
+        blob = multimodal.encode_png(
             s.astype(np.uint16).reshape(h, w, 3),
+            depth=16,
             filter_for_row=lambda y: y,
             interlace=bool(d % 2),
         )

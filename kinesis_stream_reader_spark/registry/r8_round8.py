@@ -539,8 +539,9 @@ def multimodal_png16_gray_decode_query(
     def encode(d):
         w, h = 8 + d % 5, 6 + d % 3
         s = (d * 5003 + 257 * np.arange(w * h, dtype=np.int64)) % 65536
-        blob = multimodal.encode_png16_gray(
+        blob = multimodal.encode_png(
             s.astype(np.uint16).reshape(h, w),
+            depth=16,
             filter_for_row=lambda y: y,
             interlace=bool(d % 2),
         )
@@ -736,8 +737,9 @@ def multimodal_png16_rgba_decode_query(
     def encode(d):
         w, h = 7 + d % 5, 5 + d % 4
         s = (d * 6151 + 257 * np.arange(w * h * 4, dtype=np.int64)) % 65536
-        blob = multimodal.encode_png16_rgba(
+        blob = multimodal.encode_png(
             s.astype(np.uint16).reshape(h, w, 4),
+            depth=16,
             filter_for_row=lambda y: y,
             interlace=bool(d % 2),
         )

@@ -173,9 +173,9 @@ def multimodal_png_gray_lowdepth_decode_query(
         w, h = 8 + d % 5, 6 + d % 3
         depth = (1, 2, 4)[d % 3]
         s = (d * 5003 + 257 * np.arange(w * h, dtype=np.int64)) % (1 << depth)
-        blob = multimodal.encode_png_gray_lowdepth(
+        blob = multimodal.encode_png(
             s.reshape(h, w),
-            depth,
+            depth=depth,
             filter_for_row=lambda y: y,
             interlace=bool(d % 2),
         )
@@ -1039,13 +1039,9 @@ def multimodal_png_gray_alpha_decode_query(
         g = (d * 5003 + 257 * np.arange(n, dtype=np.int64)) % (1 << depth)
         al = (d * 31 + 7 * np.arange(n, dtype=np.int64)) % (1 << depth)
         ga = np.stack([g, al], axis=1).reshape(h, w, 2)
-        enc = (
-            multimodal.encode_png16_gray_alpha
-            if depth == 16
-            else multimodal.encode_png_gray_alpha
-        )
-        blob = enc(
+        blob = multimodal.encode_png(
             ga.astype(np.uint16 if depth == 16 else np.uint8),
+            depth=depth,
             filter_for_row=lambda y: y,
             interlace=bool(d % 2),
         )
@@ -1090,7 +1086,7 @@ def multimodal_tiff_gray_decode_query(
     def encode(d):
         w, h = 8 + d % 5, 6 + d % 3
         v = (d * 5003 + 257 * np.arange(w * h, dtype=np.int64)) % 256
-        blob = multimodal.encode_tiff_gray(
+        blob = multimodal.encode_tiff(
             v.reshape(h, w).astype(np.uint8),
             compression=(1, 5, 8, 32773)[d % 4],
             big_endian=bool(d % 2),

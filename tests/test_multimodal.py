@@ -703,7 +703,7 @@ def test_jpeg_hierarchical_rejected():
         mm.decode_jpeg(bytes(blob))
     # lossless supports 1 and 3 components; other counts stay gated
     ll = bytearray(
-        mm.encode_jpeg_lossless_gray(np.zeros((4, 4), np.int64), 8)
+        mm.encode_jpeg_lossless(np.zeros((4, 4), np.int64), 8)
     )
     sof3 = ll.find(b"\xff\xc3")
     ll[sof3 + 9] = 2  # claim 2 components
@@ -1031,8 +1031,8 @@ def test_png_palette_roundtrip_depths_and_filters():
             idx = rng.randint(0, maxv, (h, w))
             want = pal[idx]
             for ft in range(5):
-                blob = mm.encode_png_indexed(
-                    idx, pal, depth=depth, filter_for_row=lambda y, f=ft: f
+                blob = mm.encode_png(
+                    idx, palette=pal, depth=depth, filter_for_row=lambda y, f=ft: f
                 )
                 assert np.array_equal(mm.decode_png(blob), want), (depth, ft)
 
@@ -1044,7 +1044,7 @@ def test_png_palette_index_out_of_range_raises():
 
     pal8 = np.array([(i, i, i) for i in range(8)], dtype=np.uint8)
     idx = np.full((4, 4), 9)  # beyond the 8-entry PLTE
-    blob = mm.encode_png_indexed(idx, pal8, depth=8)
+    blob = mm.encode_png(idx, palette=pal8, depth=8)
     with pytest.raises(ValueError, match="palette index"):
         mm.decode_png(blob)
 
@@ -1496,8 +1496,9 @@ def test_png_adam7_roundtrip_all_shapes_filters_depths():
         for h, w in [(1, 1), (3, 5), (7, 7), (13, 17), (9, 4)]:
             idx = rng.randint(0, nmax, (h, w))
             got = mm.decode_png(
-                mm.encode_png_indexed(
-                    idx, pal, depth=depth, filter_for_row=lambda y: y, interlace=True
+                mm.encode_png(
+                    idx, palette=pal, depth=depth, filter_for_row=lambda y: y,
+                    interlace=True,
                 )
             )
             assert np.array_equal(got, pal[idx]), ("pal", depth, h, w)
@@ -1561,7 +1562,7 @@ public class PngDump {
     for depth, nmax in [(8, 200), (4, 16)]:
         pal = rng.randint(0, 256, (nmax, 3), dtype=np.uint8)
         idx = rng.randint(0, nmax, (13, 17))
-        blob = mm.encode_png_indexed(idx, pal, depth=depth, interlace=True)
+        blob = mm.encode_png(idx, palette=pal, depth=depth, interlace=True)
         assert np.array_equal(jdk_decode(blob), pal[idx]), ("pal", depth)
 
 
@@ -1569,30 +1570,34 @@ public class PngDump {
 # Planar + tiled TIFF (round 7, second pass)
 # --------------------------------------------------------------------------
 def test_tiff_planar_and_tiled_roundtrips():
+    """Every strip/tile x chunky/planar layout round-trips at 8 and 16
+    bits, RGB and gray (gray comes back replicated to 3 channels)."""
     import numpy as np
 
     from kinesis_stream_reader_spark.operators import multimodal as mm
 
     rng = np.random.RandomState(23)
     for h, w in [(1, 1), (5, 9), (40, 50), (33, 17)]:
-        arr = rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
-        for comp in (1, 5, 32773):
-            for be in (False, True):
-                got = mm.decode_tiff(
-                    mm.encode_tiff(
-                        arr, big_endian=be, rows_per_strip=3,
-                        compression=comp, planar=True,
-                    )
-                )
-                assert np.array_equal(got, arr), ("planar", h, w, comp, be)
-                for pl in (False, True):
+        for depth, shape in (
+            (8, (h, w, 3)), (16, (h, w, 3)), (8, (h, w)), (16, (h, w))
+        ):
+            arr = rng.randint(0, 1 << depth, shape).astype(f"u{depth // 8}")
+            want = arr if arr.ndim == 3 else np.repeat(arr[:, :, None], 3, axis=2)
+            for comp in (1, 5, 32773):
+                for be in (False, True):
+                    kw = dict(big_endian=be, compression=comp, depth=depth)
                     got = mm.decode_tiff(
-                        mm.encode_tiff(
-                            arr, big_endian=be, compression=comp,
-                            planar=pl, tile=(16, 16),
-                        )
+                        mm.encode_tiff(arr, rows_per_strip=3, planar=True, **kw)
                     )
-                    assert np.array_equal(got, arr), ("tiled", h, w, comp, be, pl)
+                    assert got.dtype == want.dtype
+                    assert np.array_equal(got, want), ("planar", h, w, depth, comp, be)
+                    for pl in (False, True):
+                        got = mm.decode_tiff(
+                            mm.encode_tiff(arr, planar=pl, tile=(16, 16), **kw)
+                        )
+                        assert np.array_equal(got, want), (
+                            "tiled", h, w, depth, comp, be, pl
+                        )
     with pytest.raises(ValueError, match="multiples of 16"):
         mm.encode_tiff(np.zeros((4, 4, 3), dtype=np.uint8), tile=(8, 8))
 
@@ -1673,11 +1678,11 @@ def test_png_gray_rgba_roundtrips():
         for il in (False, True):
             for ff in [None, (lambda y: y)]:
                 got = mm.decode_png(
-                    mm.encode_png_gray(g, filter_for_row=ff, interlace=il)
+                    mm.encode_png(g, filter_for_row=ff, interlace=il)
                 )
                 assert np.array_equal(got, np.repeat(g[:, :, None], 3, axis=2))
                 got = mm.decode_png(
-                    mm.encode_png_rgba(a4, filter_for_row=ff, interlace=il)
+                    mm.encode_png(a4, filter_for_row=ff, interlace=il)
                 )
                 assert np.array_equal(got, a4[:, :, :3])
 
@@ -1734,10 +1739,10 @@ public class RasterDump {
 
     for il in (False, True):
         g = rng.randint(0, 256, (13, 17), dtype=np.uint8)
-        got = jdk_raster(mm.encode_png_gray(g, filter_for_row=lambda y: y, interlace=il))
+        got = jdk_raster(mm.encode_png(g, filter_for_row=lambda y: y, interlace=il))
         assert np.array_equal(got, g[:, :, None]), ("gray", il)
         a4 = rng.randint(0, 256, (13, 17, 4), dtype=np.uint8)
-        got = jdk_raster(mm.encode_png_rgba(a4, filter_for_row=lambda y: y, interlace=il))
+        got = jdk_raster(mm.encode_png(a4, filter_for_row=lambda y: y, interlace=il))
         assert np.array_equal(got, a4), ("rgba", il)
 
 
@@ -1788,7 +1793,9 @@ def test_png16_roundtrip_all_filters_and_adam7():
         a = rng.randint(0, 65536, (h, w, 3)).astype(np.uint16)
         for il in (False, True):
             for ff in [None, (lambda y: y), (lambda y: 4)]:
-                got = mm.decode_png(mm.encode_png16(a, filter_for_row=ff, interlace=il))
+                got = mm.decode_png(
+                    mm.encode_png(a, depth=16, filter_for_row=ff, interlace=il)
+                )
                 assert got.dtype == np.uint16
                 assert np.array_equal(got, a), (h, w, il)
 
@@ -1836,7 +1843,7 @@ public class Raster16 {
     for il in (False, True):
         a = rng.randint(0, 65536, (13, 17, 3)).astype(np.uint16)
         (tmp_path / "in.png").write_bytes(
-            mm.encode_png16(a, filter_for_row=lambda y: y, interlace=il)
+            mm.encode_png(a, depth=16, filter_for_row=lambda y: y, interlace=il)
         )
         subprocess.run(
             [java, "Raster16", "in.png", "out.raw"], check=True, cwd=tmp_path
@@ -1849,7 +1856,7 @@ public class Raster16 {
         # a 1-band unsigned-short raster — must match our wire samples
         g = rng.randint(0, 65536, (13, 17)).astype(np.uint16)
         (tmp_path / "in.png").write_bytes(
-            mm.encode_png16_gray(g, filter_for_row=lambda y: y, interlace=il)
+            mm.encode_png(g, depth=16, filter_for_row=lambda y: y, interlace=il)
         )
         subprocess.run(
             [java, "Raster16", "in.png", "out.raw"], check=True, cwd=tmp_path
@@ -1863,7 +1870,7 @@ public class Raster16 {
         # raster, alpha included — our wire must carry all four planes
         a4 = rng.randint(0, 65536, (13, 17, 4)).astype(np.uint16)
         (tmp_path / "in.png").write_bytes(
-            mm.encode_png16_rgba(a4, filter_for_row=lambda y: y, interlace=il)
+            mm.encode_png(a4, depth=16, filter_for_row=lambda y: y, interlace=il)
         )
         subprocess.run(
             [java, "Raster16", "in.png", "out.raw"], check=True, cwd=tmp_path
@@ -1886,7 +1893,7 @@ def test_png16_gray_roundtrip_all_filters_and_adam7():
         for il in (False, True):
             for ff in [None, (lambda y: y), (lambda y: 4)]:
                 got = mm.decode_png(
-                    mm.encode_png16_gray(a, filter_for_row=ff, interlace=il)
+                    mm.encode_png(a, depth=16, filter_for_row=ff, interlace=il)
                 )
                 assert got.dtype == np.uint16
                 assert np.array_equal(
@@ -1926,7 +1933,7 @@ def test_png16_rgba_roundtrip_all_filters_and_adam7():
         for il in (False, True):
             for ff in [None, (lambda y: y), (lambda y: 4)]:
                 got = mm.decode_png(
-                    mm.encode_png16_rgba(a, filter_for_row=ff, interlace=il)
+                    mm.encode_png(a, depth=16, filter_for_row=ff, interlace=il)
                 )
                 assert got.dtype == np.uint16
                 assert np.array_equal(got, a[:, :, :3]), (h, w, il)
@@ -1949,8 +1956,8 @@ def test_png_lowdepth_roundtrips():
             for h, w in [(1, 1), (3, 7), (13, 17), (9, 30)]:
                 a = rng.randint(0, 1 << depth, size=(h, w))
                 got = mm.decode_png(
-                    mm.encode_png_gray_lowdepth(
-                        a, depth, filter_for_row=lambda y: y, interlace=il
+                    mm.encode_png(
+                        a, depth=depth, filter_for_row=lambda y: y, interlace=il
                     )
                 )
                 assert np.array_equal(
@@ -1962,8 +1969,8 @@ def test_png_lowdepth_roundtrips():
         for il in (False, True):
             idx = rng.randint(0, n, size=(11, 19))
             got = mm.decode_png(
-                mm.encode_png_indexed(
-                    idx, pal, depth=depth,
+                mm.encode_png(
+                    idx, palette=pal, depth=depth,
                     filter_for_row=lambda y: 4 - (y % 5), interlace=il,
                 )
             )
@@ -2025,8 +2032,8 @@ public class RasterDump {
     for depth in (1, 2, 4):
         for il in (False, True):
             g = rng.randint(0, 1 << depth, size=(13, 17))
-            blob = mm.encode_png_gray_lowdepth(
-                g, depth, filter_for_row=lambda y: y, interlace=il
+            blob = mm.encode_png(
+                g, depth=depth, filter_for_row=lambda y: y, interlace=il
             )
             got = jdk_raster(blob)
             assert np.array_equal(got, g[:, :, None]), ("gray", depth, il)
@@ -2034,7 +2041,7 @@ public class RasterDump {
         n = 1 << depth
         pal = rng.randint(0, 256, size=(n, 3), dtype=np.uint8)
         idx = rng.randint(0, n, size=(13, 17))
-        blob = mm.encode_png_indexed(idx, pal, depth=depth, interlace=True)
+        blob = mm.encode_png(idx, palette=pal, depth=depth, interlace=True)
         # JDK raster for an indexed image returns the palette INDEX
         got = jdk_raster(blob)
         assert np.array_equal(got, idx[:, :, None]), ("pal", depth)
@@ -2250,15 +2257,15 @@ def test_png_gray_alpha_roundtrips_and_jdk(tmp_path):
         for h, w in [(1, 1), (3, 7), (13, 17)]:
             a = rng.randint(0, 256, (h, w, 2)).astype(np.uint8)
             got = mm.decode_png(
-                mm.encode_png_gray_alpha(
+                mm.encode_png(
                     a, filter_for_row=lambda y: y, interlace=il
                 )
             )
             assert np.array_equal(got, np.repeat(a[:, :, :1], 3, 2))
             a16 = rng.randint(0, 65536, (h, w, 2)).astype(np.uint16)
             got = mm.decode_png(
-                mm.encode_png16_gray_alpha(
-                    a16, filter_for_row=lambda y: y, interlace=il
+                mm.encode_png(
+                    a16, depth=16, filter_for_row=lambda y: y, interlace=il
                 )
             )
             assert np.array_equal(got, np.repeat(a16[:, :, :1], 3, 2))
@@ -2302,13 +2309,13 @@ public class Raster16 {
     for il in (False, True):
         a = rng.randint(0, 256, (11, 15, 2)).astype(np.uint8)
         got = jdk_raster(
-            mm.encode_png_gray_alpha(a, filter_for_row=lambda y: y, interlace=il)
+            mm.encode_png(a, filter_for_row=lambda y: y, interlace=il)
         )
         assert np.array_equal(got, a), ("ga8", il)
         a16 = rng.randint(0, 65536, (11, 15, 2)).astype(np.uint16)
         got = jdk_raster(
-            mm.encode_png16_gray_alpha(
-                a16, filter_for_row=lambda y: y, interlace=il
+            mm.encode_png(
+                a16, depth=16, filter_for_row=lambda y: y, interlace=il
             )
         )
         assert np.array_equal(got, a16), ("ga16", il)
@@ -2387,8 +2394,8 @@ def test_tiff_gray16_roundtrip_all_compressions():
             for h, w in [(1, 1), (5, 9), (13, 4), (16, 16)]:
                 a = rng.randint(0, 65536, (h, w), dtype=np.uint16)
                 got = mm.decode_tiff(
-                    mm.encode_tiff_gray16(
-                        a, compression=comp, big_endian=be, rows_per_strip=3
+                    mm.encode_tiff(
+                        a, compression=comp, big_endian=be, rows_per_strip=3, depth=16
                     )
                 )
                 assert got.dtype == np.uint16
@@ -2459,8 +2466,8 @@ public class Tiff16Tool {
     for comp in (1, 5, 8, 32773):
         for be in (False, True):
             (tmp_path / "ours.tif").write_bytes(
-                mm.encode_tiff_gray16(
-                    arr, compression=comp, big_endian=be, rows_per_strip=7
+                mm.encode_tiff(
+                    arr, compression=comp, big_endian=be, rows_per_strip=7, depth=16
                 )
             )
             subprocess.run(
@@ -2496,8 +2503,8 @@ def test_tiff_rgb16_roundtrip_all_compressions():
             for h, w in [(1, 1), (5, 9), (16, 12)]:
                 a = rng.randint(0, 65536, (h, w, 3), dtype=np.uint16)
                 got = mm.decode_tiff(
-                    mm.encode_tiff_rgb16(
-                        a, compression=comp, big_endian=be, rows_per_strip=3
+                    mm.encode_tiff(
+                        a, compression=comp, big_endian=be, rows_per_strip=3, depth=16
                     )
                 )
                 assert got.dtype == np.uint16
@@ -2543,25 +2550,47 @@ def test_jpeg12_roundtrip_and_gates():
 
 
 def test_jpeg_lossless_roundtrip_matrix():
-    """SOF3: every predictor x precision x restart combination decodes
-    to the EXACT source samples (the format's defining property)."""
+    """SOF3: every precision x predictor x restart x scan layout decodes
+    to the EXACT source samples (the format's defining property). The
+    RGB layouts — one interleaved scan, one scan per component, and
+    partially interleaved groups in both orders (the B-first grouping
+    catches an assembler that assumes scan order == component order) —
+    decode pixel-identically to each other, 16-bit samples as uint16;
+    the scan groups must cover each component once."""
     import numpy as np
 
     from kinesis_stream_reader_spark.operators import multimodal as mm
 
     rng = np.random.RandomState(33)
+    layouts = (
+        ((0,), (1,), (2,)),
+        ((1,), (0,), (2,)),
+        ((0, 1), (2,)),
+        ((2,), (0, 1)),
+    )
     for P in (8, 12, 16):
         for pred in range(1, 8):
             a = rng.randint(0, 1 << P, (9, 7)).astype(np.int64)
-            for ri in (0, 4):
-                got = mm.decode_jpeg(
-                    mm.encode_jpeg_lossless_gray(
-                        a, P, predictor=pred, restart_interval=ri
-                    )
-                )
+            rgb = rng.randint(0, 1 << P, (6, 7, 3)).astype(np.int64)
+            for ri in (0, 4, 5):
+                kw = dict(predictor=pred, restart_interval=ri)
+                got = mm.decode_jpeg(mm.encode_jpeg_lossless(a, P, **kw))
                 assert np.array_equal(
                     got[:, :, 0].astype(np.int64), a
                 ), (P, pred, ri)
+                ref = mm.decode_jpeg(mm.encode_jpeg_lossless(rgb, P, **kw))
+                assert np.array_equal(ref.astype(np.int64), rgb), (P, pred, ri)
+                if P == 16:
+                    assert ref.dtype == np.uint16
+                for groups in layouts:
+                    dec = mm.decode_jpeg(
+                        mm.encode_jpeg_lossless(rgb, P, scan_groups=groups, **kw)
+                    )
+                    assert dec.dtype == ref.dtype
+                    assert np.array_equal(dec, ref), (P, pred, ri, groups)
+    for bad in (((0, 1),), ((0, 1), (1, 2)), ((0,), (1,), (2,), (3,))):
+        with pytest.raises(ValueError, match="cover each component once"):
+            mm.encode_jpeg_lossless(rgb, 8, scan_groups=bad)
 
 
 def test_decoders_fail_cleanly_on_truncation_and_bitflips():
@@ -2596,13 +2625,13 @@ def test_decoders_fail_cleanly_on_truncation_and_bitflips():
         ("png", mm.decode_png, mm.encode_png(rgb8)),
         ("bmp", mm.decode_bmp, mm.encode_bmp(rgb8)),
         ("tiff_lzw", mm.decode_tiff, mm.encode_tiff(rgb8, compression=5)),
-        ("tiff16", mm.decode_tiff, mm.encode_tiff_gray16(g16, compression=8)),
+        ("tiff16", mm.decode_tiff, mm.encode_tiff(g16, compression=8, depth=16)),
         ("qoi", mm.decode_qoi, mm.encode_qoi(rgb8)),
         ("jpeg12", mm.decode_jpeg, mm.encode_jpeg12_gray(16, 8, blocks12, q12)),
         (
             "jpeg_lossless",
             mm.decode_jpeg,
-            mm.encode_jpeg_lossless_gray(g16.astype(np.int64), 16, predictor=4),
+            mm.encode_jpeg_lossless(g16.astype(np.int64), 16, predictor=4),
         ),
         ("gif", mm.decode_gif, mm.encode_gif((g8 % 4).reshape(-1).tolist(), 9, 8)),
         (
@@ -2647,3 +2676,296 @@ def test_decoders_fail_cleanly_on_truncation_and_bitflips():
                 dec(bytes(f))
             except ok_errors:
                 pass
+
+
+# sha256 per encoder family over _codec_fixture_digests' grid, taken
+# from the per-variant encoders the merged ones replaced.
+CODEC_FIXTURE_SHA256 = {
+    "tiff-rgb8": (
+        "797b83b3dc026b94e527996408cb32fd1c57681ffb95120a1e61d6e35ba4ea5a"
+    ),
+    "tiff-gray8": (
+        "b2f8f37fece4cb7c93d4294939bb5a91e59d6b8b83acd51f5cc8aac7d859fb5a"
+    ),
+    "tiff-gray16": (
+        "340d953ef300f1451bc4ab960f483156339c2a526f35b5bc891f403408ea667d"
+    ),
+    # the one family whose bytes changed: 16-bit RGB now writes
+    # PlanarConfiguration (tag 284) like 8-bit RGB (decoded pixels are
+    # unchanged); the per-variant encoder's digest was
+    # 59dd9711716dc36c942210128a5d0f5060aade5511dd68520605aabb317a780b
+    "tiff-rgb16": (
+        "9dfd98aa3e7a64ada09d8a2e7865d18b80593e9f2704bbd382b0e061fed0c34f"
+    ),
+    "tiff-bilevel": (
+        "346c154fc971f2c1e4ec42300271b002f7084d3d473aa5d47657feff2793adce"
+    ),
+    "png-gray1": (
+        "c03921aa8dd0d949fe418b5874b3e57566501108dc4f461cd83c908c6fc733d1"
+    ),
+    "png-gray2": (
+        "3813f32be90825a2964f0c7dc88a44e32bba579f5f3e38daf6be76729105b23b"
+    ),
+    "png-gray4": (
+        "a54f1dccf88330a0cf0d8e5f5d30a7133461ae19e925de1e0dd400f7441a87c8"
+    ),
+    "png-gray8": (
+        "4fec0587b426fc0c10688ddbc8295926894e0bb0892b4a0a76502766586dd427"
+    ),
+    "png-gray16": (
+        "0c60102ca5f5aa09ce6bfc5d3a69a840a1578bd77c0e8990ba25a324893e7313"
+    ),
+    "png-ga8": (
+        "5892973e6b5e2b00acd9f1ddbc1446a8d2403ba91b1ac78188450bff2d0cceea"
+    ),
+    "png-rgb8": (
+        "3903cd9427db09016cc7a59f6b3e7cb8c107e863049032bed613b6a9cf5493df"
+    ),
+    "png-rgba8": (
+        "52b0dfaec11c3d48913f9ba3d792384958b277d2a8af90c4e833353d41763fe6"
+    ),
+    "png-ga16": (
+        "04baa6816ad3827447ba957003f308070da82ee2720aca54d9798ef1797a3368"
+    ),
+    "png-rgb16": (
+        "aa58c66f6856d812a7e0e3973e479086488719167e55e230c859689da2d145ad"
+    ),
+    "png-rgba16": (
+        "0367ceca17522b689c832a3930619eb261276319a31d75b75a78b06f61439880"
+    ),
+    "png-pal1": (
+        "c11644d273070aafe9f1fd63bd3f08322aeaa327b7f0a80487fa12ad3179bd01"
+    ),
+    "png-pal2": (
+        "a0364c3c31c9ec02ab54021ef35fef20d8f33b45ab2f6c901cb857d8a722734b"
+    ),
+    "png-pal4": (
+        "982f197fca1d27fed44f9eeebeb684a3b9266a881c46c25f2ebeac890177209f"
+    ),
+    "png-pal8": (
+        "ccdf1ca22a71c3be07babef0f6b80add1e1d992c9b5d0ce0d087d6857f95ec89"
+    ),
+    "jpegll-gray": (
+        "ccf1c80ece5229d762e5c2117178cafa99b89b8b217750867dd4ddcebfa39416"
+    ),
+    "jpegll-interleaved": (
+        "d20bafcc690e8808e18dd024967ec1a9229ac66585adcc583893102821511fbd"
+    ),
+    "jpegll-per-component": (
+        "274f527106ae03c980edfb1e479fe22f7e9f61c83c86e4c9cb14663f891f1cfc"
+    ),
+    "jpegll-partial": (
+        "87ebc67d587335cf03c82b554ba5f1e87caadab9de94100bc00e17bc30d6e70f"
+    ),
+    "jpeg-baseline": (
+        "9b29fb91083fd5d6125c95caa9b44c1335d227b528703014b34a960535f91972"
+    ),
+    "jpeg12": (
+        "843912dc26eb0f0a2ad727923423aa66471cf5a962dfd2c139073c976468e0b3"
+    ),
+    "jpeg-progressive": (
+        "17dba4f90c737db4e5643fabb4d8c4cd58dfb98d9ae2b968c2e3f95bc41c3260"
+    ),
+}
+
+
+def _codec_fixture_digests(mm):
+    """{encoder family: sha256 over its outputs on a fixed, seeded grid
+    of inputs and parameters}; `mm` is the module holding the encoders."""
+    import functools
+    import hashlib
+
+    import numpy as np
+
+    rng = np.random.RandomState(4172)
+    digests = {}
+
+    def add(family, blob):
+        digests.setdefault(family, hashlib.sha256()).update(
+            hashlib.sha256(blob).digest()
+        )
+
+    def image(shape, hi):
+        a = rng.randint(0, hi, shape)
+        a[: shape[0] // 2, :5] = hi // 3  # a flat run for RLE/LZW
+        return a
+
+    # TIFF: compression x byte order x layout, per depth / channel count
+    rgb_layouts = (
+        dict(rows_per_strip=4),
+        dict(rows_per_strip=64),
+        dict(rows_per_strip=3, planar=True),
+        dict(tile=(16, 16)),
+        dict(tile=(32, 32)),
+        dict(tile=(16, 16), planar=True),
+    )
+    strip_layouts = (dict(rows_per_strip=4), dict(rows_per_strip=64))
+    tiff_images = (
+        ("tiff-rgb8", image((19, 21, 3), 256).astype(np.uint8), 8, rgb_layouts),
+        ("tiff-gray8", image((19, 21), 256).astype(np.uint8), 8, strip_layouts),
+        ("tiff-gray16", image((19, 21), 65536).astype(np.uint16), 16, strip_layouts),
+        ("tiff-rgb16", image((19, 21, 3), 65536).astype(np.uint16), 16, strip_layouts),
+    )
+    for family, arr, depth, layouts in tiff_images:
+        for comp in (1, 5, 8, 32773):
+            for be in (False, True):
+                for kw in layouts:
+                    add(family, mm.encode_tiff(
+                        arr, compression=comp, big_endian=be, depth=depth, **kw
+                    ))
+    bits = (image((13, 37), 2) > 0).astype(np.int64)
+    for comp in (1, 2, 3, 4):
+        for be in (False, True):
+            for rps in (3, 64):
+                add("tiff-bilevel", mm.encode_tiff_bilevel(
+                    bits, compression=comp, big_endian=be, rows_per_strip=rps
+                ))
+
+    # PNG: color type x depth x filter x interlace, two sizes (the 3x2
+    # image leaves some Adam7 passes empty)
+    png_cases = []
+    for d in (1, 2, 4, 8, 16):
+        png_cases.append((f"png-gray{d}", (), d, None))
+    for d in (8, 16):
+        for ch, name in ((2, "ga"), (3, "rgb"), (4, "rgba")):
+            png_cases.append((f"png-{name}{d}", (ch,), d, None))
+    pal = rng.randint(0, 256, (256, 3)).astype(np.uint8)
+    for d in (1, 2, 4, 8):
+        png_cases.append((f"png-pal{d}", (), d, pal[: 1 << d]))
+    filters = (None, 0, 1, 2, 3, 4, "cycle")
+    for family, chans, depth, palette in png_cases:
+        for h, w in ((11, 13), (2, 3)):
+            arr = image((h, w) + chans, 1 << depth)
+            if palette is None:
+                arr = arr.astype(np.uint16 if depth == 16 else np.uint8)
+            for ft in filters:
+                ffr = None if ft is None else (
+                    (lambda y: y) if ft == "cycle" else (lambda y, f=ft: f)
+                )
+                for il in (False, True):
+                    add(family, mm.encode_png(
+                        arr, depth=depth, palette=palette,
+                        filter_for_row=ffr, interlace=il,
+                    ))
+
+    # lossless JPEG: precision x predictor x restart x scan layout
+    layouts = (
+        ("jpegll-gray", 2, None),
+        ("jpegll-interleaved", 3, None),
+        ("jpegll-per-component", 3, ((0,), (1,), (2,))),
+        ("jpegll-partial", 3, ((0, 1), (2,))),
+        ("jpegll-partial", 3, ((2,), (0, 1))),
+    )
+    for P in (8, 12, 16):
+        for pred in range(1, 8):
+            for ri in (0, 5):
+                for family, ndim, groups in layouts:
+                    shape = (6, 7) if ndim == 2 else (6, 7, 3)
+                    add(family, mm.encode_jpeg_lossless(
+                        image(shape, 1 << P), P, predictor=pred,
+                        restart_interval=ri, scan_groups=groups,
+                    ))
+
+    # baseline / 12-bit / progressive JPEG from quantized zigzag blocks
+    def blocks(n, dc_span, ac, draw):
+        out = []
+        for _ in range(n):
+            zz = [0] * 64
+            zz[0] = int(rng.randint(-dc_span, dc_span))
+            for k in ac:
+                zz[k] = int(draw())
+            out.append(zz)
+        return out
+
+    # the fixture AC tables: baseline codes +-1 after runs of 0 or 1 (mod
+    # 16, ZRL between); progressive any run, |coefficient| <= 3
+    base_ac = (1, 3, 20, 38)  # runs 0, 1, 16 (ZRL + 0) and 17 (ZRL + 1)
+    unit = functools.partial(rng.choice, [-1, 1])
+    small = functools.partial(rng.randint, -3, 4)
+    qt8 = [int(q) for q in rng.randint(1, 256, 64)]
+    qt12 = [int(q) for q in rng.randint(1, 4096, 64)]
+    for ri in (0, 2):
+        add("jpeg-baseline", mm.encode_jpeg_blocks(
+            12, 16, [blocks(4, 1000, base_ac, unit) for _ in range(3)],
+            [qt8, qt8], restart_interval=ri,
+        ))
+        add("jpeg-baseline", mm.encode_jpeg_blocks(
+            24, 8, [blocks(3, 1000, base_ac, unit)], [qt8], comp_quant=(0,),
+            restart_interval=ri,
+        ))
+        add("jpeg12", mm.encode_jpeg12_gray(
+            20, 12, blocks(6, 16000, base_ac, unit), qt12, restart_interval=ri
+        ))
+        add("jpeg-progressive", mm.encode_jpeg_progressive(
+            16, 16, [blocks(4, 500, range(1, 64, 7), small) for _ in range(3)],
+            [qt8, qt8], restart_interval=ri,
+        ))
+    return {k: v.hexdigest() for k, v in digests.items()}
+
+
+def test_codec_fixture_bytes_pinned():
+    """The merged TIFF / PNG / lossless-JPEG encoders and the shared
+    JPEG block coder write the same bytes as the per-variant encoders
+    they replaced, over every compression, byte order, strip/tile/
+    planar layout, depth, CCITT mode, color type, filter, interlace,
+    predictor, restart interval and scan layout in the grid."""
+    got = _codec_fixture_digests(multimodal)
+    assert {k: v for k, v in got.items() if v != CODEC_FIXTURE_SHA256[k]} == {}
+    assert set(got) == set(CODEC_FIXTURE_SHA256)
+
+
+def test_decode_tiff_rejects_inconsistent_segment_tables():
+    """A StripByteCounts / TileByteCounts array with fewer entries than
+    its offsets array must fail loudly in every layout — tiled, planar,
+    stripped, 16-bit and bilevel — never decode a partly zero image or
+    a short one; so must a zero RowsPerStrip or tile size."""
+    import struct
+
+    import numpy as np
+
+    from kinesis_stream_reader_spark.operators import multimodal as mm
+
+    def patched(blob: bytes, tag: int, value=None) -> bytes:
+        """`tag` rewritten to one inline entry: `value`, or by default
+        the first entry of its array (little-endian files)."""
+        out = bytearray(blob)
+        (ifd,) = struct.unpack_from("<I", out, 4)
+        (n,) = struct.unpack_from("<H", out, ifd)
+        for i in range(n):
+            at = ifd + 2 + 12 * i
+            t, typ, count, v = struct.unpack_from("<HHII", out, at)
+            if t == tag:
+                if value is None:
+                    value = struct.unpack_from("<I", out, v)[0] if count > 1 else v
+                if typ == 3:  # SHORT, left-justified in the value slot
+                    struct.pack_into("<IHH", out, at + 4, 1, value, 0)
+                else:
+                    struct.pack_into("<II", out, at + 4, 1, value)
+                return bytes(out)
+        raise AssertionError(f"tag {tag} not found")
+
+    rng = np.random.RandomState(9)
+    rgb = rng.randint(0, 256, (32, 32, 3)).astype(np.uint8)
+    bits = rng.randint(0, 2, (12, 20))
+    cases = [
+        (rgb, mm.encode_tiff(rgb, tile=(16, 16)), 325),
+        (rgb, mm.encode_tiff(rgb, tile=(16, 16), planar=True, compression=8), 325),
+        (rgb, mm.encode_tiff(rgb, rows_per_strip=4), 279),
+        (rgb, mm.encode_tiff(rgb, rows_per_strip=4, planar=True), 279),
+        (rgb[:, :, :1], mm.encode_tiff(rgb[:, :, 0], depth=16, compression=5), 279),
+    ] + [
+        (
+            bits[:, :, None],
+            mm.encode_tiff_bilevel(bits, compression=c, rows_per_strip=3),
+            279,
+        )
+        for c in (1, 2, 3, 4)
+    ]
+    for want, blob, tag in cases:
+        got = mm.decode_tiff(blob)
+        assert np.array_equal(got, np.broadcast_to(want, got.shape))
+        with pytest.raises(ValueError, match="byte counts do not match"):
+            mm.decode_tiff(patched(blob, tag))
+    for blob, tag in ((cases[0][1], 322), (cases[2][1], 278), (cases[-1][1], 278)):
+        with pytest.raises(ValueError, match="dimensions must be positive"):
+            mm.decode_tiff(patched(blob, tag, 0))

@@ -104,3 +104,33 @@ def test_python_map_boundary_is_rowmap():
     assert pandas_groups == []
     assert closures == ["operators/rowmap.py"]
     assert arrow_groups == ["operators/rowmap.py"]
+
+
+def test_one_writer_per_image_container():
+    """Each image container is written by one function in
+    operators/multimodal.py: the TIFF byte-order header, the lossless
+    JPEG SOF3 marker and the PNG Adam7 pass walk each appear in exactly
+    one encoder (decoders read them separately), so a per-variant copy
+    of a container writer cannot come back."""
+    import ast
+    import re
+
+    path = PKG.parent / "operators" / "multimodal.py"
+    src = path.read_text()
+    markers = {
+        "tiff_header": r'b"II\*\\x00"',
+        "sof3": r"\\xff\\xc3|0xC3\b",
+        "adam7": r"\b_ADAM7\b",
+    }
+    writers = {k: [] for k in markers}
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("decode"):
+            body = ast.get_source_segment(src, node)
+            for key, marker in markers.items():
+                if re.search(marker, body):
+                    writers[key].append(node.name)
+    assert writers == {
+        "tiff_header": ["_tiff_file"],
+        "sof3": ["encode_jpeg_lossless"],
+        "adam7": ["encode_png"],
+    }

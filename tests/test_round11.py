@@ -65,7 +65,7 @@ def test_canonical_url_schemeless_passthrough(spark):
 def test_jpeg_lossless_partial_scan_incomplete_fails_loudly():
     """Round 13 decodes partially-interleaved lossless scans (the old
     NotImplementedError gate is gone — positive coverage lives in
-    test_round13.test_jpeg_lossless_partial_interleave_roundtrip).
+    test_multimodal.test_jpeg_lossless_roundtrip_matrix).
     The invariant this test keeps: a file whose scans do NOT cover
     every declared component must still fail loudly, never silently
     decode a subset. This fixture's lone scan names two of three

@@ -447,19 +447,26 @@ def test_jpeg_lossless_multiscan_roundtrip():
 
     from kinesis_stream_reader_spark.operators import multimodal as mm
 
+    per_component = ((0,), (1,), (2,))
     rng = np.random.RandomState(7)
     for pred in range(1, 8):
         a = rng.randint(0, 256, size=(9, 7, 3))
         multi = mm.decode_jpeg(
-            mm.encode_jpeg_lossless_rgb_multiscan(a, 8, pred, 5)
+            mm.encode_jpeg_lossless(
+                a, 8, predictor=pred, restart_interval=5,
+                scan_groups=per_component,
+            )
         )
         inter = mm.decode_jpeg(
-            mm.encode_jpeg_lossless_rgb(a, 8, pred, 5)
+            mm.encode_jpeg_lossless(a, 8, predictor=pred, restart_interval=5)
         )
         assert (multi == a).all() and (multi == inter).all(), pred
     a16 = rng.randint(0, 65536, size=(6, 5, 3))
     multi16 = mm.decode_jpeg(
-        mm.encode_jpeg_lossless_rgb_multiscan(a16, 16, 4, 0)
+        mm.encode_jpeg_lossless(
+            a16, 16, predictor=4, restart_interval=0,
+            scan_groups=per_component,
+        )
     )
     assert (multi16 == a16).all() and multi16.dtype == np.uint16
 

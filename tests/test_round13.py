@@ -480,14 +480,14 @@ def test_jpeg_lossless_partial_interleave_roundtrip():
                         0, 1 << P, size=(6, 7, 3)
                     ).astype(np.int64)
                     dec = M.decode_jpeg(
-                        M.encode_jpeg_lossless_rgb_partial(
+                        M.encode_jpeg_lossless(
                             px, P, predictor=pred,
                             restart_interval=ri, scan_groups=groups,
                         )
                     )
                     assert (dec.astype(np.int64) == px).all()
                     ref = M.decode_jpeg(
-                        M.encode_jpeg_lossless_rgb(
+                        M.encode_jpeg_lossless(
                             px, P, predictor=pred, restart_interval=ri
                         )
                     )

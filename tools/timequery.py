@@ -1,6 +1,9 @@
 """Isolated-warm per-query timing probe: bench.py's warmup + _run_once
 methodology over a named subset, N repeats, min + all walls to stderr-safe
-file or stdout. Usage:
+file or stdout. The session runs local[$SPARK_GRAFT_CPUS] (the host's
+cores when unset), and each query runs once untimed before its timed
+repeats, so a wall does not depend on the query's position in the list.
+Usage:
   SPARK_GRAFT_SF_DIR=... python tools/timequery.py [-n N] name...
 """
 from __future__ import annotations
@@ -12,7 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kinesis_stream_reader_spark.session import get_spark  # noqa: E402
+from kinesis_stream_reader_spark.session import env_int, get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -23,7 +26,9 @@ def main() -> None:
     if args and args[0] == "-n":
         n = int(args[1]); args = args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("timequery")
+    cpus = env_int("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    os.environ["SPARK_GRAFT_CPUS"] = str(cpus)  # in-process readers agree
+    spark = get_spark("timequery", cpus=cpus)
     qs = entrymod.queries()
     from kinesis_stream_reader_spark.sources.tables import TABLES
     for table in TABLES:
@@ -62,6 +67,8 @@ def main() -> None:
 
     out = {}
     for name in args:
+        qs[name](spark, sf_dir).count()  # untimed warm run
+        cleanup()
         walls = []
         for _ in range(n):
             t0 = time.perf_counter()
