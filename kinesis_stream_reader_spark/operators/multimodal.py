@@ -67,6 +67,11 @@ FEATURE_SCHEMA = (
     "doc_id BIGINT, kind STRING, n_bytes BIGINT, byte_mean DOUBLE, byte_entropy_proxy BIGINT"
 )
 
+# decode_tiff refuses an image (or tile) with more pixels than this before
+# allocating anything: far above every fixture, far below what one flipped
+# header bit can ask for (a bilevel width of 1355253557)
+TIFF_MAX_PIXELS = 1 << 26
+
 
 def decode_ppm(data: bytes):
     """REAL image decode for binary PPM (P6, maxval<=255): returns an
@@ -988,7 +993,8 @@ def decode_tiff(data: bytes):
     samples come back replicated to 3 channels (bilevel as luma, 1 =
     white); 16-bit samples keep the full uint16 range. Raises
     NotImplementedError only for other compressions or sample
-    layouts."""
+    layouts, and ValueError for a malformed file or one whose image or
+    tile exceeds TIFF_MAX_PIXELS."""
     import struct
     import zlib
 
@@ -1016,6 +1022,8 @@ def decode_tiff(data: bytes):
         fmt = {1: "B", 3: "H", 4: "I"}.get(typ, "B")
         tags[tag] = list(struct.unpack_from(f"{e}{count}{fmt}", data, ptr))
     w, h = tags[256][0], tags[257][0]
+    if w * h > TIFF_MAX_PIXELS:
+        raise ValueError(f"TIFF of {w}x{h} pixels exceeds {TIFF_MAX_PIXELS}")
     compression = tags.get(259, [1])[0]
     if compression == 32946:
         # legacy COMPRESSION_DEFLATE: same per-segment zlib streams as
@@ -1061,10 +1069,14 @@ def decode_tiff(data: bytes):
         kind, sw, sh = "tile", tags[322][0], tags[323][0]
         offsets, counts = tags[324], tags[325]
     else:
-        kind, sw, sh = "strip", w, tags.get(278, [h])[0]
+        # RowsPerStrip may exceed ImageLength: 2**32-1, the spec's
+        # default, means the whole image is one strip
+        kind, sw, sh = "strip", w, min(tags.get(278, [h])[0], h)
         offsets, counts = tags[273], tags[279]
     if sw < 1 or sh < 1:
         raise ValueError(f"TIFF {kind} dimensions must be positive")
+    if sw * sh > TIFF_MAX_PIXELS:
+        raise ValueError(f"TIFF {kind} of {sw}x{sh} pixels exceeds {TIFF_MAX_PIXELS}")
     across, down = -(-w // sw), -(-h // sh)
     if len(offsets) != across * down * (spp // n):
         raise ValueError(f"TIFF {kind} count does not match dimensions")
@@ -1077,8 +1089,11 @@ def decode_tiff(data: bytes):
             return _lzw_decode_tiff(raw, expected)
         if compression == 32773:
             return _packbits_decode(raw, expected)
-        if compression == 8:
-            raw = zlib.decompress(raw)
+        if compression == 8:  # capped: a bomb stops one byte past the segment
+            z = zlib.decompressobj()
+            raw = z.decompress(raw, max_length=expected + 1)
+            if len(raw) <= expected and not z.eof:
+                raise ValueError("TIFF Deflate segment truncated")
         if len(raw) < expected:
             raise ValueError("TIFF segment shorter than expected")
         return raw[:expected]

@@ -1409,9 +1409,11 @@ def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flat-to-better under the bench's isolated-warm methodology, so
     # the stale "Python compute wants cluster width" carve-out no
     # longer pays for its per-store commit overhead at bench volume
-    # (~1.5k users/batch). This op now follows the same
-    # SPARK_GRAFT_STREAM_PARTITIONS policy as every other stateful
-    # operator.
+    # (~1.5k users/batch). This op now takes run_available_now's
+    # state-store default like every other stateful operator:
+    # min(8, task slots) stores, SPARK_GRAFT_STREAM_PARTITIONS
+    # overriding. Its event-time timeouts fire on the watermark alone,
+    # so its drain keeps the trailing no-data batch described above.
     out = jobs.run_available_now(sessionize(stream), "streaming_sessionize")
     return out.select(
         "user_id",

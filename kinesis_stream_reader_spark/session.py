@@ -195,6 +195,7 @@ def get_spark(app_name: str = "kinesis_stream_reader_spark", cpus: int | None = 
         .config(NANOS_CONF, "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", scratch("ksr_warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -204,6 +205,17 @@ def get_spark(app_name: str = "kinesis_stream_reader_spark", cpus: int | None = 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def get_host_spark(app_name: str) -> SparkSession:
+    """`get_spark` at SPARK_GRAFT_CPUS, or the host's cores when that is
+    unset — the session of tools/check.py, explain.py and timequery.py,
+    so they check, plan and time at this host's task slots. The count is
+    exported, so in-process readers (`default_parallelism`,
+    `ensure_confs`) agree."""
+    cpus = env_int("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
+    return get_spark(app_name, cpus=cpus)
 
 
 def ensure_confs(spark: SparkSession) -> SparkSession:

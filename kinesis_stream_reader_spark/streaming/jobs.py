@@ -29,8 +29,21 @@ Drain contract (``drain``):
   checkpoint belongs to the caller (restarts and state-store reads need
   it afterwards);
 - with ``partitions``, ``spark.sql.shuffle.partitions`` — the state-store
-  count of every stateful operator — is set for the query and the
-  previous value restored once it terminates;
+  count of every stateful operator — is set for the query;
+  ``run_available_now`` passes at most one store per task slot,
+  ``min(8, defaultParallelism)`` unless SPARK_GRAFT_STREAM_PARTITIONS
+  says otherwise, so every store commits in one wave;
+- on its own temp checkpoint, and when no operator of the plan can emit
+  rows once only the watermark moves, the query runs with
+  ``spark.sql.streaming.noDataMicroBatches.enabled`` off: the trailing
+  no-data batch would only evict state from a checkpoint that is deleted
+  next. Operators that can emit on the watermark alone keep it: a
+  streaming ``Aggregate`` (append-mode and session windows), a
+  stream-stream outer or anti join, and every ``*WithState`` /
+  ``TransformWithState*`` operator (their event-time timers fire on it);
+  so does any drain on a caller's checkpoint;
+- both confs are set before the query starts and their previous values
+  restored once it terminates;
 - a failing micro-batch surfaces as ``StreamingQueryException`` after
   the same cleanup.
 """
@@ -44,6 +57,7 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
 from ..operators.events import to_nested
 from ..operators.filters import filter_records
@@ -51,27 +65,34 @@ from ..session import ensure_confs, env_int
 from ..sources.tables import normalize_timestamps
 
 
-_STREAM_DIRS: dict[str, str] = {}
+_STREAM_DIRS: dict[tuple[str, str], tuple[str, StructType]] = {}
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+# stream-stream join types that emit null-padded (or anti) rows once the
+# watermark proves no match can still arrive
+_WATERMARK_JOINS = ("LeftOuter", "RightOuter", "FullOuter", "LeftAnti")
 
 
-def _table_stream_dir(sf_dir: str, table: str) -> str:
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> tuple[str, StructType]:
     """The file source wants a directory of data files; expose a table's
-    parquet through a symlinked temp dir (no copy). Handles both a
-    single-file fixture and a Spark-written directory of part files —
-    the source does NOT recurse into subdirectories, so leaf files are
-    linked directly."""
-    key = f"{sf_dir}::{table}"
+    parquet through a symlinked temp dir (no copy), with the static
+    table's schema. Handles both a single-file fixture and a
+    Spark-written directory of part files — the source does NOT recurse
+    into subdirectories, so leaf files are linked directly. Memoized per
+    (sf_dir, table): a fixture is not rewritten under a live process, so
+    the schema is inferred once, not by one Spark job per call."""
+    key = (sf_dir, table)
     if key not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="ksr_stream_")
         src = f"{sf_dir}/{table}.parquet"
+        schema = spark.read.parquet(src).schema
+        d = tempfile.mkdtemp(prefix="ksr_stream_")
         if os.path.isdir(src):
             for i, name in enumerate(sorted(os.listdir(src))):
                 if name.endswith(".parquet"):
                     os.symlink(f"{src}/{name}", f"{d}/part-{i:05d}.parquet")
         else:
             os.symlink(src, f"{d}/{table}.parquet")
-        _STREAM_DIRS[key] = d
+        _STREAM_DIRS[key] = (d, schema)
     return _STREAM_DIRS[key]
 
 
@@ -81,12 +102,8 @@ def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     production deployment replaces it with the Kinesis reader
     (sources/kinesis.py) under the same downstream plan."""
     ensure_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    return (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_table_stream_dir(sf_dir, table))
-    )
+    d, schema = _table_stream(spark, sf_dir, table)
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,9 +118,14 @@ def drain(
 ) -> StreamingQuery:
     """Run `writer` to caught-up under the module's drain contract."""
     spark = writer._spark
-    prev_parts = spark.conf.get(_SHUFFLE_PARTITIONS)
+    confs = {}
     if partitions is not None:
-        spark.conf.set(_SHUFFLE_PARTITIONS, str(partitions))
+        confs[_SHUFFLE_PARTITIONS] = str(partitions)
+    if checkpoint is None and not _emits_on_watermark(_plan_operators(writer._df)):
+        confs[_NO_DATA_BATCHES] = "false"
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     temp = None if checkpoint else tempfile.TemporaryDirectory(prefix="ksr_drain_ck_")
     try:
         q = (
@@ -117,10 +139,46 @@ def drain(
             q.stop()
         return q
     finally:
-        if partitions is not None:
-            spark.conf.set(_SHUFFLE_PARTITIONS, prev_parts)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
         if temp is not None:
             temp.cleanup()
+
+
+def _plan_operators(df: DataFrame) -> set[str]:
+    """Node names of the streaming part of `df`'s analyzed plan, from one
+    walk over its nodes (batch subtrees, such as a static dimension, are
+    not entered), plus the join type of every stream-stream join, e.g.
+    ``LeftOuter``."""
+    ops: set[str] = set()
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if not node.isStreaming():
+            continue
+        name = node.nodeName()
+        ops.add(name)
+        if name == "Join" and node.left().isStreaming() and node.right().isStreaming():
+            ops.add(node.joinType().toString())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return ops
+
+
+def _emits_on_watermark(ops: set[str]) -> bool:
+    """Whether an operator in `ops` can emit rows when only the
+    watermark moves (a closed window, a null-padded join row, a fired
+    timer) — what a trailing no-data batch exists for."""
+    return any(
+        op == "Aggregate"
+        or op in _WATERMARK_JOINS
+        or op.endswith("WithState")
+        or op.startswith("TransformWithState")
+        for op in ops
+    )
 
 
 def records_stream(events: DataFrame, query: Mapping[str, object]) -> DataFrame:
@@ -323,27 +381,26 @@ def run_available_now(
 
     Stateful operators (joins, dedup, windowed aggs) create one state
     store per shuffle partition per stateful operator, and every
-    micro-batch pays a per-store checkpoint commit. State partitions
-    should therefore be sized to stream VOLUME, not cluster width —
-    at local bench volume 8 stores beat 32 by ~35% on the
-    stream-stream join (the join compute is trivial; the commits are
-    not). Tunable via SPARK_GRAFT_STREAM_PARTITIONS; a production
-    deployment sizes it to per-trigger row volume / target state-store
-    size and it can exceed cluster width for big state.
-
-    The exception is Python-side stateful ops (applyInPandasWithState):
-    their per-partition cost is Arrow + pandas compute, not the state
-    commit, so they want cluster-width parallelism — callers pass an
-    explicit `state_partitions` to override the volume-sized default."""
+    micro-batch pays a fixed checkpoint commit per store. The default is
+    therefore ``min(8, defaultParallelism)`` stores: sized to stream
+    volume rather than cluster width (the join and dedup compute at
+    fixture volume is trivial; the commits are not), and never more
+    stores than task slots, so the commits of one trigger run in a
+    single wave. SPARK_GRAFT_STREAM_PARTITIONS overrides it, and an
+    explicit `state_partitions` overrides both; a production deployment
+    sizes it to per-trigger row volume / target state-store size, and it
+    can exceed cluster width for big state."""
     spark = stream_df.sparkSession
     if state_partitions is None:
-        state_partitions = env_int("SPARK_GRAFT_STREAM_PARTITIONS", 8)
+        state_partitions = env_int(
+            "SPARK_GRAFT_STREAM_PARTITIONS", min(8, spark.sparkContext.defaultParallelism)
+        )
     # autodetect: aggregations run complete-mode on the memory sink.
     # `mode="append"` overrides for watermark-evicted aggregations
     # (session/tumbling windows) where append is the production shape
     # and only CLOSED windows should emit.
     if mode is None:
-        complete = stream_df.isStreaming and _has_aggregation(stream_df)
+        complete = "Aggregate" in _plan_operators(stream_df)
     else:
         complete = mode == "complete"
     if complete:
@@ -356,11 +413,6 @@ def run_available_now(
     # explicit schema: an empty result writes no part files, and the
     # stream's schema is authoritative either way
     return spark.read.schema(stream_df.schema).parquet(out_dir)
-
-
-def _has_aggregation(df: DataFrame) -> bool:
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return "Aggregate" in plan
 
 
 def static_enrich(events: DataFrame, customer: DataFrame) -> DataFrame:

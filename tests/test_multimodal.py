@@ -2093,6 +2093,104 @@ def test_tiff_bilevel_roundtrips():
         assert np.array_equal(got[:, :, 0], a)
 
 
+@pytest.mark.parametrize("comp", [1, 2, 3, 4])
+def test_tiff_flipped_width_bit_refused_before_allocating(comp):
+    """One flipped bit in a bilevel file's ImageWidth asks for a
+    (9, 2**30 + 21) image: decode_tiff must refuse it with ValueError
+    before any array is allocated, not try a 77 GB np.zeros."""
+    import struct
+    import tracemalloc
+
+    import numpy as np
+
+    from kinesis_stream_reader_spark.operators import multimodal as mm
+
+    a = (np.random.RandomState(5).rand(9, 21) < 0.5).astype(np.int64)
+    blob = bytearray(mm.encode_tiff_bilevel(a, compression=comp))
+    idx = blob.find(struct.pack("<HHII", 256, 4, 1, 21))  # ImageWidth LONG
+    assert idx > 0
+    blob[idx + 11] ^= 0x40  # bit 30 of the little-endian width
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="exceeds"):
+            mm.decode_tiff(bytes(blob))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak
+
+
+def _set_tiff_long(blob: bytearray, tag: int, value: int) -> None:
+    """Overwrite the inline value of a little-endian one-LONG IFD entry."""
+    import struct
+
+    idx = blob.find(struct.pack("<HHI", tag, 4, 1))
+    assert idx > 0, tag
+    struct.pack_into("<I", blob, idx + 8, value)
+
+
+@pytest.mark.parametrize("rows_per_strip", [9 + 5, 0xFFFFFFFF])
+def test_tiff_rows_per_strip_beyond_image_length_decodes(rows_per_strip):
+    """RowsPerStrip may exceed ImageLength; 2**32-1 is the TIFF 6.0
+    default for a one-strip image. Such single-strip files must decode
+    to their input, not trip the pixel cap on width * RowsPerStrip."""
+    import numpy as np
+
+    from kinesis_stream_reader_spark.operators import multimodal as mm
+
+    rng = np.random.RandomState(9)
+    rgb = rng.randint(0, 256, (9, 21, 3)).astype(np.uint8)
+    bilevel = (rng.rand(9, 21) < 0.5).astype(np.int64)
+    files = [
+        (mm.encode_tiff(rgb, compression=c, rows_per_strip=9), rgb)
+        for c in (1, 5, 8, 32773)
+    ] + [
+        (
+            mm.encode_tiff_bilevel(bilevel, compression=c, rows_per_strip=9),
+            np.repeat(bilevel[:, :, None], 3, 2).astype(np.uint8),
+        )
+        for c in (1, 2, 3, 4)
+    ]
+    for blob, want in files:
+        blob = bytearray(blob)
+        _set_tiff_long(blob, 278, rows_per_strip)
+        assert np.array_equal(mm.decode_tiff(bytes(blob)), want)
+
+
+def test_tiff_deflate_bomb_inflates_bounded():
+    """A Deflate strip that inflates to 16 MiB for a 9x21 gray image is
+    cropped to the strip's size without ever inflating the rest; a
+    stream cut short (also just its adler32 trailer) raises ValueError."""
+    import tracemalloc
+    import zlib
+
+    import numpy as np
+
+    from kinesis_stream_reader_spark.operators import multimodal as mm
+
+    a = np.random.RandomState(8).randint(0, 256, (9, 21)).astype(np.uint8)
+    good = mm.encode_tiff(a, compression=8, rows_per_strip=9)
+    bomb = zlib.compress(bytes(16 << 20), 9)
+    blob = bytearray(good) + bomb
+    _set_tiff_long(blob, 273, len(good))  # StripOffsets
+    _set_tiff_long(blob, 279, len(bomb))  # StripByteCounts
+    tracemalloc.start()
+    try:
+        got = mm.decode_tiff(bytes(blob))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak
+    assert np.array_equal(got, np.zeros((9, 21, 3), np.uint8))
+
+    seg = zlib.compress(a.tobytes())
+    for cut in (4, len(seg) // 2):  # trailer only; half the stream
+        blob = bytearray(good)
+        _set_tiff_long(blob, 279, len(seg) - cut)
+        with pytest.raises(ValueError, match="truncated|shorter"):
+            mm.decode_tiff(bytes(blob))
+
+
 def test_tiff_ccitt_cross_validated_against_jdk(tmp_path):
     """The JDK ImageIO TIFF codec must read our CCITT-MH files and we
     must read its 'CCITT RLE' output, pixel-exactly — the only honest

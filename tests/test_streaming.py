@@ -4,6 +4,8 @@ sessionization."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -329,7 +331,8 @@ def test_attribution_join_types_against_inner(spark, sf_dir, inner_attribution, 
 
 def test_drain_propagates_batch_failure(spark, sf_dir, tmp_path, monkeypatch):
     """A failing foreachBatch surfaces as StreamingQueryException, and
-    the drain still stops its query and removes its temp checkpoint."""
+    the drain still stops its query, removes its temp checkpoint and
+    restores the no-data-batch conf it turned off."""
     import tempfile
 
     from pyspark.errors import StreamingQueryException
@@ -338,12 +341,18 @@ def test_drain_propagates_batch_failure(spark, sf_dir, tmp_path, monkeypatch):
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
 
     def fail(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get(jobs._NO_DATA_BATCHES))
         raise RuntimeError("planted batch failure")
 
+    seen = []
+    before = spark.conf.get(jobs._NO_DATA_BATCHES, None)
     with pytest.raises(StreamingQueryException, match="planted batch failure"):
         jobs.drain(stream.writeStream.foreachBatch(fail))
     assert spark.streams.active == []
     assert list(tmp_path.iterdir()) == []
+    # the query ran without the tail batch, and the session's conf is back
+    assert seen == ["false"]
+    assert spark.conf.get(jobs._NO_DATA_BATCHES, None) == before
 
 
 @pytest.mark.parametrize(
@@ -496,3 +505,116 @@ def test_streaming_quarantine_equals_batch(spark, sf_dir):
         r.reasons: r.n for r in QUERIES["quarantine_split"](spark, sf_dir).collect()
     }
     assert streamed == batch
+
+
+@pytest.fixture(scope="module")
+def two_part_dir(sf_dir, tmp_path_factory):
+    """The events table as 2 time-ordered part files: a drain reads it
+    as 2 triggers, and no row of the second is behind the watermark the
+    first sets."""
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{sf_dir}/events.parquet").sort_by("ts")
+    parts = tmp_path_factory.mktemp("ksr_two_part") / "events.parquet"
+    parts.mkdir()
+    half = table.num_rows // 2
+    now = time.time()
+    for i, part in enumerate((table.slice(0, half), table.slice(half))):
+        path = parts / f"part-{i:05d}.parquet"
+        pq.write_table(part, path)
+        os.utime(path, (now - 60 + i, now - 60 + i))  # the file source's order
+    return str(parts.parent)
+
+
+def _capture_drains(monkeypatch) -> list:
+    """Every query `jobs.drain` returns from now on, in order."""
+    drained = []
+    real = jobs.drain
+
+    def drain(*args, **kwargs):
+        drained.append(real(*args, **kwargs))
+        return drained[-1]
+
+    monkeypatch.setattr(jobs, "drain", drain)
+    return drained
+
+
+def _rows(columns, rows) -> Counter:
+    """Rows as a multiset of {column: value} items, column order free."""
+    return Counter(tuple(sorted(zip(columns, r))) for r in rows)
+
+
+def _oracle_rows(sf_dir: str, name: str) -> Counter:
+    import __spark_entry__ as entrymod
+
+    duckdb = pytest.importorskip("duckdb")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+    rel = con.sql(entrymod.oracle_sql()[name])
+    return _rows(rel.columns, rel.fetchall())
+
+
+def test_dedup_drain_on_temp_checkpoint_runs_no_tail_batch(spark, two_part_dir, monkeypatch):
+    """Dedup emits nothing when only the watermark moves, so on its own
+    temp checkpoint the drain runs exactly one trigger per part file, both
+    with input rows, and no trailing no-data batch; the rows still equal
+    the batch dedup."""
+    from kinesis_stream_reader_spark.registry import QUERIES
+
+    drained = _capture_drains(monkeypatch)
+    got = QUERIES["streaming_dedup"](spark, two_part_dir)
+    (q,) = drained
+    inputs = [p.numInputRows for p in q.recentProgress]
+    assert len(inputs) == 2 and all(inputs), inputs
+    want = load_events(spark, two_part_dir).dropDuplicates(["event_id"])
+    want = want.select(*got.columns)
+    assert _rows(got.columns, got.collect()) == _rows(want.columns, want.collect())
+
+
+def test_dedup_drain_on_given_checkpoint_keeps_tail_batch(spark, two_part_dir, tmp_path):
+    """A checkpoint the caller keeps may be resumed, so the drain leaves
+    the no-data batch on: it runs last, with 0 input rows."""
+    stream = jobs.stream_events(spark, two_part_dir)
+    writer = jobs.dedup_stream(stream.union(stream)).writeStream.format("memory")
+    q = jobs.drain(writer.queryName("t_dedup_given_ck"), str(tmp_path / "ck"))
+    inputs = [p.numInputRows for p in q.recentProgress]
+    assert len(inputs) == 3 and all(inputs[:2]) and inputs[-1] == 0, inputs
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_sessionize_native", "streaming_attribution_outer"]
+)
+def test_watermark_emitting_drains_keep_tail_batch(spark, sf_dir, monkeypatch, name):
+    """Append-mode session windows and a left-outer stream-stream join
+    emit rows when only the watermark moves (closed sessions, unmatched
+    clicks), so their drains keep the trailing no-data batch and still
+    match their batch twins."""
+    from kinesis_stream_reader_spark.registry import QUERIES
+
+    drained = _capture_drains(monkeypatch)
+    got = QUERIES[name](spark, sf_dir)
+    (q,) = drained
+    assert q.lastProgress.numInputRows == 0
+    assert len(q.recentProgress) >= 2
+    assert _rows(got.columns, got.collect()) == _oracle_rows(sf_dir, name)
+
+
+def test_state_stores_capped_at_task_slots(spark, sf_dir, monkeypatch):
+    """By default a stateful drain runs no more state stores than the
+    session has task slots; SPARK_GRAFT_STREAM_PARTITIONS overrides it."""
+    from kinesis_stream_reader_spark.registry import QUERIES
+
+    drained = _capture_drains(monkeypatch)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
+    QUERIES["streaming_dedup"](spark, sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+    QUERIES["streaming_dedup"](spark, sf_dir)
+    default, override = (
+        [op.numStateStoreInstances for op in q.lastProgress.stateOperators]
+        for q in drained
+    )
+    assert default == [min(8, spark.sparkContext.defaultParallelism)]
+    assert override == [3]

@@ -3,7 +3,8 @@
 Runs every queries() entry at the given scale factor on Spark AND its
 oracle_sql() twin on DuckDB, then compares row count, column names, and
 order-insensitive values (columns sorted by name, rows sorted, floats
-rounded). Usage:
+rounded). The session runs local[$SPARK_GRAFT_CPUS] (the host's cores
+when unset). Usage:
 
     python tools/check.py [sf_dir] [query ...]
 """
@@ -19,7 +20,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-from kinesis_stream_reader_spark.session import get_spark  # noqa: E402
+from kinesis_stream_reader_spark.session import get_host_spark  # noqa: E402
 from kinesis_stream_reader_spark.sources.tables import TABLES  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -40,7 +41,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("check", cpus=8)
+    spark = get_host_spark("check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -15,7 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kinesis_stream_reader_spark.session import env_int, get_spark  # noqa: E402
+from kinesis_stream_reader_spark.session import get_host_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -26,9 +26,7 @@ def main() -> None:
     if args and args[0] == "-n":
         n = int(args[1]); args = args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = env_int("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
-    os.environ["SPARK_GRAFT_CPUS"] = str(cpus)  # in-process readers agree
-    spark = get_spark("timequery", cpus=cpus)
+    spark = get_host_spark("timequery")
     qs = entrymod.queries()
     from kinesis_stream_reader_spark.sources.tables import TABLES
     for table in TABLES:
