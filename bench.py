@@ -5,10 +5,14 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -61,46 +65,44 @@ def _load_previous_bench(out_path: str, sf) -> dict[str, float]:
     return baseline
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    spark = get_spark("bench")
+def _cleanup(spark, shuffle_parts: str, keep_views: frozenset[str]) -> None:
+    """Per-query hygiene so one query's residue never inflates a later
+    one: stray streams stopped, memory-sink temp views (whose rows pin
+    block-manager memory for the whole run otherwise) dropped, cached
+    plans cleared, and the shuffle-partition conf restored in case a
+    query's save/restore was interrupted mid-flight. This is state
+    cleanup only — JVM/codegen/Arrow warmth is preserved."""
+    for s in spark.streams.active:
+        s.stop()
+    for r in spark.catalog.listTables():
+        if r.isTemporary and r.name not in keep_views:
+            spark.catalog.dropTempView(r.name)
+    spark.catalog.clearCache()
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
 
-    qs = entrymod.queries()
-    # SPARK_GRAFT_BENCH_SHARD="i/n": run only the i-th of n CONTIGUOUS
-    # registry-order slices in this process (fresh-JVM shard probe —
-    # see SCALING.md round 8). Shard results land in their own file so
-    # the committed single-session bench_out.json is never clobbered.
-    shard = os.environ.get("SPARK_GRAFT_BENCH_SHARD")
-    shard_suffix = ""
-    if shard:
-        i, n = (int(x) for x in shard.split("/"))
-        items = list(qs.items())
-        per = -(-len(items) // n)
-        qs = dict(items[i * per : (i + 1) * per])
-        shard_suffix = f"_shard_{i}_{n}"
-    # Warm up the JVM (codegen, parquet footer caches, Arrow path) so
-    # timings measure query execution, not session startup.
-    from kinesis_stream_reader_spark.sources.tables import TABLES
+
+def warmup(spark, sf_dir: str) -> Callable[[], None]:
+    """Warm up the JVM (codegen, parquet footer caches, Arrow path,
+    streaming machinery) so timings measure query execution, not
+    session startup. Returns the per-query `_cleanup`, bound to the
+    warm session's shuffle-partition conf and temp views."""
+    from kinesis_stream_reader_spark.operators.events import to_nested
+    from kinesis_stream_reader_spark.operators.rowmap import map_batches
+    from kinesis_stream_reader_spark.sources.raw import kpl_raw_records
+    from kinesis_stream_reader_spark.sources.tables import TABLES, load_events
+    from kinesis_stream_reader_spark.streaming import jobs
 
     for table in TABLES:
         spark.read.parquet(f"{sf_dir}/{table}.parquet").count()
     # materialize the KPL wire-record fixture so deagg timing measures
     # the decode operator, not test-fixture packing
-    from kinesis_stream_reader_spark.sources.raw import kpl_raw_records
-
     kpl_raw_records(spark, sf_dir).count()
     # spin up the Python/Arrow worker pool through the adapter every
     # Arrow kernel uses, so the first such query measures the operator,
     # not interpreter + Arrow channel startup
-    from kinesis_stream_reader_spark.operators.rowmap import map_batches
-
     map_batches(spark.range(10_000), lambda batches: batches, "id long").count()
     # compile the nested-event projection once: the first filter query
     # should measure the filter, not struct-builder codegen
-    from kinesis_stream_reader_spark.operators.events import to_nested
-    from kinesis_stream_reader_spark.sources.tables import load_events
-
     to_nested(load_events(spark, sf_dir)).count()
     # warm the Structured Streaming machinery (micro-batch planner, state
     # store provider, memory-sink registration): measured ~5-7 s of
@@ -108,27 +110,14 @@ def main() -> None:
     # happens to run first — the source of round-over-round "regressions"
     # on queries whose code never changed (bench order shifts as the
     # registry grows, so a different query absorbs the cold start).
-    import shutil
-    import tempfile
-
     warm_dir = tempfile.mkdtemp(prefix="ksr_bench_warm_src_")
     warm_ckpt = tempfile.mkdtemp(prefix="ksr_bench_warm_ckpt_")
     try:
 
         def _warm_drain() -> None:
-            (
-                spark.readStream.schema("id long")
-                .parquet(warm_dir)
-                .groupBy()
-                .count()
-                .writeStream.format("memory")
-                .queryName("ksr_bench_warmup_sink")
-                .outputMode("complete")
-                .option("checkpointLocation", warm_ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+            stream = spark.readStream.schema("id long").parquet(warm_dir)
+            writer = stream.groupBy().count().writeStream.format("memory")
+            jobs.drain(writer.queryName("ksr_bench_warmup_sink"), warm_ckpt, mode="complete")
 
         spark.range(1_000).write.mode("overwrite").parquet(warm_dir)
         _warm_drain()
@@ -143,31 +132,28 @@ def main() -> None:
     finally:
         shutil.rmtree(warm_dir, ignore_errors=True)
         shutil.rmtree(warm_ckpt, ignore_errors=True)
+    return functools.partial(
+        _cleanup,
+        spark,
+        spark.conf.get("spark.sql.shuffle.partitions"),
+        frozenset(r.name for r in spark.catalog.listTables()),
+    )
 
-    shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    preexisting_views = {r.name for r in spark.catalog.listTables()}
 
-    def _cleanup() -> None:
-        # Per-query hygiene so one query's residue never inflates a later
-        # one: stray streams stopped, memory-sink temp views (whose rows
-        # pin block-manager memory for the whole run otherwise) dropped,
-        # cached plans cleared, and the shuffle-partition conf restored in
-        # case a query's save/restore was interrupted mid-flight. This is
-        # state cleanup only — JVM/codegen/Arrow warmth is preserved.
-        for s in spark.streams.active:
-            s.stop()
-        for r in spark.catalog.listTables():
-            if r.isTemporary and r.name not in preexisting_views:
-                spark.catalog.dropTempView(r.name)
-        spark.catalog.clearCache()
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    spark = get_spark("bench")
+
+    qs = entrymod.queries()
+    cleanup = warmup(spark, sf_dir)
 
     def _run_once(name: str) -> float:
         t0 = time.perf_counter()
         # count() executes the full plan without driver-side materialization
         qs[name](spark, sf_dir).count()
         wall = round(time.perf_counter() - t0, 3)
-        _cleanup()
+        cleanup()
         return wall
 
     timings: dict[str, float] = {}
@@ -177,10 +163,6 @@ def main() -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     out_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_out.json"
-    )
-    shard_out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"bench_out{shard_suffix}.json",
     )
 
     # --- Noise re-probe (round 7): a ~490-query single-pass bench has
@@ -236,14 +218,12 @@ def main() -> None:
     confirmed: list[str] = []
     for name in dict.fromkeys(FLAGSHIP_REPROBE + movers):
         if name not in timings:
-            # expected in shard mode (flagship not in this slice); in a
-            # full run it means a stale/renamed flagship name, which
-            # would silently lose its unconditional re-probe
-            if not shard:
-                print(
-                    f"WARNING: FLAGSHIP_REPROBE name not in registry: {name}",
-                    file=sys.stderr,
-                )
+            # a stale/renamed flagship name would silently lose its
+            # unconditional re-probe
+            print(
+                f"WARNING: FLAGSHIP_REPROBE name not in registry: {name}",
+                file=sys.stderr,
+            )
             continue
         walls = [_run_once(name), _run_once(name)]
         reprobe[name] = walls
@@ -294,8 +274,8 @@ def main() -> None:
         "basis": basis,
     }
     # The full per-query JSON lands in bench_out.json so rounds can be
-    # diffed query-by-query (or bench_out_shard_i_n.json in shard mode).
-    with open(shard_out_path, "w") as fh:
+    # diffed query-by-query.
+    with open(out_path, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
     # The driver captures a ~2000-char TAIL of stdout, so a 320-query
     # line gets its head (and the totals) cut off. Print the full line

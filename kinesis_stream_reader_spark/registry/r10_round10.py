@@ -537,15 +537,7 @@ def streaming_shard_lag_census_query(
 
     spark.dataSource.register(KinesisBackfillDataSource)
     d = _reshard_fixture_dir(spark, sf_dir)
-    sizes = {
-        r["shard_id"]: r["n"]
-        for r in spark.read.format("kinesis_backfill")
-        .option("path", d)
-        .load()
-        .groupBy("shard_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
+    sizes = KinesisBackfillDataSource({"path": d}).census()
     cap = -(-max(sizes.values()) // 4)
     census: list[tuple[int, str, int]] = []
 
@@ -662,15 +654,7 @@ def streaming_reshard_drain_query(
 
     spark.dataSource.register(KinesisReshardDataSource)
     d = _reshard_fixture_dir(spark, sf_dir)
-    sizes = {
-        r["shard_id"]: r["n"]
-        for r in spark.read.format("kinesis_reshard")
-        .option("path", d)
-        .load()
-        .groupBy("shard_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
+    sizes = KinesisReshardDataSource({"path": d}).census()
     cap = -(-max(sizes.values()) // 4)
     census: list[tuple[int, str, int, int]] = []
 

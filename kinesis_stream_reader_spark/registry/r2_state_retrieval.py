@@ -1690,7 +1690,7 @@ def streaming_resume_exactly_once_query(
             .parquet(stream_dir)
         ).select("event_id", "user_id", "event_type", "value")
         writer = stream.dropDuplicates(["event_id"]).writeStream.format("parquet")
-        jobs.drain(writer.outputMode("append").option("path", out_dir), ckpt_dir)
+        jobs.drain(writer.option("path", out_dir), ckpt_dir, mode="append")
 
     try:
         # phase 1: the first 3/4 of events, 4 files

@@ -28,20 +28,24 @@ Drain contract (``drain``):
   removed once it terminates, whether it succeeded or failed; a given
   checkpoint belongs to the caller (restarts and state-store reads need
   it afterwards);
+- ``mode`` is the query's output mode (the writer's default, append,
+  when not given);
 - with ``partitions``, ``spark.sql.shuffle.partitions`` — the state-store
   count of every stateful operator — is set for the query;
-  ``run_available_now`` passes at most one store per task slot,
-  ``min(8, defaultParallelism)`` unless SPARK_GRAFT_STREAM_PARTITIONS
-  says otherwise, so every store commits in one wave;
+  ``run_available_now`` and ``state_store_snapshot`` pass at most one
+  store per task slot (``default_state_partitions``), so every store
+  commits in one wave;
 - on its own temp checkpoint, and when no operator of the plan can emit
   rows once only the watermark moves, the query runs with
   ``spark.sql.streaming.noDataMicroBatches.enabled`` off: the trailing
   no-data batch would only evict state from a checkpoint that is deleted
   next. Operators that can emit on the watermark alone keep it: a
-  streaming ``Aggregate`` (append-mode and session windows), a
-  stream-stream outer or anti join, and every ``*WithState`` /
-  ``TransformWithState*`` operator (their event-time timers fire on it);
-  so does any drain on a caller's checkpoint;
+  streaming ``Aggregate`` outside complete mode (append-mode and session
+  windows), a stream-stream outer or anti join, and every
+  ``*WithState`` / ``TransformWithState*`` operator (their event-time
+  timers fire on it); so does any drain on a caller's checkpoint. In
+  complete mode an ``Aggregate`` evicts nothing and re-emits its whole
+  table every trigger, so only what runs below it counts;
 - both confs are set before the query starts and their previous values
   restored once it terminates;
 - a failing micro-batch surfaces as ``StreamingQueryException`` after
@@ -53,6 +57,7 @@ from __future__ import annotations
 import os
 import tempfile
 from collections.abc import Mapping
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,7 +75,7 @@ _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 # stream-stream join types that emit null-padded (or anti) rows once the
 # watermark proves no match can still arrive
-_WATERMARK_JOINS = ("LeftOuter", "RightOuter", "FullOuter", "LeftAnti")
+_WATERMARK_JOINS = frozenset({"LeftOuter", "RightOuter", "FullOuter", "LeftAnti"})
 
 
 def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> tuple[str, StructType]:
@@ -111,17 +116,32 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_timestamps(stream_table(spark, sf_dir, "events"))
 
 
+def default_state_partitions(spark: SparkSession) -> int:
+    """Default state-store count of a drain: ``min(8, defaultParallelism)``
+    unless SPARK_GRAFT_STREAM_PARTITIONS says otherwise."""
+    return env_int(
+        "SPARK_GRAFT_STREAM_PARTITIONS", min(8, spark.sparkContext.defaultParallelism)
+    )
+
+
 def drain(
     writer: DataStreamWriter,
     checkpoint: str | None = None,
     partitions: int | None = None,
+    mode: str | None = None,
+    ops: _StreamOps | None = None,
 ) -> StreamingQuery:
-    """Run `writer` to caught-up under the module's drain contract."""
+    """Run `writer` to caught-up under the module's drain contract. `ops`
+    is the plan's ``_plan_operators`` walk when the caller already has it."""
     spark = writer._spark
+    if mode is not None:
+        writer = writer.outputMode(mode)
     confs = {}
     if partitions is not None:
         confs[_SHUFFLE_PARTITIONS] = str(partitions)
-    if checkpoint is None and not _emits_on_watermark(_plan_operators(writer._df)):
+    if checkpoint is None and not _emits_on_watermark(
+        ops or _plan_operators(writer._df), mode
+    ):
         confs[_NO_DATA_BATCHES] = "false"
     prev = {key: spark.conf.get(key, None) for key in confs}
     for key, value in confs.items():
@@ -148,36 +168,44 @@ def drain(
             temp.cleanup()
 
 
-def _plan_operators(df: DataFrame) -> set[str]:
-    """Node names of the streaming part of `df`'s analyzed plan, from one
-    walk over its nodes (batch subtrees, such as a static dimension, are
-    not entered), plus the join type of every stream-stream join, e.g.
-    ``LeftOuter``."""
-    ops: set[str] = set()
+class _StreamOps(NamedTuple):
+    """The streaming part of an analyzed plan: its node names, and the
+    join type (e.g. ``LeftOuter``) of every stream-stream join."""
+
+    nodes: frozenset[str]
+    joins: frozenset[str]
+
+
+def _plan_operators(df: DataFrame) -> _StreamOps:
+    """One walk over the streaming part of `df`'s analyzed plan (batch
+    subtrees, such as a static dimension, are not entered)."""
+    nodes: set[str] = set()
+    joins: set[str] = set()
     stack = [df._jdf.queryExecution().analyzed()]
     while stack:
         node = stack.pop()
         if not node.isStreaming():
             continue
         name = node.nodeName()
-        ops.add(name)
+        nodes.add(name)
         if name == "Join" and node.left().isStreaming() and node.right().isStreaming():
-            ops.add(node.joinType().toString())
+            joins.add(node.joinType().toString())
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
-    return ops
+    return _StreamOps(frozenset(nodes), frozenset(joins))
 
 
-def _emits_on_watermark(ops: set[str]) -> bool:
-    """Whether an operator in `ops` can emit rows when only the
-    watermark moves (a closed window, a null-padded join row, a fired
-    timer) — what a trailing no-data batch exists for."""
-    return any(
-        op == "Aggregate"
-        or op in _WATERMARK_JOINS
-        or op.endswith("WithState")
-        or op.startswith("TransformWithState")
-        for op in ops
+def _emits_on_watermark(ops: _StreamOps, mode: str | None) -> bool:
+    """Whether an operator in `ops` can emit rows in output mode `mode`
+    when only the watermark moves (a closed window, a null-padded join
+    row, a fired timer) — what a trailing no-data batch exists for."""
+    return (
+        bool(ops.joins & _WATERMARK_JOINS)
+        or ("Aggregate" in ops.nodes and mode != "complete")
+        or any(
+            op.endswith("WithState") or op.startswith("TransformWithState")
+            for op in ops.nodes
+        )
     )
 
 
@@ -392,24 +420,21 @@ def run_available_now(
     can exceed cluster width for big state."""
     spark = stream_df.sparkSession
     if state_partitions is None:
-        state_partitions = env_int(
-            "SPARK_GRAFT_STREAM_PARTITIONS", min(8, spark.sparkContext.defaultParallelism)
-        )
+        state_partitions = default_state_partitions(spark)
+    ops = _plan_operators(stream_df)
     # autodetect: aggregations run complete-mode on the memory sink.
     # `mode="append"` overrides for watermark-evicted aggregations
     # (session/tumbling windows) where append is the production shape
     # and only CLOSED windows should emit.
     if mode is None:
-        complete = "Aggregate" in _plan_operators(stream_df)
-    else:
-        complete = mode == "complete"
-    if complete:
+        mode = "complete" if "Aggregate" in ops.nodes else "append"
+    if mode == "complete":
         writer = stream_df.writeStream.format("memory").queryName(query_name)
-        drain(writer.outputMode("complete"), partitions=state_partitions)
+        drain(writer, partitions=state_partitions, mode=mode, ops=ops)
         return spark.table(query_name)
     out_dir = tempfile.mkdtemp(prefix=f"ksr_out_{query_name}_")
-    writer = stream_df.writeStream.format("parquet").outputMode("append")
-    drain(writer.option("path", out_dir), partitions=state_partitions)
+    writer = stream_df.writeStream.format("parquet").option("path", out_dir)
+    drain(writer, partitions=state_partitions, mode="append", ops=ops)
     # explicit schema: an empty result writes no part files, and the
     # stream's schema is authoritative either way
     return spark.read.schema(stream_df.schema).parquet(out_dir)
@@ -541,7 +566,7 @@ def state_store_snapshot(events: DataFrame) -> DataFrame:
     # the checkpoint outlives the drain: the state reader below reads it
     checkpoint = tempfile.mkdtemp(prefix="ksr_state_inspect_")
     writer = agg.writeStream.format("memory").queryName("ksr_state_inspect_sink")
-    drain(writer.outputMode("complete"), checkpoint, partitions=8)
+    drain(writer, checkpoint, partitions=default_state_partitions(spark), mode="complete")
     state = spark.read.format("statestore").load(checkpoint)
     # the state schema names the UNRESOLVED agg buffer fields (count,
     # sum), not the sink aliases — the buffer is the physical contract

@@ -676,3 +676,146 @@ def test_reshard_stream_resumes_from_checkpoint_mid_drain(spark, tmp_path):
     p_b = [b for s, _, b in seen if s == "p"]
     c_b = [b for s, _, b in seen if s == "c"]
     assert max(p_b) < min(c_b)
+
+
+def _batch_census(spark, fmt: str, d: str, cap: int) -> list:
+    """(batch_id, sorted [(shard_id, rows)]) of a capped processAllAvailable
+    drain of `d` through `fmt`."""
+    import tempfile
+
+    batches = []
+
+    def obs(df, bid):
+        batches.append(
+            (
+                int(bid),
+                sorted(
+                    (r.shard_id, r["count"])
+                    for r in df.groupBy("shard_id").count().collect()
+                ),
+            )
+        )
+
+    st = (
+        spark.readStream.format(fmt)
+        .option("path", d)
+        .option("maxRecordsPerShardPerBatch", str(cap))
+        .load()
+    )
+    with tempfile.TemporaryDirectory() as ck:
+        q = st.writeStream.foreachBatch(obs).option("checkpointLocation", ck).start()
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination()
+    return batches
+
+
+def test_backfill_stream_ignores_reshard_manifest(spark, tmp_path):
+    """kinesis_backfill reads every shard file as a root shard even when
+    the directory holds a _SHARDS.json lineage: the child is admitted in
+    batch 0 alongside its parent, where kinesis_reshard makes it wait."""
+    from kinesis_stream_reader_spark.sources.python_source import (
+        KinesisBackfillDataSource,
+        KinesisReshardDataSource,
+        write_reshard_manifest,
+        write_reshard_shard_file,
+    )
+
+    spark.dataSource.register(KinesisBackfillDataSource)
+    spark.dataSource.register(KinesisReshardDataSource)
+    d = str(tmp_path)
+    write_reshard_shard_file(d, "p", [(i, 1, b"x") for i in range(3)])
+    write_reshard_shard_file(d, "c1", [(10 + i, 1, b"y") for i in range(2)])
+    write_reshard_manifest(
+        d, [{"shard_id": "p", "closed": True}, {"shard_id": "c1", "parent": "p"}]
+    )
+    assert _batch_census(spark, "kinesis_backfill", d, 2) == [
+        (0, [("c1", 2), ("p", 2)]),
+        (1, [("p", 1)]),
+    ]
+    assert _batch_census(spark, "kinesis_reshard", d, 2) == [
+        (0, [("p", 2)]),
+        (1, [("p", 1)]),
+        (2, [("c1", 2)]),
+    ]
+
+
+def test_shard_census_equals_decoded_counts(spark, sf_dir):
+    """The line census both registry drains size their admission cap from
+    equals the per-shard count of the decoded records, through either
+    format, on the registry's reshard fixture."""
+    from kinesis_stream_reader_spark.registry.r10_round10 import (
+        _reshard_fixture_dir,
+    )
+    from kinesis_stream_reader_spark.sources.python_source import (
+        KinesisBackfillDataSource,
+        KinesisReshardDataSource,
+    )
+
+    d = _reshard_fixture_dir(spark, sf_dir)
+    for source in (KinesisBackfillDataSource, KinesisReshardDataSource):
+        spark.dataSource.register(source)
+        decoded = {
+            r.shard_id: r["count"]
+            for r in spark.read.format(source.name())
+            .option("path", d)
+            .load()
+            .groupBy("shard_id")
+            .count()
+            .collect()
+        }
+        assert decoded and source({"path": d}).census() == decoded
+
+
+def test_backfill_stream_resumes_from_checkpoint(spark, tmp_path):
+    """A capped kinesis_backfill drain stopped mid-way resumes from its
+    checkpoint: every record lands exactly once, and the checkpointed
+    offsets are {"pos", "sizes"} keyed by shard id."""
+    import json as _json
+    import time
+
+    from kinesis_stream_reader_spark.sources.python_source import (
+        KinesisBackfillDataSource,
+        write_shard_file,
+    )
+
+    spark.dataSource.register(KinesisBackfillDataSource)
+    d = str(tmp_path / "wire")
+    os.makedirs(d)
+    write_shard_file(os.path.join(d, "shard-a.jsonl"), [b"a%d" % i for i in range(6)])
+    write_shard_file(os.path.join(d, "shard-b.jsonl"), [b"b%d" % i for i in range(3)])
+    ckpt = str(tmp_path / "ckpt")
+    # keyed by batch id: a batch cut by stop() is replayed on resume
+    batches: dict[int, list[bytes]] = {}
+
+    def obs(df, bid):
+        batches[int(bid)] = [bytes(r.data) for r in df.collect()]
+
+    def run(stop_after: int | None) -> None:
+        q = (
+            spark.readStream.format("kinesis_backfill")
+            .option("path", d)
+            .option("maxRecordsPerShardPerBatch", "2")
+            .load()
+            .writeStream.foreachBatch(obs)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        if stop_after is None:
+            q.processAllAvailable()
+        else:
+            while len(batches) < stop_after:
+                time.sleep(0.1)
+        q.stop()
+        q.awaitTermination()
+
+    run(stop_after=1)
+    assert 0 < sum(map(len, batches.values())) < 9
+    run(stop_after=None)
+    got = sorted(rec for recs in batches.values() for rec in recs)
+    assert got == sorted([b"a%d" % i for i in range(6)] + [b"b%d" % i for i in range(3)])
+    offsets = os.path.join(ckpt, "offsets")
+    last = max(os.listdir(offsets), key=lambda f: int(f) if f.isdigit() else -1)
+    with open(os.path.join(offsets, last)) as fh:
+        offset = _json.loads(fh.read().splitlines()[-1])
+    assert offset == {"pos": {"a": 6, "b": 3}, "sizes": {"a": 6, "b": 3}}

@@ -618,3 +618,52 @@ def test_state_stores_capped_at_task_slots(spark, sf_dir, monkeypatch):
     )
     assert default == [min(8, spark.sparkContext.defaultParallelism)]
     assert override == [3]
+
+
+def test_complete_mode_aggregate_does_not_emit_on_watermark():
+    """In complete mode an Aggregate evicts nothing and re-emits its whole
+    table every trigger, so it alone keeps no tail batch; a watermark
+    join or a stateful operator below it still does."""
+    ops = jobs._StreamOps(frozenset({"Aggregate", "Deduplicate"}), frozenset())
+    assert not jobs._emits_on_watermark(ops, "complete")
+    assert jobs._emits_on_watermark(ops, "append")
+    assert jobs._emits_on_watermark(ops, None)
+    outer = jobs._StreamOps(frozenset({"Aggregate", "Join"}), frozenset({"LeftOuter"}))
+    assert jobs._emits_on_watermark(outer, "complete")
+    inner = jobs._StreamOps(frozenset({"Aggregate", "Join"}), frozenset({"Inner"}))
+    assert not jobs._emits_on_watermark(inner, "complete")
+    stateful = jobs._StreamOps(
+        frozenset({"Aggregate", "FlatMapGroupsInPandasWithState"}), frozenset()
+    )
+    assert jobs._emits_on_watermark(stateful, "complete")
+
+
+def test_windowed_distinct_drains_in_one_trigger(spark, sf_dir, monkeypatch):
+    """streaming_windowed_distinct (a complete-mode Aggregate above a
+    watermarked dedup) drains its one part file in one trigger on its temp
+    checkpoint, with no trailing no-data batch, and its rows still equal
+    its oracle twin."""
+    from kinesis_stream_reader_spark.registry import QUERIES
+
+    name = "streaming_windowed_distinct"
+    drained = _capture_drains(monkeypatch)
+    got = QUERIES[name](spark, sf_dir)
+    (q,) = drained
+    inputs = [p.numInputRows for p in q.recentProgress]
+    assert len(inputs) == 1 and inputs[0] > 0, inputs
+    assert _rows(got.columns, got.collect()) == _oracle_rows(sf_dir, name)
+
+
+def test_state_inspect_stores_capped_at_task_slots(spark, sf_dir, monkeypatch):
+    """state_store_snapshot sizes its state stores like run_available_now:
+    no more stores than the session has task slots."""
+    from kinesis_stream_reader_spark.registry import QUERIES
+
+    drained = _capture_drains(monkeypatch)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
+    QUERIES["streaming_state_inspect"](spark, sf_dir)
+    (q,) = drained
+    stores = [op.numStateStoreInstances for op in q.lastProgress.stateOperators]
+    assert stores and all(
+        n <= spark.sparkContext.defaultParallelism for n in stores
+    ), stores
