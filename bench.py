@@ -1,6 +1,8 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+sf0.1) on local[$SPARK_GRAFT_CPUS], or on the host's cores when that is
+unset. Prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+ "sf": ..., "cpus": ...}
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kinesis_stream_reader_spark.session import get_spark  # noqa: E402
+from kinesis_stream_reader_spark.session import get_host_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -143,7 +145,8 @@ def warmup(spark, sf_dir: str) -> Callable[[], None]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    spark = get_spark("bench")
+    spark = get_host_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     qs = entrymod.queries()
     cleanup = warmup(spark, sf_dir)
@@ -266,6 +269,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
+        "cpus": cpus,
         "reprobe": reprobe,
         "reprobe_prev": {n: prev[n] for n in reprobe if n in prev},
         "ambient_vs_prev": round(ambient, 3),
@@ -291,6 +295,7 @@ def main() -> None:
         "ambient_vs_prev": round(ambient, 3),
         "unit": "sec",
         "sf": payload["sf"],
+        "cpus": cpus,
         "n_queries": len(timings),
         "queries": slowest,
         # capped so the compact line stays inside the driver's tail window

@@ -11,7 +11,7 @@ from ._shared import _FLAT_COLS, _nested_events  # noqa: F401
 from .r2_relational_formats import _roundtrip_dir  # noqa: F401
 from .r1_parity_ext import _GRAMS  # noqa: F401
 from .r1_parity_ext import _TOKS  # noqa: F401
-from ..scratch import scratch
+from ..scratch import exit_tempdir, scratch
 
 # ---------------------------------------------------------------------------
 # Derived-state maintenance: CDC diff, SCD2, incremental agg, mergeable
@@ -713,13 +713,11 @@ FROM events e ASOF LEFT JOIN o1 o
 """,
 )
 def streaming_asof_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming import jobs
 
     stream = jobs.stream_events(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
-    out_dir = tempfile.mkdtemp(prefix="ksr_out_streaming_asof_enrich_")
+    out_dir = exit_tempdir("ksr_out_streaming_asof_enrich_")
     jobs.asof_enrich_stream(stream, orders, out_dir)
     return spark.read.schema(
         "event_id BIGINT, user_id BIGINT, asof_orderkey BIGINT"
@@ -1680,7 +1678,7 @@ def streaming_resume_exactly_once_query(
     ensure_confs(spark)
     static = spark.read.parquet(f"{sf_dir}/events.parquet")
     stream_dir = tempfile.mkdtemp(prefix="ksr_resume_src_")
-    out_dir = tempfile.mkdtemp(prefix="ksr_resume_out_")
+    out_dir = exit_tempdir("ksr_resume_out_")
     ckpt_dir = tempfile.mkdtemp(prefix="ksr_resume_ckpt_")
 
     def drain() -> None:
@@ -1995,8 +1993,6 @@ SELECT event_id, user_id, event_type, value FROM events
 """,
 )
 def sink_python_datasource_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.python_source import KinesisBackfillDataSource
 
     spark.dataSource.register(KinesisBackfillDataSource)
@@ -2007,7 +2003,7 @@ def sink_python_datasource_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire = events.select(F.encode(payload, "utf-8").alias("data")).repartition(
         4, F.col("data")
     )
-    out_dir = tempfile.mkdtemp(prefix="ksr_wire_out_")
+    out_dir = exit_tempdir("ksr_wire_out_")
     wire.write.format("kinesis_backfill").option("path", out_dir).mode(
         "append"
     ).save()

@@ -12,15 +12,46 @@ BEFORE the package is imported, so a test run can never race a
 concurrent check.py / driver Spark session over the same shared /tmp
 paths (the round-9 judge reproduced exactly that race on the zorder
 sink fixture).
+
+Per-query temp outputs that a returned DataFrame reads lazily (streaming
+sinks, symlinked stream sources, state checkpoints) come from
+``exit_tempdir`` instead: tempfile's directory, removed at interpreter
+exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 SCRATCH_ROOT = os.environ.get("KSR_SCRATCH", "/tmp")
+
+# (creating pid, path) of every exit_tempdir directory
+_EXIT_DIRS: list[tuple[int, str]] = []
 
 
 def scratch(name: str) -> str:
     """Absolute path for a named scratch fixture under the session root."""
     return f"{SCRATCH_ROOT}/{name}"
+
+
+def exit_tempdir(prefix: str) -> str:
+    """A new ``tempfile.mkdtemp`` directory that is removed when the
+    interpreter exits. For sinks, staged sources and state a returned
+    DataFrame still reads lazily: they cannot go when the query returns,
+    and on tmpfs they must not outlive the process."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    if not _EXIT_DIRS:
+        atexit.register(_remove_exit_dirs)
+    _EXIT_DIRS.append((os.getpid(), path))
+    return path
+
+
+def _remove_exit_dirs() -> None:
+    # a forked child inherits the list: each process removes its own dirs
+    pid = os.getpid()
+    for owner, path in _EXIT_DIRS:
+        if owner == pid:
+            shutil.rmtree(path, ignore_errors=True)

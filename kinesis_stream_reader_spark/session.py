@@ -137,6 +137,37 @@ def _local_dir_for(master: str) -> str | None:
     return None
 
 
+# Every streaming trigger writes an offset-log entry, a commit-log entry
+# and a delta file per state store. pip PySpark ships no libhadoop, so
+# Hadoop's local filesystem falls back to shell commands for what the
+# native library would do: RawLocalFileSystem.setPermission runs
+# `chmod` for every file it creates (a data file and its .crc), under
+# any checkpoint manager, and its link-status lookup runs `readlink`.
+# Spark's default manager for `file:` paths,
+# FileContextBasedCheckpointFileManager, resolves link status through
+# FileContext on every create and rename-with-overwrite: 8 `readlink`
+# processes per atomic checkpoint write, on top of the 2 `chmod`s.
+# FileSystemBasedCheckpointFileManager makes only the `chmod`s. On a local
+# filesystem that manager commits with rename(2), atomic for the single
+# writer a local master has. A cluster master keeps Spark's FileContext
+# manager, whose rename-with-overwrite is the atomic commit on
+# HDFS-class storage.
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_confs_for(master: str) -> dict[str, str]:
+    """Checkpoint-manager confs for a session on `master`: the
+    FileSystem-based manager under a local master, nothing otherwise —
+    the same local-master rule as ``_local_dir_for``."""
+    if master.startswith("local"):
+        return {CHECKPOINT_MANAGER_CONF: FS_CHECKPOINT_MANAGER}
+    return {}
+
+
 FAST_TMP = _fast_tmp()
 if FAST_TMP:
     import tempfile
@@ -202,6 +233,8 @@ def get_spark(app_name: str = "kinesis_stream_reader_spark", cpus: int | None = 
     local_dir = _local_dir_for(master)
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
+    for key, value in checkpoint_confs_for(master).items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -220,15 +253,26 @@ def get_host_spark(app_name: str) -> SparkSession:
 
 def ensure_confs(spark: SparkSession) -> SparkSession:
     """Set runtime-settable confs the engine needs on a session we did not
-    build (the correctness driver passes its own SparkSession)."""
-    runtime_confs = (
+    build (the correctness driver passes its own SparkSession). Under a
+    local master that includes the checkpoint manager of
+    ``checkpoint_confs_for``, unless the session already names one."""
+    runtime_confs = [
         (NANOS_CONF, "true"),
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         ("spark.sql.adaptive.skewJoin.enabled", "true"),
         ("spark.sql.shuffle.partitions", str(default_parallelism())),
-    )
+    ]
+    try:
+        master = spark.conf.get("spark.master", "")
+        runtime_confs += [
+            (key, value)
+            for key, value in checkpoint_confs_for(master).items()
+            if spark.conf.get(key, None) is None
+        ]
+    except Exception:
+        pass
     for key, value in runtime_confs:
         try:
             spark.conf.set(key, value)

@@ -30,6 +30,11 @@ Drain contract (``drain``):
   it afterwards);
 - ``mode`` is the query's output mode (the writer's default, append,
   when not given);
+- under a local master every checkpoint file (offset log, commit log,
+  state-store deltas) goes through Spark's FileSystem-based checkpoint
+  manager, a session conf (``session.checkpoint_confs_for``), so no
+  write spawns the ``readlink`` processes of Spark's FileContext
+  manager;
 - with ``partitions``, ``spark.sql.shuffle.partitions`` — the state-store
   count of every stateful operator — is set for the query;
   ``run_available_now`` and ``state_store_snapshot`` pass at most one
@@ -66,6 +71,7 @@ from pyspark.sql.types import StructType
 
 from ..operators.events import to_nested
 from ..operators.filters import filter_records
+from ..scratch import exit_tempdir
 from ..session import ensure_confs, env_int
 from ..sources.tables import normalize_timestamps
 
@@ -90,7 +96,7 @@ def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> tuple[str, St
     if key not in _STREAM_DIRS:
         src = f"{sf_dir}/{table}.parquet"
         schema = spark.read.parquet(src).schema
-        d = tempfile.mkdtemp(prefix="ksr_stream_")
+        d = exit_tempdir("ksr_stream_")
         if os.path.isdir(src):
             for i, name in enumerate(sorted(os.listdir(src))):
                 if name.endswith(".parquet"):
@@ -432,7 +438,7 @@ def run_available_now(
         writer = stream_df.writeStream.format("memory").queryName(query_name)
         drain(writer, partitions=state_partitions, mode=mode, ops=ops)
         return spark.table(query_name)
-    out_dir = tempfile.mkdtemp(prefix=f"ksr_out_{query_name}_")
+    out_dir = exit_tempdir(f"ksr_out_{query_name}_")
     writer = stream_df.writeStream.format("parquet").option("path", out_dir)
     drain(writer, partitions=state_partitions, mode="append", ops=ops)
     # explicit schema: an empty result writes no part files, and the
@@ -483,7 +489,7 @@ def upsert_compact_available_now(events_stream: DataFrame) -> DataFrame:
     re-delivery (at-least-once) is idempotent here because the merge
     is an argmax, not an increment."""
     spark = events_stream.sparkSession
-    snap_dir = tempfile.mkdtemp(prefix="ksr_upsert_snap_")
+    snap_dir = exit_tempdir("ksr_upsert_snap_")
     live = os.path.join(snap_dir, "live")
     schema = (
         "user_id BIGINT, event_type STRING, latest_event_id BIGINT, "
@@ -564,7 +570,7 @@ def state_store_snapshot(events: DataFrame) -> DataFrame:
         .agg(F.count("*").alias("n_events"), F.sum("cents").alias("total_cents"))
     )
     # the checkpoint outlives the drain: the state reader below reads it
-    checkpoint = tempfile.mkdtemp(prefix="ksr_state_inspect_")
+    checkpoint = exit_tempdir("ksr_state_inspect_")
     writer = agg.writeStream.format("memory").queryName("ksr_state_inspect_sink")
     drain(writer, checkpoint, partitions=default_state_partitions(spark), mode="complete")
     state = spark.read.format("statestore").load(checkpoint)

@@ -4,6 +4,7 @@ sessionization."""
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
 import pytest
@@ -667,3 +668,126 @@ def test_state_inspect_stores_capped_at_task_slots(spark, sf_dir, monkeypatch):
     assert stores and all(
         n <= spark.sparkContext.defaultParallelism for n in stores
     ), stores
+
+
+def test_local_session_writes_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """The engine's local session resolves every checkpoint path to
+    Spark's FileSystem-based manager, and ensure_confs restores it on a
+    session that lost it, but keeps a manager the session names itself."""
+    from kinesis_stream_reader_spark import session
+
+    def manager() -> str:
+        path = spark._jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri())
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        pkg = spark._jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        return pkg.CheckpointFileManager.create(path, conf).getClass().getName()
+
+    key = session.CHECKPOINT_MANAGER_CONF
+    pkg_name = session.FS_CHECKPOINT_MANAGER.rsplit(".", 1)[0]
+    assert manager() == session.FS_CHECKPOINT_MANAGER
+    try:
+        spark.conf.unset(key)
+        assert manager() != session.FS_CHECKPOINT_MANAGER
+        session.ensure_confs(spark)
+        assert manager() == session.FS_CHECKPOINT_MANAGER
+        custom = f"{pkg_name}.FileContextBasedCheckpointFileManager"
+        spark.conf.set(key, custom)
+        session.ensure_confs(spark)
+        assert manager() == custom
+    finally:
+        spark.conf.set(key, session.FS_CHECKPOINT_MANAGER)
+
+
+def test_cluster_masters_keep_spark_checkpoint_manager():
+    """Only a local master swaps the checkpoint manager: on a cluster the
+    FileContext manager's rename-with-overwrite is the atomic commit."""
+    from kinesis_stream_reader_spark import session
+
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:6443"):
+        assert session.checkpoint_confs_for(master) == {}
+    for master in ("local", "local[4]", "local[*]"):
+        assert session.checkpoint_confs_for(master) == {
+            session.CHECKPOINT_MANAGER_CONF: session.FS_CHECKPOINT_MANAGER
+        }
+
+
+def test_dedup_restart_reloads_state_store(spark, sf_dir, tmp_path):
+    """A dedup drain on a caller's checkpoint, restarted after a second
+    file arrives whose repeated ids are all inside the watermark: only
+    the state store reloaded from the checkpoint can drop them, and the
+    sink holds every event exactly once."""
+    events = load_events(spark, sf_dir).select("event_id", "ts", "event_type")
+    stamps = sorted(r.ts for r in events.select("ts").collect())
+    cut = stamps[len(stamps) // 2]
+    first = events.filter(F.col("ts") <= F.lit(cut))
+    repeats = first.filter(F.col("ts") > F.lit(cut) - F.expr("INTERVAL 5 DAYS"))
+    second = events.filter(F.col("ts") > F.lit(cut)).unionByName(repeats)
+    n_repeats = repeats.count()
+    assert n_repeats > 0
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    first.coalesce(1).write.parquet(f"{src}/f1")
+
+    def drain():
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        writer = jobs.dedup_stream(stream, watermark="10 days").writeStream
+        return jobs.drain(writer.format("parquet").option("path", out), ckpt)
+
+    drain()
+    assert spark.read.parquet(out).count() == first.count()
+    second.coalesce(1).write.parquet(f"{src}/f2")
+    q = drain()
+    assert sum(p.numInputRows for p in q.recentProgress) == second.count()
+    got = Counter(r.event_id for r in spark.read.parquet(out).collect())
+    assert got == Counter(r.event_id for r in events.collect())
+
+
+def test_lazily_read_temp_outputs_are_removed_at_exit(spark, sf_dir, tmp_path, monkeypatch):
+    """Sinks and stream link dirs a returned DataFrame reads stay until
+    the interpreter exits, and are removed then: every temp dir the
+    streaming queries leave is registered for exit removal."""
+    import subprocess
+    import sys
+    import tempfile
+
+    from kinesis_stream_reader_spark import scratch
+    from kinesis_stream_reader_spark.registry import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(jobs, "_STREAM_DIRS", {})
+    for name in ("streaming_dedup", "streaming_asof_enrich"):
+        assert QUERIES[name](spark, sf_dir).count() > 0
+    left = sorted(tmp_path.iterdir())
+    prefixes = ("ksr_out_streaming_asof_enrich_", "ksr_out_streaming_dedup_", "ksr_stream_")
+    assert len(left) == 3, left
+    assert all(p.name.startswith(want) for p, want in zip(left, prefixes)), left
+    assert {str(p) for p in left} <= {path for _, path in scratch._EXIT_DIRS}
+
+    # removal happens at exit, in the creating process only
+    probe = (
+        "import os, sys\n"
+        "from kinesis_stream_reader_spark.scratch import exit_tempdir\n"
+        "d = exit_tempdir('ksr_out_probe_')\n"
+        "open(os.path.join(d, 'part-0'), 'w').close()\n"
+        "pid = os.fork()\n"
+        "if pid == 0:\n"
+        "    sys.exit(0)\n"
+        "os.waitpid(pid, 0)\n"
+        "assert os.path.isfile(os.path.join(d, 'part-0'))\n"
+        "print(d)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    (tmp_path / "probe").mkdir()
+    made = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=root,
+        env={**os.environ, "TMPDIR": str(tmp_path / "probe")},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()[-1]
+    assert made.startswith(str(tmp_path / "probe"))
+    assert not os.path.exists(made)
